@@ -18,59 +18,58 @@ import graft.sources.TsdbStore
   * way: an optimizer `Rule[LogicalPlan]` that recognizes an ad-hoc
   * slot aggregation over a [[TsdbStore]] BASE table
   *
-  *   base.groupBy(user_id, event_type, (ts_us div S·10⁶)·S as slot)
-  *       .agg(count(1) / sum(cents) / min(cents) / max(cents) /
-  *            avg(cents) / count(DISTINCT grain) / approx_count_distinct)
+  *   base.groupBy(user_id?, event_type?, (ts_us div S·10⁶)·S?)
+  *       .agg(…)
   *
-  * and substitutes the store's materialized `agg_T` table for the raw
-  * scan, where T is the COARSEST cascade step that divides S (and
-  * every distinct-slot step) AND has a non-empty aligned interior for
-  * the query's time range — a sub-day range falls through to a finer
-  * level instead of raw. The cascade row (n, sum_cents, min_cents,
-  * max_cents) is an exact monoid image of the raw rows it covers, so
-  * count ⇒ sum(n), sum ⇒ sum(sum_cents), min ⇒ min(min_cents),
-  * max ⇒ max(max_cents), avg ⇒ sum(sum_cents)/sum(n); the grain
-  * columns' DISTINCT sets survive materialization (one cascade row per
-  * grain tuple), so count(DISTINCT user_id/event_type/slot) and
-  * approx_count_distinct (HLL++ is set-idempotent) re-aggregate
-  * exactly. When T == S with the full grain grouped and no distinct
-  * aggregates, the aggregation disappears entirely (a Project over
-  * the cascade, ZERO shuffle). Substituted outputs keep the original
-  * exprIds, so parent operators (HAVING filters, Sort+Limit top-k)
-  * are untouched and compose.
+  * and answers it from one of the store's materialized cascade
+  * families at the COARSEST level T that serves it. The rule is one
+  * front end and three converters.
   *
-  * Scope guards (all must hold, else the plan is left alone):
+  * The front end ([[walk]] + [[matchScan]] + [[chooseLevel]]) proves,
+  * once for every path:
   *  - `spark.graft.rollup.rewrite` is "true" (default off — ingest and
   *    cascade-maintenance jobs must never read the table they are
   *    writing; [[TsdbStore]] additionally never enables it);
-  *  - the scan is a store base dir (`…/base` beside a `_LAYout` stamp)
-  *    and the chosen `agg_T` table exists on the same filesystem;
-  *  - the only plan between Aggregate and scan is column pruning
-  *    and/or a Filter whose conjuncts each either touch series-identity
-  *    columns ONLY (user_id / event_type — those transfer to the rollup
-  *    verbatim) or are half-open `ts_us` range bounds whose literals
-  *    are multiples of the scanned cascade step T (slot membership is
-  *    decided by the floor-div, so every T-cell is entirely inside or
-  *    outside such a range — the bound transfers EXACTLY as a slot_ts
-  *    bound, plus a derived dt partition-prune twin). An UNALIGNED
-  *    bound splits: the largest T-aligned interior serves from the
-  *    cascade, the ≤2 sub-cell boundary pieces serve from raw rows
-  *    (dt-pruned to ≤1 partition each) unioned as monoid tuples under
-  *    one re-aggregation — arbitrary now()-anchored dashboard ranges
-  *    fire the rewrite. Any other predicate shape blocks it;
-  *  - aggregates are the monoid four over `cents` (avg = sum/n), plus
-  *    count(DISTINCT …) of the GRAIN columns (user_id / event_type /
-  *    a slot the scanned level divides — the cascade holds one row per
-  *    grain tuple, so those distinct sets survive materialization;
-  *    DAU/WAU dashboards never rescan raw). DISTINCT over anything
-  *    else, and FILTER clauses, block.
+  *  - the only plan between Aggregate and scan is column pruning,
+  *    filters and at most one INNER series-key join to a UNIQUE dim
+  *    (or, for the rate path, the canonical lag window);
+  *  - the scan is the LIVE base of a `_LAYOUT`-stamped store (rename
+  *    `<root>/base` or a manifest snapshot);
+  *  - every filter conjunct either touches series-identity columns
+  *    only (they transfer to the cascade verbatim) or is a half-open
+  *    `ts_us` bound; anything else is left to the converter, and the
+  *    value and quantile converters accept nothing else;
+  *  - grouping keys, matched by exprId, are a subset of {user_id,
+  *    event_type, one slot step S} plus dim-side keys;
+  *  - T divides every slot step the query evaluates, the family's
+  *    table exists at T, the range fits T (the value path needs only
+  *    a non-empty T-aligned interior and SPLITS unaligned bounds into
+  *    raw boundary pieces; the quantile and rate paths need T-aligned
+  *    bounds), and the size gate finds the raw scan large enough to
+  *    repay the rewrite.
   *
-  * At 100 TB this is the difference between re-scanning raw samples
-  * and reading ≤ |series|·(day/T) cascade rows: the same query text
-  * gets the reference's "reads never touch raw" property with no
-  * application-side dispatch. PlanAuditSpec pins the rewrite (agg_T in
-  * the scan, base gone, zero exchanges in the T == S form) and
-  * TsdbStoreSpec pins bit-identical results with the rule on and off.
+  * The converters each keep only their own leaves:
+  *  - value (`agg_T`): the cascade row (n, sum_cents, min_cents,
+  *    max_cents, first, last) is an exact monoid image of the raw rows
+  *    it covers, so count ⇒ sum(n), sum ⇒ sum(sum_cents), min/max ⇒
+  *    min/max, avg ⇒ sum/n, min_by/max_by over the series order ⇒ the
+  *    stored endpoint structs; count(DISTINCT grain column) and
+  *    approx_count_distinct re-aggregate exactly (one cascade row per
+  *    grain tuple; HLL++ is set-idempotent);
+  *  - quantile (`quant_T`): percentile_disc / percentile_cont read off
+  *    the bottom-k buffers, gated at optimize time on the cells being
+  *    below K samples so the read is exact;
+  *  - rate (`rate_T`): the heartbeat-validated wrap-corrected delta
+  *    aggregate re-sums the stored per-cell delta sums.
+  *
+  * When T == S with the full grain grouped, the aggregation disappears
+  * entirely (a Project over the cascade, ZERO shuffle). Substituted
+  * outputs keep the original exprIds, so parent operators (HAVING
+  * filters, Sort+Limit top-k) are untouched and compose. At 100 TB this
+  * is the difference between re-scanning raw samples and reading
+  * ≤ |series|·(day/T) cascade rows. PlanAuditSpec pins the rewrite's
+  * plan shape; RollupSpec, QuantCascadeSpec and RollupFuzzSpec pin
+  * identical results with the rule on and off.
   */
 object RollupSubstitution {
   /** Optimize-time support cache, shared across queries and sessions
@@ -330,72 +329,6 @@ case class RollupSubstitution(session: SparkSession) extends Rule[LogicalPlan] {
     baseBytes.toDouble >= ratio * cascadeBytes.toDouble
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!session.conf.get(FlagKey, "false").toBoolean) return plan
-    plan.transformUp {
-      case agg: Aggregate =>
-        tryRewrite(agg).orElse(tryRewriteQuantile(agg))
-          .orElse(tryRewriteRate(agg)).getOrElse(agg)
-    }
-  }
-
-  /** (ts_us div S·10⁶) · S — the engine's canonical slot quantization
-    * (TimeSeriesOps.slotSec). Returns S. */
-  private object SlotExpr {
-    def unapply(e: Expression): Option[(AttributeReference, Long)] = e match {
-      case Multiply(
-          IntegralDivide(ts: AttributeReference, Literal(stepUs: Long, LongType), _),
-          Literal(stepSec: Long, LongType), _)
-          if ts.name == "ts_us" && stepSec > 0 && stepUs == stepSec * 1000000L =>
-        Some((ts, stepSec))
-      case _ => None
-    }
-  }
-
-  /** Unwrap the plans the optimizer leaves between an Aggregate and
-    * its scan: column-pruning Projects, the grouping-expression
-    * pull-out Project (PullOutGroupingExpressions aliases complex
-    * groupings below the Aggregate), and a series-only Filter. Returns
-    * (relation, filter condition, exprId → relation-level expression)
-    * so grouping/aggregate expressions can be resolved back to the raw
-    * columns they compute over. */
-  private def unwrap(p: LogicalPlan)
-      : Option[(LogicalRelation, Option[Expression], Map[ExprId, Expression])] =
-    p match {
-      case rel: LogicalRelation => Some((rel, None, Map.empty))
-      case Project(projList, child) =>
-        unwrap(child).flatMap { case (rel, c0, m0) =>
-          def resolve(e: Expression): Expression = e.transform {
-            case a: AttributeReference if m0.contains(a.exprId) => m0(a.exprId)
-          }
-          val entries = projList.map {
-            case a: AttributeReference => Some(a.exprId -> resolve(a))
-            case al: Alias => Some(al.exprId -> resolve(al.child))
-            case _ => None
-          }
-          if (entries.contains(None)) None
-          else Some((rel, c0, entries.flatten.toMap))
-        }
-      case Filter(cond, child) =>
-        unwrap(child).map { case (rel, c0, m) =>
-          // resolve the condition through the projections BELOW the
-          // filter right here — the map returned upward carries only
-          // the outermost project's entries, so a later resolve could
-          // miss these exprIds. Whether the resolved condition may
-          // transfer at all is validated in tryRewrite against the
-          // relation's own attributes (ADVICE r6 #2).
-          val rc = cond.transform {
-            case a: AttributeReference if m.contains(a.exprId) => m(a.exprId)
-          }
-          (rel, Some(c0.map(And(_, rc)).getOrElse(rc)), m) }
-      case _ => None
-    }
-
-  private def splitConjuncts(e: Expression): Seq[Expression] = e match {
-    case And(l, r) => splitConjuncts(l) ++ splitConjuncts(r)
-    case x => Seq(x)
-  }
-
   /** The store root when the relation scans the BASE table of an
     * ingested [[TsdbStore]] layout — either the rename layout's
     * `<root>/base` directory (one root path), or a manifest-layout
@@ -465,176 +398,389 @@ case class RollupSubstitution(session: SparkSession) extends Rule[LogicalPlan] {
     }
   }
 
-  /** [[unwrap]] extended one level: the plan may be
-    * [Project/Filter]* → Join(base-side, dim-side) where the base side
-    * unwraps to a store relation and the join is INNER on
-    * series-identity columns only. Everything the join adds is handled
-    * by the caller: the dim subtree is reused verbatim (its exprIds
-    * survive), so dim-side grouping keys and outputs pass through the
-    * conversion untouched. A join that doesn't match simply means no
-    * rewrite (the rate path never unwraps joins; the quantile path
-    * does, round 9, merging sketches per dim group). */
-  private def unwrapMaybeJoin(p: LogicalPlan)
-      : Option[(LogicalRelation, Option[Expression], Map[ExprId, Expression],
-                Option[DimJoin])] = {
-    def splitJoin(j: Join): Option[(LogicalRelation, Option[Expression],
-        Map[ExprId, Expression], Option[DimJoin])] = {
-      if (j.joinType != Inner || j.condition.isEmpty) return None
-      // base side on the left or the right; the OTHER side is the dim
-      def trySide(baseSide: LogicalPlan, dimSide: LogicalPlan)
-          : Option[(LogicalRelation, Option[Expression],
-                    Map[ExprId, Expression], Option[DimJoin])] =
-        unwrap(baseSide).flatMap { case (rel, c0, m) =>
+  override def apply(plan: LogicalPlan): LogicalPlan = {
+    if (!session.conf.get(FlagKey, "false").toBoolean) return plan
+    plan.transformUp {
+      case agg: Aggregate =>
+        walk(agg.child)(scanOrJoin)
+          .flatMap(w => matchScan(agg, w.leaf._1, splitConjuncts(w.cond), w.resolve, w.leaf._2))
+          .filter(_.rest.isEmpty)
+          .flatMap(m => rewriteValue(m).orElse(rewriteQuantile(m)))
+          .orElse(rewriteRate(agg))
+          .getOrElse(agg)
+    }
+  }
+
+  /** (ts_us div S·10⁶) · S — the engine's canonical slot quantization
+    * (TimeSeriesOps.slotSec). Returns S. */
+  private object SlotExpr {
+    def unapply(e: Expression): Option[(AttributeReference, Long)] = e match {
+      case Multiply(
+          IntegralDivide(ts: AttributeReference, Literal(stepUs: Long, LongType), _),
+          Literal(stepSec: Long, LongType), _)
+          if ts.name == "ts_us" && stepSec > 0 && stepUs == stepSec * 1000000L =>
+        Some((ts, stepSec))
+      case _ => None
+    }
+  }
+
+  // ---- the shared front end ------------------------------------------
+
+  /** One Project/Filter walk from an Aggregate's child down to a leaf
+    * `leaf` accepts (the base scan, a dim join over it, or the rate
+    * path's Window). Projects are column pruning or the grouping pull-
+    * out (PullOutGroupingExpressions aliases complex groupings below
+    * the Aggregate); each Filter's condition is resolved through the
+    * projections BELOW it right away and conjoined. `map` takes an
+    * exprId seen above the walk to its leaf-level expression. */
+  private case class Walk[L](leaf: L, cond: Option[Expression],
+                             map: Map[ExprId, Expression]) {
+    def resolve(e: Expression): Expression = e.transform {
+      case a: AttributeReference if map.contains(a.exprId) => map(a.exprId)
+    }
+  }
+
+  private def walk[L](p: LogicalPlan)(
+      leaf: PartialFunction[LogicalPlan, Option[Walk[L]]]): Option[Walk[L]] =
+    p match {
+      case l if leaf.isDefinedAt(l) => leaf(l)
+      case Project(projList, child) =>
+        walk(child)(leaf).flatMap { w =>
+          val entries = projList.map {
+            case a: AttributeReference => Some(a.exprId -> w.resolve(a))
+            case al: Alias => Some(al.exprId -> w.resolve(al.child))
+            case _ => None
+          }
+          if (entries.contains(None)) None
+          else Some(w.copy(map = w.map ++ entries.flatten))
+        }
+      case Filter(cond, child) =>
+        walk(child)(leaf).map { w =>
+          val rc = w.resolve(cond)
+          w.copy(cond = Some(w.cond.map(And(_, rc)).getOrElse(rc)))
+        }
+      case _ => None
+    }
+
+  private type ScanWalk = Walk[(LogicalRelation, Option[DimJoin])]
+
+  private val scan: PartialFunction[LogicalPlan, Option[ScanWalk]] = {
+    case rel: LogicalRelation => Some(Walk((rel, None), None, Map.empty))
+  }
+
+  /** [[scan]] or, one level up, an INNER equi-join on series-identity
+    * columns only whose one side walks to a store's base scan. The
+    * other side is the dim: reused verbatim (its exprIds survive), so
+    * dim-side grouping keys and outputs pass through the conversion
+    * untouched. A join that doesn't match simply means no rewrite. */
+  private val scanOrJoin: PartialFunction[LogicalPlan, Option[ScanWalk]] =
+    scan.orElse { case j: Join =>
+      def trySide(baseSide: LogicalPlan, dimSide: LogicalPlan): Option[ScanWalk] =
+        walk(baseSide)(scan).flatMap { w =>
+          val rel = w.leaf._1
           if (storeRootOf(rel).isEmpty) None
           else {
             val identityIds = rel.output
               .filter(a => a.name == "user_id" || a.name == "event_type")
               .map(a => a.exprId -> a.name).toMap
-            def resolveB(e: Expression): Expression = e.transform {
-              case a: AttributeReference if m.contains(a.exprId) => m(a.exprId)
-            }
-            val dimIds = dimSide.outputSet
-            val pairs = splitConjuncts(j.condition.get).map {
-              case EqualTo(l, r) =>
-                val (b, d) = (resolveB(l), r) match {
-                  case (bb: AttributeReference, dd: Attribute)
-                      if identityIds.contains(bb.exprId) && dimIds.contains(dd) =>
-                    (bb, dd)
-                  case _ => (resolveB(r), l) match {
-                    case (bb: AttributeReference, dd: Attribute)
-                        if identityIds.contains(bb.exprId) && dimIds.contains(dd) =>
-                      (bb, dd)
-                    case _ => return None
-                  }
-                }
-                identityIds(b.exprId) -> d
+            def pair(b: Expression, d: Expression): Option[(String, Attribute)] =
+              (w.resolve(b), d) match {
+                case (bb: AttributeReference, dd: Attribute)
+                    if identityIds.contains(bb.exprId) && dimSide.outputSet.contains(dd) =>
+                  Some(identityIds(bb.exprId) -> dd)
+                case _ => None
+              }
+            val pairs = splitConjuncts(j.condition).map {
+              case EqualTo(l, r) => pair(l, r).orElse(pair(r, l)) match {
+                case Some(x) => x
+                case None => return None
+              }
               case _ => return None
             }
             if (pairs.isEmpty) None
-            else Some((rel, c0, m, Some(DimJoin(dimSide, pairs, j))))
+            else Some(w.copy(leaf = (rel, Some(DimJoin(dimSide, pairs, j)))))
           }
         }
-      trySide(j.left, j.right).orElse(trySide(j.right, j.left))
+      if (j.joinType != Inner || j.condition.isEmpty) None
+      else trySide(j.left, j.right).orElse(trySide(j.right, j.left))
     }
-    p match {
-      case j: Join => splitJoin(j)
-      case Project(projList, child) =>
-        unwrapMaybeJoin(child).flatMap { case (rel, c0, m0, dj) =>
-          def resolve(e: Expression): Expression = e.transform {
-            case a: AttributeReference if m0.contains(a.exprId) => m0(a.exprId)
-          }
-          val entries = projList.map {
-            case a: AttributeReference => Some(a.exprId -> resolve(a))
-            case al: Alias => Some(al.exprId -> resolve(al.child))
-            case _ => None
-          }
-          if (entries.contains(None)) None
-          else Some((rel, c0, m0 ++ entries.flatten.toMap, dj))
+
+  private def splitConjuncts(e: Option[Expression]): Seq[Expression] = {
+    def split(x: Expression): Seq[Expression] = x match {
+      case And(l, r) => split(l) ++ split(r)
+      case c => Seq(c)
+    }
+    e.toSeq.flatMap(split)
+  }
+
+  private val BaseCols = Seq("user_id", "event_type", "ts_us", "event_id", "cents")
+
+  /** What the front end proves about one Aggregate: its input is the
+    * LIVE base scan `rel` of `store`, reached through column pruning,
+    * filters and at most one series-key dim join; `resolve` takes any
+    * expression above the scan back to base columns. The filter's
+    * conjuncts split into series-identity ones (`series`: user_id /
+    * event_type only — they transfer to any cascade table by name),
+    * the effective half-open `ts_us` range [lo, hi), and the `rest`
+    * each path judges itself (the value and quantile paths accept
+    * none). Grouping keys are classified BY EXPRID — the base's
+    * user_id, its event_type, one slot step, or a dim-side expression
+    * — so a dim column that happens to be called user_id stays a dim
+    * key. */
+  private case class Match(
+      agg: Aggregate, rel: LogicalRelation, store: String, info: StoreInfo,
+      resolve: Expression => Expression, ids: Map[String, ExprId],
+      series: Seq[Expression], lo: Option[Long], hi: Option[Long],
+      rest: Seq[Expression], groupings: Seq[Expression], stepSec: Long,
+      hasUid: Boolean, hasEtype: Boolean, dimJoin: Option[DimJoin]) {
+    def layout: graft.sources.StoreLayout = info.layout
+    def seriesCond: Option[Expression] = series.reduceOption(And)
+    def dimIds: AttributeSet =
+      dimJoin.map(_.dim.outputSet).getOrElse(AttributeSet.empty)
+    /** Whether a resolved expression IS the base column `name`. */
+    def is(name: String)(e: Expression): Boolean = e match {
+      case a: AttributeReference => a.exprId == ids(name)
+      case _ => false
+    }
+    /** A resolved base grouping key rebased onto the substituted
+      * source's user_id / event_type / slot; None for anything else. */
+    def baseKey(e: Expression, uid: => Expression, etype: => Expression,
+                slot: => Expression): Option[Expression] = e match {
+      case _ if is("user_id")(e) => Some(uid)
+      case _ if is("event_type")(e) => Some(etype)
+      case SlotExpr(ts, _) if is("ts_us")(ts) => Some(slot)
+      case _ => None
+    }
+    /** Every slot step the query evaluates — the grouping's and each
+      * count(DISTINCT slot) operand's ("active periods"); the scanned
+      * level must divide them all, or a distinct projection over the
+      * cascade would conflate cells. A slotless query contributes 0,
+      * which every level divides. */
+    def slotSteps: Seq[Long] = stepSec +: agg.aggregateExpressions.flatMap(_.collect {
+      case AggregateExpression(Count(Seq(c)), Complete, true, None, _) =>
+        resolve(c) match {
+          case SlotExpr(ts, s) if is("ts_us")(ts) => Some(s)
+          case _ => None
         }
-      case Filter(cond, child) =>
-        unwrapMaybeJoin(child).map { case (rel, c0, m, dj) =>
-          val rc = cond.transform {
-            case a: AttributeReference if m.contains(a.exprId) => m(a.exprId)
-          }
-          (rel, Some(c0.map(And(_, rc)).getOrElse(rc)), m, dj)
-        }
-      case other => unwrap(other).map { case (rel, c0, m) => (rel, c0, m, None) }
+    }.flatten)
+    /** The empty-grouping aggregate (dim keys aside): over an empty
+      * source count(1) = 0 but sum(n) = NULL, so its count coalesces. */
+    def global: Boolean = !hasUid && !hasEtype && stepSec == 0L
+    /** The T-aligned interior of [lo, hi) in µs: lo rounded up, hi
+      * rounded down to multiples of T seconds. */
+    def interiorUs(t: Long): (Option[Long], Option[Long]) = {
+      val su = t * 1000000L
+      (lo.map(l => Math.floorDiv(l + su - 1, su) * su),
+        hi.map(h => Math.floorDiv(h, su) * su))
     }
   }
 
-  private def tryRewrite(agg: Aggregate): Option[LogicalPlan] = {
-    val (rel, cond, exprMap, dimJoin) = unwrapMaybeJoin(agg.child) match {
-      case Some(x) => x
-      case None => return None
-    }
+  private def matchScan(agg: Aggregate, rel: LogicalRelation,
+                        conjuncts: Seq[Expression],
+                        resolve: Expression => Expression,
+                        dimJoin: Option[DimJoin]): Option[Match] = {
     val store = storeRootOf(rel) match {
       case Some(s) => s
       case None => return None
     }
-    def resolve(e: Expression): Expression = e.transform {
-      case a: AttributeReference if exprMap.contains(a.exprId) => exprMap(a.exprId)
-    }
-    // classify the filter's conjuncts. Identity conjuncts transfer
-    // verbatim — the rebase below maps attributes onto the cascade BY
-    // NAME, which is sound only once every reference is proven (by
-    // exprId) to be the relation's actual user_id / event_type
-    // attribute; an alias masquerading under those names that resolved
-    // to anything else blocks the rewrite (ADVICE r6 #2). Half-open
-    // ts_us bounds are collected for the alignment check below
-    // (VERDICT r6 #1); any other conjunct blocks the rewrite.
-    val identityIds = rel.output
-      .filter(a => a.name == "user_id" || a.name == "event_type")
-      .map(_.exprId).toSet
-    val tsUsId = rel.output.find(_.name == "ts_us").map(_.exprId)
-    def isTs(e: Expression): Boolean = e match {
-      case a: AttributeReference => tsUsId.contains(a.exprId)
+    val ids = BaseCols.flatMap(n => rel.output.find(_.name == n).map(n -> _.exprId)).toMap
+    if (ids.size != BaseCols.size) return None
+    def isTs(e: Expression): Boolean = resolve(e) match {
+      case a: AttributeReference => a.exprId == ids("ts_us")
       case _ => false
     }
-    val eidId = rel.output.find(_.name == "event_id").map(_.exprId)
-    def isEid(e: Expression): Boolean = e match {
-      case a: AttributeReference => eidId.contains(a.exprId)
-      case _ => false
+    // identity conjuncts transfer verbatim — rebased BY NAME, which is
+    // sound only once every reference is proven (by exprId) to be the
+    // relation's own user_id / event_type; an alias masquerading under
+    // those names that resolved to anything else lands in `rest`
+    // (ADVICE r6 #2). Half-open ts_us bounds conjoin to [max, min).
+    var series = Seq.empty[Expression]
+    var lows = Seq.empty[Long]
+    var highs = Seq.empty[Long]
+    var rest = Seq.empty[Expression]
+    conjuncts.foreach {
+      case c if c.references.nonEmpty && c.references.forall(a =>
+          a.exprId == ids("user_id") || a.exprId == ids("event_type")) =>
+        series :+= c
+      case GreaterThanOrEqual(t, Literal(l: Long, LongType)) if isTs(t) => lows :+= l
+      case LessThanOrEqual(Literal(l: Long, LongType), t) if isTs(t) => lows :+= l
+      case LessThan(t, Literal(u: Long, LongType)) if isTs(t) => highs :+= u
+      case GreaterThan(Literal(u: Long, LongType), t) if isTs(t) => highs :+= u
+      case c => rest :+= c
     }
-    // the repo-wide series order key struct(ts_us, event_id) — the
-    // ordering under which min_by/max_by(cents, ·) IS the cell's
-    // first/last sample (M4's endpoint pair)
-    def isSeriesOrder(o: Expression): Boolean = o match {
-      case cns: CreateNamedStruct => cns.valExprs match {
-        case Seq(t, ei) => isTs(t) && isEid(ei)
-        case _ => false
-      }
-      case _ => false
-    }
-    var seriesCond: Option[Expression] = None
-    var lowerUs = Seq.empty[Long] // conjuncts of the form ts_us >= L
-    var upperUs = Seq.empty[Long] // conjuncts of the form ts_us <  U
-    cond.toSeq.flatMap(splitConjuncts).foreach {
-      case c if c.references.nonEmpty &&
-          c.references.forall(a => identityIds.contains(a.exprId)) =>
-        seriesCond = Some(seriesCond.map(And(_, c)).getOrElse(c))
-      case GreaterThanOrEqual(t, Literal(l: Long, LongType)) if isTs(t) =>
-        lowerUs :+= l
-      case LessThanOrEqual(Literal(l: Long, LongType), t) if isTs(t) =>
-        lowerUs :+= l
-      case LessThan(t, Literal(u: Long, LongType)) if isTs(t) =>
-        upperUs :+= u
-      case GreaterThan(Literal(u: Long, LongType), t) if isTs(t) =>
-        upperUs :+= u
-      case _ => return None
-    }
-    // grouping: ANY subset of {user_id, event_type, slot(S)} —
-    // groupBy(user_id, event_type, slot) is the per-series fetch shape,
-    // groupBy(event_type, slot) the fleet-wide dashboard rollup,
-    // groupBy(slot) the whole-store profile, groupBy(user_id,
-    // event_type) the per-series RANGE TOTAL (the commonest dashboard
-    // query of all), and the empty grouping a whole-store total; all
-    // are monoid images of the cascade (dropping a key or the slot
-    // just re-aggregates more rows into coarser groups)
+    val (lo, hi) = (lows.maxOption, highs.minOption)
+    // the alignment math floors (Math.floorDiv) while the slot
+    // quantization the query itself evaluates (SlotExpr's
+    // IntegralDivide) truncates toward zero — the two disagree for
+    // negative ts_us, so pre-1970 bounds would mis-assign boundary
+    // rows. The store never ingests negative timestamps, so simply
+    // leave such plans alone (ADVICE r7 #1)
+    if (lo.exists(_ < 0L) || hi.exists(_ < 0L)) return None
+    // grouping: ANY subset of {user_id, event_type, slot(S)} plus dim
+    // keys — the per-series fetch shape, the fleet-wide rollup, the
+    // whole-store profile, the per-series RANGE TOTAL and the global
+    // total are all monoid images of the cascade (dropping a key or
+    // the slot just re-aggregates more rows into coarser groups)
+    val dimIds = dimJoin.map(_.dim.outputSet).getOrElse(AttributeSet.empty)
+    val groupings = agg.groupingExpressions.map(resolve)
     var stepSec = 0L
     var hasUid = false; var hasEtype = false
     var baseKeys = 0
-    var ok = true
-    val dimOutputIds: AttributeSet =
-      dimJoin.map(_.dim.outputSet).getOrElse(AttributeSet.empty)
-    // resolved grouping expressions in original order — dim-side keys
-    // (references entirely inside the untouched dim subtree) pass
-    // through the rewrite verbatim
-    val resolvedGroupings = agg.groupingExpressions.map(resolve)
-    resolvedGroupings.foreach {
-      case a: AttributeReference if a.name == "user_id" =>
+    groupings.foreach {
+      case a: AttributeReference if a.exprId == ids("user_id") =>
         hasUid = true; baseKeys += 1
-      case a: AttributeReference if a.name == "event_type" =>
+      case a: AttributeReference if a.exprId == ids("event_type") =>
         hasEtype = true; baseKeys += 1
       case SlotExpr(ts, s) if isTs(ts) =>
         // two slot expressions at DIFFERENT steps would silently keep
         // only the last and regroup both at it (ADVICE r6 #1):
         // duplicate identity keys are harmless, duplicate steps are not
-        if (stepSec != 0L && stepSec != s) ok = false
-        else { stepSec = s; baseKeys += 1 }
-      case e if e.references.nonEmpty && e.references.subsetOf(dimOutputIds) => ()
-      case _ => ok = false
+        if (stepSec != 0L && stepSec != s) return None
+        stepSec = s; baseKeys += 1
+      case e if e.references.nonEmpty && e.references.subsetOf(dimIds) => ()
+      case _ => return None
     }
-    if (!ok || baseKeys > 3) return None
+    if (baseKeys > 3) return None
+    val info = storeInfo(store) match {
+      case Some(x) => x
+      case None => return None
+    }
+    if (!baseScanIsLive(info, store, rel)) return None
+    Some(Match(agg, rel, store, info, resolve, ids, series, lo, hi, rest,
+      groupings, stepSec, hasUid, hasEtype, dimJoin))
+  }
+
+  /** The coarsest materialized level T for the match: T divides every
+    * slot step the query evaluates, every family in `prefixes` is
+    * materialized at T (the first serves the read), and the range
+    * fits T. With `split` (the value path) the range only needs a
+    * NON-EMPTY T-aligned interior — the sub-cell boundary pieces are
+    * served from raw, and a range shorter than one coarse cell falls
+    * through to a finer level instead of raw; otherwise every bound
+    * must be a multiple of T (a sketch merge or a lag window cannot
+    * absorb a raw boundary piece). The size gate then decides on the
+    * chosen table: a finer level is only LARGER, so a failed gate is a
+    * decline, not a fall-through. */
+  private def chooseLevel(m: Match, prefixes: Seq[String], split: Boolean): Option[Long] = {
+    def fits(t: Long): Boolean = m.interiorUs(t) match {
+      case (Some(b), Some(e)) if split => b < e
+      case _ if split => true // unbounded on a side: so is the interior
+      case _ => (m.lo ++ m.hi).forall(_ % (t * 1000000L) == 0L)
+    }
+    m.layout.steps
+      .filter(s => m.slotSteps.forall(_ % s == 0))
+      .sorted.reverse
+      .find(s => prefixes.forall(p => tableExistsCached(m.info, m.store, s"$p$s")) &&
+        fits(s))
+      .filter(t => sizeGateOk(m.info, m.rel, m.store, s"${prefixes.head}$t"))
+  }
+
+  /** Fresh analyzed scan of a store table (new exprIds throughout)
+    * and its by-name column lookup. */
+  private def bind(m: Match, table: String)
+      : (LogicalPlan, String => AttributeReference) = {
+    val plan = tableScan(m.info, m.store, table).queryExecution.analyzed
+    (plan, attOf(plan))
+  }
+
+  private def attOf(plan: LogicalPlan)(name: String): AttributeReference =
+    plan.output.find(_.name == name).get match { case a: AttributeReference => a }
+
+  /** Series conjuncts rebased onto another table BY NAME (sound: the
+    * front end proved each reference is the base's own key column). */
+  private def rebase(att: String => Expression)(c: Expression): Expression =
+    c.transform { case a: AttributeReference => att(a.name) }
+
+  /** The cascade table filtered to the match: series conjuncts, the
+    * T-aligned interior as slot_ts bounds, plus dt partition-prune
+    * twins — slot_ts is a data column, and the planner cannot derive
+    * the dt partition key from it (the same reason TsdbStore.slotRead
+    * filters dt explicitly). */
+  private def interior(m: Match, t: Long, cascade: LogicalPlan,
+                       att: String => AttributeReference): LogicalPlan = {
+    val (b, e) = m.interiorUs(t)
+    val slot = att("slot_ts")
+    val conds = m.series.map(rebase(att)) ++
+      b.map(x => GreaterThanOrEqual(slot, Literal(x / 1000000L, LongType))) ++
+      e.map(x => LessThan(slot, Literal(x / 1000000L, LongType))) ++
+      cascade.output.find(_.name == "dt").toSeq.flatMap { dt =>
+        // exclusive upper bound: derive the dt literal from the LAST
+        // INCLUDED second, not the bound itself — a bound exactly on
+        // a day/month boundary would otherwise keep one extra
+        // partition the slot_ts filter then empties (ADVICE r7 #2)
+        b.map(x => GreaterThanOrEqual(dt, TsdbStore.dtLiteral(m.layout, x / 1000000L))) ++
+        e.map(x => LessThanOrEqual(dt, TsdbStore.dtLiteral(m.layout, (x - 1L) / 1000000L)))
+      }
+    conds.reduceOption(And).map(Filter(_, cascade)).getOrElse(cascade)
+  }
+
+  private def ae(f: AggregateFunction): Expression =
+    AggregateExpression(f, Complete, isDistinct = false)
+
+  /** A T-level slot regrouped to step S: identity when S == T, and
+    * never read when slotless (S = 0). */
+  private def slotAt(slot: Expression, t: Long, s: Long): Expression =
+    if (t == s || s == 0L) slot
+    else Multiply(IntegralDivide(slot, Literal(s, LongType)), Literal(s, LongType))
+
+  /** count(1) over raw rows ⇒ the cascade's per-cell count n (exact
+    * hit) or sum(n). count(1) is non-nullable and sum(n) over a
+    * non-empty group never NULL — KnownNotNull keeps the output's
+    * nullability; the global form coalesces the empty source to 0. */
+  private def countOf(m: Match, exact: Boolean, n: Expression): Expression =
+    KnownNotNull(
+      if (exact) n
+      else if (m.global) Coalesce(Seq(ae(Sum(n)), Literal(0L, LongType)))
+      else ae(Sum(n)))
+
+  /** Every Aggregate output rebuilt over the substituted source (output
+    * exprIds `newIds`) leaf by leaf, so derived outputs (CollapseProject
+    * folds arithmetic into the Aggregate's list) survive as long as
+    * every leaf converts: `aggLeaf` converts an aggregate over the old
+    * input, `attLeaf` an old attribute; None from either — or any old
+    * reference left over — declines. Outputs keep their exprIds, so
+    * parent operators (HAVING, Sort+Limit) compose untouched. */
+  private def convertOutputs(agg: Aggregate, newIds: Set[ExprId])(
+      aggLeaf: AggregateExpression => Option[Expression],
+      attLeaf: AttributeReference => Option[Expression])
+      : Option[Seq[NamedExpression]] = {
+    var failed = false
+    // decline branches return the MATCHED node, never the outer
+    // expression: transformDown descends into whatever a rule returns,
+    // so re-returning an ancestor would recurse without bound
+    // (round-10 StackOverflow). Replacement-side attributes pass
+    // through untouched (the exprId guards).
+    def convert(e: Expression): Expression = e.transform {
+      case ag: AggregateExpression
+          if ag.references.forall(a => !newIds.contains(a.exprId)) =>
+        aggLeaf(ag).getOrElse { failed = true; ag }
+      case a: AttributeReference if !newIds.contains(a.exprId) =>
+        attLeaf(a).getOrElse { failed = true; a }
+    }
+    val outs = agg.aggregateExpressions.map {
+      case a: AttributeReference => Alias(convert(a), a.name)(exprId = a.exprId)
+      case al: Alias => Alias(convert(al.child), al.name)(exprId = al.exprId)
+      case other => failed = true; other
+    }
+    if (failed || outs.exists(_.references.exists(a => !newIds.contains(a.exprId)))) None
+    else Some(outs)
+  }
+
+  /** Exact hit = cascade rows ARE the answer rows: a pure Project.
+    * Otherwise re-aggregate by the original keys in order, base keys
+    * rebased, dim keys verbatim (their subtree rode along). */
+  private def regroup(m: Match, exact: Boolean, outs: Seq[NamedExpression],
+                      child: LogicalPlan, uid: Expression, etype: Expression,
+                      slot: Expression): LogicalPlan =
+    if (exact) Project(outs, child)
+    else Aggregate(m.groupings.map(g => m.baseKey(g, uid, etype, slot).getOrElse(g)).distinct,
+      outs, child)
+
+  // ---- value path: agg_T --------------------------------------------
+
+  private def rewriteValue(m: Match): Option[LogicalPlan] = {
+    val agg = m.agg
+    val dimIds = m.dimIds
     // aggregates REFERENCING the dim side survive the rewrite only
     // when they are multiplicity-insensitive: the cascade collapses
     // each (series, T-slot) cell to ONE row, so per-cell repetition of
@@ -645,10 +791,9 @@ case class RollupSubstitution(session: SparkSession) extends Rule[LogicalPlan] {
     // AggregateExpression cannot live in the exact path's Project).
     var hasDimAgg = false
     val dimAggBad = agg.aggregateExpressions.exists(_.exists {
-      case ag: AggregateExpression
-          if ag.references.exists(dimOutputIds.contains) =>
+      case ag: AggregateExpression if ag.references.exists(dimIds.contains) =>
         hasDimAgg = true
-        !(ag.references.subsetOf(dimOutputIds) && (ag.aggregateFunction match {
+        !(ag.references.subsetOf(dimIds) && (ag.aggregateFunction match {
           case _: Count => ag.isDistinct
           case _: Min | _: Max => !ag.isDistinct
           case _ => false
@@ -656,84 +801,23 @@ case class RollupSubstitution(session: SparkSession) extends Rule[LogicalPlan] {
       case _ => false
     })
     if (dimAggBad) return None
-    // slot steps appearing inside count(DISTINCT slot(s)) operands —
-    // "active periods" aggregates. The scanned level must divide these
-    // too, or the distinct projection below would conflate cells
-    val distinctSlotSteps: Seq[Long] = agg.aggregateExpressions.flatMap(_.collect {
-      case AggregateExpression(Count(Seq(c)), Complete, true, None, _) =>
-        resolve(c) match {
-          case SlotExpr(ts2, s) if isTs(ts2) => Some(s)
-          case _ => None
-        }
-    }.flatten)
-    // coarsest materialized step dividing the query's slot step (and
-    // every distinct-slot step) WHOSE ALIGNED INTERIOR IS NON-EMPTY
-    // for the query's range: a range shorter than one coarse cell
-    // (the "totals for the last 6 hours" slotless dashboard) falls
-    // through to a finer level instead of rescanning raw. A slotless
-    // aggregate (stepSec = 0) re-aggregates ANY level (0 % s == 0 for
-    // every s), so only the range constrains its choice.
-    val info = storeInfo(store) match {
+    val t = chooseLevel(m, Seq("agg_"), split = true) match {
       case Some(x) => x
       case None => return None
     }
-    if (!baseScanIsLive(info, store, rel)) return None
-    val layout = info.layout
-    val loOpt = lowerUs.maxOption
-    val hiOpt = upperUs.minOption
-    // the alignment math below floors (Math.floorDiv) while the slot
-    // quantization the query itself evaluates (SlotExpr's
-    // IntegralDivide) truncates toward zero — the two disagree for
-    // negative ts_us, so pre-1970 bounds would mis-assign boundary
-    // rows between the interior and the raw pieces. The store never
-    // ingests negative timestamps, so simply leave such plans alone
-    // (ADVICE r7 #1)
-    if (loOpt.exists(_ < 0L) || hiOpt.exists(_ < 0L)) return None
-    def interiorNonEmpty(tc: Long): Boolean = (loOpt, hiOpt) match {
-      case (Some(l), Some(h)) =>
-        val su = tc * 1000000L
-        Math.floorDiv(l + su - 1, su) * su < Math.floorDiv(h, su) * su
-      case _ => true // unbounded on a side: the interior is unbounded too
-    }
-    val t = layout.steps
-      .filter(s => stepSec % s == 0 && distinctSlotSteps.forall(_ % s == 0))
-      .sorted.reverse
-      .find(s => tableExistsCached(info, store, s"agg_$s") &&
-        interiorNonEmpty(s)) match {
-      case Some(x) => x
-      case None => return None
-    }
-    // stats gate: a finer level is only LARGER, so a failed gate is a
-    // decline, not a fall-through
-    if (!sizeGateOk(info, rel, store, s"agg_$t")) return None
-
-    // a half-open ts_us range transfers EXACTLY as slot bounds iff its
-    // bounds are multiples of the SCANNED cascade step T: each T-cell
-    // is then entirely inside or entirely outside the range. An
-    // UNALIGNED bound splits into the largest T-aligned INTERIOR
+    // an UNALIGNED bound splits into the largest T-aligned INTERIOR
     // (served from the cascade) plus a sub-cell BOUNDARY piece (served
     // from ≤ a partition's worth of raw rows) unioned as monoid tuples
     // under one re-aggregation — the shape arbitrary now()-anchored
-    // dashboard ranges actually hit. Bounds conjoin, so the effective
-    // range is [max(lowers), min(uppers)).
+    // dashboard ranges actually hit. Each piece is nonempty only when
+    // its bound is unaligned.
     val stepUs = t * 1000000L
-    val bupUs = loOpt.map(l => Math.floorDiv(l + stepUs - 1, stepUs) * stepUs)
-    val edownUs = hiOpt.map(h => Math.floorDiv(h, stepUs) * stepUs)
-    (bupUs, edownUs) match {
-      // no T-aligned interior at all (the whole range is inside one
-      // cell, or empty): nothing to serve from the cascade — stay raw
-      case (Some(b), Some(e)) if b >= e => return None
-      case _ => ()
-    }
-    // boundary pieces, each nonempty only when its bound is unaligned
-    val leftPiece = for { l <- loOpt; b <- bupUs if l < b } yield (l, b)
-    val rightPiece = for { h <- hiOpt; e <- edownUs if e < h } yield (e, h)
+    val (bupUs, edownUs) = m.interiorUs(t)
+    val leftPiece = for { l <- m.lo; b <- bupUs if l < b } yield (l, b)
+    val rightPiece = for { h <- m.hi; e <- edownUs if e < h } yield (e, h)
     val pieces = leftPiece.toSeq ++ rightPiece.toSeq
 
-    // fresh analyzed scan of the cascade table (new exprIds throughout)
-    val cascade = tableScan(info, store, s"agg_$t").queryExecution.analyzed
-    def att(name: String): AttributeReference =
-      cascade.output.find(_.name == name).get match { case a: AttributeReference => a }
+    val (cascade, att) = bind(m, s"agg_$t")
     val (uid, etype, slot) = (att("user_id"), att("event_type"), att("slot_ts"))
     val (nC, sumC, minC, maxC) =
       (att("n"), att("sum_cents"), att("min_cents"), att("max_cents"))
@@ -750,39 +834,7 @@ case class RollupSubstitution(session: SparkSession) extends Rule[LogicalPlan] {
     val lastCOpt = cascade.output.collectFirst {
       case a: AttributeReference if a.name == "last" => a }
     if (usesEndpoint && (firstCOpt.isEmpty || lastCOpt.isEmpty)) return None
-    // cascade-side predicate: identity conjuncts rebased by (validated)
-    // name, the INTERIOR as slot_ts bounds, plus dt partition-prune
-    // twins — slot_ts is a data column, and the planner cannot derive
-    // the dt partition key from it (the same reason TsdbStore.slotRead
-    // filters dt explicitly)
-    val rebasedSeries: Seq[Expression] = seriesCond.toSeq.map(_.transform {
-      case a: AttributeReference => att(a.name)
-    })
-    val slotBounds: Seq[Expression] =
-      bupUs.map(b => GreaterThanOrEqual(slot, Literal(b / 1000000L, LongType))).toSeq ++
-      edownUs.map(e => LessThan(slot, Literal(e / 1000000L, LongType))).toSeq
-    def dtLit(sec: Long): Expression = {
-      val day = java.time.LocalDate.ofEpochDay(Math.floorDiv(sec, 86400L))
-      if (layout.monthly)
-        Literal.create(f"${day.getYear}%04d-${day.getMonthValue}%02d",
-          org.apache.spark.sql.types.StringType)
-      else Literal(day.toEpochDay.toInt, org.apache.spark.sql.types.DateType)
-    }
-    val dtBounds: Seq[Expression] =
-      cascade.output.collect { case a: AttributeReference if a.name == "dt" => a }
-        .headOption.toSeq.flatMap { dt =>
-          // exclusive upper bound: derive the dt literal from the LAST
-          // INCLUDED second, not the bound itself — a bound exactly on
-          // a day/month boundary would otherwise keep one extra
-          // partition the slot_ts filter then empties (ADVICE r7 #2)
-          bupUs.map(b => GreaterThanOrEqual(dt, dtLit(b / 1000000L))).toSeq ++
-          edownUs.map(e => LessThanOrEqual(dt, dtLit((e - 1L) / 1000000L))).toSeq
-        }
-    val interior: LogicalPlan =
-      (rebasedSeries ++ slotBounds ++ dtBounds).reduceOption(And) match {
-        case Some(c) => Filter(c, cascade)
-        case None => cascade
-      }
+    val inner = interior(m, t, cascade, att)
 
     // a boundary piece as a union branch: raw rows of [loUs, hiUs)
     // mapped to the cascade's monoid-tuple shape (n=1, cents³). One
@@ -790,25 +842,19 @@ case class RollupSubstitution(session: SparkSession) extends Rule[LogicalPlan] {
     // partition-filter extraction live, where an OR across pieces
     // would defeat it.
     def rawPiece(loUs: Long, hiUs: Long): LogicalPlan = {
-      val base = tableScan(info, store, "base").queryExecution.analyzed
-      def batt(n: String): AttributeReference =
-        base.output.find(_.name == n).get match { case a: AttributeReference => a }
+      val (base, batt) = bind(m, "base")
       val (bu, be, bts, bc) =
         (batt("user_id"), batt("event_type"), batt("ts_us"), batt("cents"))
       def rowStruct: Expression = CreateNamedStruct(Seq(
         Literal("ts_us"), bts, Literal("event_id"), batt("event_id"),
         Literal("cents"), bc))
-      val series2 = seriesCond.toSeq.map(_.transform {
-        case a: AttributeReference => batt(a.name)
-      })
       val tsB: Seq[Expression] = Seq(
         GreaterThanOrEqual(bts, Literal(loUs, LongType)),
         LessThan(bts, Literal(hiUs, LongType)))
-      val dtB: Seq[Expression] =
-        base.output.collect { case a: AttributeReference if a.name == "dt" => a }
-          .headOption.toSeq.flatMap { d => Seq(
-            GreaterThanOrEqual(d, dtLit(Math.floorDiv(loUs, 1000000L))),
-            LessThanOrEqual(d, dtLit(Math.floorDiv(hiUs - 1, 1000000L)))) }
+      val dtB: Seq[Expression] = base.output.find(_.name == "dt").toSeq.flatMap { d =>
+        Seq(GreaterThanOrEqual(d, TsdbStore.dtLiteral(m.layout, Math.floorDiv(loUs, 1000000L))),
+          LessThanOrEqual(d, TsdbStore.dtLiteral(m.layout, Math.floorDiv(hiUs - 1, 1000000L))))
+      }
       val slotRaw = Multiply(
         IntegralDivide(bts, Literal(stepUs, LongType)), Literal(t, LongType))
       Project(Seq(
@@ -820,7 +866,7 @@ case class RollupSubstitution(session: SparkSession) extends Rule[LogicalPlan] {
           (if (usesEndpoint)
              Seq(Alias(rowStruct, "first")(), Alias(rowStruct, "last")())
            else Nil),
-        Filter((series2 ++ tsB ++ dtB).reduce(And), base))
+        Filter((m.series.map(rebase(batt)) ++ tsB ++ dtB).reduce(And), base))
     }
 
     // source of the re-aggregation: the filtered cascade alone (the
@@ -828,7 +874,7 @@ case class RollupSubstitution(session: SparkSession) extends Rule[LogicalPlan] {
     // cascade interior unioned with the boundary pieces
     val (child2a, uidR, etypeR, slotR, nR, sumR, minR, maxR, firstR, lastR) =
       if (pieces.isEmpty)
-        (interior: LogicalPlan, uid: Attribute, etype: Attribute,
+        (inner: LogicalPlan, uid: Attribute, etype: Attribute,
           slot: Attribute, nC: Expression, sumC: Expression,
           minC: Expression, maxC: Expression,
           firstCOpt: Option[Expression], lastCOpt: Option[Expression])
@@ -836,7 +882,7 @@ case class RollupSubstitution(session: SparkSession) extends Rule[LogicalPlan] {
         val branch0 = Project(
           Seq(uid, etype, slot, nC, sumC, minC, maxC) ++
             (if (usesEndpoint) Seq(firstCOpt.get, lastCOpt.get) else Nil),
-          interior)
+          inner)
         val u = Union(branch0 +: pieces.map { case (l, h) => rawPiece(l, h) })
         val out = u.output
         val (fU, lU) =
@@ -852,14 +898,12 @@ case class RollupSubstitution(session: SparkSession) extends Rule[LogicalPlan] {
     // UNTOUCHED dim subtree on the same keys — correct because every
     // raw row of a cascade cell shares the cell's (user_id,
     // event_type), so the unique-dim inner join matches a cell's rows
-    // all-or-nothing and adds the same dim values to each. Enriched
-    // dashboard rollups (base ⋈ metadata, grouped by a dim attribute)
-    // skip raw like plain ones; the broadcast hint, if any, carries
-    // over with the join node's own hint
-    val child2: LogicalPlan = dimJoin match {
+    // all-or-nothing and adds the same dim values to each. The
+    // broadcast hint, if any, carries over with the join node's hint
+    val child2: LogicalPlan = m.dimJoin match {
       case None => child2a
       case Some(dj) =>
-        if (!dimIsUnique(info, dj)) return None
+        if (!dimIsUnique(m.info, dj)) return None
         val cond2 = dj.pairs.map { case (name, d) =>
           EqualTo(if (name == "user_id") uidR else etypeR, d): Expression
         }.reduce(And)
@@ -867,42 +911,20 @@ case class RollupSubstitution(session: SparkSession) extends Rule[LogicalPlan] {
     }
 
     // exact hit = the cascade's own granularity requested with no
-    // boundary pieces: cascade rows ARE the answer rows. Dropping a
-    // key, coarsening the step, or a split range re-aggregates. A
-    // DISTINCT (or approx-distinct) aggregate always re-aggregates —
-    // its replacement is itself an AggregateExpression, which a pure
-    // Project can't host; so does a (multiplicity-insensitive)
-    // dim-side aggregate, which survives as-is and needs an Aggregate
-    // to evaluate it
+    // boundary pieces. A DISTINCT (or approx-distinct) aggregate
+    // always re-aggregates — its replacement is itself an
+    // AggregateExpression, which a pure Project can't host; so does a
+    // (multiplicity-insensitive) dim-side aggregate
     val hasDistinct = agg.aggregateExpressions.exists(_.exists {
       case ag: AggregateExpression =>
         ag.isDistinct || ag.aggregateFunction.isInstanceOf[HyperLogLogPlusPlus]
       case _ => false
     })
-    val exact = pieces.isEmpty && t == stepSec && hasUid && hasEtype &&
+    val exact = pieces.isEmpty && t == m.stepSec && m.hasUid && m.hasEtype &&
       !hasDistinct && !hasDimAgg
-    def ae(f: AggregateFunction): Expression =
-      AggregateExpression(f, Complete, isDistinct = false)
-    // slotless aggregates never reference a slot output, so slot2 is
-    // never used there (guarded below — the div-by-0 is unreachable)
-    val slot2: Expression =
-      if (t == stepSec || stepSec == 0L) slotR // step-aligned: regrouping is identity
-      else Multiply(IntegralDivide(slotR, Literal(stepSec, LongType)),
-        Literal(stepSec, LongType))
-    // count(1) over base rows is non-nullable; sum(n) over a (always
-    // non-empty) cascade GROUP never evaluates to null — KnownNotNull
-    // keeps the substituted output's nullability identical. The one
-    // exception is the GLOBAL (empty-grouping) aggregate over an empty
-    // source: count(1) = 0 but sum(n) = NULL, so the global form
-    // coalesces to 0 (sum/min/max stay NULL in both plans there).
-    val global = !hasUid && !hasEtype && stepSec == 0L
-    val countRepl: Expression = KnownNotNull(
-      if (exact) nR
-      else if (global) Coalesce(Seq(ae(Sum(nR)), Literal(0L, LongType)))
-      else ae(Sum(nR)))
-    val sumRepl: Expression = if (exact) sumR else ae(Sum(sumR))
-    val minRepl: Expression = if (exact) minR else ae(Min(minR))
-    val maxRepl: Expression = if (exact) maxR else ae(Max(maxR))
+    val slot2 = slotAt(slotR, t, m.stepSec)
+    def agged(e: Expression, f: Expression => AggregateFunction): Expression =
+      if (exact) e else ae(f(e))
     // min_by/max_by(cents, struct(ts_us, event_id)) ⇒ the stored
     // endpoint struct's cents field: the struct is the lexicographic
     // min/max over (ts_us, event_id, cents) and (ts_us, event_id) is
@@ -910,174 +932,95 @@ case class RollupSubstitution(session: SparkSession) extends Rule[LogicalPlan] {
     // row and its value rides along — coarser groups re-minimize over
     // cell structs (a monoid), boundary pieces contribute row structs
     def endCents(e: Expression): Expression = GetStructField(e, 2, Some("cents"))
-    val firstRepl: Option[Expression] =
-      firstR.map(f => endCents(if (exact) f else ae(Min(f))))
-    val lastRepl: Option[Expression] =
-      lastR.map(l => endCents(if (exact) l else ae(Max(l))))
-    // avg = sum/n — the cascade stores both halves of the fraction, so
-    // average (the reference's default consolidation function)
-    // substitutes as one division over the monoid image. Spark's raw
-    // Average accumulates a DOUBLE running sum over the samples; the
+    // avg = sum/n — the cascade stores both halves of the fraction.
+    // Spark's raw Average accumulates a DOUBLE running sum; the
     // substituted form divides the EXACT integer sum — bit-identical
     // whenever the double accumulation is exact (every partial sum an
     // integer below 2^53), and strictly MORE accurate beyond. LEGACY
-    // eval mode mirrors Average's own internal division (the
-    // denominator is never 0 anyway: groups only exist where rows do,
-    // and the empty global input propagates NULL before the division)
+    // eval mode mirrors Average's own internal division
     def dbl(e: Expression): Expression = Cast(e, DoubleType)
-    val avgRepl: Expression =
-      if (exact) Divide(dbl(sumR), dbl(nR), EvalMode.LEGACY)
-      else Divide(dbl(ae(Sum(sumR))), dbl(ae(Sum(nR))), EvalMode.LEGACY)
-
-    // substitute aggregate leaves and grouping references inside each
-    // output expression — arbitrary derived outputs (CollapseProject
-    // folds things like sum/count arithmetic into the Aggregate's
-    // output list) survive as long as every leaf converts. transform
-    // recurses into replacement subtrees, so replacement-side
-    // attributes must pass through untouched (the exprId guard).
+    val isCents = m.is("cents") _
+    // the repo-wide series order key struct(ts_us, event_id) — the
+    // ordering under which min_by/max_by(cents, ·) IS the cell's
+    // first/last sample (M4's endpoint pair)
+    def isSeriesOrder(o: Expression): Boolean = o match {
+      case cns: CreateNamedStruct => cns.valExprs match {
+        case Seq(ts, ei) => m.is("ts_us")(ts) && m.is("event_id")(ei)
+        case _ => false
+      }
+      case _ => false
+    }
+    def distinctOver(op: Expression): Expression =
+      AggregateExpression(Count(Seq(op)), Complete, isDistinct = true)
     val newIds = child2.output.map(_.exprId).toSet
-    var failed = false
-    def convert(e: Expression): Expression = e.transform {
+    val outs = convertOutputs(agg, newIds)({
       // count(DISTINCT <grain column>) is exact over the cascade:
-      // agg_T already holds one row per (user_id, event_type, T-slot),
-      // so the grain columns' distinct SETS survive materialization
-      // untouched — sets are a semilattice, coarser groups just union
-      // cells, and the final DISTINCT dedups across cells (boundary
-      // pieces included). count(DISTINCT user_id) — the DAU/WAU
-      // dashboard — never rescans raw. Any other DISTINCT operand
-      // lost its multiplicities in the cascade and blocks; without
-      // these two cases the generic attribute fallback below would
-      // leave an AggregateExpression inside the exact path's Project
-      case ag @ AggregateExpression(Count(Seq(c)), Complete, true, None, _)
-          if ag.references.forall(a => !newIds.contains(a.exprId)) =>
-        def distinctOver(op: Expression): Expression =
-          AggregateExpression(Count(Seq(op)), Complete, isDistinct = true)
-        resolve(c) match {
-          case a: AttributeReference if a.name == "user_id" => distinctOver(uidR)
-          case a: AttributeReference if a.name == "event_type" => distinctOver(etypeR)
-          case SlotExpr(ts2, s) if isTs(ts2) && s % t == 0 =>
-            distinctOver(
-              if (s == t) slotR
-              else Multiply(IntegralDivide(slotR, Literal(s, LongType)),
-                Literal(s, LongType)))
-          case _ => failed = true; ag
+      // agg_T holds one row per (user_id, event_type, T-slot), so the
+      // grain columns' distinct SETS survive materialization — coarser
+      // groups union cells and the final DISTINCT dedups across cells
+      // (boundary pieces included): the DAU/WAU dashboard never
+      // rescans raw. Any other DISTINCT operand lost its multiplicities
+      case AggregateExpression(Count(Seq(c)), Complete, true, None, _) =>
+        m.resolve(c) match {
+          case r if m.is("user_id")(r) => Some(distinctOver(uidR))
+          case r if m.is("event_type")(r) => Some(distinctOver(etypeR))
+          case SlotExpr(ts, s) if m.is("ts_us")(ts) && s % t == 0 =>
+            Some(distinctOver(slotAt(slotR, t, s)))
+          case _ => None
         }
-      // decline branches return AG (the matched node), never the outer
-      // expression e: transformDown descends into whatever a rule
-      // returns, so returning e from a node NESTED inside it (e.g. a
-      // cast-wrapped unsupported aggregate) re-wraps one level per
-      // visit and recurses without bound (round-10 StackOverflow)
-      case ag @ AggregateExpression(f, Complete, false, None, _)
-          if ag.references.forall(a => !newIds.contains(a.exprId)) =>
-        f match {
-          // non-null literals only: count(NULL) counts zero rows, not
-          // sum(n) — NullPropagation normally folds it away first, but
-          // the rewrite must not depend on that (ADVICE r6 #3)
-          case Count(Seq(Literal(v, _))) if v != null => countRepl
-          case Sum(c, _) => resolve(c) match {
-            case a: AttributeReference if a.name == "cents" => sumRepl
-            case _ => failed = true; ag
-          }
-          case Min(c) => resolve(c) match {
-            case a: AttributeReference if a.name == "cents" => minRepl
-            case _ => failed = true; ag
-          }
-          case Max(c) => resolve(c) match {
-            case a: AttributeReference if a.name == "cents" => maxRepl
-            case _ => failed = true; ag
-          }
-          case MinBy(v, o) => (resolve(v), resolve(o)) match {
-            case (a: AttributeReference, o2)
-                if a.name == "cents" && isSeriesOrder(o2) &&
-                  firstRepl.isDefined => firstRepl.get
-            case _ => failed = true; ag
-          }
-          case MaxBy(v, o) => (resolve(v), resolve(o)) match {
-            case (a: AttributeReference, o2)
-                if a.name == "cents" && isSeriesOrder(o2) &&
-                  lastRepl.isDefined => lastRepl.get
-            case _ => failed = true; ag
-          }
-          case Average(c, _) => resolve(c) match {
-            case a: AttributeReference if a.name == "cents" => avgRepl
-            case _ => failed = true; ag
-          }
-          // approx_count_distinct substitutes like count(DISTINCT):
-          // HLL++ register updates are SET-idempotent (max of rho per
-          // bucket), so feeding each grain tuple once — the cascade's
-          // rows — yields bit-identical registers, hence a bit-identical
-          // estimate, to feeding every raw row. Same relativeSD carries
-          // over; hasDistinct above forces the re-aggregating path
-          case hll @ HyperLogLogPlusPlus(c, _, _, _) => resolve(c) match {
-            case a: AttributeReference if a.name == "user_id" =>
-              ae(hll.copy(child = uidR))
-            case a: AttributeReference if a.name == "event_type" =>
-              ae(hll.copy(child = etypeR))
-            case _ => failed = true; ag
-          }
-          case _ => failed = true; ag
+      case AggregateExpression(f, Complete, false, None, _) => f match {
+        // non-null literals only: count(NULL) counts zero rows, not
+        // sum(n) (ADVICE r6 #3)
+        case Count(Seq(Literal(v, _))) if v != null => Some(countOf(m, exact, nR))
+        case Sum(c, _) if isCents(m.resolve(c)) => Some(agged(sumR, Sum(_)))
+        case Min(c) if isCents(m.resolve(c)) => Some(agged(minR, Min(_)))
+        case Max(c) if isCents(m.resolve(c)) => Some(agged(maxR, Max(_)))
+        case MinBy(v, o) if isCents(m.resolve(v)) &&
+            isSeriesOrder(m.resolve(o)) && firstR.isDefined =>
+          Some(endCents(agged(firstR.get, Min(_))))
+        case MaxBy(v, o) if isCents(m.resolve(v)) &&
+            isSeriesOrder(m.resolve(o)) && lastR.isDefined =>
+          Some(endCents(agged(lastR.get, Max(_))))
+        case Average(c, _) if isCents(m.resolve(c)) =>
+          Some(Divide(dbl(agged(sumR, Sum(_))), dbl(agged(nR, Sum(_))), EvalMode.LEGACY))
+        // approx_count_distinct substitutes like count(DISTINCT):
+        // HLL++ register updates are SET-idempotent, so feeding each
+        // grain tuple once yields bit-identical registers
+        case hll @ HyperLogLogPlusPlus(c, _, _, _) => m.resolve(c) match {
+          case r if m.is("user_id")(r) => Some(ae(hll.copy(child = uidR)))
+          case r if m.is("event_type")(r) => Some(ae(hll.copy(child = etypeR)))
+          case _ => None
         }
-      // any OTHER aggregate over old attributes — FILTER clauses,
-      // distinct over non-grain operands, multi-arg distincts,
-      // non-Complete modes — must BLOCK here: the attribute fallback
-      // below would otherwise rewrite its children and leave a
-      // half-converted aggregate over cascade rows (silently wrong
-      // counts), or on the exact path an AggregateExpression inside a
-      // Project — the crash class the distinct handling closed
-      case ag: AggregateExpression
-          if ag.references.forall(a => !newIds.contains(a.exprId)) =>
-        failed = true; ag
-      case a: AttributeReference if !newIds.contains(a.exprId) =>
-        resolve(a) match {
-          case r: AttributeReference if r.name == "user_id" => uidR
-          case r: AttributeReference if r.name == "event_type" => etypeR
-          case SlotExpr(_, _) => slot2
-          // a pulled-out grouping alias over DIM columns resolves to
-          // an expression whose references live in the (reused) dim
-          // subtree — already part of child2's output, pass through
-          case other if other.references.nonEmpty &&
-              other.references.forall(x => newIds.contains(x.exprId)) => other
-          case _ => failed = true; a
-        }
-    }
-    val newOutputs: Seq[NamedExpression] = agg.aggregateExpressions.map {
-      case a: AttributeReference =>
-        Alias(convert(a), a.name)(exprId = a.exprId)
-      case al: Alias =>
-        Alias(convert(al.child), al.name)(exprId = al.exprId)
-      case other => failed = true; other
-    }
-    if (failed) return None
-    // nothing from the old subtree may survive the conversion
-    if (newOutputs.exists(_.references.exists(a => !newIds.contains(a.exprId))))
-      return None
-
-    if (exact) Some(Project(newOutputs, child2))
-    else {
-      // original key order, each rebased: base keys onto the cascade,
-      // dim keys verbatim (their subtree rode along)
-      val groupings2 = resolvedGroupings.flatMap {
-        case a: AttributeReference if a.name == "user_id" => Some(uidR)
-        case a: AttributeReference if a.name == "event_type" => Some(etypeR)
-        case SlotExpr(ts, _) if isTs(ts) => Some(slot2)
-        case e if e.references.nonEmpty &&
-            e.references.subsetOf(dimOutputIds) => Some(e)
         case _ => None
-      }.distinct
-      Some(Aggregate(groupings2, newOutputs, child2))
+      }
+      // FILTER clauses, distinct over non-grain operands, multi-arg
+      // distincts, non-Complete modes: a half-converted aggregate over
+      // cascade rows would silently miscount
+      case _ => None
+    }, { a =>
+      val r = m.resolve(a)
+      // a pulled-out grouping alias over DIM columns resolves into the
+      // (reused) dim subtree — already part of child2's output
+      m.baseKey(r, uidR, etypeR, slot2).orElse(Some(r).filter(x =>
+        x.references.nonEmpty && x.references.forall(y => newIds.contains(y.exprId))))
+    }) match {
+      case Some(o) => o
+      case None => return None
     }
+    Some(regroup(m, exact, outs, child2, uidR, etypeR, slot2))
   }
 
+  // ---- quantile path: quant_T ---------------------------------------
+
   /** Quantile-cascade substitution (VERDICT r7 next #2): an ad-hoc
-    * EXACT nearest-rank quantile over the store's base table —
+    * EXACT quantile over cents —
     *
     *   base.groupBy(series keys?, slot(S)?)
     *       .agg(percentile_disc(q) WITHIN GROUP (ORDER BY cents))
     *
     * — served from the `quant_T` bottom-k column family when the read
     * is PROVABLY exact. percentile_disc is the SQL-standard nearest
-    * rank (the smallest value with cumulative fraction ≥ q = element
-    * ceil(q·n) of the sorted multiset — the same convention
+    * rank (element ceil(q·n) of the sorted multiset — the convention
     * [[TsdbStore.fetchQuantile]] reads off the sketch), and below
     * K=512 samples per evaluated cell the stored buffer holds EVERY
     * sample, so the sketch read equals the raw computation value-for-
@@ -1086,153 +1029,67 @@ case class RollupSubstitution(session: SparkSession) extends Rule[LogicalPlan] {
     * The exactness gate runs at OPTIMIZE time against the monoid
     * cascade's per-cell counts: one bounded, dt-pruned aggregate over
     * `agg_T` rows (never raw) computes the max sample count over the
-    * query's own evaluated cells, and at ≥ K the rule DECLINES — an
+    * query's own evaluated groups, and at ≥ K the rule DECLINES — an
     * estimate must never masquerade as the exact answer the query
-    * text wrote. That is the substitution's one optimize-time job;
-    * it reads ≤ |series|·(range/T) cascade rows, the same data the
-    * substituted plan would scan anyway.
+    * text wrote.
     *
-    * Scope: grouping any subset of {user_id, event_type, slot(S)}
-    * with a materialized level T dividing S; series-identity filters
-    * transfer; ts_us bounds must be T-ALIGNED (no split path — a raw
-    * boundary piece cannot join a sketch merge without re-sketching,
-    * which is the raw plan anyway); every aggregate output must be a
-    * quantile over cents — percentile_disc (ascending, modern
-    * calculation) or, round 9, percentile_cont / native percentile()
-    * (both resolve to [[Percentile]] before the optimizer runs, and a
-    * sub-K buffer holds the cell's FULL multiset, so the interpolated
-    * read is exact too; [[contRead]] mirrors PercentileBase's
-    * interpolation arithmetic bit-for-bit). Mixed disc+cont requests
-    * share one scan; mixed monoid+quantile aggregates would need a
-    * two-table join and block instead. Exact-grain hits (T == S, full
-    * grain) read the per-slot buffer DIRECTLY — a pure Project over
-    * quant_T, zero shuffle; coarser grains semilattice-merge the
+    * Scope: ts_us bounds must be T-ALIGNED (a raw boundary piece
+    * cannot join a sketch merge without re-sketching, which is the raw
+    * plan anyway); every aggregate output must be a quantile over
+    * cents — percentile_disc (ascending, modern calculation) or
+    * percentile_cont / native percentile() (both resolve to
+    * [[Percentile]]; a sub-K buffer holds the cell's FULL multiset, so
+    * the interpolated read is exact too — [[contRead]] mirrors
+    * PercentileBase's arithmetic bit-for-bit). Mixed disc+cont
+    * requests share one scan; mixed monoid+quantile aggregates would
+    * need a two-table join and block instead. Exact-grain hits (T ==
+    * S, full grain, no dim) read the per-slot buffer DIRECTLY — a pure
+    * Project over quant_T; coarser grains semilattice-merge the
     * buffers with one re-aggregation.
     *
-    * Round 9 also composes the ENRICHED shape: a series-key-preserving
-    * unique INNER dim join under the aggregate (the p95-per-metadata-
-    * attribute dashboard) unwraps like the value path's, the sub-K
-    * gate then sums n per DIM GROUP (a dim group unions cells, so the
-    * whole group must fit one buffer for the merged read to be exact),
-    * and the substituted read joins quant_T to the untouched dim
-    * subtree and semilattice-merges per (dim keys, slot). Dim grouping
-    * keys must be plain attributes, and the rewrite declines when dim
-    * output names would shadow the sketch read's columns. */
-  private def tryRewriteQuantile(agg: Aggregate): Option[LogicalPlan] = {
-    // cheap reject before any unwrap work: the path only exists for
-    // quantile aggregates (percentile_disc, or cont's resolved form)
+    * ENRICHED shape (round 9): above a unique dim join the sub-K gate
+    * sums n per DIM GROUP (a dim group unions cells, so the whole
+    * group must fit one buffer for the merged read to be exact), and
+    * the read joins quant_T to the untouched dim subtree and merges
+    * per (dim keys, slot). Dim grouping keys must be plain attributes,
+    * and the rewrite declines when dim output names would shadow the
+    * sketch read's columns. */
+  private def rewriteQuantile(m: Match): Option[LogicalPlan] = {
+    val agg = m.agg
+    // cheap reject: the path only exists for quantile aggregates
     val hasPdisc = agg.aggregateExpressions.exists(_.exists {
       case AggregateExpression(_: PercentileDisc, _, _, _, _) => true
       case AggregateExpression(_: Percentile, _, _, _, _) => true
       case _ => false
     })
-    if (!hasPdisc) return None
-    // round 9: the quantile path unwraps a series-key-preserving
-    // unique dim join too — the enriched percentile dashboard (p95
-    // per metadata attribute) merges sketches BY dim group instead of
-    // rescanning raw
-    val (rel, cond, exprMap, dimJoin) = unwrapMaybeJoin(agg.child) match {
-      case Some(x) => x
-      case None => return None
-    }
-    val store = storeRootOf(rel) match {
-      case Some(s) => s
-      case None => return None
-    }
-    def resolve(e: Expression): Expression = e.transform {
-      case a: AttributeReference if exprMap.contains(a.exprId) => exprMap(a.exprId)
-    }
-    val identityIds = rel.output
-      .filter(a => a.name == "user_id" || a.name == "event_type")
-      .map(_.exprId).toSet
-    val tsUsId = rel.output.find(_.name == "ts_us").map(_.exprId)
-    val centsId = rel.output.find(_.name == "cents").map(_.exprId)
-    def isTs(e: Expression): Boolean = e match {
-      case a: AttributeReference => tsUsId.contains(a.exprId)
-      case _ => false
-    }
-    var seriesCond: Option[Expression] = None
-    var lowerUs = Seq.empty[Long]
-    var upperUs = Seq.empty[Long]
-    cond.toSeq.flatMap(splitConjuncts).foreach {
-      case c if c.references.nonEmpty &&
-          c.references.forall(a => identityIds.contains(a.exprId)) =>
-        seriesCond = Some(seriesCond.map(And(_, c)).getOrElse(c))
-      case GreaterThanOrEqual(t, Literal(l: Long, LongType)) if isTs(t) =>
-        lowerUs :+= l
-      case LessThanOrEqual(Literal(l: Long, LongType), t) if isTs(t) =>
-        lowerUs :+= l
-      case LessThan(t, Literal(u: Long, LongType)) if isTs(t) =>
-        upperUs :+= u
-      case GreaterThan(Literal(u: Long, LongType), t) if isTs(t) =>
-        upperUs :+= u
+    if (!hasPdisc || !m.layout.quantiles) return None
+    // dim-side grouping keys pass through verbatim — but only plain
+    // ATTRIBUTES (a snapshot column): an arbitrary dim expression
+    // would need an exprId mapping through the regrouping, which the
+    // leaf-by-leaf conversion below does not build
+    val dimKeys = m.groupings.filter(_.references.subsetOf(m.dimIds)).map {
+      case a: AttributeReference => a
       case _ => return None
-    }
-    if (lowerUs.exists(_ < 0L) || upperUs.exists(_ < 0L)) return None
-    var stepSec = 0L
-    var hasUid = false; var hasEtype = false
-    var baseKeys = 0
-    // dim-side grouping keys pass through the rewrite verbatim — but
-    // only plain ATTRIBUTES (a snapshot column): an arbitrary dim
-    // expression would need an exprId mapping through the regrouping,
-    // which the leaf-by-leaf convert below does not build
-    val dimOutputIds: AttributeSet =
-      dimJoin.map(_.dim.outputSet).getOrElse(AttributeSet.empty)
-    var dimKeys = Seq.empty[AttributeReference]
-    var ok = true
-    agg.groupingExpressions.map(resolve).foreach {
-      case a: AttributeReference if a.name == "user_id" &&
-          identityIds.contains(a.exprId) => hasUid = true; baseKeys += 1
-      case a: AttributeReference if a.name == "event_type" &&
-          identityIds.contains(a.exprId) => hasEtype = true; baseKeys += 1
-      case SlotExpr(ts, s) if isTs(ts) =>
-        if (stepSec != 0L && stepSec != s) ok = false
-        else { stepSec = s; baseKeys += 1 }
-      case a: AttributeReference if dimOutputIds.contains(a) =>
-        if (!dimKeys.exists(_.exprId == a.exprId)) dimKeys :+= a
-      case _ => ok = false
-    }
-    if (!ok || baseKeys > 3) return None
-
-    val info = storeInfo(store) match {
+    }.distinctBy(_.exprId)
+    // coarsest level whose step every bound aligns to, with BOTH
+    // families materialized — quant_T serves the read, agg_T proves
+    // exactness
+    val t = chooseLevel(m, Seq("quant_", "agg_"), split = false) match {
       case Some(x) => x
       case None => return None
     }
-    if (!baseScanIsLive(info, store, rel)) return None
-    val layout = info.layout
-    if (!layout.quantiles) return None
-    // coarsest level dividing the slot step (slotless merges any
-    // level) whose step every bound aligns to, with BOTH families
-    // materialized — quant_T serves the read, agg_T proves exactness
-    val t = layout.steps
-      .filter(s => stepSec % s == 0)
-      .sorted.reverse
-      .find { s =>
-        val su = s * 1000000L
-        (lowerUs ++ upperUs).forall(_ % su == 0L) &&
-          tableExistsCached(info, store, s"quant_$s") &&
-          tableExistsCached(info, store, s"agg_$s")
-      } match {
-      case Some(x) => x
-      case None => return None
-    }
-    if (!sizeGateOk(info, rel, store, s"quant_$t")) return None
+    val (stepSec, hasUid, hasEtype) = (m.stepSec, m.hasUid, m.hasEtype)
 
-    // collect the distinct requested quantiles — nearest-rank
-    // (percentile_disc) and interpolated (percentile_cont / native
-    // percentile(), both resolved to Percentile by the time the
-    // optimizer runs) are each serveable from the stored sample, since
-    // a sub-K cell's bottom-k buffer IS the cell's full value multiset;
+    // collect the distinct requested quantiles (quantile, isCont);
     // any other aggregate blocks the rewrite
-    var qs = Seq.empty[(Double, Boolean)] // (quantile, isCont)
+    var qs = Seq.empty[(Double, Boolean)]
     var bad = false
     agg.aggregateExpressions.foreach(_.foreach {
       case AggregateExpression(pd: PercentileDisc, Complete, false, None, _)
           if !pd.reverse && !pd.legacyCalculation &&
             pd.percentageExpression.foldable =>
-        (resolve(pd.child), pd.percentageExpression.eval()) match {
-          case (a: AttributeReference, q: java.lang.Double)
-              if centsId.contains(a.exprId) && q > 0.0 && q <= 1.0 =>
+        (m.resolve(pd.child), pd.percentageExpression.eval()) match {
+          case (a, q: java.lang.Double) if m.is("cents")(a) && q > 0.0 && q <= 1.0 =>
             if (!qs.contains((q.doubleValue, false))) qs :+= ((q.doubleValue, false))
           case _ => bad = true
         }
@@ -1240,9 +1097,8 @@ case class RollupSubstitution(session: SparkSession) extends Rule[LogicalPlan] {
           if !pc.reverse && pc.percentageExpression.foldable &&
             pc.frequencyExpression.foldable &&
             pc.frequencyExpression.eval() == 1L =>
-        (resolve(pc.child), pc.percentageExpression.eval()) match {
-          case (a: AttributeReference, q: java.lang.Double)
-              if centsId.contains(a.exprId) && q >= 0.0 && q <= 1.0 =>
+        (m.resolve(pc.child), pc.percentageExpression.eval()) match {
+          case (a, q: java.lang.Double) if m.is("cents")(a) && q >= 0.0 && q <= 1.0 =>
             if (!qs.contains((q.doubleValue, true))) qs :+= ((q.doubleValue, true))
           case _ => bad = true
         }
@@ -1256,8 +1112,8 @@ case class RollupSubstitution(session: SparkSession) extends Rule[LogicalPlan] {
     // value / slot_ts / n by NAME), and dim grouping keys must not
     // collide with the base key names the post-merge projection
     // selects — any of these simply declines the rewrite
-    dimJoin.foreach { dj =>
-      if (!dimIsUnique(info, dj)) return None
+    m.dimJoin.foreach { dj =>
+      if (!dimIsUnique(m.info, dj)) return None
       val reserved = Set("slot_ts", "pri", "value", "n", "sk", "dt")
       if (dj.dim.output.exists(a => reserved.contains(a.name))) return None
       // the generated read/gate aliases are __graft_-prefixed so a
@@ -1272,24 +1128,13 @@ case class RollupSubstitution(session: SparkSession) extends Rule[LogicalPlan] {
 
     import org.apache.spark.sql.{functions => F, Column}
     import org.apache.spark.sql.graftshim.ColumnBridge
-    // rebase an identity-only condition onto another table BY NAME
-    // (sound: identityIds proved each reference is the relation's own
-    // user_id / event_type attribute)
-    def seriesCol: Option[Column] = seriesCond.map(c =>
-      ColumnBridge.column(c.transform {
-        case a: AttributeReference =>
-          org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute(a.name)
-      }))
-    val loSec = lowerUs.maxOption.map(_ / 1000000L)
-    val hiSec = upperUs.minOption.map(_ / 1000000L)
+    val unresolved = rebase(org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute(_)) _
+    val loSec = m.lo.map(_ / 1000000L)
+    val hiSec = m.hi.map(_ / 1000000L)
     def dtPruned(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-      def dtCol(sec: Long): Column = {
-        val day = java.time.LocalDate.ofEpochDay(Math.floorDiv(sec, 86400L))
-        if (layout.monthly) F.lit(f"${day.getYear}%04d-${day.getMonthValue}%02d")
-        else F.lit(java.sql.Date.valueOf(day))
-      }
+      def dtCol(sec: Long): Column = ColumnBridge.column(TsdbStore.dtLiteral(m.layout, sec))
       var d = df
-      seriesCol.foreach(c => d = d.filter(c))
+      m.seriesCond.foreach(c => d = d.filter(ColumnBridge.column(unresolved(c))))
       loSec.foreach(l => d = d.filter(F.col("slot_ts") >= l)
         .filter(F.col("dt") >= dtCol(l)))
       hiSec.foreach(h => d = d.filter(F.col("slot_ts") < h)
@@ -1305,8 +1150,8 @@ case class RollupSubstitution(session: SparkSession) extends Rule[LogicalPlan] {
     def withDim(df: org.apache.spark.sql.DataFrame)
         : (org.apache.spark.sql.DataFrame, String => Column) = {
       val plan = df.queryExecution.analyzed
-      def att(n: String): Attribute = plan.output.find(_.name == n).get
-      dimJoin match {
+      val att = attOf(plan) _
+      m.dimJoin match {
         case None => (df, (n: String) => F.col(n))
         case Some(dj) =>
           val cond2 = dj.pairs.map { case (name, d) =>
@@ -1334,7 +1179,7 @@ case class RollupSubstitution(session: SparkSession) extends Rule[LogicalPlan] {
     // attributes — each (unique-join) dim group is a UNION of cells,
     // so the gate joins the same dim subtree and sums n per group: the
     // merged sample must hold every sample of the whole group
-    val (gateBase, gateC) = withDim(dtPruned(tableScan(info, store, s"agg_$t")))
+    val (gateBase, gateC) = withDim(dtPruned(tableScan(m.info, m.store, s"agg_$t")))
     // One gate job over (base, column-resolver): max over evaluated
     // groups of the summed cell counts.
     def maxCountJob(base: org.apache.spark.sql.DataFrame,
@@ -1361,11 +1206,8 @@ case class RollupSubstitution(session: SparkSession) extends Rule[LogicalPlan] {
     // per query). agg_$t's own content is covered by the store stamp
     // cachedGate validates against; an unfingerprintable dim runs the
     // job uncached.
-    val seriesSig = seriesCond.map(_.transform {
-      case a: AttributeReference =>
-        org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute(a.name)
-    }.toString).getOrElse("none")
-    val dimSig: Option[String] = dimJoin match {
+    val seriesSig = m.seriesCond.map(unresolved(_).toString).getOrElse("none")
+    val dimSig: Option[String] = m.dimJoin match {
       case None => Some("nodim")
       case Some(dj) => planSignature(dj.dim).map { sig =>
         val keyPos = dj.pairs
@@ -1378,13 +1220,15 @@ case class RollupSubstitution(session: SparkSession) extends Rule[LogicalPlan] {
     }
     def gateKey(scope: String): Option[String] =
       dimSig.map(d => s"maxN|$scope|t=$t|step=$stepSec|uid=$hasUid|et=$hasEtype|$d")
-    val unfiltered = loSec.isEmpty && hiSec.isEmpty && seriesCond.isEmpty
-    val canCache = info.dataStamp.nonEmpty && dimSig.nonEmpty
+    val unfiltered = loSec.isEmpty && hiSec.isEmpty && m.series.isEmpty
+    val canCache = m.info.dataStamp.nonEmpty && dimSig.nonEmpty
+    val approxOn = session.conf
+      .get("spark.graft.rollup.quantile.approx", "false").toBoolean
     val maxN: Long =
       if (unfiltered)
         // the query itself is global: its count IS the monotone bound,
         // cached under the range-free key every filtered variant reads
-        cachedGate(info, gateKey("global"))(maxCountJob(gateBase, gateC))
+        cachedGate(m.info, gateKey("global"))(maxCountJob(gateBase, gateC))
       else if (canCache) {
         // filtered query: consult an ALREADY-CACHED global bound (a
         // cache miss never triggers the unpruned full-cascade job here —
@@ -1393,16 +1237,14 @@ case class RollupSubstitution(session: SparkSession) extends Rule[LogicalPlan] {
         // optimize strictly more expensive than before the cache
         // existed). The global entry is populated only when an
         // unfiltered query at this grain actually runs.
-        val bound = info.gates.get(gateKey("global").get)
+        val bound = m.info.gates.get(gateKey("global").get)
           .collect { case b: Long => b }
-        val approxOn = session.conf
-          .get("spark.graft.rollup.quantile.approx", "false").toBoolean
         bound match {
           case Some(b) if b < graft.functions.BottomKSample.K => b
           // over-K bound: the exact per-range count only matters when
           // it could still DECLINE — with approx on it never does
           case Some(b) if approxOn => b
-          case _ => cachedGate(info,
+          case _ => cachedGate(m.info,
             gateKey(s"rng|lo=$loSec|hi=$hiSec|series=$seriesSig"))(
             maxCountJob(gateBase, gateC))
         }
@@ -1415,15 +1257,13 @@ case class RollupSubstitution(session: SparkSession) extends Rule[LogicalPlan] {
     // O(1/√K) rank error — which is where the rewrite pays MOST: at
     // production poll density the ad-hoc percentile otherwise always
     // re-sorts raw. Default off preserves the exactness contract.
-    if (maxN >= graft.functions.BottomKSample.K &&
-      !session.conf.get("spark.graft.rollup.quantile.approx", "false").toBoolean)
-      return None
+    if (maxN >= graft.functions.BottomKSample.K && !approxOn) return None
 
     // ---- the substituted read over quant_T ----
     // a dim join always takes the merge path: its groups union cells
     // across series, so even the exact grain re-aggregates (one
     // ObjectHashAggregate over dim-grouped sketch rows)
-    val exact = t == stepSec && hasUid && hasEtype && dimJoin.isEmpty
+    val exact = t == stepSec && hasUid && hasEtype && m.dimJoin.isEmpty
     def rankRead(valueCol: Column, q: Double): Column = {
       val n = F.size(valueCol)
       // groups only exist where sketches do; the one empty-buffer case
@@ -1457,7 +1297,7 @@ case class RollupSubstitution(session: SparkSession) extends Rule[LogicalPlan] {
       if (q._2) contRead(valueCol, q._1) else rankRead(valueCol, q._1)
     val qName: Map[(Double, Boolean), String] =
       qs.zipWithIndex.map { case (q, i) => q -> s"__graft_q_$i" }.toMap
-    val (rep0, repC) = withDim(dtPruned(tableScan(info, store, s"quant_$t")))
+    val (rep0, repC) = withDim(dtPruned(tableScan(m.info, m.store, s"quant_$t")))
     val rep =
       if (exact)
         rep0.select(F.col("user_id") +: F.col("event_type") +:
@@ -1479,158 +1319,81 @@ case class RollupSubstitution(session: SparkSession) extends Rule[LogicalPlan] {
            qs.map(q => read(F.col("sk.value"), q).as(qName(q)))): _*)
       }
     val repPlan = rep.queryExecution.analyzed
-    def repAtt(name: String): AttributeReference =
-      repPlan.output.find(_.name == name).get match {
-        case a: AttributeReference => a
-      }
+    val repAtt = attOf(repPlan) _
 
-    // convert each original output: percentile_disc leaves become the
-    // rep frame's q_i columns, grouping references its key columns —
-    // arbitrary derived outputs (pdisc arithmetic folded into the
-    // Aggregate's output list) survive leaf-by-leaf, like the value
-    // rule's convert
-    val newIds = repPlan.output.map(_.exprId).toSet
-    var failed = false
-    def convert(e: Expression): Expression = e.transform {
-      case ag @ AggregateExpression(pd: PercentileDisc, Complete, false, None, _)
-          if ag.references.forall(a => !newIds.contains(a.exprId)) =>
-        pd.percentageExpression.eval() match {
-          case q: java.lang.Double if qName.contains((q.doubleValue, false)) =>
-            repAtt(qName((q.doubleValue, false)))
-          case _ => failed = true; ag
-        }
-      case ag @ AggregateExpression(pc: Percentile, Complete, false, None, _)
-          if ag.references.forall(a => !newIds.contains(a.exprId)) =>
-        pc.percentageExpression.eval() match {
-          case q: java.lang.Double if qName.contains((q.doubleValue, true)) =>
-            repAtt(qName((q.doubleValue, true)))
-          case _ => failed = true; ag
-        }
-      case ag: AggregateExpression
-          if ag.references.forall(a => !newIds.contains(a.exprId)) =>
-        failed = true; ag
-      case a: AttributeReference if !newIds.contains(a.exprId) =>
-        resolve(a) match {
-          case r: AttributeReference if r.name == "user_id" => repAtt("user_id")
-          case r: AttributeReference if r.name == "event_type" => repAtt("event_type")
-          case SlotExpr(_, _) => repAtt("slot_ts")
-          case _ => failed = true; a
-        }
-    }
-    val newOutputs: Seq[NamedExpression] = agg.aggregateExpressions.map {
-      case a: AttributeReference =>
-        Alias(convert(a), a.name)(exprId = a.exprId)
-      case al: Alias =>
-        Alias(convert(al.child), al.name)(exprId = al.exprId)
-      case other => failed = true; other
-    }
-    if (failed) return None
-    if (newOutputs.exists(_.references.exists(a => !newIds.contains(a.exprId))))
-      return None
-    Some(Project(newOutputs, repPlan))
+    // quantile leaves become the rep frame's __graft_q_i columns,
+    // grouping references its key columns
+    def qLeaf(pct: Expression, cont: Boolean): Option[Expression] =
+      pct.eval() match {
+        case q: java.lang.Double => qName.get((q.doubleValue, cont)).map(repAtt)
+        case _ => None
+      }
+    convertOutputs(agg, repPlan.output.map(_.exprId).toSet)({
+      case AggregateExpression(pd: PercentileDisc, Complete, false, None, _) =>
+        qLeaf(pd.percentageExpression, cont = false)
+      case AggregateExpression(pc: Percentile, Complete, false, None, _) =>
+        qLeaf(pc.percentageExpression, cont = true)
+      case _ => None
+    }, a => m.baseKey(m.resolve(a),
+      repAtt("user_id"), repAtt("event_type"), repAtt("slot_ts")))
+      .map(Project(_, repPlan))
   }
 
-  /** Unwrap Projects and Filters between an Aggregate and a Window —
-    * the delta-aggregate twin of [[unwrap]]: returns the window node,
-    * the combined (projection-resolved) filter condition found ABOVE
-    * the window, and the exprId→expression map of the projections.
-    * References in the returned expressions may be window outputs (the
-    * lag columns) or deeper columns. */
-  private def unwrapToWindow(p: LogicalPlan)
-      : Option[(Window, Option[Expression], Map[ExprId, Expression])] =
-    p match {
-      case w: Window => Some((w, None, Map.empty))
-      case Project(projList, child) =>
-        unwrapToWindow(child).flatMap { case (w, c0, m0) =>
-          def resolve(e: Expression): Expression = e.transform {
-            case a: AttributeReference if m0.contains(a.exprId) => m0(a.exprId)
-          }
-          val entries = projList.map {
-            case a: AttributeReference => Some(a.exprId -> resolve(a))
-            case al: Alias => Some(al.exprId -> resolve(al.child))
-            case _ => None
-          }
-          if (entries.contains(None)) None
-          else Some((w, c0, entries.flatten.toMap))
-        }
-      case Filter(cond, child) =>
-        unwrapToWindow(child).map { case (w, c0, m) =>
-          val rc = cond.transform {
-            case a: AttributeReference if m.contains(a.exprId) => m(a.exprId)
-          }
-          (w, Some(c0.map(And(_, rc)).getOrElse(rc)), m)
-        }
-      case _ => None
-    }
+  // ---- rate path: rate_T --------------------------------------------
 
   /** Rate-cascade substitution (VERDICT r6 next #6): the wrap-corrected,
     * heartbeat-validated counter-delta aggregate
     *
     *   base → lag(cents), lag(ts_us) over (series, ORDER ts_us, event_id)
     *        → filter(prev_ts_us IS NOT NULL ∧ ts_us − prev_ts_us ≤ hb·10⁶)
-    *        → groupBy(series keys?, slot(S))
+    *        → groupBy(series keys?, slot(S)?)
     *        → agg(count(1), sum(wrap-delta), sum(ts_us − prev_ts_us))
     *
     * is the SAME computation the store materializes as `rate_T`
     * ([[TsdbStore]] validDeltas → rateAggFromDeltas), so it substitutes
     * the way the monoid four substitute `agg_T`: exact-step hits
-    * collapse to a Project over the rate cascade, coarser steps re-sum
-    * (each cascade row is already a per-cell sum of deltas — summing
-    * sums is the monoid composition). The match is deliberately exact:
-    * the heartbeat literal must equal the store's STAMPED heartbeatSec
-    * (a different heartbeat is a different validity rule), the delta
-    * must be the engine's canonical ((c−p) % cap + cap) % cap with
-    * cap = WrapCap (or the native wrap_delta), the window exactly
-    * lag(1) over (user_id, event_type) ordered (ts_us, event_id) asc —
-    * any deviation leaves the plan alone. Series filters transfer from
-    * either side of the window; T-aligned ts_us bounds transfer from
-    * ABOVE it only (a time filter BELOW the window changes which sample
-    * is "previous" — that is not the cascade's content). */
-  private def tryRewriteRate(agg: Aggregate): Option[LogicalPlan] = {
-    val (win, condAbove, exprMap) = unwrapToWindow(agg.child) match {
+    * collapse to a Project over the rate cascade, coarser steps and
+    * dropped keys re-sum (each cascade row is already a per-cell sum of
+    * deltas — summing sums is the monoid composition). The match is
+    * deliberately exact: the heartbeat literal must equal the store's
+    * STAMPED heartbeatSec (a different heartbeat is a different
+    * validity rule), the delta must be the engine's canonical
+    * ((c−p) % cap + cap) % cap with cap = WrapCap (or the native
+    * wrap_delta), the window exactly lag(1) over (user_id, event_type)
+    * ordered (ts_us, event_id) asc — any deviation leaves the plan
+    * alone. Series filters transfer from either side of the window;
+    * T-aligned ts_us bounds transfer from ABOVE it only (a time filter
+    * BELOW the window changes which sample is "previous" — that is not
+    * the cascade's content). */
+  private def rewriteRate(agg: Aggregate): Option[LogicalPlan] = {
+    val above = walk(agg.child) { case w: Window => Some(Walk(w, None, Map.empty)) } match {
       case Some(x) => x
       case None => return None
     }
-    // below the window: column pruning + pushed-down series filters
-    val (rel, condBelow, mBelow) = unwrap(win.child) match {
+    val win = above.leaf
+    val below = walk(win.child)(scan) match {
       case Some(x) => x
       case None => return None
     }
-    val store = storeRootOf(rel) match {
-      case Some(s) => s
-      case None => return None
-    }
-    val info = storeInfo(store) match {
+    val belowConds = splitConjuncts(below.cond)
+    val m = matchScan(agg, below.leaf._1, splitConjuncts(above.cond) ++ belowConds,
+        e => below.resolve(above.resolve(e)), None) match {
       case Some(x) => x
       case None => return None
     }
-    if (!baseScanIsLive(info, store, rel)) return None
-    val layout = info.layout
-    def relId(name: String): Option[ExprId] =
-      rel.output.find(_.name == name).map(_.exprId)
-    val (uidId, etypeId, tsId, evId, centsId) =
-      (relId("user_id"), relId("event_type"), relId("ts_us"),
-        relId("event_id"), relId("cents")) match {
-        case (Some(a), Some(b), Some(c), Some(d), Some(e)) => (a, b, c, d, e)
-        case _ => return None
-      }
-    def resolveBelow(e: Expression): Expression = e.transform {
-      case a: AttributeReference if mBelow.contains(a.exprId) => mBelow(a.exprId)
-    }
-    def isRel(e: Expression, id: ExprId): Boolean = resolveBelow(e) match {
-      case a: AttributeReference => a.exprId == id
-      case _ => false
-    }
+    // below the window: series conjuncts ONLY
+    if (!belowConds.forall(m.series.contains)) return None
+    def isRel(e: Expression, name: String): Boolean = m.is(name)(m.resolve(e))
 
     // the window must be EXACTLY the canonical delta window — series
     // partition, (ts_us, event_id) ascending order, two lag(1) columns
     // over cents and ts_us
-    if (win.partitionSpec.map(resolveBelow).collect {
+    if (win.partitionSpec.map(m.resolve).collect {
         case a: AttributeReference => a.exprId
-      }.toSet != Set(uidId, etypeId)) return None
-    win.orderSpec.map(o => (resolveBelow(o.child), o.direction)) match {
-      case Seq((t: AttributeReference, Ascending), (ev: AttributeReference, Ascending))
-          if t.exprId == tsId && ev.exprId == evId => ()
+      }.toSet != Set(m.ids("user_id"), m.ids("event_type"))) return None
+    win.orderSpec.map(o => (o.child, o.direction)) match {
+      case Seq((ts, Ascending), (ev, Ascending))
+          if isRel(ts, "ts_us") && isRel(ev, "event_id") => ()
       case _ => return None
     }
     if (win.windowExpressions.length != 2) return None
@@ -1639,8 +1402,8 @@ case class RollupSubstitution(session: SparkSession) extends Rule[LogicalPlan] {
     win.windowExpressions.foreach {
       case al @ Alias(WindowExpression(
           Lag(in, Literal(1, IntegerType), Literal(null, _), false), _), _) =>
-        if (isRel(in, centsId)) prevCentsId = Some(al.exprId)
-        else if (isRel(in, tsId)) prevTsId = Some(al.exprId)
+        if (isRel(in, "cents")) prevCentsId = Some(al.exprId)
+        else if (isRel(in, "ts_us")) prevTsId = Some(al.exprId)
       case _ => ()
     }
     val (pcId, ptId) = (prevCentsId, prevTsId) match {
@@ -1658,190 +1421,52 @@ case class RollupSubstitution(session: SparkSession) extends Rule[LogicalPlan] {
       case Remainder(Add(Remainder(Subtract(c, p, _), Literal(c1: Long, LongType), _),
           Literal(c2: Long, LongType), _), Literal(c3: Long, LongType), _)
           if c1 == cap && c2 == cap && c3 == cap &&
-            isRel(c, centsId) && isAtt(p, pcId) => true
+            isRel(c, "cents") && isAtt(p, pcId) => true
       case graft.functions.WrapDelta(p, c, Literal(c1: Long, LongType))
-          if c1 == cap && isAtt(p, pcId) && isRel(c, centsId) => true
+          if c1 == cap && isAtt(p, pcId) && isRel(c, "cents") => true
       case _ => false
     }
     def isDt(e: Expression): Boolean = e match {
-      case Subtract(t, p, _) if isRel(t, tsId) && isAtt(p, ptId) => true
+      case Subtract(t, p, _) if isRel(t, "ts_us") && isAtt(p, ptId) => true
       case _ => false
     }
 
-    // filter classification. ABOVE the window: the heartbeat gate
-    // (REQUIRED, must equal the stamped heartbeat) and
-    // isnotnull(prev_ts_us) (REQUIRED) — together the cascade's
-    // validity rule; inferred isnotnull(ts_us) is implied by the
-    // heartbeat conjunct in both engines and may be dropped; identity
-    // conjuncts and T-aligned ts_us bounds transfer. BELOW the window:
-    // identity conjuncts ONLY.
-    val identityIds = Set(uidId, etypeId)
+    // the rest of the filter ABOVE the window must be exactly the
+    // cascade's validity rule: the heartbeat gate (REQUIRED, equal to
+    // the stamped heartbeat) and isnotnull(prev_ts_us) (REQUIRED); an
+    // inferred isnotnull(ts_us) is implied by the heartbeat conjunct
+    // in both engines and may be dropped
     var hbOk = false; var prevNotNull = false
-    var seriesCond: Option[Expression] = None
-    var lowerUs = Seq.empty[Long]; var upperUs = Seq.empty[Long]
-    def addSeries(c: Expression): Unit =
-      seriesCond = Some(seriesCond.map(And(_, c)).getOrElse(c))
-    var badConjunct = false
-    condAbove.toSeq.flatMap(splitConjuncts).foreach {
-      case c if c.references.nonEmpty &&
-          c.references.forall(a => identityIds.contains(a.exprId)) =>
-        addSeries(c)
+    m.rest.foreach {
       case LessThanOrEqual(d, Literal(hb: Long, LongType))
-          if isDt(d) && hb == layout.heartbeatSec * 1000000L => hbOk = true
-      case IsNotNull(a: AttributeReference) if a.exprId == ptId =>
-        prevNotNull = true
-      case IsNotNull(e) if isRel(e, tsId) => () // implied by the heartbeat gate
-      case GreaterThanOrEqual(t, Literal(l: Long, LongType)) if isRel(t, tsId) =>
-        lowerUs :+= l
-      case LessThanOrEqual(Literal(l: Long, LongType), t) if isRel(t, tsId) =>
-        lowerUs :+= l
-      case LessThan(t, Literal(u: Long, LongType)) if isRel(t, tsId) =>
-        upperUs :+= u
-      case GreaterThan(Literal(u: Long, LongType), t) if isRel(t, tsId) =>
-        upperUs :+= u
-      case _ => badConjunct = true
+          if isDt(d) && hb == m.layout.heartbeatSec * 1000000L => hbOk = true
+      case IsNotNull(a: AttributeReference) if a.exprId == ptId => prevNotNull = true
+      case IsNotNull(e) if isRel(e, "ts_us") => ()
+      case _ => return None
     }
-    condBelow.toSeq.flatMap(splitConjuncts).foreach {
-      case c if c.references.nonEmpty &&
-          c.references.forall(a => identityIds.contains(a.exprId)) =>
-        addSeries(c)
-      case _ => badConjunct = true
-    }
-    if (badConjunct || !hbOk || !prevNotNull) return None
+    if (!hbOk || !prevNotNull) return None
 
-    // grouping: ANY subset of {series keys, slot(S)}, like the value
-    // path — dropping a key re-sums more cascade rows, and dropping
-    // the slot entirely is the per-series (or global) RANGE TOTAL of
-    // transferred counters, "bytes moved in the last N days"
-    def resolve(e: Expression): Expression = e.transform {
-      case a: AttributeReference if exprMap.contains(a.exprId) => exprMap(a.exprId)
-    }
-    var stepSec = 0L
-    var hasUid = false; var hasEtype = false
-    var ok = agg.groupingExpressions.length <= 3
-    agg.groupingExpressions.map(e => resolveBelow(resolve(e))).foreach {
-      case a: AttributeReference if a.exprId == uidId => hasUid = true
-      case a: AttributeReference if a.exprId == etypeId => hasEtype = true
-      case SlotExpr(ts, s) if ts.exprId == tsId =>
-        if (stepSec != 0L && stepSec != s) ok = false else stepSec = s
-      case _ => ok = false
-    }
-    if (!ok) return None
-    // coarsest level dividing the slot step (a slotless aggregate
-    // re-sums any level) WHOSE step the ts bounds align to — bounds
-    // aligned only at a finer level transfer there instead of blocking
-    // (the rate path never splits: a raw boundary piece would need the
-    // window re-run, and the window's input cannot be range-pruned)
-    val t = layout.steps
-      .filter(s => stepSec % s == 0)
-      .sorted.reverse
-      .find { s =>
-        val su = s * 1000000L
-        (lowerUs ++ upperUs).forall(_ % su == 0L) &&
-          tableExistsCached(info, store, s"rate_$s")
-      } match {
+    val t = chooseLevel(m, Seq("rate_"), split = false) match {
       case Some(x) => x
       case None => return None
     }
-    if (!sizeGateOk(info, rel, store, s"rate_$t")) return None
-
-    val cascade = tableScan(info, store, s"rate_$t").queryExecution.analyzed
-    def att(name: String): AttributeReference =
-      cascade.output.find(_.name == name).get match { case a: AttributeReference => a }
+    val (cascade, att) = bind(m, s"rate_$t")
     val (uid, etype, slot) = (att("user_id"), att("event_type"), att("slot_ts"))
     val (nvC, dC, dtC) = (att("n_valid"), att("delta_cents"), att("dt_us"))
-    val rebasedSeries: Seq[Expression] = seriesCond.toSeq.map(_.transform {
-      case a: AttributeReference => att(a.name)
-    })
-    val slotBounds: Seq[Expression] =
-      lowerUs.map(l => GreaterThanOrEqual(slot, Literal(l / 1000000L, LongType))) ++
-      upperUs.map(u => LessThan(slot, Literal(u / 1000000L, LongType)))
-    def dtLit(sec: Long): Expression = {
-      val day = java.time.LocalDate.ofEpochDay(Math.floorDiv(sec, 86400L))
-      if (layout.monthly)
-        Literal.create(f"${day.getYear}%04d-${day.getMonthValue}%02d",
-          org.apache.spark.sql.types.StringType)
-      else Literal(day.toEpochDay.toInt, org.apache.spark.sql.types.DateType)
-    }
-    val dtBounds: Seq[Expression] =
-      cascade.output.collect { case a: AttributeReference if a.name == "dt" => a }
-        .headOption.toSeq.flatMap { dt =>
-          // same last-included-second derivation as the value rule's
-          // dt twin: an exclusive bound on a day boundary must not
-          // keep the boundary partition (ADVICE r7 #2)
-          lowerUs.map(l => GreaterThanOrEqual(dt, dtLit(l / 1000000L))) ++
-          upperUs.map(u => LessThanOrEqual(dt, dtLit((u - 1L) / 1000000L)))
-        }
-    val child2: LogicalPlan =
-      (rebasedSeries ++ slotBounds ++ dtBounds).reduceOption(And) match {
-        case Some(c) => Filter(c, cascade)
-        case None => cascade
-      }
-
-    val exact = t == stepSec && hasUid && hasEtype
-    def ae(f: AggregateFunction): Expression =
-      AggregateExpression(f, Complete, isDistinct = false)
-    val slot2: Expression =
-      if (t == stepSec || stepSec == 0L) slot // slotless never reads slot2
-      else Multiply(IntegralDivide(slot, Literal(stepSec, LongType)),
-        Literal(stepSec, LongType))
-    // the global empty-grouping total over an empty input: count(1)=0
-    // but sum(n_valid)=NULL — coalesce like the value rule's global form
-    val global = !hasUid && !hasEtype && stepSec == 0L
-    val countRepl: Expression = KnownNotNull(
-      if (exact) nvC
-      else if (global) Coalesce(Seq(ae(Sum(nvC)), Literal(0L, LongType)))
-      else ae(Sum(nvC)))
-    val deltaRepl: Expression = if (exact) dC else ae(Sum(dC))
-    val dtRepl: Expression = if (exact) dtC else ae(Sum(dtC))
-
-    val newIds = cascade.output.map(_.exprId).toSet
-    var failed = false
-    def convert(e: Expression): Expression = e.transform {
-      case ag @ AggregateExpression(f, Complete, false, None, _)
-          if ag.references.forall(a => !newIds.contains(a.exprId)) =>
-        f match {
-          case Count(Seq(Literal(v, _))) if v != null => countRepl
-          case Sum(c, _) =>
-            val rc = resolveBelow(resolve(c))
-            if (isDelta(rc)) deltaRepl
-            else if (isDt(rc)) dtRepl
-            else { failed = true; ag }
-          case _ => failed = true; ag
-        }
+    val child2 = interior(m, t, cascade, att)
+    val exact = t == m.stepSec && m.hasUid && m.hasEtype
+    val slot2 = slotAt(slot, t, m.stepSec)
+    convertOutputs(agg, cascade.output.map(_.exprId).toSet)({
       // the rate cascade's rows are per-(series, slot) DELTA sums — no
-      // distinct set (or FILTER-clause semantics) survives them; block
-      // every unhandled aggregate shape before the attribute fallback
-      // can bury a half-converted AggregateExpression in the output
-      case ag: AggregateExpression
-          if ag.references.forall(a => !newIds.contains(a.exprId)) =>
-        failed = true; ag
-      case a: AttributeReference if !newIds.contains(a.exprId) =>
-        resolveBelow(resolve(a)) match {
-          case r: AttributeReference if r.exprId == uidId => uid
-          case r: AttributeReference if r.exprId == etypeId => etype
-          case SlotExpr(ts, _) if ts.exprId == tsId => slot2
-          case _ => failed = true; a
-        }
-    }
-    val newOutputs: Seq[NamedExpression] = agg.aggregateExpressions.map {
-      case a: AttributeReference =>
-        Alias(convert(a), a.name)(exprId = a.exprId)
-      case al: Alias =>
-        Alias(convert(al.child), al.name)(exprId = al.exprId)
-      case other => failed = true; other
-    }
-    if (failed) return None
-    if (newOutputs.exists(_.references.exists(a => !newIds.contains(a.exprId))))
-      return None
-
-    if (exact) Some(Project(newOutputs, child2))
-    else {
-      val groupings2 =
-        (if (hasUid) Seq(uid) else Nil) ++
-        (if (hasEtype) Seq(etype) else Nil) ++
-        (if (stepSec != 0L) Seq(slot2) else Nil)
-      Some(Aggregate(groupings2, newOutputs, child2))
-    }
+      // distinct set (or FILTER-clause semantics) survives them
+      case AggregateExpression(f, Complete, false, None, _) => f match {
+        case Count(Seq(Literal(v, _))) if v != null => Some(countOf(m, exact, nvC))
+        case Sum(c, _) if isDelta(m.resolve(c)) => Some(if (exact) dC else ae(Sum(dC)))
+        case Sum(c, _) if isDt(m.resolve(c)) => Some(if (exact) dtC else ae(Sum(dtC)))
+        case _ => None
+      }
+      case _ => None
+    }, a => m.baseKey(m.resolve(a), uid, etype, slot2))
+      .map(regroup(m, exact, _, child2, uid, etype, slot2))
   }
 }

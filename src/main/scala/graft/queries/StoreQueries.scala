@@ -1311,7 +1311,7 @@ object StoreQueries {
     QueryDef("q_store_rollup_quantile",
       QuantileRollupOracle) { (s, d) =>
       // quantile-cascade substitution (RollupSubstitution
-      // .tryRewriteQuantile, round 8): the query TEXT is an ad-hoc
+      // .rewriteQuantile, round 8): the query TEXT is an ad-hoc
       // percentile_disc — SQL's exact nearest-rank quantile — over the
       // raw base table, but the optimizer proves every evaluated
       // (series, day) cell holds < K=512 samples (one bounded

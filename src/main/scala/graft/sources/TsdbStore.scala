@@ -112,6 +112,18 @@ object TsdbStore {
   private def dtOfDay(layout: StoreLayout, d: LocalDate): String =
     if (layout.monthly) f"${d.getYear}%04d-${d.getMonthValue}%02d" else d.toString
 
+  /** The dt partition value of an epoch-second as a Catalyst literal
+    * (DATE for daily, 'YYYY-MM' STRING for monthly): the right-hand
+    * side of a partition-prune bound on a store table's `dt` column. */
+  private[graft] def dtLiteral(layout: StoreLayout, sec: Long)
+      : org.apache.spark.sql.catalyst.expressions.Literal = {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    val day = utcDay(sec)
+    if (layout.monthly)
+      Literal.create(dtOfDay(layout, day), org.apache.spark.sql.types.StringType)
+    else Literal(day.toEpochDay.toInt, org.apache.spark.sql.types.DateType)
+  }
+
   /** dt partition expression from a µs-epoch column (DATE for daily,
     * 'YYYY-MM' STRING for monthly). FLOOR division, not SQL `div`
     * (which truncates toward zero): a pre-1970 sample must land in its

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -21,7 +19,7 @@ class QuantCascadeSpec extends SparkSpec {
   private val E = 1705708800L
 
   private lazy val store: String = {
-    val dir = Files.createTempDirectory("graft_quant").toString
+    val dir = tempDir("graft_quant")
     TsdbStore.ingest(spark, Tables.events(spark, Sf), dir)
     dir
   }
@@ -94,7 +92,7 @@ class QuantCascadeSpec extends SparkSpec {
   }
 
   test("incremental upsert recomputes the quant cascade's touched partitions only") {
-    val dir = Files.createTempDirectory("graft_quant_inc").toString
+    val dir = tempDir("graft_quant_inc")
     val events = Tables.events(spark, Sf)
     TsdbStore.ingest(spark, events, dir)
     // replay one day's purchases with shifted values (same event_ids —
@@ -116,7 +114,7 @@ class QuantCascadeSpec extends SparkSpec {
       .collect().map(_.toString).sorted.toSeq
     assert(untouchedBefore == untouchedAfter, "untouched partitions changed")
 
-    val full = Files.createTempDirectory("graft_quant_full").toString
+    val full = tempDir("graft_quant_full")
     val merged = events.withColumn("gen", lit(0))
       .unionByName(replay.withColumn("gen", lit(1)))
       .withColumn("rk", row_number().over(
@@ -169,7 +167,7 @@ class QuantCascadeSpec extends SparkSpec {
   }
 
   test("monthly layout: quantile reads prune 'YYYY-MM' partitions and stay exact") {
-    val dir = Files.createTempDirectory("graft_quant_month").toString
+    val dir = tempDir("graft_quant_month")
     TsdbStore.ingest(spark, Tables.events(spark, Sf), dir,
       graft.sources.StoreLayout(monthly = true))
     val got = TsdbStore.fetchQuantile(spark, dir, 7L, "click", B, E, 86400L, 0.5)
@@ -192,7 +190,7 @@ class QuantCascadeSpec extends SparkSpec {
   }
 
   test("quantiles = false opts out of the column family; reads fail loudly") {
-    val dir = Files.createTempDirectory("graft_quant_off").toString
+    val dir = tempDir("graft_quant_off")
     TsdbStore.ingest(spark, Tables.events(spark, Sf), dir,
       graft.sources.StoreLayout(quantiles = false))
     val dirs = new java.io.File(dir).listFiles().filter(_.isDirectory)

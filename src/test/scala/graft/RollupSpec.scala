@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -19,7 +17,7 @@ class RollupSpec extends SparkSpec {
   private val Flag = "spark.graft.rollup.rewrite"
 
   private lazy val store: String = {
-    val dir = Files.createTempDirectory("graft_rollup").toString
+    val dir = tempDir("graft_rollup")
     TsdbStore.ingest(spark, Tables.events(spark, Sf), dir)
     dir
   }
@@ -111,7 +109,7 @@ class RollupSpec extends SparkSpec {
 
   test("the bucketed catalog table's base scan substitutes too") {
     import graft.sources.StoreLayout
-    val dir = Files.createTempDirectory("graft_rollup_bkt").toString
+    val dir = tempDir("graft_rollup_bkt")
     TsdbStore.ingest(spark, Tables.events(spark, Sf), dir,
       StoreLayout(buckets = 4))
     val name = TsdbStore.bucketedBaseTable(spark, dir)
@@ -682,7 +680,7 @@ class RollupSpec extends SparkSpec {
 
   test("monthly-layout store: range transfer emits 'YYYY-MM' dt prune literals") {
     import graft.sources.StoreLayout
-    val dir = Files.createTempDirectory("graft_rollup_month").toString
+    val dir = tempDir("graft_rollup_month")
     TsdbStore.ingest(spark, Tables.events(spark, Sf), dir,
       StoreLayout(monthly = true))
     def q: DataFrame = spark.read.parquet(s"$dir/base")
@@ -880,6 +878,32 @@ class RollupSpec extends SparkSpec {
     assert(got == expect && got.nonEmpty)
   }
 
+  test("a dim column named user_id groups as a DIM key, not the base series key") {
+    // two series, one per event_type; the dim is unique on event_type
+    // and carries its OWN user_id column (100 for every row). Grouping
+    // by the dim's user_id must keep that column: matching grouping
+    // keys by name used to rebind it to the cascade's user_id and the
+    // optimized plan failed with an unresolvable attribute
+    val two = tempDir("graft_rollup_dimkey")
+    TsdbStore.ingest(spark, spark.range(200).select(
+      col("id").as("event_id"),
+      timestamp_micros(lit(QB * 1000000L) + col("id") * lit(3600L * 1000000L)).as("ts"),
+      (col("id") % 2 + 1).as("user_id"),
+      when(col("id") % 2 === 0, "click").otherwise("view").as("event_type"),
+      (col("id") % 97).cast("double").as("value"), lit("{}").as("props")), two)
+    val dim = spark.createDataFrame(Seq(("click", 100L), ("view", 100L)))
+      .toDF("event_type", "user_id")
+    def q: DataFrame = spark.read.parquet(s"$two/base").as("b")
+      .join(broadcast(dim.as("d")), col("b.event_type") === col("d.event_type"))
+      .groupBy(col("d.user_id"), TimeSeriesOps.slotSec(86400L).as("slot_ts"))
+      .agg(count(lit(1)).as("n"), sum("cents").as("sum_cents"))
+    val (paths, got) = withFlag(on = true)((scanPaths(q), rows(q)))
+    assert(paths.exists(_.endsWith("agg_86400")) &&
+      !paths.exists(_.endsWith("/base")), s"$paths")
+    val expect = withFlag(on = false)(rows(q))
+    assert(got == expect && got.nonEmpty && got.forall(_.head == 100L))
+  }
+
   test("a NON-unique dim blocks the enriched rewrite (fan-out would under-count)") {
     def q: DataFrame = spark.read.parquet(s"$store/base")
       .join(dimTable(dup = true), "user_id")
@@ -923,7 +947,7 @@ class RollupSpec extends SparkSpec {
     // row per base row, so the rewrite cannot win a demanded 4x scan
     // margin — the rule declines; ratio 0 disables the gate
     val sparse = {
-      val dir = Files.createTempDirectory("graft_rollup_sparse").toString
+      val dir = tempDir("graft_rollup_sparse")
       val feed = spark.range(400).select(
         col("id").as("event_id"),
         timestamp_micros(lit(QB * 1000000L) + col("id") * lit(21600L * 1000000L)).as("ts"),
@@ -961,7 +985,7 @@ class RollupSpec extends SparkSpec {
     // file listings — an upsert swaps partition dirs without touching
     // _LAYOUT, and a substituted read after it must see the new rows
     val s2 = {
-      val dir = Files.createTempDirectory("graft_rollup_cachefresh").toString
+      val dir = tempDir("graft_rollup_cachefresh")
       TsdbStore.ingest(spark,
         Tables.events(spark, Sf).filter(col("event_id") % 2 === 0), dir)
       dir
@@ -1062,7 +1086,7 @@ class RollupSpec extends SparkSpec {
     // ESTIMATE — the rule must prove exactness off agg_86400's counts
     // and leave the raw plan alone
     val dense = {
-      val dir = Files.createTempDirectory("graft_rollup_dense").toString
+      val dir = tempDir("graft_rollup_dense")
       val feed = spark.range(600).select(
         col("id").as("event_id"),
         timestamp_micros(lit(QB * 1000000L) + col("id") * 1000000L).as("ts"),
@@ -1175,7 +1199,7 @@ class RollupSpec extends SparkSpec {
     // now cache per (store _DATA_STAMP, gate inputs): a dashboard
     // re-firing the same query pays them once; any TsdbStore mutation
     // bumps the stamp and the next optimize re-runs them.
-    val dir = Files.createTempDirectory("graft_rollup_gatecache").toString
+    val dir = tempDir("graft_rollup_gatecache")
     TsdbStore.ingest(spark, Tables.events(spark, Sf), dir)
     // parquet-backed dim so its content is fingerprintable (a purely
     // local dim declines caching by design)
@@ -1216,7 +1240,7 @@ class RollupSpec extends SparkSpec {
     // review r11 #2: the global/rng fast paths need their own pins.
     // Fixture: day A holds 600 samples (over K=512) for (1, click);
     // day B holds 50 for (1, click) and 50 for (2, click).
-    val dir = Files.createTempDirectory("graft_rollup_overk").toString
+    val dir = tempDir("graft_rollup_overk")
     val dayB = QB + 86400L
     val feed = spark.range(600).select(
         col("id").as("event_id"),
@@ -1305,7 +1329,7 @@ class RollupSpec extends SparkSpec {
     // exactness contract. spark.graft.rollup.quantile.approx=true
     // serves the O(1/√K)-rank-error estimate from the sketch instead
     // (the production-density case where the rewrite pays most).
-    val dir = Files.createTempDirectory("graft_rollup_dense3").toString
+    val dir = tempDir("graft_rollup_dense3")
     val feed = spark.range(2000).select(
       col("id").as("event_id"),
       timestamp_micros(lit(QB * 1000000L) + col("id") * 1000L).as("ts"),
@@ -1346,7 +1370,7 @@ class RollupSpec extends SparkSpec {
     // GROUP holds 600 — a merged buffer would truncate, so the rule
     // must decline even though the plain per-series gate would pass
     val dense2 = {
-      val dir = Files.createTempDirectory("graft_rollup_dense2").toString
+      val dir = tempDir("graft_rollup_dense2")
       val feed = spark.range(600).select(
         col("id").as("event_id"),
         timestamp_micros(lit(QB * 1000000L) + (col("id") % 300L) * 1000000L).as("ts"),
@@ -1433,7 +1457,7 @@ class RollupSpec extends SparkSpec {
   //      deployment layout — and decline exactly the unsound shapes --
 
   private lazy val manifestStore: String = {
-    val dir = Files.createTempDirectory("graft_rollup_mani").toString
+    val dir = tempDir("graft_rollup_mani")
     TsdbStore.ingest(spark, Tables.events(spark, Sf), dir,
       graft.sources.StoreLayout(commit = "manifest"))
     dir

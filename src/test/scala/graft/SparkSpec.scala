@@ -1,6 +1,9 @@
 package graft
 
+import java.nio.file.Files
+
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all specs (one JVM-wide instance). */
@@ -19,7 +22,22 @@ object TestSpark {
     .getOrCreate()
 }
 
-abstract class SparkSpec extends AnyFunSuite {
+abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = TestSpark.spark
   val Sf: String = "/root/testdata/sf0.001"
+
+  private val tempDirs =
+    java.util.Collections.synchronizedList(new java.util.ArrayList[String]())
+
+  /** A fresh temp directory that is deleted after the suite. */
+  protected def tempDir(prefix: String): String = {
+    val dir = Files.createTempDirectory(prefix).toString
+    tempDirs.add(dir)
+    dir
+  }
+
+  override protected def afterAll(): Unit =
+    try tempDirs.forEach(d =>
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d)))
+    finally super.afterAll()
 }
