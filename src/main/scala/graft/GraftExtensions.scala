@@ -17,6 +17,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => SimplifyEpochRoundTrips)
     ext.injectOptimizerRule(session => graft.plans.RollupSubstitution(session))
+    ext.injectOptimizerRule(_ => graft.plans.DropOrphanGathers)
     ext.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
     ext.injectFunction((
       FunctionIdentifier("wrap_delta"),

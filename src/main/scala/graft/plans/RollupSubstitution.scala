@@ -10,6 +10,7 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
 
 import graft.sources.TsdbStore
+import graft.sources.TsdbStore.StoreMeta
 
 /** Materialized-rollup substitution — the aggregate-navigation rewrite
   * of classical OLAP servers (and the reason the reference maintains
@@ -72,28 +73,6 @@ import graft.sources.TsdbStore
   * identical results with the rule on and off.
   */
 object RollupSubstitution {
-  /** Optimize-time support cache, shared across queries and sessions
-    * (VERDICT r7 next #4): the rewrite's fixed cost used to be
-    * re-paid per optimized query — layout parse, per-table existence
-    * probes, and (dominant) parquet SCHEMA INFERENCE for each fresh
-    * cascade scan. All three are stable for the life of a store
-    * layout, so they cache per store root, validated against the
-    * `_LAYOUT` stamp's modification time (one getFileStatus per
-    * optimize). File LISTINGS are deliberately NOT cached — an
-    * incremental upsert swaps partition directories without touching
-    * the stamp, and a stale listing would silently serve retired
-    * files; the fresh listing is also exactly what the raw plan pays
-    * for its own scan. */
-  private[plans] final case class StoreInfo(
-      stampMtime: Long,
-      dataStamp: String,
-      layout: graft.sources.StoreLayout,
-      schemas: scala.collection.concurrent.TrieMap[String,
-        org.apache.spark.sql.types.StructType],
-      exists: scala.collection.concurrent.TrieMap[String, Boolean],
-      gates: scala.collection.concurrent.TrieMap[String, Any])
-  private[plans] val storeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, StoreInfo]()
   /** Count of optimize-time gate JOBS actually executed (dim
     * uniqueness, sub-K counts) — RollupSpec pins cache hits (a
     * repeated query must not move this) and invalidation (a store
@@ -102,7 +81,6 @@ object RollupSubstitution {
 }
 
 case class RollupSubstitution(session: SparkSession) extends Rule[LogicalPlan] {
-  import RollupSubstitution.{StoreInfo, storeCache}
 
   private val FlagKey = "spark.graft.rollup.rewrite"
   /** Skip the rewrite unless the raw relation is at least this many
@@ -114,56 +92,33 @@ case class RollupSubstitution(session: SparkSession) extends Rule[LogicalPlan] {
   private val RatioKey = "spark.graft.rollup.minSizeRatio"
   private val FloorKey = "spark.graft.rollup.sizeGateFloorBytes"
 
-  /** Cached per-store support data, revalidated against the layout
-    * stamp AND the content stamp; a missing layout stamp (not a
-    * store) returns None. The content stamp (`_DATA_STAMP`, bumped by
-    * every TsdbStore mutator) additionally guards the GATE-JOB cache:
-    * layout unchanged + content changed keeps the stable
-    * schema/existence entries but drops every cached gate result, so
-    * upsert / compaction / retention invalidate exactly the answers
-    * they can change. An absent content stamp reads as "" and
-    * [[cachedGate]] then never caches — stores written by anything
-    * that doesn't maintain the stamp stay correct, just uncached. */
-  private def storeInfo(store: String): Option[StoreInfo] = {
-    val p = new org.apache.hadoop.fs.Path(s"$store/_LAYOUT")
-    val fs = p.getFileSystem(session.sparkContext.hadoopConfiguration)
-    val mtime = try fs.getFileStatus(p).getModificationTime
-      catch { case _: java.io.FileNotFoundException => return None }
-    val ds = TsdbStore.readDataStamp(session, store)
-    Some(storeCache.compute(store, (_, old) =>
-      if (old != null && old.stampMtime == mtime && old.dataStamp == ds) old
-      else if (old != null && old.stampMtime == mtime)
-        old.copy(dataStamp = ds,
-          gates = scala.collection.concurrent.TrieMap.empty)
-      else StoreInfo(mtime, ds, TsdbStore.readLayout(session, store),
-        scala.collection.concurrent.TrieMap.empty,
-        scala.collection.concurrent.TrieMap.empty,
-        scala.collection.concurrent.TrieMap.empty)))
-  }
+  /** The store's optimize-time support state — layout, per-table
+    * existence and schemas, and the data-dependent GATE results (dim
+    * uniqueness, sub-K counts, the manifest snapshot) — from the
+    * store-metadata cache every fetch shares ([[TsdbStore.storeMeta]]:
+    * keyed by the `_LAYOUT` modification time and the `_DATA_STAMP`
+    * value, so upsert / compaction / retention invalidate exactly the
+    * answers they can change). Metadata only: file LISTINGS are never
+    * cached, since an incremental upsert swaps partition directories
+    * without touching `_LAYOUT`. A missing layout stamp (not a store)
+    * returns None. An absent content stamp caches nothing — stores
+    * written by anything that doesn't maintain the stamp stay correct,
+    * just uncached: every optimize re-infers their cascade schemas. */
+  private def storeInfo(store: String): Option[StoreMeta] =
+    Some(TsdbStore.storeMeta(session, store)).filter(_.layoutMtime >= 0L)
 
   /** Serve a gate-job result from the store's content-stamped cache,
     * or run it. `keyOpt = None` (an input whose content can't be
     * fingerprinted) and an absent content stamp both degrade to
-    * running the job — never to a stale answer. The map is bounded:
-    * past `MaxGateEntries` a new key runs uncached rather than
-    * growing driver memory without limit (the monotone global-bound
-    * entries that matter are inserted long before any cap bites). */
-  private val MaxGateEntries = 1024
-  private def cachedGate[T](info: StoreInfo, keyOpt: Option[String])(run: => T): T = {
+    * running the job — never to a stale answer. */
+  private def cachedGate[T](info: StoreMeta, keyOpt: Option[String])(run: => T): T = {
     def runCounted: T = {
       RollupSubstitution.gateJobsRun.incrementAndGet()
       run
     }
     keyOpt match {
-      case Some(key) if info.dataStamp.nonEmpty =>
-        info.gates.get(key) match {
-          case Some(v) => v.asInstanceOf[T]
-          case None =>
-            val v = runCounted
-            if (info.gates.size < MaxGateEntries) info.gates.update(key, v)
-            v
-        }
-      case _ => runCounted
+      case Some(key) => info.gate(key)(runCounted)
+      case None => runCounted
     }
   }
 
@@ -208,17 +163,15 @@ case class RollupSubstitution(session: SparkSession) extends Rule[LogicalPlan] {
 
   /** The live snapshot of a MANIFEST-layout store, cached under the
     * content stamp (every TsdbStore mutator bumps `_DATA_STAMP`, which
-    * drops the gates map — so a repeated dashboard query pays one
-    * manifest read per store mutation, not per optimize). A store
-    * without a stamp never caches — correct, just uncached. */
-  private def manifestSnapshot(info: StoreInfo, store: String)
+    * retires the cached store metadata — so a repeated dashboard query
+    * pays one manifest read per store mutation, not per optimize). A
+    * store without a stamp never caches — correct, just uncached. */
+  private def manifestSnapshot(info: StoreMeta, store: String)
       : graft.sources.StoreManifest.Snapshot = {
     def load() = graft.sources.StoreManifest.load(
       new org.apache.hadoop.fs.Path(store)
         .getFileSystem(session.sparkContext.hadoopConfiguration), store)
-    if (info.dataStamp.isEmpty) load()
-    else info.gates.getOrElseUpdate("manifest|snapshot", load())
-      .asInstanceOf[graft.sources.StoreManifest.Snapshot]
+    info.gate("manifest|snapshot")(load())
   }
 
   /** On a manifest store, the rewrite is sound only against the LIVE
@@ -232,7 +185,7 @@ case class RollupSubstitution(session: SparkSession) extends Rule[LogicalPlan] {
     * test: when an old snapshot's base set coincides with the live
     * one the data is identical and substitution stays sound. Rename
     * layout reads pass trivially (one canonical `<root>/base` dir). */
-  private def baseScanIsLive(info: StoreInfo, store: String,
+  private def baseScanIsLive(info: StoreMeta, store: String,
                              rel: LogicalRelation): Boolean =
     info.layout.commit != "manifest" || {
       val scanned = rel.relation match {
@@ -248,44 +201,40 @@ case class RollupSubstitution(session: SparkSession) extends Rule[LogicalPlan] {
       scanned == live
     }
 
-  private def tableExistsCached(info: StoreInfo, store: String, table: String): Boolean =
+  private def tableExistsCached(info: StoreMeta, store: String, table: String): Boolean =
     if (info.layout.commit == "manifest")
       manifestSnapshot(info, store).entries.keys.exists(_._1 == table)
-    else info.exists.getOrElseUpdate(table, {
+    else info.exists(table) {
       val p = new org.apache.hadoop.fs.Path(s"$store/$table")
       p.getFileSystem(session.sparkContext.hadoopConfiguration).exists(p)
-    })
+    }
 
   /** Fresh analyzed scan of a store table, with the (stable) schema
-    * served from the cache — skips per-query schema inference, keeps
-    * the per-query file listing. On a manifest store the scan resolves
-    * through the LIVE snapshot ([[TsdbStore.readSnapshotTable]] — the
-    * same single-relation explicit-PartitionSpec read every fetch
-    * uses), so the substituted cascade is read under the same commit
-    * protocol as the base scan it replaces. Snapshot skew note: the
-    * base relation was resolved when the query was BUILT, the cascade
-    * here at optimize time — under the store's single-writer contract
-    * a mutation between the two is the same read-skew class the
-    * rename layout's table-at-a-time swaps expose, and a dashboard
-    * re-running the query closes it. */
-  private def tableScan(info: StoreInfo, store: String, table: String)
+    * served from the store-metadata cache — skips per-query schema
+    * inference, keeps the per-query file listing. On a manifest store
+    * the scan resolves through the LIVE snapshot
+    * ([[TsdbStore.readSnapshotTable]] — the same single-relation
+    * explicit-PartitionSpec read every fetch uses), so the substituted
+    * cascade is read under the same commit protocol as the base scan
+    * it replaces; on the rename layout it is [[TsdbStore.readTable]].
+    * Snapshot skew note: the base relation was resolved when the query
+    * was BUILT, the cascade here at optimize time — under the store's
+    * single-writer contract a mutation between the two is the same
+    * read-skew class the rename layout's table-at-a-time swaps expose,
+    * and a dashboard re-running the query closes it. */
+  private def tableScan(info: StoreMeta, store: String, table: String)
       : org.apache.spark.sql.DataFrame =
     if (info.layout.commit == "manifest") {
       val snap = manifestSnapshot(info, store)
-      val dataSchema = info.schemas.getOrElseUpdate(table, {
+      val dataSchema = info.schema(table) {
         val rel = snap.entries.collectFirst {
           case ((t, _), r) if t == table => r
         }.getOrElse(sys.error(s"no live entry for $table at $store"))
         session.read.parquet(s"$store/$rel").schema
-      })
+      }
       TsdbStore.readSnapshotTable(session, store, info.layout, snap,
         table, Some(dataSchema))
-    } else {
-      val path = s"$store/$table"
-      val schema = info.schemas.getOrElseUpdate(table,
-        session.read.parquet(path).schema)
-      session.read.schema(schema).parquet(path)
-    }
+    } else TsdbStore.readTable(session, store, info, table)
 
   /** The stats-based skip gate: proceed only when the raw side out-
     * sizes the cascade by the configured ratio (default 1.0 — decline
@@ -298,7 +247,7 @@ case class RollupSubstitution(session: SparkSession) extends Rule[LogicalPlan] {
     * while both plans are trivially cheap, so the gate stands aside
     * and the rewrite keeps its plan-quality wins (pruning, no
     * shuffle, no window sort). */
-  private def sizeGateOk(info: StoreInfo, rel: LogicalRelation,
+  private def sizeGateOk(info: StoreMeta, rel: LogicalRelation,
                          store: String, table: String): Boolean = {
     val ratio = session.conf.get(RatioKey, "1.0").toDouble
     if (ratio <= 0.0) return true
@@ -379,7 +328,7 @@ case class RollupSubstitution(session: SparkSession) extends Rule[LogicalPlan] {
     * sample-sized) — and CACHED per (content-stamped store, dim
     * fingerprint, key positions), so a dashboard re-firing the same
     * query pays this job once per store mutation, not once per query. */
-  private def dimIsUnique(info: StoreInfo, dj: DimJoin): Boolean = {
+  private def dimIsUnique(info: StoreMeta, dj: DimJoin): Boolean = {
     val key = planSignature(dj.dim).map { sig =>
       val keyPos = dj.pairs
         .map(p => dj.dim.output.indexWhere(_.exprId == p._2.exprId))
@@ -528,7 +477,7 @@ case class RollupSubstitution(session: SparkSession) extends Rule[LogicalPlan] {
     * — so a dim column that happens to be called user_id stays a dim
     * key. */
   private case class Match(
-      agg: Aggregate, rel: LogicalRelation, store: String, info: StoreInfo,
+      agg: Aggregate, rel: LogicalRelation, store: String, info: StoreMeta,
       resolve: Expression => Expression, ids: Map[String, ExprId],
       series: Seq[Expression], lo: Option[Long], hi: Option[Long],
       rest: Seq[Expression], groupings: Seq[Expression], stepSec: Long,
@@ -1237,7 +1186,7 @@ case class RollupSubstitution(session: SparkSession) extends Rule[LogicalPlan] {
         // optimize strictly more expensive than before the cache
         // existed). The global entry is populated only when an
         // unfiltered query at this grain actually runs.
-        val bound = m.info.gates.get(gateKey("global").get)
+        val bound = m.info.cachedGate(gateKey("global").get)
           .collect { case b: Long => b }
         bound match {
           case Some(b) if b < graft.functions.BottomKSample.K => b

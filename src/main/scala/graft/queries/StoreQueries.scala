@@ -32,17 +32,13 @@ object StoreQueries {
     * every raw sample. (At this fixture's sampling density the day
     * cascade holds ~4x fewer rows than base; at a production 10 s poll
     * rate the ratio is ~8600x — the bench delta understates the
-    * production win by that factor.) */
+    * production win by that factor.) The base read resolves either
+    * commit layout, so the manifest-store twin runs the IDENTICAL
+    * aggregation text against its snapshot-resolved base. */
   private def rollupShape(s: org.apache.spark.sql.SparkSession,
                           store: String,
-                          range: Option[(Long, Long)] = None): org.apache.spark.sql.DataFrame =
-    rollupShapeOn(s.read.parquet(s"$store/base"), range)
-
-  /** [[rollupShape]] over an explicit base frame — the manifest-store
-    * twin passes its snapshot-resolved base read, so the IDENTICAL
-    * aggregation text runs against both commit layouts. */
-  private def rollupShapeOn(base: org.apache.spark.sql.DataFrame,
-                            range: Option[(Long, Long)]): org.apache.spark.sql.DataFrame = {
+                          range: Option[(Long, Long)] = None): org.apache.spark.sql.DataFrame = {
+    val base = TsdbStore.readTable(s, store, "base")
     val src = range match {
       case Some((b, e)) =>
         base.filter(col("ts_us") >= b * 1000000L && col("ts_us") < e * 1000000L)
@@ -103,7 +99,7 @@ object StoreQueries {
     val cap = graft.Tables.WrapCap
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("user_id", "event_type").orderBy("ts_us", "event_id")
-    s.read.parquet(s"$store/base")
+    TsdbStore.readTable(s, store, "base")
       .filter(col("event_type").isin("click", "view"))
       .withColumn("prev_cents", lag("cents", 1).over(w))
       .withColumn("prev_ts_us", lag("ts_us", 1).over(w))
@@ -147,10 +143,10 @@ object StoreQueries {
     * so the enriched rollup never rescans raw either. */
   private def enrichedRollupShape(s: org.apache.spark.sql.SparkSession,
                                   store: String): org.apache.spark.sql.DataFrame = {
-    val dim = s.read.parquet(s"$store/meta")
+    val dim = TsdbStore.readTable(s, store, "meta")
       .filter(col("valid_to_us") === lit(Long.MaxValue))
       .select(col("user_id"), expr("speed_cents div 1000").as("band"))
-    s.read.parquet(s"$store/base")
+    TsdbStore.readTable(s, store, "base")
       .filter(col("ts_us") >= B * 1000000L && col("ts_us") < E * 1000000L)
       .join(broadcast(dim), "user_id")
       .groupBy(col("band"),
@@ -184,7 +180,7 @@ object StoreQueries {
     * store's BASE table — the quantile twin of [[rollupShape]]. */
   private def quantileRollupShape(s: org.apache.spark.sql.SparkSession,
                                   store: String): org.apache.spark.sql.DataFrame =
-    s.read.parquet(s"$store/base")
+    TsdbStore.readTable(s, store, "base")
       .filter(col("event_type").isin("click", "view"))
       .filter(col("ts_us") >= B * 1000000L && col("ts_us") < E * 1000000L)
       .groupBy(col("user_id"), col("event_type"),
@@ -222,10 +218,10 @@ object StoreQueries {
     * (where the rule would rightly decline and scan raw). */
   private def enrichedQuantileShape(s: org.apache.spark.sql.SparkSession,
                                     store: String): org.apache.spark.sql.DataFrame = {
-    val dim = s.read.parquet(s"$store/meta")
+    val dim = TsdbStore.readTable(s, store, "meta")
       .filter(col("valid_to_us") === lit(Long.MaxValue))
       .select(col("user_id"), expr("speed_cents div 1000").as("band"))
-    s.read.parquet(s"$store/base")
+    TsdbStore.readTable(s, store, "base")
       .filter(col("ts_us") >= B * 1000000L && col("ts_us") < E * 1000000L)
       .join(broadcast(dim), "user_id")
       .groupBy(col("band"),
@@ -266,7 +262,7 @@ object StoreQueries {
     * engines' formula variants produce bit-identical doubles. */
   private def quantileContRollupShape(s: org.apache.spark.sql.SparkSession,
                                       store: String): org.apache.spark.sql.DataFrame =
-    s.read.parquet(s"$store/base")
+    TsdbStore.readTable(s, store, "base")
       .filter(col("event_type").isin("click", "view"))
       .filter(col("ts_us") >= B * 1000000L && col("ts_us") < E * 1000000L)
       .groupBy(col("user_id"), col("event_type"),
@@ -289,12 +285,6 @@ object StoreQueries {
       |  quantile_cont(cents, 0.75) AS p75_cents
       |FROM c GROUP BY 1, 2, 3
       |ORDER BY user_id, event_type, slot_ts""".stripMargin
-
-  /** Snapshot-resolved base read of a manifest store — the input the
-    * manifest rollup A/B pair aggregates over. */
-  private def manifestBase(s: org.apache.spark.sql.SparkSession,
-                           store: String): org.apache.spark.sql.DataFrame =
-    TsdbStore.readTable(s, store, TsdbStore.readLayout(s, store), "base")
 
   /** [[rollupOracle]]'s twin against the MUTATED manifest fixture: the
     * upsert's replayed window carries +1.0 values for user 7's clicks,
@@ -346,7 +336,7 @@ object StoreQueries {
     * monoid) instead of re-scanning raw. */
   private def rollupM4Shape(s: org.apache.spark.sql.SparkSession,
                             store: String): org.apache.spark.sql.DataFrame =
-    s.read.parquet(s"$store/base")
+    TsdbStore.readTable(s, store, "base")
       .filter(col("event_type").isin("click", "view"))
       .groupBy(col("user_id"), col("event_type"),
         graft.operators.TimeSeriesOps.slotSec(86400L).as("slot_ts"))
@@ -863,7 +853,7 @@ object StoreQueries {
       // cascade is the post-maintenance truth; RollupSpec pins that
       // the plan actually switched tables on the manifest layout
       val store = StoreFixture.manifestStore(s, d)
-      withRollupFlag(s, on = true)(rollupShapeOn(manifestBase(s, store), None))
+      withRollupFlag(s, on = true)(rollupShape(s, store))
     },
 
     QueryDef("q_store_manifest_rollup_raw",
@@ -871,7 +861,7 @@ object StoreQueries {
       // A/B control: identical text against the same manifest store,
       // flag off — BENCH carries the manifest substituted-vs-raw pair
       val store = StoreFixture.manifestStore(s, d)
-      withRollupFlag(s, on = false)(rollupShapeOn(manifestBase(s, store), None))
+      withRollupFlag(s, on = false)(rollupShape(s, store))
     },
 
     QueryDef("q_store_manifest_asof",
@@ -937,7 +927,7 @@ object StoreQueries {
       // gate. Quality sums ride as round(×100) BIGINTs — §7.4's
       // integer-sum rule (cross-engine double summation order differs)
       val store = StoreFixture.manifestStoreEvolved(s, d)
-      TsdbStore.readTable(s, store, TsdbStore.readLayout(s, store), "base")
+      TsdbStore.readTable(s, store, "base")
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_rows"),
           count("quality").as("n_evolved"),
@@ -981,7 +971,7 @@ object StoreQueries {
       // resolution at any vintage is a hash mismatch. Score sums ride
       // as round(×100) BIGINTs per §7.4's integer-sum rule
       val store = StoreFixture.manifestStoreRenamed(s, d)
-      TsdbStore.readTable(s, store, TsdbStore.readLayout(s, store), "base")
+      TsdbStore.readTable(s, store, "base")
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_rows"),
           count("quality_score").as("n_scored"),
@@ -1023,13 +1013,12 @@ object StoreQueries {
       // excluded, so a resurrected row at either level is a hash
       // mismatch
       val store = StoreFixture.manifestStoreDeleted(s, d)
-      val layout = TsdbStore.readLayout(s, store)
-      val base = TsdbStore.readTable(s, store, layout, "base")
+      val base = TsdbStore.readTable(s, store, "base")
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_rows"),
           sum("cents").cast("long").as("sum_cents"))
         .withColumn("level", lit("base"))
-      val agg = TsdbStore.readTable(s, store, layout, "agg_21600")
+      val agg = TsdbStore.readTable(s, store, "agg_21600")
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_rows"),
           sum("sum_cents").cast("long").as("sum_cents"))
@@ -1188,7 +1177,7 @@ object StoreQueries {
       // recomputes from raw
       val store = StoreFixture.store(s, d)
       withRollupFlag(s, on = true) {
-        s.read.parquet(s"$store/base")
+        TsdbStore.readTable(s, store, "base")
           .filter(col("ts_us") >= B * 1000000L && col("ts_us") < E * 1000000L)
           .filter(col("event_type").isin("click", "view"))
           .groupBy(col("user_id"), col("event_type"))
@@ -1215,7 +1204,7 @@ object StoreQueries {
       // A/B control: identical text, flag off
       val store = StoreFixture.store(s, d)
       withRollupFlag(s, on = false) {
-        s.read.parquet(s"$store/base")
+        TsdbStore.readTable(s, store, "base")
           .filter(col("ts_us") >= B * 1000000L && col("ts_us") < E * 1000000L)
           .filter(col("event_type").isin("click", "view"))
           .groupBy(col("user_id"), col("event_type"))
@@ -1248,7 +1237,7 @@ object StoreQueries {
       // division the substituted plan performs
       val store = StoreFixture.store(s, d)
       withRollupFlag(s, on = true) {
-        s.read.parquet(s"$store/base")
+        TsdbStore.readTable(s, store, "base")
           .filter(col("ts_us") >= B * 1000000L && col("ts_us") < E * 1000000L)
           .filter(col("event_type").isin("click", "view"))
           .groupBy(col("user_id"), col("event_type"),
@@ -1276,7 +1265,7 @@ object StoreQueries {
       // partial sum is an integer below 2^53, which cents sums are)
       val store = StoreFixture.store(s, d)
       withRollupFlag(s, on = false) {
-        s.read.parquet(s"$store/base")
+        TsdbStore.readTable(s, store, "base")
           .filter(col("ts_us") >= B * 1000000L && col("ts_us") < E * 1000000L)
           .filter(col("event_type").isin("click", "view"))
           .groupBy(col("user_id"), col("event_type"),
@@ -1423,7 +1412,7 @@ object StoreQueries {
         val key = "spark.graft.rollup.quantile.approx"
         s.conf.set(key, "true")
         try {
-          val df = s.read.parquet(s"$store/base")
+          val df = TsdbStore.readTable(s, store, "base")
             .groupBy(col("event_type"))
             .agg(expr("percentile_disc(0.95) WITHIN GROUP (ORDER BY cents)")
               .cast("bigint").as("p95_cents"))
@@ -1452,7 +1441,7 @@ object StoreQueries {
       // oracled in DuckDB. BENCH carries estimate-vs-exact side by side
       val store = StoreFixture.store(s, d)
       withRollupFlag(s, on = false) {
-        s.read.parquet(s"$store/base")
+        TsdbStore.readTable(s, store, "base")
           .groupBy(col("event_type"))
           .agg(expr("percentile_disc(0.95) WITHIN GROUP (ORDER BY cents)")
             .cast("bigint").as("p95_cents"))
@@ -1579,7 +1568,7 @@ object StoreQueries {
       // Oracle recomputes both from raw events
       val store = StoreFixture.store(s, d)
       withRollupFlag(s, on = true) {
-        s.read.parquet(s"$store/base")
+        TsdbStore.readTable(s, store, "base")
           .filter(col("ts_us") >= B * 1000000L && col("ts_us") < E * 1000000L)
           .filter(col("event_type").isin("click", "view"))
           .groupBy(col("event_type"),
@@ -1605,7 +1594,7 @@ object StoreQueries {
       // shuffles every raw (user, day) pair instead of cascade rows
       val store = StoreFixture.store(s, d)
       withRollupFlag(s, on = false) {
-        s.read.parquet(s"$store/base")
+        TsdbStore.readTable(s, store, "base")
           .filter(col("ts_us") >= B * 1000000L && col("ts_us") < E * 1000000L)
           .filter(col("event_type").isin("click", "view"))
           .groupBy(col("event_type"),
@@ -1673,7 +1662,7 @@ object StoreQueries {
         .partitionBy("user_id", "event_type").orderBy("ts_us", "event_id")
       val store = StoreFixture.store(s, d)
       withRollupFlag(s, on = true) {
-        s.read.parquet(s"$store/base")
+        TsdbStore.readTable(s, store, "base")
           .filter(col("event_type").isin("click", "view"))
           .withColumn("prev_cents", lag("cents", 1).over(w))
           .withColumn("prev_ts_us", lag("ts_us", 1).over(w))
@@ -1717,7 +1706,7 @@ object StoreQueries {
         .partitionBy("user_id", "event_type").orderBy("ts_us", "event_id")
       val store = StoreFixture.store(s, d)
       withRollupFlag(s, on = false) {
-        s.read.parquet(s"$store/base")
+        TsdbStore.readTable(s, store, "base")
           .filter(col("event_type").isin("click", "view"))
           .withColumn("prev_cents", lag("cents", 1).over(w))
           .withColumn("prev_ts_us", lag("ts_us", 1).over(w))
@@ -1754,7 +1743,7 @@ object StoreQueries {
       // boundary deterministic for the oracle
       val store = StoreFixture.store(s, d)
       withRollupFlag(s, on = true) {
-        s.read.parquet(s"$store/base")
+        TsdbStore.readTable(s, store, "base")
           .filter(col("ts_us") >= B * 1000000L && col("ts_us") < E * 1000000L)
           .filter(col("event_type").isin("click", "view"))
           .groupBy(col("user_id"), col("event_type"))
@@ -1848,7 +1837,7 @@ object StoreQueries {
       // the series key.
       val store = StoreFixture.store(s, d)
       val t = expr("slot_ts div 86400 - 19723")
-      s.read.parquet(s"$store/agg_86400")
+      TsdbStore.readTable(s, store, "agg_86400")
         .select(col("user_id"), col("event_type"), t.as("t"),
           col("sum_cents").as("vol"))
         .groupBy("user_id", "event_type")

@@ -207,11 +207,8 @@ object TsdbStore {
   def readDataStamp(spark: SparkSession, path: String): String = {
     val p = new org.apache.hadoop.fs.Path(s"$path/_DATA_STAMP")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) ""
-    else {
-      val in = fs.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    }
+    val in = try fs.open(p) catch { case _: java.io.FileNotFoundException => return "" }
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
   }
 
   /** Read the stamped layout; a store predating `_LAYOUT` gets the
@@ -249,6 +246,87 @@ object TsdbStore {
         buckets = kv.getOrElse("buckets", "0").toInt,
         quantiles = kv.getOrElse("quantiles", "true").toBoolean,
         commit = kv.getOrElse("commit", "rename"))
+    }
+  }
+
+  // ---- store-metadata cache -------------------------------------------
+
+  /** One store root's read-side metadata: the parsed layout, each
+    * table's data schema and existence, and the rollup rule's gate
+    * answers — valid while the `_LAYOUT` modification time
+    * (`layoutMtime`, -1 when absent) and the `_DATA_STAMP` value are
+    * both unchanged, so upsert / compaction / retention retire exactly
+    * what they can change. Metadata only, never rows or file listings:
+    * an incremental upsert swaps partition dirs without touching
+    * `_LAYOUT`, so every read still lists its files fresh — exactly
+    * what an uncached read pays for its own scan. An unstamped store
+    * (`dataStamp` empty) never caches: each lookup re-infers, as a
+    * plain `spark.read.parquet` would. */
+  private[graft] final class StoreMeta(val layoutMtime: Long,
+                                       val dataStamp: String,
+                                       val layout: StoreLayout) {
+    private val schemas =
+      scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.types.StructType]
+    private val present = scala.collection.concurrent.TrieMap.empty[String, Boolean]
+    private val gates = scala.collection.concurrent.TrieMap.empty[String, Any]
+
+    /** `table`'s data schema, inferred by `infer` on a miss. */
+    def schema(table: String)(infer: => org.apache.spark.sql.types.StructType)
+        : org.apache.spark.sql.types.StructType =
+      if (dataStamp.isEmpty) infer else schemas.getOrElseUpdate(table, infer)
+
+    /** Whether `table` exists, probed by `probe` on a miss. */
+    def exists(table: String)(probe: => Boolean): Boolean =
+      if (dataStamp.isEmpty) probe else present.getOrElseUpdate(table, probe)
+
+    /** A content-derived answer (a rollup gate job's result, the live
+      * manifest snapshot) under `key`, computed by `run` on a miss.
+      * Past `MaxGateEntries` a new key runs uncached rather than
+      * growing driver memory without limit (the rule's monotone
+      * global-bound entries are inserted long before the cap bites). */
+    def gate[T](key: String)(run: => T): T =
+      if (dataStamp.isEmpty) run
+      else gates.get(key) match {
+        case Some(v) => v.asInstanceOf[T]
+        case None =>
+          val v = run
+          if (gates.size < MaxGateEntries) gates.update(key, v)
+          v
+      }
+
+    /** The answer cached under `key`, if any — never computes it. */
+    def cachedGate(key: String): Option[Any] = gates.get(key)
+  }
+
+  /** Stamped stores whose metadata stays cached, least recently used
+    * evicted first, and gate answers kept per store — fixed bounds on
+    * driver memory, not tunables. */
+  private val MaxCachedStores = 64
+  private val MaxGateEntries = 1024
+  private val storeMetas =
+    new java.util.LinkedHashMap[String, StoreMeta](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[String, StoreMeta]): Boolean = size() > MaxCachedStores
+    }
+
+  /** The store's metadata, from the cache when its stamps still match:
+    * one `_LAYOUT` status and one `_DATA_STAMP` read per lookup, no
+    * Spark job. The stamp is read BEFORE any schema is inferred, so a
+    * mutation landing mid-lookup leaves its fresh schema under the OLD
+    * stamp — which the mutator's own stamp bump then retires — and
+    * never an old schema under the new stamp. */
+  private[graft] def storeMeta(spark: SparkSession, path: String): StoreMeta = {
+    val mtime =
+      try fsOf(spark, path).getFileStatus(new org.apache.hadoop.fs.Path(s"$path/_LAYOUT"))
+        .getModificationTime
+      catch { case _: java.io.FileNotFoundException => -1L }
+    val stamp = readDataStamp(spark, path)
+    val hit = storeMetas.synchronized(storeMetas.get(path))
+    if (hit != null && hit.layoutMtime == mtime && hit.dataStamp == stamp) hit
+    else {
+      val fresh = new StoreMeta(mtime, stamp, readLayout(spark, path))
+      if (stamp.nonEmpty) storeMetas.synchronized(storeMetas.put(path, fresh))
+      fresh
     }
   }
 
@@ -842,8 +920,19 @@ object TsdbStore {
     * resolution on the manifest layout. Package-visible so the chaos
     * harness can diff manifest-store tables against a virgin rebuild. */
   private[graft] def readTable(spark: SparkSession, path: String,
+                               meta: StoreMeta, table: String): DataFrame =
+    readTableRange(spark, path, meta, table, None)
+
+  /** [[readTable]] under the store's own (cached) metadata. */
+  private[graft] def readTable(spark: SparkSession, path: String,
+                               table: String): DataFrame =
+    readTable(spark, path, storeMeta(spark, path), table)
+
+  /** [[readTable]] under an explicit layout, uncached: a rename-layout
+    * read infers its schema, as a plain `spark.read.parquet` would. */
+  private[graft] def readTable(spark: SparkSession, path: String,
                                layout: StoreLayout, table: String): DataFrame =
-    readTableRange(spark, path, layout, table, None)
+    readTable(spark, path, new StoreMeta(-1L, "", layout), table)
 
   /** [[readTable]] with a time-range hint `[lo, hi)` in the table's
     * native time unit ([[timeColOf]]) and an optional series-key hint
@@ -857,11 +946,11 @@ object TsdbStore {
     * live one (time travel — [[readTableAt]] semantics inside the
     * fetch surface). */
   private def readTableRange(spark: SparkSession, path: String,
-                             layout: StoreLayout, table: String,
+                             meta: StoreMeta, table: String,
                              bounds: Option[(Long, Long)],
                              atVersion: Option[Long] = None,
                              series: Option[Seq[(Option[Long], Option[String])]] = None): DataFrame =
-    if (layout.commit == "manifest") {
+    if (meta.layout.commit == "manifest") {
       val fs = fsOf(spark, path)
       val snap = (atVersion, bounds) match {
         case (Some(v), _) => StoreManifest.loadAt(fs, path, v)
@@ -886,13 +975,20 @@ object TsdbStore {
           })
         case _ => StoreManifest.load(fs, path)
       }
-      manifestRead(spark, path, layout, snap, table, bounds, None, series)
+      manifestRead(spark, path, meta.layout, snap, table, bounds, None, series)
     } else {
       require(atVersion.isEmpty,
         s"time travel needs the manifest layout; the store at $path " +
           "uses rename commits")
-      spark.read.parquet(s"$path/$table")
+      spark.read.schema(tableSchema(spark, path, meta, table)).parquet(s"$path/$table")
     }
+
+  /** A rename-layout table's schema (its `dt` partition column
+    * included) from the stamped metadata cache: the directory read
+    * then lists its files but runs no schema-inference job. */
+  private[graft] def tableSchema(spark: SparkSession, path: String, meta: StoreMeta,
+                                 table: String): org.apache.spark.sql.types.StructType =
+    meta.schema(table)(spark.read.parquet(s"$path/$table").schema)
 
   /** Retained snapshot versions of a manifest store, ascending — the
     * read points [[readTableAt]] accepts. Only the newest is the live
@@ -1952,9 +2048,9 @@ object TsdbStore {
     * extremes exact at cascade granularity (a series is "active" in a
     * coarse cell iff it has ≥1 raw sample there). */
   def listSeries(spark: SparkSession, path: String): DataFrame = {
-    val layout = readLayout(spark, path)
-    val t = layout.steps.max
-    readTable(spark, path, layout, s"agg_$t")
+    val meta = storeMeta(spark, path)
+    val t = meta.layout.steps.max
+    readTable(spark, path, meta, s"agg_$t")
       .groupBy("user_id", "event_type")
       .agg(min("slot_ts").as("first_slot_ts"), max("slot_ts").as("last_slot_ts"),
         sum("n").as("n_samples"))
@@ -2232,7 +2328,7 @@ object TsdbStore {
   }
 
   def readMetadata(spark: SparkSession, path: String): DataFrame =
-    readTable(spark, path, readLayout(spark, path), "meta")
+    readTable(spark, path, "meta")
 
   /** Point-in-time metadata resolution served FROM the store: each
     * sample joins to the metadata version valid at its timestamp via
@@ -2255,8 +2351,9 @@ object TsdbStore {
     * series), as-of joined to the sidecar through [[metaAsof]]. */
   def fetchMetaAsof(spark: SparkSession, path: String, eventType: String,
                     beginSec: Long, endSec: Long): DataFrame = {
-    val layout = readLayout(spark, path)
-    val samples = readTable(spark, path, layout, "base")
+    val meta = storeMeta(spark, path)
+    val layout = meta.layout
+    val samples = readTable(spark, path, meta, "base")
       .filter(dtPrune(layout, beginSec, endSec)) // partition prune
       .filter(col("event_type") === eventType)
       .filter(col("ts_us") >= beginSec * 1000000L && col("ts_us") < endSec * 1000000L)
@@ -2422,23 +2519,51 @@ object TsdbStore {
   def fetch(spark: SparkSession, path: String,
             userId: Long, eventType: String,
             beginSec: Long, endSec: Long,
-            aggStep: Long = 0L, cf: String = "average"): DataFrame = {
-    val layout = readLayout(spark, path)
+            aggStep: Long = 0L, cf: String = "average"): DataFrame =
+    fetchOn(spark, path, storeMeta(spark, path), userId, eventType,
+      beginSec, endSec, aggStep, cf)
+
+  /** [[fetch]] under already-resolved store metadata. */
+  private def fetchOn(spark: SparkSession, path: String, meta: StoreMeta,
+                      userId: Long, eventType: String,
+                      beginSec: Long, endSec: Long,
+                      aggStep: Long, cf: String): DataFrame = {
+    val layout = meta.layout
     require(aggStep == 0L || layout.steps.contains(aggStep), s"no such aggregate: $aggStep")
     if (aggStep == 0L) {
-      readTableRange(spark, path, layout, "base",
+      gatherSorted(readTableRange(spark, path, meta, "base",
           Some((beginSec * 1000000L, endSec * 1000000L)),
           series = Some(Seq((Some(userId), Some(eventType)))))
         .filter(dtPrune(layout, beginSec, endSec)) // partition prune
         .filter(col("user_id") === userId && col("event_type") === eventType)
         .filter(col("ts_us") >= beginSec * 1000000L && col("ts_us") < endSec * 1000000L)
-        .select(col("ts_us"), (col("cents").cast("double") / 100.0).as("value"))
-        .orderBy("ts_us")
+        .select(col("ts_us"), (col("cents").cast("double") / 100.0).as("value")),
+        "ts_us")
     } else {
-      slotRead(spark, path, layout, userId, eventType, beginSec, endSec, aggStep, cf)
-        .orderBy("slot_ts")
+      gatherSorted(
+        slotRead(spark, path, meta, userId, eventType, beginSec, endSec, aggStep, cf),
+        "slot_ts")
     }
   }
+
+  /** The fetch surface's final ORDER BY: gather the result onto ONE
+    * partition, then sort it there. Spark plans `Sort ← Exchange
+    * SinglePartition`, so there is no range exchange and hence no
+    * boundary-sampling job re-running the scan; the scan and any
+    * aggregate below keep all their tasks. The gather is tagged
+    * [[FetchGather]]: when a composed query lets Spark drop the sort
+    * (a join input, an order-insensitive aggregate),
+    * [[graft.plans.DropOrphanGathers]] drops the gather with it, so the
+    * operators above keep their parallelism. */
+  private def gatherSorted(df: DataFrame, cols: String*): DataFrame = {
+    val gathered = df.repartition(1)
+    gathered.queryExecution.analyzed.setTagValue(FetchGather, ())
+    gathered.orderBy(cols.map(col): _*)
+  }
+
+  /** Marks the one-partition gather under a fetch's final sort. */
+  private[graft] val FetchGather =
+    org.apache.spark.sql.catalyst.trees.TreeNodeTag[Unit]("graft.fetchGather")
 
   /** Percentile read path — the dashboard quantile the monoid cascade
     * cannot answer, served from the `quant_<step>` column family:
@@ -2461,10 +2586,11 @@ object TsdbStore {
                     beginSec: Long, endSec: Long,
                     aggStep: Long, q: Double,
                     interp: Boolean = false): DataFrame = {
-    val layout = readLayout(spark, path)
+    val meta = storeMeta(spark, path)
+    val layout = meta.layout
     val t = quantLevelOf(layout, aggStep, q, interp)
     val ms = udaf(new graft.functions.BottomKMergeState)
-    readTableRange(spark, path, layout, s"quant_$t", Some((beginSec, endSec)),
+    gatherSorted(readTableRange(spark, path, meta, s"quant_$t", Some((beginSec, endSec)),
         series = Some(Seq((Some(userId), Some(eventType)))))
       .filter(dtPrune(layout, beginSec, endSec))
       .filter(col("user_id") === userId && col("event_type") === eventType)
@@ -2472,8 +2598,8 @@ object TsdbStore {
       .groupBy((expr(s"slot_ts div $aggStep") * aggStep).as("slot_ts"))
       .agg(ms(col("pri"), col("value")).as("sk"))
       .select(col("slot_ts"),
-        (if (interp) quantContRead(q) else quantRankRead(q)).as("value"))
-      .orderBy("slot_ts")
+        (if (interp) quantContRead(q) else quantRankRead(q)).as("value")),
+      "slot_ts")
   }
 
   /** Fleet-wide percentile: merge the quant sketches across EVERY
@@ -2488,10 +2614,11 @@ object TsdbStore {
                          beginSec: Long, endSec: Long,
                          aggStep: Long, q: Double,
                          interp: Boolean = false): DataFrame = {
-    val layout = readLayout(spark, path)
+    val meta = storeMeta(spark, path)
+    val layout = meta.layout
     val t = quantLevelOf(layout, aggStep, q, interp)
     val ms = udaf(new graft.functions.BottomKMergeState)
-    readTableRange(spark, path, layout, s"quant_$t", Some((beginSec, endSec)),
+    gatherSorted(readTableRange(spark, path, meta, s"quant_$t", Some((beginSec, endSec)),
         series = Some(Seq((None, Some(eventType)))))
       .filter(dtPrune(layout, beginSec, endSec))
       .filter(col("event_type") === eventType)
@@ -2500,8 +2627,8 @@ object TsdbStore {
       .agg(ms(col("pri"), col("value")).as("sk"))
       .select(col("slot_ts"),
         (if (interp) quantContRead(q) else quantRankRead(q)).as("value"),
-        size(col("sk.value")).as("n_sample"))
-      .orderBy("slot_ts")
+        size(col("sk.value")).as("n_sample")),
+      "slot_ts")
   }
 
   /** Shared by [[fetchQuantile]]/[[fetchBulkQuantile]]: validate the
@@ -2568,7 +2695,8 @@ object TsdbStore {
                         beginSec: Long, endSec: Long,
                         aggStep: Long, q: Double,
                         interp: Boolean = false): DataFrame = {
-    val layout = readLayout(spark, path)
+    val meta = storeMeta(spark, path)
+    val layout = meta.layout
     require(series.nonEmpty, "empty series request")
     val t = quantLevelOf(layout, aggStep, q, interp)
     val keys = series.map { case (u, e) => struct(lit(u), lit(e)) }
@@ -2576,7 +2704,7 @@ object TsdbStore {
     // readTableRange, NOT a direct $path/quant_$t read: the direct
     // read bypassed manifest resolution entirely — on a manifest store
     // this path failed on the missing live directory (round-15 find)
-    readTableRange(spark, path, layout, s"quant_$t", Some((beginSec, endSec)),
+    gatherSorted(readTableRange(spark, path, meta, s"quant_$t", Some((beginSec, endSec)),
         series = Some(series.map { case (u, e) => (Some(u), Some(e)) }))
       .filter(dtPrune(layout, beginSec, endSec))
       .filter(struct(col("user_id"), col("event_type")).isin(keys: _*))
@@ -2585,8 +2713,8 @@ object TsdbStore {
         (expr(s"slot_ts div $aggStep") * aggStep).as("slot_ts"))
       .agg(ms(col("pri"), col("value")).as("sk"))
       .select(col("user_id"), col("event_type"), col("slot_ts"),
-        (if (interp) quantContRead(q) else quantRankRead(q)).as("value"))
-      .orderBy("user_id", "event_type", "slot_ts")
+        (if (interp) quantContRead(q) else quantRankRead(q)).as("value")),
+      "user_id", "event_type", "slot_ts")
   }
 
   /** cf → (cascade family, value expression), shared by every
@@ -2612,12 +2740,13 @@ object TsdbStore {
 
   /** One-series consolidated read: pruned cascade scan → (slot_ts,
     * value), UNORDERED (callers order or join as they need). */
-  private def slotRead(spark: SparkSession, path: String, layout: StoreLayout,
+  private def slotRead(spark: SparkSession, path: String, meta: StoreMeta,
                        userId: Long, eventType: String,
                        beginSec: Long, endSec: Long,
                        aggStep: Long, cf: String): DataFrame = {
+    val layout = meta.layout
     val (table, cfCol) = cfColumn(cf)
-    readTableRange(spark, path, layout, s"${table}_$aggStep",
+    readTableRange(spark, path, meta, s"${table}_$aggStep",
         Some((beginSec, endSec)),
         series = Some(Seq((Some(userId), Some(eventType)))))
       .filter(dtPrune(layout, beginSec, endSec))
@@ -2652,18 +2781,19 @@ object TsdbStore {
                   beginSec: Long, endSec: Long,
                   aggStep: Long, cf: String = "average",
                   fill: String = "null"): DataFrame = {
-    val layout = readLayout(spark, path)
+    val meta = storeMeta(spark, path)
+    val layout = meta.layout
     require(layout.steps.contains(aggStep),
       s"fetchFilled needs a materialized slot resolution, got $aggStep (steps: ${layout.steps})")
     require(endSec > beginSec, s"empty range: [$beginSec, $endSec)")
     val firstSlot = Math.floorDiv(beginSec, aggStep) * aggStep
     val grid = spark.range(firstSlot, endSec, aggStep).select(col("id").as("slot_ts"))
     val present =
-      slotRead(spark, path, layout, userId, eventType, firstSlot, endSec, aggStep, cf)
+      slotRead(spark, path, meta, userId, eventType, firstSlot, endSec, aggStep, cf)
     val cells = Math.floorDiv(endSec - firstSlot + aggStep - 1, aggStep)
     val filled = gridAttach(spark, grid, present, Seq("slot_ts"), cells)
     fill match {
-      case "null" => filled.orderBy("slot_ts")
+      case "null" => gatherSorted(filled, "slot_ts")
       case "interp" =>
         // one series ⇒ one window partition. This is the REQUEST-bounded
         // single-partition window (VERDICT r17 #4): the frame length is
@@ -2734,8 +2864,9 @@ object TsdbStore {
                 userId: Long, eventType: String,
                 beginSec: Long, endSec: Long,
                 resolutionSec: Long, cf: String = "average"): (Long, DataFrame) = {
-    val step = bestStep(readLayout(spark, path), resolutionSec)
-    (step, fetch(spark, path, userId, eventType, beginSec, endSec, step, cf))
+    val meta = storeMeta(spark, path)
+    val step = bestStep(meta.layout, resolutionSec)
+    (step, fetchOn(spark, path, meta, userId, eventType, beginSec, endSec, step, cf))
   }
 
   /** The coarsest materialized step that still divides the requested
@@ -2762,30 +2893,45 @@ object TsdbStore {
                 series: Seq[(Long, String)],
                 beginSec: Long, endSec: Long, aggStep: Long,
                 cf: String = "average",
-                atVersion: Option[Long] = None): DataFrame = {
-    val layout = readLayout(spark, path)
+                atVersion: Option[Long] = None): DataFrame =
+    fetchBulkOn(spark, path, storeMeta(spark, path), series, beginSec, endSec,
+      aggStep, cf, atVersion)
+
+  /** [[fetchBulk]] under already-resolved store metadata. */
+  private def fetchBulkOn(spark: SparkSession, path: String, meta: StoreMeta,
+                          series: Seq[(Long, String)],
+                          beginSec: Long, endSec: Long, aggStep: Long,
+                          cf: String, atVersion: Option[Long]): DataFrame =
+    gatherSorted(bulkRead(spark, path, meta, series, beginSec, endSec, aggStep, cf, atVersion),
+      "user_id", "event_type", if (aggStep == 0L) "ts_us" else "slot_ts")
+
+  /** [[fetchBulk]]'s single pruned scan, UNORDERED (callers order or
+    * join as they need). */
+  private def bulkRead(spark: SparkSession, path: String, meta: StoreMeta,
+                       series: Seq[(Long, String)],
+                       beginSec: Long, endSec: Long, aggStep: Long,
+                       cf: String, atVersion: Option[Long]): DataFrame = {
+    val layout = meta.layout
     require(aggStep == 0L || layout.steps.contains(aggStep), s"no such aggregate: $aggStep")
     val keys = series.map { case (u, e) => struct(lit(u), lit(e)) }
     val seriesHint = Some(series.map { case (u, e) => (Some(u), Some(e)) })
     if (aggStep == 0L)
-      readTableRange(spark, path, layout, "base",
+      readTableRange(spark, path, meta, "base",
           Some((beginSec * 1000000L, endSec * 1000000L)), atVersion, seriesHint)
         .filter(dtPrune(layout, beginSec, endSec)) // partition prune
         .filter(struct(col("user_id"), col("event_type")).isin(keys: _*))
         .filter(col("ts_us") >= beginSec * 1000000L && col("ts_us") < endSec * 1000000L)
         .select(col("user_id"), col("event_type"), col("ts_us"),
           (col("cents").cast("double") / 100.0).as("value"))
-        .orderBy("user_id", "event_type", "ts_us")
     else {
       val (table, cfCol) = cfColumn(cf)
-      readTableRange(spark, path, layout, s"${table}_$aggStep",
+      readTableRange(spark, path, meta, s"${table}_$aggStep",
           Some((beginSec, endSec)), atVersion, seriesHint)
         .filter(dtPrune(layout, beginSec, endSec)) // partition prune
         .filter(struct(col("user_id"), col("event_type")).isin(keys: _*))
         .filter(col("slot_ts") >= beginSec && col("slot_ts") < endSec)
         .select(col("user_id"), col("event_type"), col("slot_ts"),
           cfCol.as("value"))
-        .orderBy("user_id", "event_type", "slot_ts")
     }
   }
 
@@ -2802,7 +2948,8 @@ object TsdbStore {
                       series: Seq[(Long, String)],
                       beginSec: Long, endSec: Long, aggStep: Long,
                       cf: String = "average"): DataFrame = {
-    val layout = readLayout(spark, path)
+    val meta = storeMeta(spark, path)
+    val layout = meta.layout
     require(layout.steps.contains(aggStep),
       s"fetchBulkFilled needs a materialized slot resolution, got $aggStep (steps: ${layout.steps})")
     require(endSec > beginSec, s"empty range: [$beginSec, $endSec)")
@@ -2812,11 +2959,12 @@ object TsdbStore {
     val grid = spark.range(firstSlot, endSec, aggStep)
       .select(explode(array(keys: _*)).as("k"), col("id").as("slot_ts"))
       .select(col("k.user_id"), col("k.event_type"), col("slot_ts"))
-    val present = fetchBulk(spark, path, series, firstSlot, endSec, aggStep, cf)
+    val present = bulkRead(spark, path, meta, series, firstSlot, endSec, aggStep, cf, None)
     val cells =
       Math.floorDiv(endSec - firstSlot + aggStep - 1, aggStep) * series.length
-    gridAttach(spark, grid, present, Seq("user_id", "event_type", "slot_ts"), cells)
-      .orderBy("user_id", "event_type", "slot_ts")
+    gatherSorted(
+      gridAttach(spark, grid, present, Seq("user_id", "event_type", "slot_ts"), cells),
+      "user_id", "event_type", "slot_ts")
   }
 
   /** Bulk best-aggregate selection — [[fetchAuto]]'s step choice over
@@ -2825,7 +2973,8 @@ object TsdbStore {
                     series: Seq[(Long, String)],
                     beginSec: Long, endSec: Long,
                     resolutionSec: Long, cf: String = "average"): (Long, DataFrame) = {
-    val step = bestStep(readLayout(spark, path), resolutionSec)
-    (step, fetchBulk(spark, path, series, beginSec, endSec, step, cf))
+    val meta = storeMeta(spark, path)
+    val step = bestStep(meta.layout, resolutionSec)
+    (step, fetchBulkOn(spark, path, meta, series, beginSec, endSec, step, cf, None))
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.sources.TsdbStore
@@ -11,7 +9,7 @@ import graft.sources.TsdbStore
 class TsdbStoreSpec extends SparkSpec {
 
   private lazy val store: String = {
-    val p = Files.createTempDirectory("graft-store").toString
+    val p = tempDir("graft-store")
     TsdbStore.ingest(spark, Tables.events(spark, Sf), p)
     p
   }
@@ -93,7 +91,7 @@ class TsdbStoreSpec extends SparkSpec {
     import spark.implicits._
     // private store: upsert now mutates the store in place (round 11),
     // so the shared fixture must not be touched
-    val p = Files.createTempDirectory("graft-store-upsert").toString
+    val p = tempDir("graft-store-upsert")
     TsdbStore.ingest(spark, Tables.events(spark, Sf), p)
     val replay = Seq((7L, "click", 424242L, // synthetic new event id
         java.sql.Timestamp.from(java.time.Instant.parse("2024-01-15T12:00:00Z")), 9.99))
@@ -166,7 +164,7 @@ class TsdbStoreSpec extends SparkSpec {
     // interfere; repeated incremental upserts fragment the DERIVED
     // tables the same way streaming fragments base (each touched
     // partition rewritten by a multi-task job)
-    val p = Files.createTempDirectory("graft-store-dcomp").toString
+    val p = tempDir("graft-store-dcomp")
     TsdbStore.ingest(spark, Tables.events(spark, Sf), p)
     for (table <- Seq("agg_86400", "rate_21600", "quant_86400")) {
       val dt = new java.io.File(s"$p/$table").listFiles()
@@ -206,7 +204,7 @@ class TsdbStoreSpec extends SparkSpec {
   test("incremental upsert rewrites only touched partitions, equals full recompute") {
     import spark.implicits._
     // fresh store so the shared fixture's later mutations can't interfere
-    val p = Files.createTempDirectory("graft-store-inc").toString
+    val p = tempDir("graft-store-inc")
     val rawCols = Seq("user_id", "event_type", "event_id", "ts", "value")
     val raw = Tables.events(spark, Sf).selectExpr(rawCols: _*)
     TsdbStore.ingest(spark, raw, p)
@@ -278,7 +276,7 @@ class TsdbStoreSpec extends SparkSpec {
 
     // semantics: the incremental result equals a full recompute from
     // the patched raw feed, at every level of BOTH cascades
-    val p2 = Files.createTempDirectory("graft-store-full").toString
+    val p2 = tempDir("graft-store-full")
     val patched = raw
       .withColumn("value",
         when(col("user_id") === target.getLong(0) &&
@@ -298,7 +296,7 @@ class TsdbStoreSpec extends SparkSpec {
   test("csv export/read round-trips a fetch result with explicit schema") {
     val b = 1704844800L; val e = 1705708800L
     val res = TsdbStore.fetch(spark, store, 7L, "click", b, e)
-    val out = java.nio.file.Files.createTempDirectory("graft-csv").toString
+    val out = tempDir("graft-csv")
     TsdbStore.exportCsv(res, out)
     val back = TsdbStore.readCsv(spark, out, res.schema)
     assert(back.schema == res.schema, "schema did not round-trip")
@@ -307,7 +305,7 @@ class TsdbStoreSpec extends SparkSpec {
   }
 
   test("json export/read round-trips a fetch result") {
-    val out = java.nio.file.Files.createTempDirectory("graft-json").toString
+    val out = tempDir("graft-json")
     val res = TsdbStore.fetch(spark, store, 7L, "click", 1704067200L, 1706659200L)
     TsdbStore.exportJson(res, out)
     val back = TsdbStore.readJson(spark, out).select("ts_us", "value")
@@ -316,7 +314,7 @@ class TsdbStoreSpec extends SparkSpec {
   }
 
   test("retention drops only pre-cutoff partitions at every level") {
-    val p = Files.createTempDirectory("graft-store-ret").toString
+    val p = tempDir("graft-store-ret")
     TsdbStore.ingest(spark,
       Tables.events(spark, Sf).selectExpr("user_id", "event_type", "event_id", "ts", "value"), p)
     val cutoff = 1704844800L // 2024-01-10T00Z
@@ -375,7 +373,7 @@ class TsdbStoreSpec extends SparkSpec {
   test("configurable 3-level chain (300s→3600s→86400s): ingest, upsert, retention") {
     import graft.sources.StoreLayout
     val layout = StoreLayout(steps = Seq(300L, 3600L, 86400L))
-    val p = Files.createTempDirectory("graft-store-3lvl").toString
+    val p = tempDir("graft-store-3lvl")
     val raw = Tables.events(spark, Sf)
       .selectExpr("user_id", "event_type", "event_id", "ts", "value")
     TsdbStore.ingest(spark, raw, p, layout)
@@ -406,7 +404,7 @@ class TsdbStoreSpec extends SparkSpec {
       .select(col("user_id"), col("event_type"), col("event_id"),
         timestamp_micros(col("ts_us_raw")).as("ts"), col("value"))
     TsdbStore.upsertIncremental(spark, replay, p)
-    val p2 = Files.createTempDirectory("graft-store-3lvl-full").toString
+    val p2 = tempDir("graft-store-3lvl-full")
     TsdbStore.ingest(spark, raw.unionByName(replay), p2, layout)
     ("base" +: layout.steps.flatMap(s => Seq(s"agg_$s", s"rate_$s")))
       .foreach { t =>
@@ -433,7 +431,7 @@ class TsdbStoreSpec extends SparkSpec {
 
   test("monthly chunk mapping: dt=YYYY-MM partitions, pruning, whole-month retention") {
     import graft.sources.StoreLayout
-    val p = Files.createTempDirectory("graft-store-month").toString
+    val p = tempDir("graft-store-month")
     TsdbStore.ingest(spark,
       Tables.events(spark, Sf).selectExpr("user_id", "event_type", "event_id", "ts", "value"),
       p, StoreLayout(monthly = true))
@@ -468,7 +466,7 @@ class TsdbStoreSpec extends SparkSpec {
   test("bucketed layout option: per-series window plans zero exchanges") {
     import graft.sources.StoreLayout
     import org.apache.spark.sql.expressions.Window
-    val p = Files.createTempDirectory("graft-store-bkt").toString
+    val p = tempDir("graft-store-bkt")
     TsdbStore.ingest(spark,
       Tables.events(spark, Sf).selectExpr("user_id", "event_type", "event_id", "ts", "value"),
       p, StoreLayout(buckets = 8))
@@ -494,7 +492,7 @@ class TsdbStoreSpec extends SparkSpec {
 
   test("incremental upsert makes partition-moving replays loud when asked") {
     import spark.implicits._
-    val p = Files.createTempDirectory("graft-store-move").toString
+    val p = tempDir("graft-store-move")
     TsdbStore.ingest(spark,
       Tables.events(spark, Sf).selectExpr("user_id", "event_type", "event_id", "ts", "value"), p)
     val victim = spark.read.parquet(s"$p/base")
@@ -570,7 +568,7 @@ class TsdbStoreSpec extends SparkSpec {
 
   test("bucketed store rejects plain-parquet upserts (bucket-file metadata)") {
     import graft.sources.StoreLayout
-    val p = Files.createTempDirectory("graft-store-bkt-guard").toString
+    val p = tempDir("graft-store-bkt-guard")
     val feed = Tables.events(spark, Sf)
       .selectExpr("user_id", "event_type", "event_id", "ts", "value").limit(200)
     TsdbStore.ingest(spark, feed, p, StoreLayout(buckets = 2))
@@ -584,7 +582,7 @@ class TsdbStoreSpec extends SparkSpec {
 
   test("pre-1970 samples partition into their own (earlier) UTC day") {
     import spark.implicits._
-    val p = Files.createTempDirectory("graft-store-pre1970").toString
+    val p = tempDir("graft-store-pre1970")
     // -3600 s floor-divides to day 1969-12-31; truncate-toward-zero
     // `div` would misfile it under 1970-01-01, where driver-side
     // floorDiv pruning could then exclude it from fetch/retention
@@ -606,7 +604,7 @@ class TsdbStoreSpec extends SparkSpec {
 
   test("metadata sidecar: derived intervals tile, as-of picks the boundary version") {
     import spark.implicits._
-    val p = Files.createTempDirectory("graft-store-meta").toString
+    val p = tempDir("graft-store-meta")
     val base = 1704067200000000L // 2024-01-01T00Z in µs
     val hour = 3600000000L
     // ingest a tiny sample store so fetchMetaAsof has a base table
@@ -650,7 +648,7 @@ class TsdbStoreSpec extends SparkSpec {
   }
 
   test("deleteSeries: the var vanishes at every level, equal to re-ingest of the filtered feed") {
-    val p = java.nio.file.Files.createTempDirectory("graft_del").toString
+    val p = tempDir("graft_del")
     val events = Tables.events(spark, Sf)
     TsdbStore.ingest(spark, events, p)
     // a series with data but NOT in every partition, so some dts stay
@@ -672,7 +670,7 @@ class TsdbStoreSpec extends SparkSpec {
       assert(after(dt) == before(dt), s"untouched partition $dt was rewritten")
     }
     // every table equals a full re-ingest of the filtered feed
-    val full = java.nio.file.Files.createTempDirectory("graft_del_full").toString
+    val full = tempDir("graft_del_full")
     TsdbStore.ingest(spark,
       events.filter(!(col("user_id") === uid && col("event_type") === etype)), full)
     val tables = "base" +: TsdbStore.AggSteps.flatMap(s =>
@@ -696,7 +694,7 @@ class TsdbStoreSpec extends SparkSpec {
     // change, proving the ±1-partition rate blast radius on the
     // monthly mapper
     val layout = graft.sources.StoreLayout(monthly = true)
-    val p = Files.createTempDirectory("graft-store-feb").toString
+    val p = tempDir("graft-store-feb")
     def ev(id: Long, iso: String, v: Double) =
       (1L, "ctr", id, java.time.Instant.parse(iso).getEpochSecond * 1000000L, v)
     val initial = Seq(
@@ -729,7 +727,7 @@ class TsdbStoreSpec extends SparkSpec {
       "successor month's boundary delta not recomputed")
 
     // equals a full recompute of the patched feed at every level
-    val p2 = Files.createTempDirectory("graft-store-feb-full").toString
+    val p2 = tempDir("graft-store-feb-full")
     TsdbStore.ingest(spark, initial.unionByName(late), p2, layout)
     Seq("base", "agg_21600", "agg_86400", "rate_21600", "rate_86400").foreach { t =>
       val a = spark.read.parquet(s"$p/$t")
@@ -742,5 +740,154 @@ class TsdbStoreSpec extends SparkSpec {
     val feb = spark.read.parquet(s"$p/rate_21600").filter(col("dt") === "2024-02")
     assert(feb.filter(col("dt_us") > 21600L * 1000000L).count() == 0,
       "a heartbeat-spanning gap produced a delta")
+  }
+
+  // ---- stamped store-metadata cache + gathered fetch sorts -----------
+
+  private val FB = 1704844800L
+  private val FE = 1705708800L
+
+  /** `body`'s value and the Spark jobs started while it ran. */
+  private def jobsDuring[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    org.apache.spark.graftshim.ListenerBridge.flush(sc)
+    sc.addSparkListener(l)
+    try {
+      val a = body
+      org.apache.spark.graftshim.ListenerBridge.flush(sc)
+      (a, n.get)
+    } finally sc.removeSparkListener(l)
+  }
+
+  /** The nine sorted fetch-surface frames with their sort keys. */
+  private def sortedFetches(p: String)
+      : Seq[(String, org.apache.spark.sql.DataFrame, Seq[String])] = {
+    val two = Seq((7L, "click"), (3L, "view"))
+    val bulkKey = Seq("user_id", "event_type", "slot_ts")
+    Seq(
+      ("fetch raw", TsdbStore.fetch(spark, p, 7L, "click", FB, FE), Seq("ts_us")),
+      ("fetch agg", TsdbStore.fetch(spark, p, 7L, "click", FB, FE, 21600L, "max"),
+        Seq("slot_ts")),
+      ("fetchQuantile",
+        TsdbStore.fetchQuantile(spark, p, 7L, "click", FB, FE, 86400L, 0.95), Seq("slot_ts")),
+      ("fetchFleetQuantile",
+        TsdbStore.fetchFleetQuantile(spark, p, "click", FB, FE, 86400L, 0.5), Seq("slot_ts")),
+      ("fetchBulkQuantile",
+        TsdbStore.fetchBulkQuantile(spark, p, two, FB, FE, 86400L, 0.95), bulkKey),
+      ("fetchFilled", TsdbStore.fetchFilled(spark, p, 7L, "click", FB, FE, 21600L),
+        Seq("slot_ts")),
+      ("fetchBulk raw", TsdbStore.fetchBulk(spark, p, two, FB, FE, 0L),
+        Seq("user_id", "event_type", "ts_us")),
+      ("fetchBulk rate", TsdbStore.fetchBulk(spark, p, two, FB, FE, 21600L, "rate"), bulkKey),
+      ("fetchBulkFilled", TsdbStore.fetchBulkFilled(spark, p, two, FB, FE, 21600L), bulkKey))
+  }
+
+  test("a warm store builds every fetch-surface frame with zero Spark jobs") {
+    def build(): Unit = {
+      sortedFetches(store)
+      TsdbStore.fetchFilled(spark, store, 7L, "click", FB, FE, 21600L, fill = "interp")
+      TsdbStore.fetchAuto(spark, store, 7L, "click", FB, FE, 3600L)
+      TsdbStore.fetchAuto(spark, store, 7L, "click", FB, FE, 86400L)
+      TsdbStore.fetchBulkAuto(spark, store, Seq((7L, "click")), FB, FE, 43200L)
+      TsdbStore.listSeries(spark, store)
+    }
+    build() // warms the metadata cache
+    val (_, jobs) = jobsDuring(build())
+    assert(jobs == 0, s"building fetch frames on a warm store ran $jobs Spark jobs")
+  }
+
+  test("the cached schema of every store table equals a fresh inference") {
+    val tables = new java.io.File(store).listFiles().filter(_.isDirectory).map(_.getName)
+    assert(tables.length == 7)
+    tables.foreach { t =>
+      assert(TsdbStore.tableSchema(spark, store, TsdbStore.storeMeta(spark, store), t) == spark.read.parquet(s"$store/$t").schema,
+        s"cached schema of $t differs from inference")
+    }
+    val (_, jobs) = jobsDuring(tables.foreach(TsdbStore.readTable(spark, store, _)))
+    assert(jobs == 0, s"cached table reads ran $jobs Spark jobs")
+  }
+
+  test("sorted fetches gather to one partition: same rows, same order, no range exchange") {
+    def ranged(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.executedPlan.toString.toLowerCase.contains("rangepartitioning")
+    sortedFetches(store).foreach { case (name, df, key) =>
+      assert(!ranged(df), s"$name plans a range exchange")
+      // the former shape: a range-partitioned global sort of the same rows
+      val old = df.repartition(4).orderBy(key.map(col): _*)
+      assert(ranged(old))
+      val rows = df.collect().toSeq
+      assert(rows.nonEmpty, s"$name returned nothing")
+      assert(rows.map(r => key.map(r.getAs[Any])).distinct.size == rows.size,
+        s"$name: sort key not unique, so row order is not determined")
+      assert(rows == old.collect().toSeq, s"$name: rows or their order changed")
+    }
+  }
+
+  test("a fetch composed under a join or aggregate drops its gather along with its sort") {
+    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Repartition, Sort}
+    import spark.implicits._
+    def gathers(df: org.apache.spark.sql.DataFrame): Seq[LogicalPlan] =
+      df.queryExecution.optimizedPlan.collect {
+        case r: Repartition if r.numPartitions == 1 => r
+      }
+    def orphans(df: org.apache.spark.sql.DataFrame): Int = {
+      val plan = df.queryExecution.optimizedPlan
+      val sorted = plan.collect { case s: Sort => s.child }
+      gathers(df).count(g => !sorted.exists(_ eq g))
+    }
+    val two = Seq((7L, "click"), (3L, "view"))
+    val raw = TsdbStore.fetchBulk(spark, store, two, FB, FE, 0L)
+    val dims = Seq((7L, "click", "a"), (3L, "view", "b")).toDF("user_id", "event_type", "grp")
+    assert(gathers(raw).size == 1, "a direct fetch sorts on its gather")
+    val joined = raw.join(dims, Seq("user_id", "event_type"))
+    val counted = raw.groupBy("user_id").agg(count(lit(1)), max("value"))
+    Seq("join" -> joined, "count/max" -> counted).foreach { case (name, df) =>
+      assert(gathers(df).isEmpty, s"$name: the sort went but its gather stayed")
+    }
+    // an order-sensitive aggregate (a double average) keeps the sort, and so the gather
+    val averaged = raw.groupBy("user_id").agg(avg("value"))
+    Seq(joined, counted, averaged).foreach(df => assert(orphans(df) == 0))
+    assert(joined.count() == raw.count())
+    // a caller's own single-partition repartition is not the fetch's to drop
+    val own = TsdbStore.readTable(spark, store, "base").repartition(1)
+      .join(dims, Seq("user_id", "event_type"))
+    assert(gathers(own).size == 1)
+  }
+
+  test("a metadata re-ingest with a new column, and a bare touchDataStamp, invalidate the cache") {
+    import spark.implicits._
+    val p = tempDir("graft-store-stamp")
+    TsdbStore.initStore(spark, p)
+    val v1 = Seq((1L, 10L, 1000L), (1L, 11L, 2000L)).toDF("user_id", "ver_id", "valid_from_us")
+    TsdbStore.ingestMetadata(spark, v1, p)
+    assert(!TsdbStore.readMetadata(spark, p).columns.contains("speed_cents"))
+    TsdbStore.ingestMetadata(spark, v1.withColumn("speed_cents", lit(5L)), p)
+    assert(TsdbStore.readMetadata(spark, p).columns.contains("speed_cents"),
+      "the re-ingested column is invisible: stale cached schema")
+    // a writer bypassing the store's mutators leaves the stamp alone, so
+    // reads keep the cached schema until the stamp moves
+    v1.withColumn("valid_to_us", lit(Long.MaxValue)).withColumn("mtu", lit(1500L))
+      .write.mode("overwrite").parquet(s"$p/meta")
+    assert(!TsdbStore.readMetadata(spark, p).columns.contains("mtu"))
+    TsdbStore.touchDataStamp(spark, p)
+    val after = TsdbStore.readMetadata(spark, p)
+    assert(after.columns.contains("mtu"), "touchDataStamp did not invalidate the cache")
+    assert(after.select("mtu").as[Long].collect().toSeq == Seq(1500L, 1500L))
+  }
+
+  test("a store without _DATA_STAMP still fetches correctly, uncached") {
+    def read() = TsdbStore.fetch(spark, store, 7L, "click", FB, FE, 21600L)
+    val want = read().collect().toSeq
+    Seq("_DATA_STAMP", "._DATA_STAMP.crc").foreach(f => new java.io.File(s"$store/$f").delete())
+    try {
+      val (df, jobs) = jobsDuring(read())
+      assert(jobs > 0, "an unstamped store must infer its schema on every read")
+      assert(df.collect().toSeq == want)
+    } finally TsdbStore.touchDataStamp(spark, store)
   }
 }
