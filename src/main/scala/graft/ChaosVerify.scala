@@ -43,10 +43,10 @@ import org.apache.spark.sql.SparkSession
   * loss mid-MAINTENANCE — an incremental upsert and a partition
   * compaction, each diffed table-by-table against a virgin full
   * ingest of the accumulated truth (StoreMutationFuzzSpec's oracle,
-  * now under a real SIGKILL on a multi-JVM master). The maintenance
-  * phase also runs a MANIFEST-layout arm (the snapshot commit
-  * protocol): its contract is tri-state — the killed upsert either
-  * commits (tables equal the virgin rebuild) or never happened
+  * now under a real SIGKILL on a multi-JVM master). The streamed and
+  * maintained stores use the manifest layout (the store's one commit
+  * protocol); the upsert's contract is tri-state — the killed upsert
+  * either commits (tables equal the virgin rebuild) or never happened
   * (tables still equal the pre-mutation ingest; a dead mutation is
   * invisible orphan garbage, not a torn store), and a retry
   * converges. */
@@ -175,55 +175,23 @@ object ChaosVerify {
     }
     // ---- streaming phase: executor loss DURING a foreachBatch ingest.
     // The batch path above retries pure reads; the streaming sink also
-    // carries STATE across the failure — staged files, commit markers,
-    // and the per-batch cascade recompute must come out exactly as if
-    // no executor had died (the commit-marker idempotency contract,
-    // now exercised by a REAL mid-batch executor loss rather than a
-    // replayed batchId).
+    // carries STATE across the failure. The oracle `truth` store is a
+    // plain full ingest of the same events (default layout, never
+    // mutated afterwards).
     val sfBase = new java.io.File(sfDir).getName
-    val store = java.nio.file.Files
-      .createTempDirectory("graft-chaos-stream").toString
     val truth = java.nio.file.Files
       .createTempDirectory("graft-chaos-truth").toString
     val cols = Seq("user_id", "event_type", "event_id", "ts", "value")
     graft.sources.TsdbStore.ingest(spark,
       Tables.events(spark, sfDir).selectExpr(cols: _*), truth)
-    val feed = graft.streaming.StreamingOps.eventFileStream(spark, sfDir)
-      .selectExpr(cols: _*)
-    val q = graft.streaming.StreamingOps.streamIngestIncremental(feed, store)
-      .outputMode("update")
-      .option("checkpointLocation", s"$store/_ckpt")
-      .start()
-    val streamBefore = executorPids()
-    Thread.sleep(3000) // one 100k-row batch takes ~10-30 s multi-JVM
-    val midBatch = q.lastProgress == null ||
-      q.lastProgress.sources.forall(_.numInputRows == 0)
-    val streamVictim = streamBefore.head
-    val _ = scala.sys.process.Process(
-      Seq("kill", "-9", streamVictim.toString)).!
-    q.processAllAvailable()
-    q.stop()
     def rows(p: String) = spark.read.parquet(p)
-    val baseOk = rows(s"$store/base").exceptAll(rows(s"$truth/base")).isEmpty &&
-      rows(s"$truth/base").exceptAll(rows(s"$store/base")).isEmpty
-    val aggOk = rows(s"$store/agg_86400").exceptAll(rows(s"$truth/agg_86400")).isEmpty &&
-      rows(s"$truth/agg_86400").exceptAll(rows(s"$store/agg_86400")).isEmpty
-    if (!(baseOk && aggOk)) failures += 1
-    if (midBatch) killsLanded += 1
-    println(s"""{"chaos":"stream_ingest_$sfBase","mid_query":$midBatch,""" +
-      s""""killed_pid":$streamVictim,"base_match":$baseOk,"agg_match":$aggOk}""")
 
-    // ---- streaming on the MANIFEST layout (round 15, VERDICT r14
-    // next #2): the same mid-batch executor kill against the
-    // snapshot-commit streaming sink — each microbatch is one atomic
-    // manifest create carrying data + its batch high-water mark, so
-    // the killed batch either committed whole (tables equal truth) or
-    // re-ran whole, and a REPLAY of the final batchId afterwards must
-    // no-op at the high-water mark without touching the store.
+    // Each microbatch is one atomic manifest create carrying data + its
+    // batch high-water mark, so the killed batch either committed whole
+    // (tables equal truth) or re-ran whole, and a REPLAY of the final
+    // batchId afterwards must no-op at the high-water mark without
+    // touching the store.
     {
-      var w0 = 0
-      while (executorPids().size < 2 && w0 < 120) { Thread.sleep(1000); w0 += 1 }
-      require(executorPids().size >= 2, "no executor before manifest stream arm")
       val mStore = java.nio.file.Files
         .createTempDirectory("graft-chaos-mstream").toString
       graft.sources.TsdbStore.initStore(spark, mStore,
@@ -274,20 +242,17 @@ object ChaosVerify {
 
     // ---- mutation phase (round 14, VERDICT r13 missing #3): the batch
     // phase retries pure reads and the streaming phase a stateful sink;
-    // this one SIGKILLs an executor mid-MAINTENANCE — first an
-    // incremental upsert (staged cascade recompute + retire/install
-    // partition swaps), then a partition compaction (clustered rewrite
-    // + swap). The swaps themselves are driver-side metadata ops, but
-    // every staged write under them is executor work that must survive
-    // the loss. Oracle = StoreMutationFuzzSpec's contract: after each
-    // op, EVERY table of the mutated store equals a virgin full ingest
-    // of the accumulated truth (the `truth` store from the streaming
-    // phase is the mutation target — built by direct ingest, default
-    // layout). The batch is NEW-only (fresh ids — ~2% densify existing
-    // days, ~1% land 40 days out → partition bootstrap) and built from
-    // deterministic filters, so truth-after-upsert = events ∪ batch
-    // EXACTLY (no dedupe tie rules in the oracle) and a Spark
-    // recomputation of the batch lineage yields the same rows.
+    // this one SIGKILLs an executor mid-MAINTENANCE on a manifest store
+    // — first an incremental upsert (staged cascade recompute into a
+    // fresh segment + one snapshot commit), then a partition compaction
+    // (clustered rewrite + commit). Oracle = StoreMutationFuzzSpec's
+    // contract: after each op, EVERY table of the mutated store equals
+    // a virgin full ingest of the accumulated truth. The batch is
+    // NEW-only (fresh ids — ~2% densify existing days, ~1% land 40 days
+    // out → partition bootstrap) and built from deterministic filters,
+    // so truth-after-upsert = events ∪ batch EXACTLY (no dedupe tie
+    // rules in the oracle) and a Spark recomputation of the batch
+    // lineage yields the same rows.
     {
       import org.apache.spark.sql.functions.{col, expr, lit, max => fmax}
       val evs = Tables.events(spark, sfDir).selectExpr(cols: _*)
@@ -303,63 +268,30 @@ object ChaosVerify {
       graft.sources.TsdbStore.ingest(spark, evs.unionByName(batch), mutTruth)
       val mutTables = Seq("base", "agg_21600", "agg_86400", "rate_21600",
         "rate_86400", "quant_21600", "quant_86400")
-      def tablesEqual(): Boolean = mutTables.forall { t =>
-        val x = rows(s"$truth/$t"); val y = rows(s"$mutTruth/$t")
+      val mStore = java.nio.file.Files
+        .createTempDirectory("graft-chaos-manifest").toString
+      val mLayout = graft.sources.StoreLayout(commit = "manifest")
+      graft.sources.TsdbStore.ingest(spark, evs, mStore, mLayout)
+      def mEquals(oracle: String): Boolean = mutTables.forall { t =>
+        val x = graft.sources.TsdbStore.readTable(spark, mStore, mLayout, t)
+        val y = rows(s"$oracle/$t")
         x.exceptAll(y).isEmpty && y.exceptAll(x).isEmpty
       }
-      def killDuring(label: String, delayMs: Long = 1500)(op: => Unit): Unit = {
-        val before = executorPids()
-        val fut = Future(op)
-        Thread.sleep(delayMs)
-        val midOp = !fut.isCompleted
-        val victim = before.head
-        val _ = scala.sys.process.Process(Seq("kill", "-9", victim.toString)).!
-        val res = awaitSettled(fut, label)
-        res.failed.foreach(e =>
-          System.err.println(s"[chaos] $label aborted: ${e.getMessage}"))
-        val ok = res.isSuccess && tablesEqual()
-        if (!ok) failures += 1
-        if (midOp) killsLanded += 1
-        println(s"""{"chaos":"$label","mid_query":$midOp,""" +
-          s""""killed_pid":$victim,"match":$ok}""")
+      def awaitRelaunch(label: String): Unit = {
         var w = 0
         while (executorPids().size < 2 && w < 120) { Thread.sleep(1000); w += 1 }
         require(executorPids().size >= 2, s"no executor relaunch after $label")
       }
-      killDuring("mutation_upsert_incremental") {
-        graft.sources.TsdbStore.upsertIncremental(spark, batch, truth)
-      }
-      // compaction is a file-layout op: rows must still equal mutTruth
-      val baseDt = new java.io.File(s"$truth/base").listFiles()
-        .map(_.getName).filter(_.startsWith("dt=")).sorted
-        .head.stripPrefix("dt=")
-      // single-partition compaction completes in ~1-2 s multi-JVM, so
-      // the kill fires early to land inside the rewrite job
-      killDuring("mutation_compact_partition", delayMs = 400) {
-        graft.sources.TsdbStore.compactPartition(spark, truth, baseDt,
-          targetFiles = 2)
-      }
 
-      // ---- manifest-layout arm (round 14): the same executor kill
-      // mid-incremental-upsert against a store on the SNAPSHOT commit
-      // protocol. Its contract is stronger than the rename layout's
-      // and tri-state testable: the mutation either commits (every
-      // table equals the virgin rebuild), or it never happened (every
-      // table still equals the PRE-mutation ingest — a dead mutation
-      // is invisible orphan garbage, not a torn store), and a plain
-      // re-run then converges. maxFailures=8 means the job usually
-      // survives the kill, so the commit branch is the common case;
-      // the abort branch asserts atomicity when it does fire.
+      // incremental upsert: its contract is tri-state testable — the
+      // mutation either commits (every table equals the virgin
+      // rebuild), or it never happened (every table still equals the
+      // PRE-mutation ingest — a dead mutation is invisible orphan
+      // garbage, not a torn store), and a plain re-run then converges.
+      // maxFailures=8 means the job usually survives the kill, so the
+      // commit branch is the common case; the abort branch asserts
+      // atomicity when it does fire.
       {
-        val mStore = java.nio.file.Files
-          .createTempDirectory("graft-chaos-manifest").toString
-        val mLayout = graft.sources.StoreLayout(commit = "manifest")
-        graft.sources.TsdbStore.ingest(spark, evs, mStore, mLayout)
-        def mEquals(oracle: String): Boolean = mutTables.forall { t =>
-          val x = graft.sources.TsdbStore.readTable(spark, mStore, mLayout, t)
-          val y = rows(s"$oracle/$t")
-          x.exceptAll(y).isEmpty && y.exceptAll(x).isEmpty
-        }
         val before = executorPids()
         val fut = Future(
           graft.sources.TsdbStore.upsertIncremental(spark, batch, mStore))
@@ -389,13 +321,38 @@ object ChaosVerify {
         if (midOp) killsLanded += 1
         println(s"""{"chaos":"mutation_upsert_manifest","mid_query":$midOp,""" +
           s""""killed_pid":$victim,"committed":${res.isSuccess},"match":$ok}""")
-        var w = 0
-        while (executorPids().size < 2 && w < 120) { Thread.sleep(1000); w += 1 }
-        require(executorPids().size >= 2, "no executor relaunch after manifest arm")
+        awaitRelaunch("mutation_upsert_manifest")
+      }
+
+      // compaction is a file-layout op: committed or not, rows must
+      // still equal mutTruth. Single-partition compaction completes in
+      // ~1-2 s multi-JVM, so the kill fires early to land inside the
+      // rewrite job
+      {
+        val fsM = new org.apache.hadoop.fs.Path(mStore)
+          .getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val baseDt = graft.sources.StoreManifest.load(fsM, mStore).entries.keys
+          .collect { case ("base", dt) => dt }.min
+        val before = executorPids()
+        val fut = Future(graft.sources.TsdbStore.compactPartition(spark, mStore,
+          baseDt, targetFiles = 2))
+        Thread.sleep(400)
+        val midOp = !fut.isCompleted
+        val victim = before.head
+        val _ = scala.sys.process.Process(Seq("kill", "-9", victim.toString)).!
+        val res = awaitSettled(fut, "mutation_compact_partition")
+        res.failed.foreach(e => System.err.println(
+          s"[chaos] mutation_compact_partition aborted: ${e.getMessage}"))
+        val ok = res.isSuccess && mEquals(mutTruth)
+        if (!ok) failures += 1
+        if (midOp) killsLanded += 1
+        println(s"""{"chaos":"mutation_compact_partition","mid_query":$midOp,""" +
+          s""""killed_pid":$victim,"match":$ok}""")
+        awaitRelaunch("mutation_compact_partition")
       }
     }
 
-    val totalOps = Queries.size + 5 // batch queries + 2 streams + 3 mutations
+    val totalOps = Queries.size + 3 // batch queries + 1 stream + 2 mutations
     println(s"""{"chaos_summary":true,"queries":$totalOps,""" +
       s""""mid_query_kills":$killsLanded,"failures":$failures}""")
     spark.stop()

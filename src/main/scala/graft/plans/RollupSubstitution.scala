@@ -99,8 +99,7 @@ case class RollupSubstitution(session: SparkSession) extends Rule[LogicalPlan] {
     * keyed by the `_LAYOUT` modification time and the `_DATA_STAMP`
     * value, so upsert / compaction / retention invalidate exactly the
     * answers they can change). Metadata only: file LISTINGS are never
-    * cached, since an incremental upsert swaps partition directories
-    * without touching `_LAYOUT`. A missing layout stamp (not a store)
+    * cached. A missing layout stamp (not a store)
     * returns None. An absent content stamp caches nothing — stores
     * written by anything that doesn't maintain the stamp stay correct,
     * just uncached: every optimize re-infers their cascade schemas. */

@@ -43,6 +43,10 @@ object StoreFixture {
   private def stampOf(src: File): String =
     s"v$LayoutVersion:${src.lastModified()}:${src.length()}"
 
+  /** Builds into an EMPTIED target on a stamp mismatch: a rebuild over
+    * a stale fixture would otherwise inherit its state (a manifest
+    * re-ingest keeps columns an earlier `addColumn` declared, so the
+    * build's own `addColumn` would then refuse). */
   private def buildOnce(key: File, target: String)(build: => Unit): Unit =
     synchronized {
       val stampFile = new File(target, "_STAMP")
@@ -50,6 +54,7 @@ object StoreFixture {
       val have =
         if (stampFile.exists()) Files.readString(stampFile.toPath) else ""
       if (want != have) {
+        org.apache.commons.io.FileUtils.deleteDirectory(new File(target))
         build
         Files.writeString(stampFile.toPath, want)
       }

@@ -30,19 +30,19 @@ import graft.operators.TimeSeriesOps
   *   column family (default on). A store that never serves percentile
   *   reads can opt out of that ingest/maintenance cost; quantile
   *   fetches against it fail loudly instead of scanning raw
-  * @param commit the store's commit protocol: `"rename"` (default) —
-  *   staged-dir atomic-rename swaps, POSIX/HDFS only (rename-less
-  *   filesystems are refused loudly at every mutation entry point);
-  *   `"manifest"` — the [[StoreManifest]] snapshot protocol: data in
-  *   write-once segment dirs, the live set resolved from the newest
-  *   `_commits/v<N>.mf`, every mutation committed by ONE new-file
-  *   create — object-store-safe, and every multi-table maintenance
-  *   pass becomes atomic to readers. Bucketing composes (round 15):
-  *   the bucketed base is written INSIDE the ingest segment and the
-  *   catalog identity is per-snapshot —
-  *   [[TsdbStore.bucketedBaseTable]] registers the live snapshot's
-  *   partition locations at resolve time, so no stable directory is
-  *   needed
+  * @param commit the store's layout: `"manifest"` — the store's one
+  *   commit protocol ([[StoreManifest]]): data in write-once segment
+  *   dirs, the live set resolved from the newest `_commits/v<N>.mf`,
+  *   every mutation committed by ONE new-file create — object-store
+  *   safe, and every multi-table maintenance pass is atomic to
+  *   readers. Bucketing composes: the bucketed base is written INSIDE
+  *   the ingest segment and [[TsdbStore.bucketedBaseTable]] registers
+  *   the live snapshot's partition locations at resolve time.
+  *   `"rename"` (default) — plain `<store>/<table>/dt=` directories
+  *   written whole by [[TsdbStore.ingest]] and
+  *   [[TsdbStore.ingestMetadata]] and read-only otherwise: every other
+  *   mutator refuses it before writing anything. The default stays
+  *   because existing readers address `<store>/base` directly
   */
 case class StoreLayout(
     steps: Seq[Long] = Seq(21600L, 86400L),
@@ -257,9 +257,8 @@ object TsdbStore {
     * (`layoutMtime`, -1 when absent) and the `_DATA_STAMP` value are
     * both unchanged, so upsert / compaction / retention retire exactly
     * what they can change. Metadata only, never rows or file listings:
-    * an incremental upsert swaps partition dirs without touching
-    * `_LAYOUT`, so every read still lists its files fresh — exactly
-    * what an uncached read pays for its own scan. An unstamped store
+    * every read still lists its files fresh — exactly what an uncached
+    * read pays for its own scan. An unstamped store
     * (`dataStamp` empty) never caches: each lookup re-infers, as a
     * plain `spark.read.parquet` would. */
   private[graft] final class StoreMeta(val layoutMtime: Long,
@@ -337,6 +336,21 @@ object TsdbStore {
                    path: String): org.apache.hadoop.fs.FileSystem =
     new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** The store's layout, or a refusal naming `op` when the store does
+    * not commit through the manifest: the rename layout is written
+    * whole by [[ingest]] and [[ingestMetadata]] and is read-only to
+    * every other mutation and to the snapshot-only reads. Checked
+    * before anything is written. */
+  private[graft] def requireManifest(spark: SparkSession, path: String,
+                                     op: String): StoreLayout = {
+    val layout = readLayout(spark, path)
+    require(layout.commit == "manifest",
+      s"$op needs the manifest layout, but the store at $path uses the " +
+        "rename layout, which only ingest and ingestMetadata write — " +
+        "build the store with StoreLayout(commit = \"manifest\")")
+    layout
+  }
 
   /** The canonical time column per store table — the column whose
     * per-partition min/max rides in the manifest's entry statistics
@@ -423,10 +437,7 @@ object TsdbStore {
     * shape on the same snapshot-log lineage. */
   def addColumn(spark: SparkSession, path: String, table: String,
                 field: org.apache.spark.sql.types.StructField): Unit = {
-    val layout = readLayout(spark, path)
-    require(layout.commit == "manifest",
-      s"schema evolution needs the manifest layout's schema-in-snapshot; " +
-        s"the store at $path uses rename commits")
+    requireManifest(spark, path, "addColumn")
     require(field.nullable,
       s"added columns must be nullable — existing rows have no value " +
         s"for '${field.name}'")
@@ -562,10 +573,7 @@ object TsdbStore {
       op: String)(
       evolve: (StoreManifest.Snapshot, org.apache.spark.sql.types.StructType)
         => (org.apache.spark.sql.types.StructType, Map[String, String])): Unit = {
-    val layout = readLayout(spark, path)
-    require(layout.commit == "manifest",
-      s"schema evolution needs the manifest layout's schema-in-snapshot; " +
-        s"the store at $path uses rename commits")
+    requireManifest(spark, path, op)
     require(table == "base",
       s"rename/drop apply to the base table's evolved columns; cascade " +
         s"and sidecar shapes are the layout's contract, not a schema patch")
@@ -671,9 +679,7 @@ object TsdbStore {
     * only — never data files; vacuum trims history together with the
     * snapshots it deletes. */
   def history(spark: SparkSession, path: String): DataFrame = {
-    require(readLayout(spark, path).commit == "manifest",
-      s"history is a manifest-layout concept; the store at $path " +
-        "uses rename commits")
+    requireManifest(spark, path, "history")
     val fs = fsOf(spark, path)
     val rows = StoreManifest.versions(fs, path).flatMap { v =>
       StoreManifest.tryLoad(fs, path, v).map { s =>
@@ -1002,9 +1008,7 @@ object TsdbStore {
     * crashed commit would otherwise pick a torn file [[readTableAt]]
     * then throws on). */
   def snapshotVersions(spark: SparkSession, path: String): Seq[Long] = {
-    require(readLayout(spark, path).commit == "manifest",
-      s"snapshots are a manifest-layout concept; the store at $path " +
-        "uses rename commits")
+    requireManifest(spark, path, "snapshotVersions")
     val fs = fsOf(spark, path)
     StoreManifest.versions(fs, path)
       .filter(v => StoreManifest.tryLoad(fs, path, v).isDefined)
@@ -1022,22 +1026,10 @@ object TsdbStore {
     * version, listing what is retained. */
   def readTableAt(spark: SparkSession, path: String, table: String,
                   version: Long): DataFrame = {
-    val layout = readLayout(spark, path)
-    require(layout.commit == "manifest",
-      s"time travel needs the manifest layout; the store at $path " +
-        "uses rename commits")
+    val layout = requireManifest(spark, path, "readTableAt")
     manifestRead(spark, path, layout,
       StoreManifest.loadAt(fsOf(spark, path), path, version), table)
   }
-
-  /** Whether `table` currently exists (has any live data). */
-  private def tableExists(spark: SparkSession, path: String,
-                          layout: StoreLayout, table: String): Boolean =
-    if (layout.commit == "manifest")
-      StoreManifest.load(fsOf(spark, path), path).entries.keys
-        .exists(_._1 == table)
-    else fsOf(spark, path)
-      .exists(new org.apache.hadoop.fs.Path(s"$path/$table"))
 
   // ---- ingest ---------------------------------------------------------
 
@@ -1189,7 +1181,6 @@ object TsdbStore {
 
   def ingest(spark: SparkSession, events: DataFrame, path: String,
              layout: StoreLayout = StoreLayout()): Unit = withRollupRewriteOff(spark) {
-    if (layout.commit == "rename") requireAtomicRenameAt(spark, path)
     if (layout.commit == "manifest") {
       // whole-store build into one fresh segment, committed by a single
       // manifest create: readers see the OLD store (or none) until the
@@ -1231,23 +1222,7 @@ object TsdbStore {
             .option("compression", "zstd")
             .partitionBy("dt").parquet(segBase)
         buildCascades(spark, s"$path/_segs/$seg", layout)
-        val tables = "base" +: layout.steps.flatMap(s =>
-          Seq(s"agg_$s", s"rate_$s") ++
-            (if (layout.quantiles) Seq(s"quant_$s") else Seq.empty))
-        val fresh = tables.flatMap(t =>
-          StoreManifest.segEntries(fs, path, seg, t)).toMap
-        val h = segStats(fs, path, fresh)
-        // a re-ingest replaces every data table but PRESERVES the
-        // metadata sidecar (append-only as-of history, like
-        // deleteSeries), its schema, and the snapshot properties
-        // (streaming high-water marks ride propSets-free carry-over)
-        Some(StoreManifest.Mutation(
-          entries = prev.entries.filter(_._1._1 == "meta") ++ fresh,
-          stats = prev.stats.view.filterKeys(_._1 == "meta").toMap ++ h.stats,
-          files = prev.files.view.filterKeys(_._1 == "meta").toMap ++ h.files,
-          schemas = prev.schemas.view.filterKeys(_ == "meta").toMap ++
-            segSchemas(spark, path, fresh, prev),
-          op = "ingest", dtAdjacency = adjacencyOf(layout)))
+        Some(rebuiltStore(spark, path, layout, prev, seg, "ingest"))
       }
       touchDataStamp(spark, path)
       return
@@ -1277,6 +1252,31 @@ object TsdbStore {
     writeLayout(spark, path, layout)
     buildCascades(spark, path, layout)
     touchDataStamp(spark, path)
+  }
+
+  /** The commit of a whole-store rebuild ([[ingest]], [[upsert]]) whose
+    * base and cascades were written to segment `seg`: every data table
+    * moves to the segment, while the metadata sidecar (append-only as-of
+    * history, like deleteSeries), its schema and the snapshot
+    * properties (streaming high-water marks ride propSets-free
+    * carry-over) are preserved from `prev`. */
+  private def rebuiltStore(spark: SparkSession, path: String, layout: StoreLayout,
+                           prev: StoreManifest.Snapshot, seg: String,
+                           op: String): StoreManifest.Mutation = {
+    val fs = fsOf(spark, path)
+    val tables = "base" +: layout.steps.flatMap(s =>
+      Seq(s"agg_$s", s"rate_$s") ++
+        (if (layout.quantiles) Seq(s"quant_$s") else Seq.empty))
+    val fresh = tables.flatMap(t =>
+      StoreManifest.segEntries(fs, path, seg, t)).toMap
+    val h = segStats(fs, path, fresh)
+    StoreManifest.Mutation(
+      entries = prev.entries.filter(_._1._1 == "meta") ++ fresh,
+      stats = prev.stats.view.filterKeys(_._1 == "meta").toMap ++ h.stats,
+      files = prev.files.view.filterKeys(_._1 == "meta").toMap ++ h.files,
+      schemas = prev.schemas.view.filterKeys(_ == "meta").toMap ++
+        segSchemas(spark, path, fresh, prev),
+      op = op, dtAdjacency = adjacencyOf(layout))
   }
 
   /** GLOBAL range clustering on (dt, series, time) for every
@@ -1448,91 +1448,42 @@ object TsdbStore {
     * partitions, and which rejects partition-moving replays only when
     * `verifyNoPartitionMoves = true` — by default that hazard is the
     * caller's contract), this is the full-rewrite path: the merged
-    * base is staged to `base_new`, swapped in whole (retire → rename →
-    * drop, the same sequence as [[swapPartitionDir]], at table
-    * granularity), and every cascade is rebuilt from the new base — so
-    * after upsert() the STORE IS CONSISTENT, not just the base
-    * (round 11; it used to leave the merge in `base_new` for the
-    * caller). Crash contract: a death between the swap and the cascade
-    * rebuild leaves base new / cascades old; RE-RUNNING THE SAME
-    * upsert REPAIRS the store (the merge is idempotent — replaying
-    * incoming against the already-merged base reproduces it — and the
-    * rebuild then realigns every cascade), the same re-run-repairs
-    * contract deleteSeries documents. A production deployment would
-    * sit the swap behind a table format's atomic commit. */
+    * base and every cascade rebuilt from it land in one fresh segment
+    * under ONE publish, so readers see the old store whole until
+    * everything has landed. The merge reads the closure's snapshot, so
+    * a conflicting concurrent DATA commit re-runs it against the new
+    * base (the merge's input is the whole base — every data key
+    * overlaps); only a concurrent metadata/sidecar commit
+    * (ingestMetadata, addColumn) is disjoint enough to rebase, which
+    * is safe in either order. Manifest layout only. */
   def upsert(spark: SparkSession, newEvents: DataFrame, path: String): Unit =
       withRollupRewriteOff(spark) {
-    val layout = readLayout(spark, path)
-    if (layout.commit == "rename") requireAtomicRenameAt(spark, path)
+    val layout = requireManifest(spark, path, "upsert")
     require(layout.buckets == 0,
       "upsert writes plain parquet, which would not honor the bucketed " +
         "table's file layout — rewrite the bucketed table via ingest() instead")
     val fs = fsOf(spark, path)
-    def mergedAgainst(existing: DataFrame, extras: Seq[org.apache.spark.sql.types.StructField]): DataFrame = {
+    StoreManifest.publishOptimistic(fs, path, tornGraceMs(spark),
+        maxCommitAttempts(spark)) { prev =>
+      val extras = declaredExtras(prev, "base")
+      val existing = manifestRead(spark, path, layout, prev, "base")
+        .select(baseCols(extras).map(col): _*)
       val incoming = dedupeBatch(normalize(newEvents, layout, extras))
       val carry = incoming.columns.filterNot(
         Set("user_id", "event_type", "event_id").contains)
-      existing.withColumn("gen", lit(0))
+      val merged = existing.withColumn("gen", lit(0))
         .unionByName(incoming.withColumn("gen", lit(1)))
         .groupBy("user_id", "event_type", "event_id")
         .agg(max_by(struct(carry.map(col): _*), col("gen")).as("r"))
         .select(col("user_id") +: col("event_type") +: col("event_id") +:
           carry.map(c => col(s"r.$c").as(c)): _*)
+      val seg = StoreManifest.newSegId()
+      clusteredByDt(merged, "ts_us")
+        .write.mode(SaveMode.Overwrite).option("compression", "zstd")
+        .partitionBy("dt").parquet(StoreManifest.segTableDir(path, seg, "base"))
+      buildCascades(spark, s"$path/_segs/$seg", layout)
+      Some(rebuiltStore(spark, path, layout, prev, seg, "upsert"))
     }
-    if (layout.commit == "manifest") {
-      // merge + full cascade rebuild into one fresh segment, ONE
-      // publish: the rename layout's documented crash window (base
-      // swapped, cascades stale) does not exist here — readers see the
-      // old store whole until everything has landed. The merge reads
-      // the closure's snapshot, so a conflicting concurrent DATA
-      // commit re-runs it against the new base (the merge's input is
-      // the whole base — every data key overlaps); only a concurrent
-      // metadata/sidecar commit (ingestMetadata, addColumn) is
-      // disjoint enough to rebase, which is safe in either order
-      StoreManifest.publishOptimistic(fs, path, tornGraceMs(spark),
-          maxCommitAttempts(spark)) { prev =>
-        val extras = declaredExtras(prev, "base")
-        val existing = manifestRead(spark, path, layout, prev, "base")
-          .select(baseCols(extras).map(col): _*)
-        val seg = StoreManifest.newSegId()
-        clusteredByDt(mergedAgainst(existing, extras), "ts_us")
-          .write.mode(SaveMode.Overwrite).option("compression", "zstd")
-          .partitionBy("dt").parquet(StoreManifest.segTableDir(path, seg, "base"))
-        buildCascades(spark, s"$path/_segs/$seg", layout)
-        val tables = "base" +: layout.steps.flatMap(s =>
-          Seq(s"agg_$s", s"rate_$s") ++
-            (if (layout.quantiles) Seq(s"quant_$s") else Seq.empty))
-        val fresh = tables.flatMap(t =>
-          StoreManifest.segEntries(fs, path, seg, t)).toMap
-        val h = segStats(fs, path, fresh)
-        Some(StoreManifest.Mutation(
-          entries = prev.entries.filter(_._1._1 == "meta") ++ fresh,
-          stats = prev.stats.view.filterKeys(_._1 == "meta").toMap ++ h.stats,
-          files = prev.files.view.filterKeys(_._1 == "meta").toMap ++ h.files,
-          schemas = prev.schemas.view.filterKeys(_ == "meta").toMap ++
-            segSchemas(spark, path, fresh, prev),
-          op = "upsert", dtAdjacency = adjacencyOf(layout)))
-      }
-      touchDataStamp(spark, path)
-      return
-    }
-    val merged = mergedAgainst(
-      readTable(spark, path, layout, "base")
-        .select("user_id", "event_type", "event_id", "ts_us", "cents", "dt"),
-      Seq.empty)
-    // stage fully (this materializes the merge BEFORE base is touched —
-    // merged reads base lazily), CLUSTERED like ingest writes it —
-    // without the (series, ts) clustering the swapped-in base would
-    // lose the row-group min/max pruning every read depends on
-    // (review r11 #3) — then swap the whole table
-    clusteredByDt(merged, "ts_us")
-      .write.mode(SaveMode.Overwrite).option("compression", "zstd")
-      .partitionBy("dt").parquet(s"$path/base_new")
-    swapPartitionDir(fs,
-      new org.apache.hadoop.fs.Path(s"$path/base_new"),
-      new org.apache.hadoop.fs.Path(s"$path/base"),
-      new org.apache.hadoop.fs.Path(s"$path/base_retired"))
-    buildCascades(spark, path, layout)
     touchDataStamp(spark, path)
   }
 
@@ -1565,8 +1516,12 @@ object TsdbStore {
     * level that nothing else was rewritten and the result equals a
     * full recompute).
     *
+    * Manifest layout only: every table's recompute lands in ONE fresh
+    * segment and the single publish makes the whole multi-table update
+    * atomic to readers.
+    *
     * `streamCommit = Some((runNs, batchId))` is the EXACTLY-ONCE hook
-    * for streaming ingest on the manifest layout
+    * for streaming ingest
     * ([[graft.streaming.StreamingOps.streamIngestIncremental]]): the
     * batch's id rides into the snapshot as a `streamhwm:<runNs>`
     * property — committed ATOMICALLY with the data by the same single
@@ -1579,31 +1534,18 @@ object TsdbStore {
                         verifyNoPartitionMoves: Boolean = false,
                         streamCommit: Option[(String, Long)] = None): Seq[String] =
       withRollupRewriteOff(spark) {
-    import org.apache.hadoop.fs.Path
-    val layout = readLayout(spark, path)
-    if (layout.commit == "rename") requireAtomicRenameAt(spark, path)
-    // same guard as compactPartition: swapIn would install plain
-    // parquet files (no bucket-id naming) into a bucketed table's live
-    // partition dirs, breaking every later bucketed read (ADVICE r4)
+    val layout = requireManifest(spark, path, "upsertIncremental")
+    // same guard as compactPartition: the recompute writes plain
+    // parquet files (no bucket-id naming), which would break every
+    // later bucketed read (ADVICE r4)
     require(layout.buckets == 0,
       "upsertIncremental would destroy bucket-file metadata; " +
         "rewrite the bucketed table via ingest() instead")
-    require(streamCommit.isEmpty || layout.commit == "manifest",
-      "streamCommit (exactly-once batch high-water marks) needs the " +
-        "manifest layout's atomic property commit; the rename layout's " +
-        "streaming path is ingestBatch's marker protocol")
     val partitionSpanSec = if (layout.monthly) 28L * 86400L else 86400L
     require(layout.heartbeatSec <= partitionSpanSec,
       s"incremental rate recompute needs heartbeat (${layout.heartbeatSec}s) " +
         s"<= partition span (${partitionSpanSec}s); run a full ingest instead")
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // manifest layout: every table's recompute lands in ONE fresh
-    // segment and `work` accumulates the would-be snapshot; internal
-    // reads resolve through `work` (base swaps in before the cascades
-    // read it), and the single publish at the end makes the WHOLE
-    // multi-table update atomic to readers — the rename layout exposes
-    // each table's swap as it lands
-    val manifest = layout.commit == "manifest"
+    val fs = fsOf(spark, path)
     // dt partition values as typed filter literals (DATE or STRING)
     def dtLits(dts: Seq[String]): Seq[Any] =
       if (layout.monthly) dts else dts.map(java.sql.Date.valueOf)
@@ -1613,9 +1555,9 @@ object TsdbStore {
     /** The whole incremental recompute against ONE snapshot — the unit
       * [[StoreManifest.publishOptimistic]] re-runs on an overlapping
       * conflict (each attempt writes a fresh segment; abandoned ones
-      * are vacuumable orphans). The rename layout calls it once with
-      * the empty snapshot and commits through partition-dir swaps as
-      * it goes. */
+      * are vacuumable orphans). `work` accumulates the would-be
+      * snapshot and internal reads resolve through it, so the cascades
+      * read the new base before anything is published. */
     def attempt(snap: StoreManifest.Snapshot): Option[StoreManifest.Mutation] = {
       // exactly-once replay guard: checked BEFORE any Spark job runs,
       // so a re-delivered batch costs one manifest read, not a
@@ -1649,20 +1591,9 @@ object TsdbStore {
       var workSchemas = snap.schemas
       val seg = StoreManifest.newSegId()
       def readTbl(table: String): DataFrame =
-        if (manifest) manifestRead(spark, path, layout,
+        manifestRead(spark, path, layout,
           snap.copy(entries = work, schemas = workSchemas), table)
-        else spark.read.parquet(s"$path/$table")
-      def tblExists(table: String): Boolean =
-        if (manifest) work.keys.exists(_._1 == table)
-        else fs.exists(new Path(s"$path/$table"))
-      def existingDts(table: String): Set[String] =
-        if (manifest) work.keys.collect { case (t, dt) if t == table => dt }.toSet
-        else {
-          val dir = new Path(s"$path/$table")
-          if (!fs.exists(dir)) Set.empty
-          else fs.listStatus(dir).toSeq.map(_.getPath.getName)
-            .filter(_.startsWith("dt=")).map(_.stripPrefix("dt=")).toSet
-        }
+      def tblExists(table: String): Boolean = work.keys.exists(_._1 == table)
 
       if (verifyNoPartitionMoves && tblExists("base")) {
         val moved = readTbl("base")
@@ -1675,52 +1606,34 @@ object TsdbStore {
             "in an untouched partition (a partition-moving replay) — use upsert()")
       }
 
-      // rename layout: write df (the given dts only) to a staging dir,
-      // then rename each staged dt directory over the live one — the
-      // same swap as [[compactPartition]], one partition at a time.
-      // Manifest layout: write into this mutation's segment and update
-      // `work` (nothing live is touched; the publish below commits).
-      // A recompute that produces NO rows for a dt (e.g. every delta in
-      // it became invalid) legitimately deletes the live partition.
-      def swapIn(table: String, df: DataFrame, dts: Seq[String]): Unit =
-        if (manifest) {
-          clusteredByDt(df, timeColOf(table))
-            .write.mode(SaveMode.Overwrite).option("compression", "zstd")
-            .partitionBy("dt")
-            .parquet(StoreManifest.segTableDir(path, seg, table))
-          val fresh = StoreManifest.segEntries(fs, path, seg, table)
-          val h = segStats(fs, path, fresh)
-          if (fresh.nonEmpty)
-            workSchemas = workSchemas ++ segSchemas(spark, path, fresh, snap)
-          dts.foreach { dt =>
-            fresh.get((table, dt)) match {
-              case Some(rel) =>
-                work += ((table, dt) -> rel)
-                workStats = workStats ++ h.stats.get((table, dt))
-                  .map(((table, dt), _))
-                workFiles = workFiles ++ h.files.get((table, dt))
-                  .map(((table, dt), _))
-              case None =>
-                work -= ((table, dt))
-                workStats -= ((table, dt))
-                workFiles -= ((table, dt))
-            }
+      // write df (the given dts only) into this mutation's segment and
+      // point `work` at it — nothing live is touched; the publish below
+      // commits. A recompute that produces NO rows for a dt (e.g. every
+      // delta in it became invalid) legitimately drops the partition.
+      def swapIn(table: String, df: DataFrame, dts: Seq[String]): Unit = {
+        clusteredByDt(df, timeColOf(table))
+          .write.mode(SaveMode.Overwrite).option("compression", "zstd")
+          .partitionBy("dt")
+          .parquet(StoreManifest.segTableDir(path, seg, table))
+        val fresh = StoreManifest.segEntries(fs, path, seg, table)
+        val h = segStats(fs, path, fresh)
+        if (fresh.nonEmpty)
+          workSchemas = workSchemas ++ segSchemas(spark, path, fresh, snap)
+        dts.foreach { dt =>
+          fresh.get((table, dt)) match {
+            case Some(rel) =>
+              work += ((table, dt) -> rel)
+              workStats = workStats ++ h.stats.get((table, dt))
+                .map(((table, dt), _))
+              workFiles = workFiles ++ h.files.get((table, dt))
+                .map(((table, dt), _))
+            case None =>
+              work -= ((table, dt))
+              workStats -= ((table, dt))
+              workFiles -= ((table, dt))
           }
-        } else {
-          val staged = s"$path/${table}_inc"
-          clusteredByDt(df, timeColOf(table))
-            .write.mode(SaveMode.Overwrite).option("compression", "zstd")
-            .partitionBy("dt").parquet(staged)
-          dts.foreach { dt =>
-            val st = new Path(s"$staged/dt=$dt")
-            val live = new Path(s"$path/$table/dt=$dt")
-            if (fs.exists(st))
-              swapPartitionDir(fs, st, live, new Path(s"$path/${table}_retired/dt=$dt"))
-            else fs.delete(live, true)
-          }
-          fs.delete(new Path(staged), true)
-          fs.delete(new Path(s"$path/${table}_retired"), true)
         }
+      }
 
       // base: last write wins within the touched partitions only
       // (bootstrap: no base yet ⇒ empty existing side — this makes the
@@ -1777,7 +1690,7 @@ object TsdbStore {
       // rate cascade: the last sample of a touched partition feeds the
       // FIRST delta of its successor, so successors are recomputed too;
       // the window reads predecessors for the same reason. All pruned.
-      val baseDts = existingDts("base")
+      val baseDts = work.keys.collect { case ("base", dt) => dt }.toSet
       val rateTouched = (touched ++ touched.map(nextDt(layout, _)))
         .distinct.filter(baseDts.contains).sorted
       val readDts = (rateTouched ++ rateTouched.map(prevDt(layout, _)))
@@ -1802,14 +1715,14 @@ object TsdbStore {
         case _ => ()
       }
       fineRate.unpersist()
-      // the manifest layout's single commit point: every table's update
-      // above becomes visible to readers at once, or (on a crash before
-      // the publish) not at all — the segment is vacuumable garbage.
-      // An EMPTY batch leaves the entry set untouched — skip the
-      // publish rather than committing a junk identical snapshot (an
-      // empty STREAMING batch therefore advances no high-water mark,
-      // which is safe: replaying an empty batch is a no-op by itself)
-      if (manifest && work == snap.entries) None
+      // the single commit point: every table's update above becomes
+      // visible to readers at once, or (on a crash before the publish)
+      // not at all — the segment is vacuumable garbage. An EMPTY batch
+      // leaves the entry set untouched — skip the publish rather than
+      // committing a junk identical snapshot (an empty STREAMING batch
+      // therefore advances no high-water mark, which is safe:
+      // replaying an empty batch is a no-op by itself)
+      if (work == snap.entries) None
       else Some(StoreManifest.Mutation(
         entries = work,
         stats = workStats,
@@ -1821,11 +1734,8 @@ object TsdbStore {
         dtAdjacency = adjacencyOf(layout)))
     }
 
-    if (manifest)
-      StoreManifest.publishOptimistic(fs, path, tornGraceMs(spark),
-        maxCommitAttempts(spark))(attempt)
-    else
-      attempt(StoreManifest.Snapshot(0L, Map.empty))
+    StoreManifest.publishOptimistic(fs, path, tornGraceMs(spark),
+      maxCommitAttempts(spark))(attempt)
     touchDataStamp(spark, path)
     touchedOut
   }
@@ -1840,15 +1750,18 @@ object TsdbStore {
     * `base | agg_<step> | rate_<step> | quant_<step>` (VERDICT r7
     * next #5). Rewrites the partition into `targetFiles` zstd files
     * re-clustered by (series, ts-or-slot) so row-group min/max pruning
-    * is restored, then write-then-swap like [[upsert]]. Row set is
-    * untouched (TsdbStoreSpec proves bag equality + file-count drop
-    * per family). Bucketed stores compact through table rewrites, not
-    * partition-dir swaps — rejected loudly here. */
+    * is restored, and commits one manifest create pointing the
+    * partition at the compacted copy; the old files become vacuumable
+    * garbage. A conflicting concurrent commit that did NOT touch this
+    * partition rebases (the compacted files are parent-independent);
+    * one that did re-runs the rewrite against the new snapshot. Row
+    * set is untouched (TsdbStoreSpec proves bag equality + file-count
+    * drop per family). Manifest layout only; bucketed stores compact
+    * through table rewrites — rejected loudly here. */
   def compactPartition(spark: SparkSession, path: String, dt: String,
                        targetFiles: Int = 1,
                        table: String = "base"): Unit = withRollupRewriteOff(spark) {
-    val layout = readLayout(spark, path)
-    if (layout.commit == "rename") requireAtomicRenameAt(spark, path)
+    val layout = requireManifest(spark, path, "compactPartition")
     require(layout.buckets == 0,
       "compactPartition would destroy bucket-file metadata; rewrite the bucketed table instead")
     val derived = "^(agg|rate|quant)_(\\d+)$".r
@@ -1866,11 +1779,15 @@ object TsdbStore {
           s"compactPartition: unknown table '$other' " +
             "(expected base | agg_<step> | rate_<step> | quant_<step>)")
     }
-    import org.apache.hadoop.fs.Path
     val fs = fsOf(spark, path)
-    val manifest = layout.commit == "manifest"
-    def rewriteTo(snap: StoreManifest.Snapshot, staged: String): Unit =
-      manifestOrDirRead(spark, path, layout, snap, table)
+    StoreManifest.publishOptimistic(fs, path, tornGraceMs(spark),
+        maxCommitAttempts(spark)) { snap =>
+      // fail fast on a typo'd / already-dropped partition — compacting
+      // an empty read would otherwise install an empty junk partition
+      require(snap.entries.contains((table, dt)),
+        s"compactPartition: no such partition dt=$dt under $path/$table")
+      val rel = s"_segs/${StoreManifest.newSegId()}/$table/dt=$dt"
+      manifestRead(spark, path, layout, snap, table)
         .filter(col("dt") ===
           (if (layout.monthly) lit(dt) else lit(java.sql.Date.valueOf(dt))))
         .drop("dt") // encoded by the target directory name (hive layout)
@@ -1881,162 +1798,17 @@ object TsdbStore {
         .sortWithinPartitions("user_id", "event_type", timeCol)
         .write.mode(SaveMode.Overwrite)
         .option("compression", "zstd")
-        .parquet(staged)
-    if (manifest) {
-      // commit = one manifest create pointing the partition at the
-      // compacted copy; the old files become vacuumable garbage. A
-      // conflicting concurrent commit that did NOT touch this
-      // partition rebases (the compacted files are parent-independent);
-      // one that did re-runs the rewrite against the new snapshot
-      StoreManifest.publishOptimistic(fs, path, tornGraceMs(spark),
-          maxCommitAttempts(spark)) { snap =>
-        // fail fast on a typo'd / already-dropped partition — compacting
-        // an empty read would otherwise install an empty junk partition
-        require(snap.entries.contains((table, dt)),
-          s"compactPartition: no such partition dt=$dt under $path/$table")
-        val seg = StoreManifest.newSegId()
-        val rel = s"_segs/$seg/$table/dt=$dt"
-        rewriteTo(snap, s"$path/$rel")
-        val (es, fls) = StoreManifest.statsOf(fs, path, rel, timeColOf(table))
-        Some(StoreManifest.Mutation(
-          entries = snap.entries.updated((table, dt), rel),
-          stats = snap.stats.updated((table, dt), es),
-          files = if (fls.isEmpty) snap.files - ((table, dt))
-            else snap.files.updated((table, dt), fls),
-          schemas = snap.schemas,
-          op = "compactPartition"))
-      }
-    } else {
-      require(fs.exists(new Path(s"$path/$table/dt=$dt")),
-        s"compactPartition: no such partition dt=$dt under $path/$table")
-      val staged = s"$path/${table}_compacted/dt=$dt"
-      rewriteTo(StoreManifest.Snapshot(0L, Map.empty), staged)
-      // swap the staged directory into the live partition path so
-      // readers of the table actually see the compaction
-      swapPartitionDir(fs, new Path(staged),
-        new Path(s"$path/$table/dt=$dt"), new Path(s"$path/${table}_retired/dt=$dt"))
-      fs.delete(new Path(s"$path/${table}_compacted"), true)
-      fs.delete(new Path(s"$path/${table}_retired"), true)
+        .parquet(s"$path/$rel")
+      val (es, fls) = StoreManifest.statsOf(fs, path, rel, timeColOf(table))
+      Some(StoreManifest.Mutation(
+        entries = snap.entries.updated((table, dt), rel),
+        stats = snap.stats.updated((table, dt), es),
+        files = if (fls.isEmpty) snap.files - ((table, dt))
+          else snap.files.updated((table, dt), fls),
+        schemas = snap.schemas,
+        op = "compactPartition"))
     }
     touchDataStamp(spark, path)
-  }
-
-  /** [[manifestRead]] against the given snapshot on the manifest
-    * layout, a plain directory read otherwise — the shared shape for
-    * maintenance passes that must read THE SNAPSHOT THEY WILL COMMIT
-    * AGAINST (not re-resolve the live one, which an optimistic re-run
-    * may have moved). */
-  private def manifestOrDirRead(spark: SparkSession, path: String,
-                                layout: StoreLayout,
-                                snap: StoreManifest.Snapshot,
-                                table: String): DataFrame =
-    if (layout.commit == "manifest")
-      manifestRead(spark, path, layout, snap, table)
-    else spark.read.parquet(s"$path/$table")
-
-  /** Filesystem schemes whose `rename` is an atomic metadata
-    * operation — the contract every store commit sequence
-    * ([[swapPartitionDir]], [[graft.streaming.StreamingOps.ingestBatch]]'s
-    * staged-file moves and single-file marker create) is built on. */
-  private[graft] val AtomicRenameSchemes =
-    Set("file", "hdfs", "viewfs", "webhdfs", "swebhdfs", "har")
-
-  /** Enforce the atomic-rename contract (VERDICT r11 "what's wrong"
-    * #1): on an object store (s3a/gs/abfs/…) rename is COPY+DELETE —
-    * the crash window widens from one metadata op to a full data copy,
-    * a reader can observe a half-renamed directory, and the
-    * crash-mid-move cleanup reasoning in the commit protocols no
-    * longer holds. Fail loudly at the first mutation instead of
-    * corrupting silently. `spark.graft.store.assumeAtomicRename=true`
-    * opts a deployment back in for a scheme this allowlist doesn't
-    * know that DOES guarantee atomic rename (e.g. a POSIX fuse mount
-    * with its own scheme); a production object-store deployment should
-    * instead sit these swaps behind a table format's atomic commit. */
-  /** Store-open form of [[requireAtomicRename]] (round 14, VERDICT r13
-    * missing #1): every MUTATION entry point ([[ingest]], [[upsert]],
-    * [[upsertIncremental]], [[compactPartition]], [[deleteSeries]],
-    * [[dropBefore]], [[ingestMetadata]]) calls this with the store
-    * path as its FIRST action, so a store on a rename-less filesystem
-    * (s3a/gs/abfs/…) is refused loudly at creation or first mutation —
-    * before any bytes are staged, not midway through a maintenance
-    * pass that already retired live data. Reads stay unguarded: a
-    * read-only consumer of a store someone else maintains on such a
-    * filesystem observes whatever that writer's commit protocol
-    * guarantees. ObjectStoreGuardSpec pins both refusal and the
-    * documented `spark.graft.store.assumeAtomicRename` escape hatch
-    * end-to-end on a registered rename-less scheme. */
-  private[graft] def requireAtomicRenameAt(spark: SparkSession,
-                                           path: String): Unit =
-    requireAtomicRename(new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration))
-
-  private[graft] def requireAtomicRename(
-      fs: org.apache.hadoop.fs.FileSystem): Unit = {
-    val assume = org.apache.spark.sql.SparkSession.getActiveSession
-      .exists(_.conf.get("spark.graft.store.assumeAtomicRename", "false").toBoolean)
-    if (assume) return
-    val scheme = Option(fs.getUri.getScheme).getOrElse("file").toLowerCase
-    require(AtomicRenameSchemes.contains(scheme),
-      s"store commit protocol requires atomic rename, but filesystem scheme " +
-        s"'$scheme' is not known to provide it (object stores emulate rename " +
-        "as copy+delete; a crash mid-commit corrupts the store silently " +
-        "instead of failing retryably). Use an HDFS-compatible filesystem, " +
-        "or set spark.graft.store.assumeAtomicRename=true if this " +
-        "filesystem does guarantee atomic rename.")
-  }
-
-  /** The store's one atomicity-critical sequence, shared by compaction
-    * and incremental upsert: retire the live partition dir (if any —
-    * absent on a bootstrap install), rename the staged dir into its
-    * place, drop the retired copy. The staged dir is REQUIRED up
-    * front, before anything is retired — the failure mode to make
-    * impossible is retiring live data with no replacement to install.
-    * Strict-rename safe: both parents are created first (HDFS/S3A
-    * rename fails, rather than creating parents, when the destination
-    * parent is missing — the local filesystem masks this). Guarded by
-    * [[requireAtomicRename]]: refuses to run at all on a filesystem
-    * whose rename is not atomic.
-    *
-    * READER-VISIBILITY CONTRACT (round 13, SwapSemanticsSpec pins each
-    * state): because both steps are whole-directory atomic renames, a
-    * concurrent reader observes exactly one of
-    *  - WHOLE-old (before the first rename),
-    *  - WHOLE-new (after the second), or
-    *  - during the two-rename window: a direct read of the partition
-    *    path fails LOUDLY (path absent), and a whole-table read sees
-    *    the store WITHOUT this partition — complete partitions only,
-    *    silently short for the duration of one metadata op.
-    * A MIXED listing (staged + live files together) and torn files are
-    * unobservable; in-flight reads that opened files pre-swap finish
-    * against the old bytes (POSIX rename/unlink keep the inode alive —
-    * HDFS likewise serves open block streams to completion).
-    *
-    * SINGLE-WRITER CONTRACT: one maintenance writer per partition at a
-    * time. A concurrent second swapper usually dies loudly (its
-    * retire-rename finds live missing), but interleavings exist where
-    * the later writer's staged output simply wins and the earlier
-    * one's work is dropped (last-install-wins) — and a second writer
-    * running after a crash-mid-swap would delete the retired backup
-    * that crash recovery needs. Serialize maintenance per partition
-    * externally; this layer deliberately does not lock (a production
-    * object-store deployment should sit these swaps behind a table
-    * format's atomic commit instead). */
-  private def swapPartitionDir(fs: org.apache.hadoop.fs.FileSystem,
-                               staged: org.apache.hadoop.fs.Path,
-                               live: org.apache.hadoop.fs.Path,
-                               retired: org.apache.hadoop.fs.Path,
-                               keepRetired: Boolean = false): Unit = {
-    requireAtomicRename(fs)
-    require(fs.exists(staged), s"swap: staged dir missing: $staged")
-    fs.mkdirs(retired.getParent)
-    fs.mkdirs(live.getParent)
-    fs.delete(retired, true)
-    if (fs.exists(live))
-      require(fs.rename(live, retired), s"swap: could not retire $live")
-    require(fs.rename(staged, live), s"swap: could not install $staged")
-    // multi-table callers (deleteSeries) keep every backup until ALL
-    // their swaps have landed, then clean up in one final pass
-    if (!keepRetired) fs.delete(retired, true)
   }
 
   /** Namespace listing served from the STORE — the reference's "ls the
@@ -2070,121 +1842,73 @@ object TsdbStore {
     * and cascade/rate/quant rows never mix series. Returns the dt
     * partitions rewritten per table (TsdbStoreSpec asserts equality
     * with a full re-ingest of the filtered feed AND that untouched
-    * partitions' files are byte-identical).
+    * partitions keep their files).
     *
-    * Crash contract: the swap sequence runs table-by-table, so a
-    * mid-run failure leaves the series deleted from some tables and
-    * present in others (base vs cascades diverge) — the repair is to
-    * RE-RUN the call, which is idempotent: already-clean partitions
-    * are simply not touched again (the pruned scan finds no rows),
-    * and per-table `_retired` backups are kept until EVERY table has
-    * swapped, so no partition's only copy is ever a half-written
-    * stage. The metadata sidecar (`meta`) is deliberately untouched:
-    * it is an append-only as-of history, and retaining the deleted
-    * series' past attribute rows is the intended audit behavior
-    * (ADVICE r7 #5). */
+    * Every table's rewrite lands in one fresh segment and commits
+    * with ONE manifest create — skipped when the series touched
+    * nothing — so readers never see a half-deleted store. The
+    * metadata sidecar (`meta`) is deliberately untouched: it is an
+    * append-only as-of history, and retaining the deleted series'
+    * past attribute rows is the intended audit behavior (ADVICE r7
+    * #5). Manifest layout only. */
   def deleteSeries(spark: SparkSession, path: String,
                    userId: Long, eventType: String): Map[String, Seq[String]] =
       withRollupRewriteOff(spark) {
-    import org.apache.hadoop.fs.Path
-    val layout = readLayout(spark, path)
-    if (layout.commit == "rename") requireAtomicRenameAt(spark, path)
+    val layout = requireManifest(spark, path, "deleteSeries")
     require(layout.buckets == 0,
       "deleteSeries rewrites plain parquet partitions, which would destroy " +
         "bucket-file metadata; rewrite the bucketed table via ingest() instead")
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val manifest = layout.commit == "manifest"
+    val fs = fsOf(spark, path)
     def dtLits(dts: Seq[String]): Seq[Any] =
       if (layout.monthly) dts else dts.map(java.sql.Date.valueOf)
     val tables = "base" +: layout.steps.flatMap(s =>
       Seq(s"agg_$s", s"rate_$s", s"quant_$s"))
     var rewritten = Map.empty[String, Seq[String]]
-
-    /** The full multi-table anti-filter rewrite against one snapshot —
-      * re-runnable on an optimistic conflict (fresh segment per
-      * attempt). */
-    def attempt(snap: StoreManifest.Snapshot): Option[StoreManifest.Mutation] = {
+    // the full multi-table anti-filter rewrite against one snapshot —
+    // re-runnable on an optimistic conflict (fresh segment per attempt)
+    StoreManifest.publishOptimistic(fs, path, tornGraceMs(spark),
+        maxCommitAttempts(spark)) { snap =>
       var work = snap.entries
       var workStats = snap.stats
       var workFiles = snap.files
       val seg = StoreManifest.newSegId()
-      rewritten = tables.flatMap { table =>
-        val exists =
-          if (manifest) work.keys.exists(_._1 == table)
-          else fs.exists(new Path(s"$path/$table"))
-        if (!exists) None
-        else {
-          val t = manifestOrDirRead(spark, path, layout,
-            snap.copy(entries = work), table)
-          val touched = t
-            .filter(col("user_id") === userId && col("event_type") === eventType)
-            .select(col("dt").cast("string")).distinct()
-            .collect().map(_.getString(0)).sorted.toSeq
-          if (touched.isEmpty) Some(table -> Seq.empty[String])
-          else {
-            val staged =
-              if (manifest) StoreManifest.segTableDir(path, seg, table)
-              else s"$path/${table}_del"
-            clusteredByDt(
-              t.filter(col("dt").isin(dtLits(touched): _*))
-                .filter(!(col("user_id") === userId && col("event_type") === eventType)),
-              timeColOf(table))
-              .write.mode(SaveMode.Overwrite).option("compression", "zstd")
-              .partitionBy("dt").parquet(staged)
-            if (manifest) {
-              // nothing live is touched: accumulate the entry updates and
-              // commit ONCE below — readers never see the half-deleted
-              // state the rename layout's crash contract has to document
-              val fresh = StoreManifest.segEntries(fs, path, seg, table)
-              val h = segStats(fs, path, fresh)
-              touched.foreach { dt =>
-                fresh.get((table, dt)) match {
-                  case Some(rel) =>
-                    work += ((table, dt) -> rel)
-                    workStats = workStats ++ h.stats.get((table, dt))
-                      .map(((table, dt), _))
-                    workFiles = workFiles ++ h.files.get((table, dt))
-                      .map(((table, dt), _))
-                  case None => // series was the partition's only content
-                    work -= ((table, dt))
-                    workStats -= ((table, dt))
-                    workFiles -= ((table, dt))
-                }
-              }
-            } else {
-              touched.foreach { dt =>
-                val st = new Path(s"$staged/dt=$dt")
-                val live = new Path(s"$path/$table/dt=$dt")
-                if (fs.exists(st))
-                  swapPartitionDir(fs, st, live,
-                    new Path(s"$path/${table}_retired/dt=$dt"), keepRetired = true)
-                else fs.delete(live, true) // the series was the partition's only content
-              }
-              fs.delete(new Path(staged), true)
+      rewritten = tables.filter(t => work.keys.exists(_._1 == t)).map { table =>
+        val t = manifestRead(spark, path, layout, snap.copy(entries = work), table)
+        val touched = t
+          .filter(col("user_id") === userId && col("event_type") === eventType)
+          .select(col("dt").cast("string")).distinct()
+          .collect().map(_.getString(0)).sorted.toSeq
+        if (touched.nonEmpty) {
+          clusteredByDt(
+            t.filter(col("dt").isin(dtLits(touched): _*))
+              .filter(!(col("user_id") === userId && col("event_type") === eventType)),
+            timeColOf(table))
+            .write.mode(SaveMode.Overwrite).option("compression", "zstd")
+            .partitionBy("dt").parquet(StoreManifest.segTableDir(path, seg, table))
+          val fresh = StoreManifest.segEntries(fs, path, seg, table)
+          val h = segStats(fs, path, fresh)
+          touched.foreach { dt =>
+            fresh.get((table, dt)) match {
+              case Some(rel) =>
+                work += ((table, dt) -> rel)
+                workStats = workStats ++ h.stats.get((table, dt))
+                  .map(((table, dt), _))
+                workFiles = workFiles ++ h.files.get((table, dt))
+                  .map(((table, dt), _))
+              case None => // series was the partition's only content
+                work -= ((table, dt))
+                workStats -= ((table, dt))
+                workFiles -= ((table, dt))
             }
-            Some(table -> touched)
           }
         }
+        table -> touched
       }.toMap
-      // the atomic cross-table commit (vs the rename layout's
-      // table-by-table visibility): one manifest create — skipped when
-      // the series touched nothing (no junk snapshot versions)
-      if (!manifest || work == snap.entries) None
+      if (work == snap.entries) None
       else Some(StoreManifest.Mutation(
         entries = work, stats = workStats, files = workFiles,
         schemas = snap.schemas, op = "deleteSeries",
         dtAdjacency = adjacencyOf(layout)))
-    }
-
-    if (manifest)
-      StoreManifest.publishOptimistic(fs, path, tornGraceMs(spark),
-        maxCommitAttempts(spark))(attempt)
-    else {
-      attempt(StoreManifest.Snapshot(0L, Map.empty))
-      // only after EVERY table has swapped do the backups go: a crash
-      // anywhere above leaves each touched partition either live or
-      // retired-but-present, and a re-run repairs the divergence
-      tables.foreach(t => fs.delete(new Path(s"$path/${t}_retired"), true))
     }
     touchDataStamp(spark, path)
     rewritten
@@ -2229,11 +1953,7 @@ object TsdbStore {
     * filter). */
   def deleteRows(spark: SparkSession, path: String,
                  keys: Seq[(Long, String)]): Map[String, Seq[String]] = {
-    val layout = readLayout(spark, path)
-    require(layout.commit == "manifest",
-      s"deleteRows is a manifest-layout capability (the snapshot carries " +
-        s"the delete refs); the store at $path uses rename commits — " +
-        "use deleteSeries (eager rewrite) instead")
+    val layout = requireManifest(spark, path, "deleteRows")
     require(layout.buckets == 0,
       "deleteRows refs are applied by manifestRead, which the bucketed " +
         "catalog read path bypasses — a bucketed store would silently " +
@@ -2291,7 +2011,6 @@ object TsdbStore {
     * the as-of merge and interval scans. */
   def ingestMetadata(spark: SparkSession, meta: DataFrame, path: String): Unit = {
     val layout = readLayout(spark, path)
-    if (layout.commit == "rename") requireAtomicRenameAt(spark, path)
     val w = Window.partitionBy("user_id").orderBy("valid_from_us", "ver_id")
     val derived = meta
       .withColumn("valid_to_us",
@@ -2363,77 +2082,52 @@ object TsdbStore {
 
   /** Retention: drop every base + cascade partition strictly older
     * than `cutoffSec` — the reference's chunk-file deletion policy
-    * [pub: RRD-style retention — unverified, SURVEY.md §0] as pure
-    * directory removal. O(partitions dropped), touches no data files'
-    * contents, and needs no recompute: cascade partitions are
-    * partition-scoped, so dropping a base partition and its aggregate
-    * partitions leaves every surviving partition internally consistent
-    * (the successor's first rate slot loses its boundary delta only
-    * when that delta's own partition is dropped with it — the
-    * reference drops whole chunks the same way). A monthly partition
-    * is dropped only when the ENTIRE month precedes the cutoff.
-    * Returns the dropped dt strings per table. */
+    * [pub: RRD-style retention — unverified, SURVEY.md §0] as a PURE
+    * metadata commit: the expired (table, dt) entries leave the
+    * snapshot in one publish — zero data operations, and the expired
+    * files stay until [[vacuum]] reclaims them (in-flight readers
+    * finish against the old snapshot undisturbed). Needs no
+    * recompute: cascade partitions are partition-scoped, so dropping a
+    * base partition and its aggregate partitions leaves every
+    * surviving partition internally consistent (the successor's first
+    * rate slot loses its boundary delta only when that delta's own
+    * partition is dropped with it — the reference drops whole chunks
+    * the same way). A monthly partition is dropped only when the
+    * ENTIRE month precedes the cutoff. Optimistic: recomputing the
+    * drop set against a conflicting commit's snapshot is free.
+    * Returns the dropped dt strings per table. Manifest layout only. */
   def dropBefore(spark: SparkSession, path: String,
                  cutoffSec: Long): Map[String, Seq[String]] = {
-    import org.apache.hadoop.fs.Path
-    val layout = readLayout(spark, path)
-    if (layout.commit == "rename") requireAtomicRenameAt(spark, path)
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val layout = requireManifest(spark, path, "dropBefore")
     val cutoffDay = utcDay(cutoffSec) // integer UTC math, like ingest's dt
     def wholePartitionBefore(dt: String): Boolean =
       scala.util.Try {
         if (layout.monthly)
           !YearMonth.parse(dt).atEndOfMonth().isAfter(cutoffDay.minusDays(1))
         else LocalDate.parse(dt).isBefore(cutoffDay)
-      }.getOrElse(false) // skip non-date dirs (__HIVE_DEFAULT_PARTITION__)
+      }.getOrElse(false) // skip non-date partitions (__HIVE_DEFAULT_PARTITION__)
     val tables = "base" +: (layout.steps.map(s => s"agg_$s") ++
       layout.steps.map(s => s"rate_$s") ++
       layout.steps.map(s => s"quant_$s"))
-    if (layout.commit == "manifest") {
-      // retention on the manifest layout is a PURE metadata commit:
-      // drop the expired (table, dt) entries from the snapshot in one
-      // publish — zero data operations, and the expired files stay
-      // until [[vacuum]] reclaims them (in-flight readers finish
-      // against the old snapshot undisturbed). Optimistic: recomputing
-      // the drop set against a conflicting commit's snapshot is free
-      var droppedByTable = Map.empty[String, Seq[String]]
-      StoreManifest.publishOptimistic(fs, path, tornGraceMs(spark),
-          maxCommitAttempts(spark)) { snap =>
-        droppedByTable = tables.map { t =>
-          t -> snap.entries.keys.collect {
-            case (`t`, dt) if wholePartitionBefore(dt) => dt
-          }.toSeq.sorted
-        }.toMap
-        val work = snap.entries.filterNot { case ((t, dt), _) =>
-          droppedByTable.getOrElse(t, Seq.empty).contains(dt)
-        }
-        if (work == snap.entries) None
-        else Some(StoreManifest.Mutation(
-          entries = work,
-          stats = snap.stats.view.filterKeys(work.contains).toMap,
-          files = snap.files.view.filterKeys(work.contains).toMap,
-          schemas = snap.schemas, op = "dropBefore",
-          dtAdjacency = adjacencyOf(layout)))
+    var droppedByTable = Map.empty[String, Seq[String]]
+    StoreManifest.publishOptimistic(fsOf(spark, path), path, tornGraceMs(spark),
+        maxCommitAttempts(spark)) { snap =>
+      droppedByTable = tables.map { t =>
+        t -> snap.entries.keys.collect {
+          case (`t`, dt) if wholePartitionBefore(dt) => dt
+        }.toSeq.sorted
+      }.toMap
+      val work = snap.entries.filterNot { case ((t, dt), _) =>
+        droppedByTable.getOrElse(t, Seq.empty).contains(dt)
       }
-      touchDataStamp(spark, path)
-      return droppedByTable
+      if (work == snap.entries) None
+      else Some(StoreManifest.Mutation(
+        entries = work,
+        stats = snap.stats.view.filterKeys(work.contains).toMap,
+        files = snap.files.view.filterKeys(work.contains).toMap,
+        schemas = snap.schemas, op = "dropBefore",
+        dtAdjacency = adjacencyOf(layout)))
     }
-    val droppedByTable = tables.map { t =>
-      val dir = new Path(s"$path/$t")
-      val dropped =
-        if (!fs.exists(dir)) Seq.empty[String]
-        else fs.listStatus(dir).toSeq
-          .map(_.getPath.getName)
-          .filter(_.startsWith("dt="))
-          .map(_.stripPrefix("dt="))
-          .filter(wholePartitionBefore)
-          .sorted
-      dropped.foreach { dt =>
-        require(fs.delete(new Path(s"$path/$t/dt=$dt"), true),
-          s"dropBefore: could not delete $t/dt=$dt")
-      }
-      t -> dropped
-    }.toMap
     touchDataStamp(spark, path)
     droppedByTable
   }
@@ -2449,10 +2143,7 @@ object TsdbStore {
     * snapshot versions deleted). */
   def vacuum(spark: SparkSession, path: String,
              keepManifests: Int = 2): (Seq[String], Seq[Long]) = {
-    val layout = readLayout(spark, path)
-    require(layout.commit == "manifest",
-      s"vacuum is a manifest-layout operation; the store at $path uses " +
-        s"commit = '${layout.commit}'")
+    requireManifest(spark, path, "vacuum")
     val fs = fsOf(spark, path)
     // LEASE handshake (round 17, VERDICT r16 next #6): vacuum was
     // single-writer by contract only — a writer racing it could have

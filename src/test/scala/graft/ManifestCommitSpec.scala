@@ -2,14 +2,13 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.sources.{StoreLayout, StoreManifest, TsdbStore}
 
-/** A RawLocalFileSystem under the scheme `rec:` that (a) is NOT in
-  * [[TsdbStore.AtomicRenameSchemes]] — it stands in for an object
-  * store, like ObjectStoreGuardSpec's `torn:` — and (b) RECORDS every
+/** A RawLocalFileSystem under the scheme `rec:` that (a) stands in for
+  * an object store, whose rename is copy+delete, and (b) RECORDS every
   * rename, so the spec can prove the manifest protocol's core claim
   * mechanically: no rename ever touches a live (published) path; every
   * rename a manifest-store mutation performs stays inside private
@@ -34,12 +33,14 @@ object RecordingRenameFileSystem {
   * missing #1's named upgrade path, option (b)): data in write-once
   * segments, live state = the newest `_commits/v<N>.mf` snapshot,
   * every mutation = ONE new-file create. This spec pins the contract
-  * end-to-end on a filesystem the rename layout REFUSES:
+  * end-to-end on an object-store-like filesystem:
   *
-  *  1. every lifecycle op (ingest, fetch at all resolutions, quantile,
-  *     bulk, listSeries, metadata as-of, incremental upsert, full
-  *     upsert, compaction, series delete, retention) matches a
-  *     rename-layout twin fed the same inputs, bit-for-bit;
+  *  1. every read (fetch at all resolutions, quantile, bulk,
+  *     listSeries, metadata as-of) matches a rename-layout twin
+  *     ingested from the same inputs, and every mutation (incremental
+  *     upsert, full upsert, compaction, series delete, retention)
+  *     matches a fresh full ingest of the accumulated truth events
+  *     (StoreMutationFuzzSpec's oracle), bit-for-bit;
   *  2. no mutation ever renames a live path (recorded mechanically);
   *  3. an uncommitted segment (= a crash before the manifest create)
   *     is invisible to readers and reclaimed by vacuum;
@@ -56,26 +57,42 @@ class ManifestCommitSpec extends SparkSpec {
   private def recRoot(): String = {
     spark.sparkContext.hadoopConfiguration
       .set("fs.rec.impl", classOf[RecordingRenameFileSystem].getName)
-    s"rec:${Files.createTempDirectory("graft_manifest").toString}"
+    s"rec:${tempDir("graft_manifest")}"
   }
 
-  private def localRoot(): String =
-    Files.createTempDirectory("graft_manifest_twin").toString
+  private def localRoot(): String = tempDir("graft_manifest_twin")
 
   private def events(): DataFrame = Tables.events(spark, Sf)
+
+  /** The rows [[replay]] rewrites. */
+  private def replayed: Column =
+    col("user_id") === 7 && col("event_type") === "click" &&
+      col("ts") >= lit("2024-01-09") && col("ts") < lit("2024-01-13")
 
   /** A deterministic late-data replay: user 7's clicks over a few
     * days, values shifted — same event_ids and timestamps, so
     * partitions never move (the upsertIncremental precondition). */
   private def replay(): DataFrame =
-    events().filter(col("user_id") === 7 && col("event_type") === "click" &&
-        col("ts") >= lit("2024-01-09") && col("ts") < lit("2024-01-13"))
-      .withColumn("value", col("value") + 1.0)
+    events().filter(replayed).withColumn("value", col("value") + 1.0)
+
+  /** The events with [[replay]] applied (last write wins per key). */
+  private def eventsReplayed(): DataFrame =
+    events().withColumn("value",
+      when(replayed, col("value") + 1.0).otherwise(col("value")))
+
+  /** A fresh full ingest (default layout) of `evs` — the truth a mutated
+    * store must equal. */
+  private def freshIngest(evs: DataFrame): String = {
+    val p = localRoot()
+    TsdbStore.ingest(spark, evs, p)
+    p
+  }
 
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
 
-  /** Both stores, mutated in lockstep through the whole lifecycle. */
+  /** The manifest store the lifecycle cases mutate in turn, and its
+    * rename-layout twin, only ever ingested — the read-parity reference. */
   private lazy val stores: (String, String) = {
     val m = recRoot(); val r = localRoot()
     TsdbStore.ingest(spark, events(), m, ManifestLayout)
@@ -125,12 +142,19 @@ class ManifestCommitSpec extends SparkSpec {
       rows(TsdbStore.fetchMetaAsof(spark, r, "purchase", B, E)))
   }
 
+  /** The truth store after the upsert case, and after its series delete. */
+  private lazy val upsertTruth: String = freshIngest(eventsReplayed())
+  private lazy val deleteTruth: String = freshIngest(eventsReplayed()
+    .filter(!(col("user_id") === 5 && col("event_type") === "view")))
+
   test("incremental upsert: lockstep parity, ONE atomic multi-table commit") {
-    val (m, r) = stores
+    val (m, _) = stores
+    val r = upsertTruth
     val before = manifestCount(m)
     val touchedM = TsdbStore.upsertIncremental(spark, replay(), m)
-    val touchedR = TsdbStore.upsertIncremental(spark, replay(), r)
-    assert(touchedM == touchedR && touchedM.nonEmpty)
+    val days = replay().select(to_date(col("ts")).cast("string")).distinct()
+      .collect().map(_.getString(0)).sorted.toSeq
+    assert(touchedM == days && touchedM.nonEmpty, s"touched $touchedM, replayed days $days")
     assert(manifestCount(m) == before + 1,
       "base + 6 cascade tables must land as exactly one snapshot")
     assert(rows(TsdbStore.fetch(spark, m, 7L, "click", B, E)) ==
@@ -148,11 +172,11 @@ class ManifestCommitSpec extends SparkSpec {
   }
 
   test("compaction: same rows, fewer live files, old files wait for vacuum") {
-    val (m, r) = stores
+    val (m, _) = stores
+    val r = upsertTruth
     val dt = "2024-01-10"
     val preM = rows(TsdbStore.fetch(spark, m, 7L, "click", B, B + 86400L))
     TsdbStore.compactPartition(spark, m, dt)
-    TsdbStore.compactPartition(spark, r, dt)
     assert(rows(TsdbStore.fetch(spark, m, 7L, "click", B, B + 86400L)) == preM)
     assert(rows(TsdbStore.fetch(spark, m, 7L, "click", B, E)) ==
       rows(TsdbStore.fetch(spark, r, 7L, "click", B, E)))
@@ -165,17 +189,29 @@ class ManifestCommitSpec extends SparkSpec {
   }
 
   test("deleteSeries + dropBefore parity; retention is metadata-only until vacuum") {
-    val (m, r) = stores
-    assert(TsdbStore.deleteSeries(spark, m, 5L, "view") ==
-      TsdbStore.deleteSeries(spark, r, 5L, "view"))
+    val (m, _) = stores
+    val r = deleteTruth
+    def seriesDts(table: String): Seq[String] =
+      TsdbStore.readTable(spark, m, table)
+        .filter(col("user_id") === 5 && col("event_type") === "view")
+        .select(col("dt").cast("string")).distinct()
+        .collect().map(_.getString(0)).sorted.toSeq
+    val tables = Seq("base", "agg_21600", "agg_86400", "rate_21600", "rate_86400",
+      "quant_21600", "quant_86400")
+    val holding = tables.map(t => t -> seriesDts(t)).toMap
+    assert(TsdbStore.deleteSeries(spark, m, 5L, "view") == holding && holding("base").nonEmpty,
+      "deleteSeries must rewrite exactly the partitions holding the series")
     assert(rows(TsdbStore.fetchBulk(spark, m, Seq((5L, "view"), (5L, "click")), B, E, 21600L)) ==
       rows(TsdbStore.fetchBulk(spark, r, Seq((5L, "view"), (5L, "click")), B, E, 21600L)))
     val cutoff = 1704672000L // 2024-01-08
+    val fs = new org.apache.hadoop.fs.Path(m)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val expired = tables.map(t => t -> StoreManifest.load(fs, m).entries.keys
+      .collect { case (`t`, dt) if dt < "2024-01-08" => dt }.toSeq.sorted).toMap
     val dm = TsdbStore.dropBefore(spark, m, cutoff)
-    val dr = TsdbStore.dropBefore(spark, r, cutoff)
-    assert(dm == dr && dm("base").nonEmpty)
+    assert(dm == expired && dm("base").nonEmpty)
     assert(rows(TsdbStore.fetch(spark, m, 7L, "click", 1704067200L, E)) ==
-      rows(TsdbStore.fetch(spark, r, 7L, "click", 1704067200L, E)))
+      rows(TsdbStore.fetch(spark, r, 7L, "click", cutoff, E)))
     // the dropped partitions' FILES are still on disk (pure metadata
     // drop; in-flight readers unharmed) until vacuum reclaims them
     val local = new java.io.File(m.stripPrefix("rec:"))
@@ -994,11 +1030,9 @@ class ManifestCommitSpec extends SparkSpec {
     // cascades keep their contract shapes (the column is non-cascaded)
     assert(!TsdbStore.readTable(spark, m, ManifestLayout, "agg_86400")
       .columns.contains("quality"))
-    // fetch parity with a rename-layout twin fed the same mutations —
+    // fetch parity with a fresh ingest of the replayed events —
     // evolution must not disturb the numeric surface
-    val r = localRoot()
-    TsdbStore.ingest(spark, events(), r, StoreLayout())
-    TsdbStore.upsertIncremental(spark, replay(), r)
+    val r = freshIngest(eventsReplayed())
     assert(rows(TsdbStore.fetch(spark, m, 7L, "click", B, E)) ==
       rows(TsdbStore.fetch(spark, r, 7L, "click", B, E)))
     assert(rows(TsdbStore.fetch(spark, m, 7L, "click", B, E, 86400L, "average")) ==
@@ -1009,7 +1043,7 @@ class ManifestCommitSpec extends SparkSpec {
     assert(TsdbStore.readTable(spark, m, ManifestLayout, "base")
       .filter(col("quality").isNotNull).count() == 0,
       "a later extras-less replay overwrites with null quality (last write wins)")
-    // guards: rename layout and non-nullable additions are refused
+    // guards: the rename layout and non-nullable additions are refused
     val e1 = intercept[IllegalArgumentException] {
       TsdbStore.addColumn(spark, r, "base",
         org.apache.spark.sql.types.StructField("x",

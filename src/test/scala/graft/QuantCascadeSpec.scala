@@ -94,7 +94,7 @@ class QuantCascadeSpec extends SparkSpec {
   test("incremental upsert recomputes the quant cascade's touched partitions only") {
     val dir = tempDir("graft_quant_inc")
     val events = Tables.events(spark, Sf)
-    TsdbStore.ingest(spark, events, dir)
+    TsdbStore.ingest(spark, events, dir, graft.sources.StoreLayout(commit = "manifest"))
     // replay one day's purchases with shifted values (same event_ids —
     // last write wins), then compare against a full re-ingest
     val dayStart = 1705017600L
@@ -103,12 +103,12 @@ class QuantCascadeSpec extends SparkSpec {
       .filter(unix_micros(col("ts")) >= dayStart * 1000000L &&
         unix_micros(col("ts")) < (dayStart + 86400L) * 1000000L)
       .withColumn("value", col("value") + 7.0)
-    val before = spark.read.parquet(s"$dir/quant_86400")
+    val before = TsdbStore.readTable(spark, dir, "quant_86400")
       .select("user_id", "event_type", "slot_ts", "pri", "value", "dt")
     val untouchedBefore = before.filter(col("dt") =!= java.sql.Date.valueOf("2024-01-12"))
       .collect().map(_.toString).sorted.toSeq
     TsdbStore.upsertIncremental(spark, replay, dir)
-    val after = spark.read.parquet(s"$dir/quant_86400")
+    val after = TsdbStore.readTable(spark, dir, "quant_86400")
       .select("user_id", "event_type", "slot_ts", "pri", "value", "dt")
     val untouchedAfter = after.filter(col("dt") =!= java.sql.Date.valueOf("2024-01-12"))
       .collect().map(_.toString).sorted.toSeq
@@ -192,9 +192,11 @@ class QuantCascadeSpec extends SparkSpec {
   test("quantiles = false opts out of the column family; reads fail loudly") {
     val dir = tempDir("graft_quant_off")
     TsdbStore.ingest(spark, Tables.events(spark, Sf), dir,
-      graft.sources.StoreLayout(quantiles = false))
-    val dirs = new java.io.File(dir).listFiles().filter(_.isDirectory)
-      .map(_.getName).toSet
+      graft.sources.StoreLayout(quantiles = false, commit = "manifest"))
+    def tables(): Set[String] = graft.sources.StoreManifest.load(
+        new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration),
+        dir).entries.keys.map(_._1).toSet
+    val dirs = tables()
     assert(!dirs.exists(_.startsWith("quant_")), s"quant tables built anyway: $dirs")
     assert(dirs.contains("agg_21600") && dirs.contains("rate_21600"),
       "the other cascades must still build")
@@ -205,7 +207,7 @@ class QuantCascadeSpec extends SparkSpec {
     // incremental maintenance skips the family without tripping over it
     TsdbStore.upsertIncremental(spark,
       Tables.events(spark, Sf).limit(5), dir)
-    assert(!new java.io.File(dir).listFiles().exists(_.getName.startsWith("quant_")))
+    assert(!tables().exists(_.startsWith("quant_")))
   }
 
   test("fetchQuantile validates its arguments loudly") {

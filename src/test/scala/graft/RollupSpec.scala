@@ -982,15 +982,16 @@ class RollupSpec extends SparkSpec {
 
   test("cached store support data stays correct across incremental upsert (fresh listings)") {
     // the rule caches layout/schema/existence per store root but NOT
-    // file listings — an upsert swaps partition dirs without touching
+    // file listings — an upsert commits new partitions without touching
     // _LAYOUT, and a substituted read after it must see the new rows
     val s2 = {
       val dir = tempDir("graft_rollup_cachefresh")
       TsdbStore.ingest(spark,
-        Tables.events(spark, Sf).filter(col("event_id") % 2 === 0), dir)
+        Tables.events(spark, Sf).filter(col("event_id") % 2 === 0), dir,
+        graft.sources.StoreLayout(commit = "manifest"))
       dir
     }
-    def q: DataFrame = spark.read.parquet(s"$s2/base")
+    def q: DataFrame = TsdbStore.readTable(spark, s2, "base")
       .groupBy(col("user_id"), col("event_type"),
         TimeSeriesOps.slotSec(86400L).as("slot_ts"))
       .agg(count(lit(1)).as("n"), sum("cents").as("sum_cents"))
@@ -1200,12 +1201,13 @@ class RollupSpec extends SparkSpec {
     // re-firing the same query pays them once; any TsdbStore mutation
     // bumps the stamp and the next optimize re-runs them.
     val dir = tempDir("graft_rollup_gatecache")
-    TsdbStore.ingest(spark, Tables.events(spark, Sf), dir)
+    TsdbStore.ingest(spark, Tables.events(spark, Sf), dir,
+      graft.sources.StoreLayout(commit = "manifest"))
     // parquet-backed dim so its content is fingerprintable (a purely
     // local dim declines caching by design)
     val dimPath = s"$dir/dim_tiers"
     dimTable().write.parquet(dimPath)
-    def q: DataFrame = spark.read.parquet(s"$dir/base")
+    def q: DataFrame = TsdbStore.readTable(spark, dir, "base")
       .filter(col("ts_us") >= QB * 1000000L && col("ts_us") < QE * 1000000L)
       .join(broadcast(spark.read.parquet(dimPath)), "user_id")
       .groupBy(col("tier"), TimeSeriesOps.slotSec(21600L).as("slot_ts"))
@@ -1213,7 +1215,7 @@ class RollupSpec extends SparkSpec {
     def jobs: Long = graft.plans.RollupSubstitution.gateJobsRun.get()
     withFlag(on = true) {
       val paths1 = scanPaths(q)
-      assert(paths1.exists(_.endsWith("quant_21600")), s"no rewrite: $paths1")
+      assert(paths1.exists(_.contains("/quant_21600/")), s"no rewrite: $paths1")
       val afterFirst = jobs
       val r1 = rows(q)
       val r2 = rows(q)
@@ -1439,13 +1441,16 @@ class RollupSpec extends SparkSpec {
     // maintenance entry points force the flag off internally: an upsert
     // under a live flag rebuilds a correct cascade (its internal
     // downsample-from-base is NOT substituted onto the stale cascade)
+    val maintained = tempDir("graft_rollup_maint")
+    TsdbStore.ingest(spark, Tables.events(spark, Sf), maintained,
+      graft.sources.StoreLayout(commit = "manifest"))
     withFlag(on = true) {
       val late = Tables.events(spark, Sf).limit(50)
-      TsdbStore.upsertIncremental(spark, late, store)
+      TsdbStore.upsertIncremental(spark, late, maintained)
     }
-    val cascade = spark.read.parquet(s"$store/agg_21600")
+    val cascade = TsdbStore.readTable(spark, maintained, "agg_21600")
     val recomputed = withFlag(on = false) {
-      TimeSeriesOps.downsample(spark.read.parquet(s"$store/base"), 21600L)
+      TimeSeriesOps.downsample(TsdbStore.readTable(spark, maintained, "base"), 21600L)
     }
     assert(rows(cascade.select("user_id", "event_type", "slot_ts", "n",
         "sum_cents", "min_cents", "max_cents")) == rows(recomputed),

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import scala.util.Random
 
 import org.apache.spark.sql.DataFrame
@@ -9,20 +7,19 @@ import org.apache.spark.sql.functions._
 
 import graft.sources.{StoreLayout, StoreManifest, TsdbStore}
 
-/** Differential fuzzing of the store's MUTATION path (round 11;
-  * round 15 parameterizes the whole history over BOTH commit layouts —
-  * VERDICT r14 next #7): TsdbStoreSpec pins upsertIncremental's
+/** Differential fuzzing of the store's MUTATION path (round 11):
+  * TsdbStoreSpec pins upsertIncremental's
   * touched-partition contract for hand-picked cases; this spec drives
   * a random SEQUENCE of mutations — replays with changed values, new
   * events on existing days, new events on NEW days (partition
   * bootstrap), multi-day batches, interleaved small-file compactions,
-  * whole-series deletions, and (manifest layout) vacuums — and after
+  * whole-series deletions, merge-on-read deletes and vacuums — and after
   * every step compares EVERY table (base + value/rate/quant cascades
   * at both levels) against a FRESH FULL INGEST of the accumulated
   * truth. The incremental path's whole point is that its blast radius
   * is bounded; its correctness contract is that the result is
-  * indistinguishable from the full rebuild, for any mutation history,
-  * under either commit protocol. (dropBefore stays out of the mix by
+  * indistinguishable from the full rebuild, for any mutation history.
+  * (dropBefore stays out of the mix by
   * design: retention truncates rate-delta lineage at the cutoff, so a
   * full rebuild of the truncated truth legitimately differs on the
   * boundary delta — its contract is pinned in TsdbStoreSpec instead.) */
@@ -46,7 +43,7 @@ class StoreMutationFuzzSpec extends SparkSpec {
 
   /** Sorted row strings of one store table, empty when the table has
     * no live data — resolved through the layout's own read path, so
-    * the manifest arm exercises snapshot resolution on every compare. */
+    * the mutated store exercises snapshot resolution on every compare. */
   private def tableRows(path: String, layout: StoreLayout,
                         table: String): Seq[String] = {
     if (layout.commit == "rename" &&
@@ -61,24 +58,16 @@ class StoreMutationFuzzSpec extends SparkSpec {
       .collect().map(_.toString).sorted.toSeq
   }
 
-  /** Live dt partitions of one table under either layout. */
-  private def livePartitions(path: String, layout: StoreLayout,
-                             table: String): Seq[String] =
-    if (layout.commit == "manifest") {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      StoreManifest.load(fs, path).entries.keys
-        .collect { case (`table`, dt) => dt }.toSeq.sorted
-    } else {
-      val dir = new java.io.File(s"$path/$table")
-      if (!dir.exists()) Seq.empty
-      else dir.listFiles().filter(_.getName.startsWith("dt="))
-        .map(_.getName.stripPrefix("dt=")).toSeq.sorted
-    }
+  /** Live dt partitions of one table of the mutated store. */
+  private def livePartitions(path: String, table: String): Seq[String] = {
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    StoreManifest.load(fs, path).entries.keys
+      .collect { case (`table`, dt) => dt }.toSeq.sorted
+  }
 
-  for (commit <- Seq("rename", "manifest"))
-  test(s"random mutation sequences equal a fresh full ingest, every table [$commit]") {
-    val layout = StoreLayout(commit = commit)
+  test("random mutation sequences equal a fresh full ingest, every table [manifest]") {
+    val layout = StoreLayout(commit = "manifest")
     val T0 = 1704067200L * 1000000L // 2024-01-01 in µs
     val r = new Random(66L)
     val etypes = Seq("click", "view", "purchase")
@@ -97,7 +86,7 @@ class StoreMutationFuzzSpec extends SparkSpec {
     val init = (0 until 120).map(_ => mkEvent(r.nextInt(4)))
     init.foreach(e => truth += (uid(e), etype(e), eid(e)) -> e)
 
-    val inc = Files.createTempDirectory(s"graft_mutfuzz_inc_$commit").toString
+    val inc = tempDir("graft_mutfuzz_inc")
     TsdbStore.ingest(spark, toDf(init), inc, layout)
 
     val tables = Seq("base", "agg_21600", "agg_86400", "rate_21600",
@@ -133,15 +122,15 @@ class StoreMutationFuzzSpec extends SparkSpec {
       // the rebuild compare (compaction is a file-layout operation)
       if (r.nextInt(2) == 0) {
         val t = tables(r.nextInt(tables.length))
-        val parts = livePartitions(inc, layout, t)
+        val parts = livePartitions(inc, t)
         if (parts.nonEmpty)
           TsdbStore.compactPartition(spark, inc, parts(r.nextInt(parts.length)),
             targetFiles = r.nextInt(2) + 1, table = t)
       }
 
-      // occasionally delete a random live series — eagerly (both
-      // layouts: every touched partition rewritten) or, on the
-      // manifest layout half the time, as a round-17 MERGE-ON-READ
+      // occasionally delete a random live series — eagerly (every
+      // touched partition rewritten) or, half the time, as a round-17
+      // MERGE-ON-READ
       // tombstone: nothing rewritten, every later table compare reads
       // THROUGH the delete filter, later upserts/compactions fold it
       // partition by partition, and a later batch may legitimately
@@ -150,7 +139,7 @@ class StoreMutationFuzzSpec extends SparkSpec {
       if (r.nextInt(3) == 0 && truth.nonEmpty) {
         val all = truth.values.toVector
         val victim = all(r.nextInt(all.size))
-        if (commit == "manifest" && r.nextBoolean())
+        if (r.nextBoolean())
           TsdbStore.deleteRows(spark, inc,
             Seq((uid(victim), etype(victim))))
         else
@@ -160,22 +149,21 @@ class StoreMutationFuzzSpec extends SparkSpec {
         }
       }
 
-      // manifest layout: occasionally vacuum mid-history — GC of dead
-      // segments/snapshots must be invisible to every later read and
-      // mutation
-      if (commit == "manifest" && r.nextInt(3) == 0)
+      // occasionally vacuum mid-history — GC of dead segments and
+      // snapshots must be invisible to every later read and mutation
+      if (r.nextInt(3) == 0)
         TsdbStore.vacuum(spark, inc, keepManifests = 1 + r.nextInt(2))
 
       // oracle: a virgin rename-layout store built from the
       // accumulated truth (cross-layout equality is itself part of
       // the contract — both protocols must serve the same bytes)
-      val full = Files.createTempDirectory(s"graft_mutfuzz_full_$commit$round").toString
+      val full = tempDir(s"graft_mutfuzz_full_$round")
       TsdbStore.ingest(spark, toDf(truth.values.toSeq), full)
       for (t <- tables) {
         val a = tableRows(inc, layout, t)
         val b = tableRows(full, StoreLayout(), t)
         assert(a == b,
-          s"[$commit] round $round table $t diverged from full rebuild: " +
+          s"round $round table $t diverged from full rebuild: " +
             s"${a.size} vs ${b.size} rows; " +
             s"first diff inc=${a.diff(b).take(2)} full=${b.diff(a).take(2)}")
       }

@@ -14,13 +14,11 @@ import graft.streaming.StreamingOps.{GapAlert, Meas, MeasK, RateSample}
   * scripted replays) become RANDOM draws — random corpora, random
   * microbatch boundary placement, within-batch delivery order
   * shuffled (the ops' documented tolerance: each sorts per group per
-  * batch), and for the ingest protocol randomly REPLAYED batchIds —
-  * with every scenario asserted equal to the one-batch / scalar-fold
-  * truth computed independently in plain Scala.
+  * batch) — with every scenario asserted equal to the one-batch /
+  * scalar-fold truth computed independently in plain Scala.
   *
-  * 103 seeded scenarios: 15 onlineHolt + 15 onlineRates +
-  * 15 heartbeatGaps + 10 ingestBatch replay histories +
-  * 10 onlineQuantileCells (the in-state sketch) + round 13's widening
+  * 93 seeded scenarios: 15 onlineHolt + 15 onlineRates +
+  * 15 heartbeatGaps + 10 onlineQuantileCells (the in-state sketch) + round 13's widening
   * to the REST of the stateful surface (VERDICT r12 next #5):
   * 12 within-watermark dedup + 12 session windows + 8 two-sided
   * interval joins + 6 ingest-while-rollup-reads histories. Seeds
@@ -185,51 +183,6 @@ class StreamingFuzzSpec extends SparkSpec {
           .sortBy(g => (g.user_id, g.event_type, g.from_us)).toSeq
         assert(got == want, s"seed=$seed: gap alerts != one-pass walk")
       } finally q.stop()
-    }
-  }
-
-  test("ingestBatch: 10 random delivery histories with replayed batchIds == clean one-shot append") {
-    val spark2 = spark
-    import spark2.implicits._
-    for (k <- 0 until 10) {
-      val seed = RoundSeed + 300 + k
-      val r = new Random(seed)
-      val T0 = 1704067200L * M
-      // 3-6 batches of arbitrary rows across a few days
-      val batches = (0 until 3 + r.nextInt(4)).map { _ =>
-        (0 until 1 + r.nextInt(6)).map { _ =>
-          (r.nextInt(3).toLong,
-            if (r.nextBoolean()) "click" else "view",
-            T0 + r.nextInt(5) * 86400L * M + r.nextInt(86400).toLong * M,
-            (r.nextInt(9000) + 100).toLong)
-        }.toVector
-      }.toVector
-      def df(rows: Vector[(Long, String, Long, Long)]) =
-        rows.toDF("user_id", "event_type", "ts_us", "cents")
-          .select(col("user_id"), col("event_type"),
-            timestamp_micros(col("ts_us")).as("ts"), col("cents"))
-      val store = java.nio.file.Files
-        .createTempDirectory(s"graft_streamfuzz_$k").toString
-      // delivery: each batch in order, then with p=0.5 a replay of a
-      // random already-committed id (the at-least-once retry), and a
-      // second replay of the final id at the end
-      batches.zipWithIndex.foreach { case (b, id) =>
-        StreamingOps.ingestBatch(df(b), id.toLong, store)
-        if (r.nextBoolean()) {
-          val past = r.nextInt(id + 1)
-          StreamingOps.ingestBatch(df(batches(past)), past.toLong, store)
-        }
-      }
-      StreamingOps.ingestBatch(
-        df(batches.last), batches.size - 1L, store)
-      val got = spark.read.parquet(s"$store/base")
-        .select("user_id", "event_type", "ts_us", "cents")
-        .collect().map(_.toSeq).toSeq.sorted(Ordering.by((s: Seq[Any]) => s.toString))
-      val want = batches.flatten
-        .map(t => Seq[Any](t._1, t._2, t._3, t._4))
-        .sorted(Ordering.by((s: Seq[Any]) => s.toString))
-      assert(got == want,
-        s"seed=$seed: replayed history != clean append (${got.size} vs ${want.size} rows)")
     }
   }
 
@@ -486,20 +439,20 @@ class StreamingFuzzSpec extends SparkSpec {
         rows.toDF("user_id", "event_type", "event_id", "ts_us_raw", "value")
           .select(col("user_id"), col("event_type"), col("event_id"),
             timestamp_micros(col("ts_us_raw")).as("ts"), col("value"))
-      val p = java.nio.file.Files
-        .createTempDirectory(s"graft_ingestroll$k").toString
-      graft.sources.TsdbStore.ingest(spark, df(freshRows(6 + r.nextInt(6))), p)
+      val p = tempDir(s"graft_ingestroll$k")
+      graft.sources.TsdbStore.ingest(spark, df(freshRows(6 + r.nextInt(6))), p,
+        graft.sources.StoreLayout(commit = "manifest"))
       def readerSeesCommitted(): Unit = {
         val m = live.values.toVector
           .toDF("user_id", "event_type", "event_id", "ts_us_raw", "value")
           .select(col("user_id"), col("event_type"), col("event_id"),
             col("ts_us_raw").as("ts_us"),
             expr("CAST(round(value*100) AS BIGINT)").as("cents"))
-        val base = spark.read.parquet(s"$p/base")
+        val base = graft.sources.TsdbStore.readTable(spark, p, "base")
           .select("user_id", "event_type", "event_id", "ts_us", "cents")
         assert(base.exceptAll(m).isEmpty && m.exceptAll(base).isEmpty,
           s"seed=$seed: base != committed rows")
-        val agg = spark.read.parquet(s"$p/agg_$step").drop("dt")
+        val agg = graft.sources.TsdbStore.readTable(spark, p, s"agg_$step").drop("dt")
         val want = graft.operators.TimeSeriesOps.downsampleWide(m, step)
           .select(agg.columns.map(col).toIndexedSeq: _*)
         assert(agg.exceptAll(want).isEmpty && want.exceptAll(agg).isEmpty,

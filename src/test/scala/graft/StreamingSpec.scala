@@ -5,6 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
+import graft.sources.{StoreLayout, TsdbStore}
 import graft.streaming.StreamingOps
 import graft.streaming.StreamingOps.{GapAlert, Meas, RateSample}
 
@@ -14,6 +15,10 @@ import graft.streaming.StreamingOps.{GapAlert, Meas, RateSample}
 class StreamingSpec extends SparkSpec {
 
   private def ts(s: String) = Timestamp.valueOf(s)
+
+  /** Streaming ingest commits through the manifest layout, so a stream
+    * into a fresh path stamps it first. */
+  private val Manifest = StoreLayout(commit = "manifest")
 
   test("file-source stream replays the events fixture (ingest path)") {
     val m = StreamingOps.asMeasurements(
@@ -164,241 +169,31 @@ class StreamingSpec extends SparkSpec {
   test("streaming ingest lands microbatches in the dt-partitioned store") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val store = java.nio.file.Files.createTempDirectory("graft-stream-store").toString
-    val in = MemoryStream[(Long, String, Timestamp, Long)]
-    val q = StreamingOps.streamIngest(
-        in.toDF().toDF("user_id", "event_type", "ts", "cents"), store)
-      .outputMode("append")
+    val store = tempDir("graft-stream-store")
+    TsdbStore.initStore(spark, store, Manifest)
+    val in = MemoryStream[(Long, String, Long, Timestamp, Double)]
+    val q = StreamingOps.streamIngestIncremental(
+        in.toDF().toDF("user_id", "event_type", "event_id", "ts", "value"), store)
+      .outputMode("update")
       .option("checkpointLocation", s"$store/_ckpt")
       .start()
     try {
-      in.addData((1L, "click", ts("2024-01-01 10:00:00"), 100L))
+      in.addData((1L, "click", 1L, ts("2024-01-01 10:00:00"), 1.00))
       q.processAllAvailable()
-      in.addData((1L, "click", ts("2024-01-02 11:00:00"), 200L))
+      in.addData((1L, "click", 2L, ts("2024-01-02 11:00:00"), 2.00))
       q.processAllAvailable()
-      val base = spark.read.parquet(s"$store/base")
+      val base = TsdbStore.readTable(spark, store, "base")
       assert(base.count() == 2)
       val parts = base.select("dt").distinct().collect().map(_.get(0).toString).sorted
       assert(parts.toSeq == Seq("2024-01-01", "2024-01-02"))
     } finally q.stop()
   }
 
-  test("streamIngest microbatch RETRY is idempotent: base and a cascade built from it are unchanged") {
-    import spark.implicits._
-    val store = java.nio.file.Files.createTempDirectory("graft-stream-retry").toString
-    def batchDf(rows: (Long, String, Timestamp, Long)*) =
-      rows.toDF("user_id", "event_type", "ts", "cents")
-    val b0 = batchDf(
-      (1L, "click", ts("2024-01-01 10:00:00"), 100L),
-      (2L, "view", ts("2024-01-01 11:00:00"), 50L))
-    val b1 = batchDf(
-      (1L, "click", ts("2024-01-02 09:00:00"), 200L),
-      (1L, "click", ts("2024-01-02 09:10:00"), 300L))
-    StreamingOps.ingestBatch(b0, 0L, store)
-    StreamingOps.ingestBatch(b1, 1L, store)
-    def snapshot() = spark.read.parquet(s"$store/base")
-      .select("user_id", "event_type", "ts_us", "cents")
-      .collect().map(_.toSeq).toSeq.sortBy(_.toString)
-    def cascade() = spark.read.parquet(s"$store/base")
-      .groupBy(col("user_id"), col("event_type"),
-        expr("ts_us div 86400000000").as("day"))
-      .agg(count(lit(1)).as("n"), sum("cents").as("sum_cents"))
-      .collect().map(_.toSeq).toSeq.sortBy(_.toString)
-    val (base1, casc1) = (snapshot(), cascade())
-    assert(base1.size == 4)
-    // at-least-once delivery: the SAME batchId re-executes after the
-    // marker landed — must short-circuit, appending nothing
-    StreamingOps.ingestBatch(b1, 1L, store)
-    assert(snapshot() == base1, "committed-batch retry changed base")
-    assert(cascade() == casc1, "committed-batch retry changed the cascade")
-    // crash-mid-move attempt: batch 2's marker never landed but some of
-    // its prefix-named files DID (simulated by planting a live file
-    // under the bid-2- prefix); the retry must sweep and land exactly
-    // one copy of batch 2
-    val b2 = batchDf((3L, "click", ts("2024-01-03 08:00:00"), 700L))
-    val fs = new org.apache.hadoop.fs.Path(store)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dt3 = new org.apache.hadoop.fs.Path(s"$store/base/dt=2024-01-03")
-    b2.select(col("user_id"), col("event_type"),
-        unix_micros(col("ts")).as("ts_us"), col("cents"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$store/_partial_sim")
-    val partFile = fs.listStatus(new org.apache.hadoop.fs.Path(s"$store/_partial_sim"))
-      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet")).head.getPath
-    fs.mkdirs(dt3)
-    fs.rename(partFile, new org.apache.hadoop.fs.Path(dt3, s"bid-2-${partFile.getName}"))
-    fs.delete(new org.apache.hadoop.fs.Path(s"$store/_partial_sim"), true)
-    assert(spark.read.parquet(s"$store/base").count() == 5) // leftover visible
-    StreamingOps.ingestBatch(b2, 2L, store)
-    val base2 = snapshot()
-    assert(base2.size == 5, s"partial-attempt leftover not swept: ${base2.size} rows")
-    assert(base2.count(_ == Seq(3L, "click", 1704268800000000L, 700L)) == 1,
-      "batch 2 must land exactly once after the sweep")
-    // and a third re-execution of batch 2 post-commit is still a no-op
-    StreamingOps.ingestBatch(b2, 2L, store)
-    assert(snapshot() == base2)
-  }
-
-  test("commit-marker pruning keeps the replay window and stays idempotent past it") {
-    // review r11 #3: the prune path deletes the exactly-once protocol's
-    // source of truth — it must only drop markers far outside the
-    // replay window, and even an out-of-window replay with unchanged
-    // data must stay content-identical (the bid- prefix sweep)
-    import spark.implicits._
-    val store = java.nio.file.Files.createTempDirectory("graft-stream-prune").toString
-    def batchDf(rows: (Long, String, Timestamp, Long)*) =
-      rows.toDF("user_id", "event_type", "ts", "cents")
-    val b0 = batchDf((1L, "click", ts("2024-01-01 10:00:00"), 100L))
-    val b1 = batchDf((2L, "view", ts("2024-01-01 11:00:00"), 50L))
-    val bN = batchDf((3L, "click", ts("2024-01-02 09:00:00"), 700L))
-    StreamingOps.ingestBatch(b0, 0L, store)
-    StreamingOps.ingestBatch(b1, 1L, store)
-    // batch 1100: % 100 == 0 and > 1000 -> prunes markers < 100
-    StreamingOps.ingestBatch(bN, 1100L, store)
-    val fs = new org.apache.hadoop.fs.Path(store)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val markers = fs.listStatus(
-        new org.apache.hadoop.fs.Path(s"$store/_stream_commits"))
-      .map(_.getPath.getName).sorted.toSeq
-    assert(markers == Seq("1100"), s"prune kept wrong markers: $markers")
-    def snapshot() = spark.read.parquet(s"$store/base")
-      .select("user_id", "event_type", "ts_us", "cents")
-      .collect().map(_.toSeq).toSeq.sortBy(_.toString)
-    val base = snapshot()
-    assert(base.size == 3, "all three batches' rows must be present")
-    // in-window replay: marker short-circuits
-    StreamingOps.ingestBatch(bN, 1100L, store)
-    assert(snapshot() == base)
-    // OUT-of-window replay (marker pruned): the prefix sweep removes
-    // batch 1's live files before re-landing the identical content
-    StreamingOps.ingestBatch(b1, 1L, store)
-    assert(snapshot() == base,
-      "pruned-marker replay with unchanged data must be content-identical")
-  }
-
-  test("checkpoint-lineage namespaces isolate markers AND file prefixes (ADVICE r11)") {
-    // two streams (fresh checkpoints, batchIds both starting at 0)
-    // pointed at ONE store: without namespacing the second stream's
-    // batch 0 would short-circuit on the first's marker (dropping its
-    // data) or prefix-sweep the first's bid-0- files (deleting it)
-    import spark.implicits._
-    val store = java.nio.file.Files.createTempDirectory("graft-stream-ns").toString
-    def batchDf(rows: (Long, String, Timestamp, Long)*) =
-      rows.toDF("user_id", "event_type", "ts", "cents")
-    val aRows = batchDf((1L, "click", ts("2024-01-01 10:00:00"), 100L))
-    val bRows = batchDf((2L, "view", ts("2024-01-01 11:00:00"), 50L))
-    StreamingOps.ingestBatch(aRows, 0L, store, runNs = "ckptA")
-    StreamingOps.ingestBatch(bRows, 0L, store, runNs = "ckptB")
-    def snapshot() = spark.read.parquet(s"$store/base")
-      .select("user_id", "event_type", "ts_us", "cents")
-      .collect().map(_.toSeq).toSeq.sortBy(_.toString)
-    val both = snapshot()
-    assert(both.size == 2, s"both lineages' batch 0 must land: $both")
-    // replay within each lineage still short-circuits on its own marker
-    StreamingOps.ingestBatch(aRows, 0L, store, runNs = "ckptA")
-    StreamingOps.ingestBatch(bRows, 0L, store, runNs = "ckptB")
-    assert(snapshot() == both, "in-lineage replay must be a no-op")
-    // a DEFAULT-lineage batch 0 is a third independent lineage
-    StreamingOps.ingestBatch(
-      batchDf((3L, "click", ts("2024-01-01 12:00:00"), 700L)), 0L, store)
-    assert(snapshot().size == 3)
-    // path-unsafe namespaces are rejected before touching the store
-    intercept[IllegalArgumentException] {
-      StreamingOps.ingestBatch(aRows, 0L, store, runNs = "a/../b")
-    }
-  }
-
-  test("lineage file prefixes are prefix-free: no cross-lineage sweep can delete committed data") {
-    // round-12 review find: with a plain bid-<runNs>-<batchId>- layout
-    // a numeric runNs "7" at batch 0 names files bid-7-0-* — a proper
-    // extension of the DEFAULT lineage's batch-7 sweep prefix bid-7-,
-    // so a default-lineage crash-retry of batch 7 would DELETE the
-    // other lineage's committed batch. Same nest for "a-1" batch 0 vs
-    // "a" batch 1. The length-prefixed bid-ns<len>-<runNs>-<batchId>-
-    // layout makes every sweep prefix prefix-free across lineages;
-    // this pins the two collision shapes end-to-end.
-    import spark.implicits._
-    val store = java.nio.file.Files.createTempDirectory("graft-stream-pfx").toString
-    def batchDf(rows: (Long, String, Timestamp, Long)*) =
-      rows.toDF("user_id", "event_type", "ts", "cents")
-    def snapshot() = spark.read.parquet(s"$store/base")
-      .select("user_id", "event_type", "ts_us", "cents")
-      .collect().map(_.toSeq).toSeq.sortBy(_.toString)
-    // lineage runNs="7" commits its batch 0
-    StreamingOps.ingestBatch(
-      batchDf((1L, "click", ts("2024-01-01 10:00:00"), 100L)), 0L, store,
-      runNs = "7")
-    // lineage runNs="a-1" commits its batch 0; lineage "a" will run batch 1
-    StreamingOps.ingestBatch(
-      batchDf((2L, "view", ts("2024-01-01 11:00:00"), 50L)), 0L, store,
-      runNs = "a-1")
-    val committed = snapshot()
-    assert(committed.size == 2)
-    // DEFAULT lineage batch 7, same dt dir — its sweep must not touch
-    // lineage "7"'s files; run it twice (second = crash-retry replay
-    // path through the sweep)
-    val d7 = batchDf((3L, "click", ts("2024-01-01 12:00:00"), 700L))
-    StreamingOps.ingestBatch(d7, 7L, store)
-    // simulate the dead-attempt retry: remove the marker so the sweep
-    // re-runs against the live dir that also holds lineage "7"'s files
-    val fs = new org.apache.hadoop.fs.Path(store)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$store/_stream_commits/7"), false)
-    StreamingOps.ingestBatch(d7, 7L, store)
-    // lineage "a" batch 1 — its sweep must not touch lineage "a-1"'s
-    StreamingOps.ingestBatch(
-      batchDf((4L, "view", ts("2024-01-01 13:00:00"), 25L)), 1L, store,
-      runNs = "a")
-    val after = snapshot()
-    assert(after.size == 4, s"cross-lineage sweep deleted committed data: $after")
-    assert(committed.forall(after.contains),
-      "a previously committed lineage row vanished after another lineage's sweep")
-  }
-
-  test("marker-retention window is configurable (spark.graft.stream.markerRetention)") {
-    import spark.implicits._
-    val store = java.nio.file.Files.createTempDirectory("graft-stream-ret").toString
-    def batchDf(rows: (Long, String, Timestamp, Long)*) =
-      rows.toDF("user_id", "event_type", "ts", "cents")
-    spark.conf.set("spark.graft.stream.markerRetention", "50")
-    try {
-      StreamingOps.ingestBatch(
-        batchDf((1L, "click", ts("2024-01-01 10:00:00"), 100L)), 0L, store)
-      // 100 % 100 == 0 and 100 > 50 -> prunes markers < 50 under the
-      // narrowed window (default 1000 would have kept marker 0)
-      StreamingOps.ingestBatch(
-        batchDf((2L, "view", ts("2024-01-01 11:00:00"), 50L)), 100L, store)
-      val fs = new org.apache.hadoop.fs.Path(store)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val markers = fs.listStatus(
-          new org.apache.hadoop.fs.Path(s"$store/_stream_commits"))
-        .map(_.getPath.getName).sorted.toSeq
-      assert(markers == Seq("100"), s"narrowed retention kept: $markers")
-    } finally spark.conf.unset("spark.graft.stream.markerRetention")
-  }
-
-  test("ingest refuses filesystems without atomic rename (object-store guard)") {
-    // VERDICT r11 "what's wrong" #1: on s3a-style stores rename is
-    // copy+delete and the commit protocol's crash reasoning is void —
-    // the guard must fail loudly, and the override conf must bypass it
-    val fakeS3 = new org.apache.hadoop.fs.RawLocalFileSystem {
-      override def getUri: java.net.URI = new java.net.URI("s3a://bucket/")
-    }
-    val e = intercept[IllegalArgumentException] {
-      graft.sources.TsdbStore.requireAtomicRename(fakeS3)
-    }
-    assert(e.getMessage.contains("atomic rename"))
-    val localFs = new org.apache.hadoop.fs.Path("/tmp")
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.sources.TsdbStore.requireAtomicRename(localFs) // file: passes
-    spark.conf.set("spark.graft.store.assumeAtomicRename", "true")
-    try graft.sources.TsdbStore.requireAtomicRename(fakeS3) // opt-in passes
-    finally spark.conf.unset("spark.graft.store.assumeAtomicRename")
-  }
-
   test("incremental streaming ingest maintains the cascade per microbatch") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val store = java.nio.file.Files.createTempDirectory("graft-stream-inc").toString
+    val store = tempDir("graft-stream-inc")
+    TsdbStore.initStore(spark, store, Manifest)
     val in = MemoryStream[(Long, String, Long, Timestamp, Double)]
     val q = StreamingOps.streamIngestIncremental(
         in.toDF().toDF("user_id", "event_type", "event_id", "ts", "value"), store)
@@ -416,17 +211,17 @@ class StreamingSpec extends SparkSpec {
         (1L, "click", 10L, ts("2024-01-01 10:00:00"), 5.00),
         (1L, "click", 12L, ts("2024-01-05 09:00:00"), 3.00))
       q.processAllAvailable()
-      val base = spark.read.parquet(s"$store/base")
+      val base = TsdbStore.readTable(spark, store, "base")
       assert(base.count() == 3, "replay must overwrite, late row must append")
       assert(base.filter(col("event_id") === 10L).select("cents").head().getLong(0) == 500L)
       // the cascade reflects the post-replay values without a rebuild
-      val agg1d = spark.read.parquet(s"$store/agg_86400")
+      val agg1d = TsdbStore.readTable(spark, store, "agg_86400")
       val day1 = agg1d.filter(col("slot_ts") === 1704067200L).select("sum_cents")
       assert(day1.head().getLong(0) == 500L, "cascade not updated by replay")
       assert(agg1d.count() == 3, "one daily slot per day expected")
       // the QUANTILE cascade follows the same per-microbatch contract:
       // the replayed value (not the original) is what the sketch holds
-      val q1 = spark.read.parquet(s"$store/quant_86400")
+      val q1 = TsdbStore.readTable(spark, store, "quant_86400")
         .filter(col("slot_ts") === 1704067200L).select("value")
         .head().getSeq[Double](0)
       assert(q1 == Seq(500.0), s"quant cascade not updated by replay: $q1")
@@ -441,7 +236,8 @@ class StreamingSpec extends SparkSpec {
     // including a wrap, a heartbeat-spanning gap, and a LATE row that
     // splits an earlier batch's delta and re-derives the successor
     // partition's boundary delta
-    val store = java.nio.file.Files.createTempDirectory("graft-stream-rate").toString
+    val store = tempDir("graft-stream-rate")
+    TsdbStore.initStore(spark, store, Manifest)
     val in = MemoryStream[(Long, String, Long, Timestamp, Double)]
     val q = StreamingOps.streamIngestIncremental(
         in.toDF().toDF("user_id", "event_type", "event_id", "ts", "value"), store)
@@ -463,17 +259,17 @@ class StreamingSpec extends SparkSpec {
     try {
       batches.foreach { b => in.addData(b: _*); q.processAllAvailable() }
     } finally q.stop()
-    val p2 = java.nio.file.Files.createTempDirectory("graft-stream-rate-batch").toString
-    graft.sources.TsdbStore.ingest(spark,
+    val p2 = tempDir("graft-stream-rate-batch")
+    TsdbStore.ingest(spark,
       batches.flatten.toDF("user_id", "event_type", "event_id", "ts", "value"), p2)
     Seq("rate_21600", "rate_86400", "agg_21600", "agg_86400").foreach { t =>
-      val a = spark.read.parquet(s"$store/$t")
-      val b = spark.read.parquet(s"$p2/$t")
+      val a = TsdbStore.readTable(spark, store, t)
+      val b = TsdbStore.readTable(spark, p2, t)
       assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
         s"streaming $t differs from the batch cascade")
     }
     // the wrap delta actually landed (sanity that the case fired)
-    val wrapSlot = spark.read.parquet(s"$store/rate_21600")
+    val wrapSlot = TsdbStore.readTable(spark, store, "rate_21600")
       .filter(col("slot_ts") === ts("2024-01-02 00:00:00").getTime / 1000)
       .select("delta_cents").head().getLong(0)
     assert(wrapSlot == 300L, s"wrap delta wrong: $wrapSlot")
@@ -936,8 +732,7 @@ class StreamingSpec extends SparkSpec {
   test("manifest-layout streaming ingest is EXACTLY-ONCE: batch marks ride the snapshot commit") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val store = java.nio.file.Files
-      .createTempDirectory("graft-stream-mani").toString
+    val store = tempDir("graft-stream-mani")
     val mLayout = graft.sources.StoreLayout(commit = "manifest")
     // streaming-first deployment: no batch ingest ever runs — initStore
     // stamps the layout so the sink's first microbatch bootstraps base
@@ -1002,10 +797,8 @@ class StreamingSpec extends SparkSpec {
     assert(snap3.props.get("streamhwm:other").contains("0") &&
       snap3.props.get("streamhwm:lin").contains("2"),
       s"lineage marks must be independent: ${snap3.props}")
-    // streamCommit refuses the rename layout loudly (its streaming
-    // exactly-once story is ingestBatch's marker protocol)
-    val rStore = java.nio.file.Files
-      .createTempDirectory("graft-stream-mani-r").toString
+    // the rename layout is read-only to upsertIncremental, streamed or not
+    val rStore = tempDir("graft-stream-mani-r")
     graft.sources.TsdbStore.ingest(spark,
       Tables.events(spark, Sf).limit(20), rStore)
     val e = intercept[IllegalArgumentException] {
@@ -1017,12 +810,10 @@ class StreamingSpec extends SparkSpec {
 
   test("store-tail CDF source: snapshot versions are offsets, each new segment's rows emit exactly once") {
     import org.apache.spark.sql.streaming.Trigger
-    val store = java.nio.file.Files
-      .createTempDirectory("graft-store-tail").toString
+    val store = tempDir("graft-store-tail")
     val layout = graft.sources.StoreLayout(commit = "manifest")
     graft.sources.TsdbStore.ingest(spark, Tables.events(spark, Sf), store, layout)
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-store-tail-ckpt").toString
+    val ckpt = tempDir("graft-store-tail-ckpt")
     // foreachBatch, not the memory sink: the tail must RESUME from its
     // checkpoint across triggers (the consumer-lag semantics under
     // test), which the memory sink refuses
@@ -1094,7 +885,7 @@ class StreamingSpec extends SparkSpec {
       "version span; evolved ARRAY (embedding) columns decode") {
     import org.apache.spark.sql.streaming.Trigger
     import org.apache.spark.sql.types.{ArrayType, FloatType, StructField}
-    val store = java.nio.file.Files.createTempDirectory("graft-tail-hard").toString
+    val store = tempDir("graft-tail-hard")
     val layout = graft.sources.StoreLayout(commit = "manifest")
     graft.sources.TsdbStore.ingest(spark, Tables.events(spark, Sf), store, layout) // v1
     graft.sources.TsdbStore.addColumn(spark, store, "base",
@@ -1114,7 +905,7 @@ class StreamingSpec extends SparkSpec {
       store)                                                                       // v4 (no emb: nulls)
     // a LAGGED consumer starting at 0 with maxVersionsPerBatch=1 must
     // catch up in single-version batches, metadata versions included
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-tail-hard-ckpt").toString
+    val ckpt = tempDir("graft-tail-hard-ckpt")
     val batchVersions =
       new java.util.concurrent.ConcurrentLinkedQueue[Seq[Long]]
     val sink = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.Row]
@@ -1160,9 +951,9 @@ class StreamingSpec extends SparkSpec {
       "checkpoint write; B equals a batch rebuild") {
     import org.apache.spark.sql.streaming.Trigger
     val layout = graft.sources.StoreLayout(commit = "manifest")
-    val a = java.nio.file.Files.createTempDirectory("graft-lambda-a").toString
-    val b = java.nio.file.Files.createTempDirectory("graft-lambda-b").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-lambda-ckpt").toString
+    val a = tempDir("graft-lambda-a")
+    val b = tempDir("graft-lambda-b")
+    val ckpt = tempDir("graft-lambda-ckpt")
     graft.sources.TsdbStore.ingest(spark, Tables.events(spark, Sf), a, layout)
     graft.sources.TsdbStore.initStore(spark, b, layout) // streaming-first downstream
     // the MATERIALIZED-VIEW transform: doubled values (cents/100 is the
@@ -1223,7 +1014,7 @@ class StreamingSpec extends SparkSpec {
       "the crashed run must have committed its batch downstream first")
     runPipeline() // restart: replays the un-checkpointed batch (hwm no-op), finishes
     // B equals a from-scratch batch rebuild of the transform over A's LIVE base
-    val c = java.nio.file.Files.createTempDirectory("graft-lambda-c").toString
+    val c = tempDir("graft-lambda-c")
     graft.sources.TsdbStore.ingest(spark,
       transform(graft.sources.TsdbStore.readTable(spark, a, layout, "base")), c, layout)
     def rows(store: String, t: String): Seq[String] =

@@ -1,12 +1,54 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.sources.TsdbStore
+import graft.sources.{StoreLayout, StoreManifest, TsdbStore}
 
 /** Store round-trip: ingest → partitioned layout → fetch must equal
-  * computing the same consolidation directly from the raw events. */
+  * computing the same consolidation directly from the raw events. The
+  * shared fixture uses the default rename layout (ingest + reads);
+  * every mutation case builds its own manifest store. */
 class TsdbStoreSpec extends SparkSpec {
+
+  private val Manifest = StoreLayout(commit = "manifest")
+
+  /** A store table through the store's own read path. */
+  private def tbl(p: String, t: String): DataFrame = TsdbStore.readTable(spark, p, t)
+
+  /** A table's rows as sorted strings, columns in name order — equal
+    * across layouts whatever each one's column order. */
+  private def rowsOf(p: String, t: String): Seq[String] = {
+    val df = tbl(p, t)
+    df.select(df.columns.sorted.map(col).toIndexedSeq: _*)
+      .collect().map(_.toString).sorted.toSeq
+  }
+
+  private def fsOf(p: String) = new org.apache.hadoop.fs.Path(p)
+    .getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** The live (table, dt) → segment-dir map of a manifest store. */
+  private def live(p: String): Map[(String, String), String] =
+    StoreManifest.load(fsOf(p), p).entries
+
+  /** Live dt partitions of one table of a manifest store. */
+  private def liveDts(p: String, t: String): Seq[String] =
+    live(p).keys.collect { case (`t`, dt) => dt }.toSeq.sorted
+
+  /** Parquet files serving one live partition of a manifest store. */
+  private def liveFiles(p: String, t: String, dt: String): Int =
+    new java.io.File(s"$p/${live(p)((t, dt))}").listFiles()
+      .count(_.getName.endsWith(".parquet"))
+
+  /** Re-write one day of `p`'s rows through upsertIncremental with at
+    * most `perFile` rows per file — the small-file decay a streaming
+    * ingest leaves behind, in every table the day touches. */
+  private def fragmentDay(p: String, day: String, perFile: Int): Unit = {
+    spark.conf.set("spark.sql.files.maxRecordsPerFile", perFile.toString)
+    try TsdbStore.upsertIncremental(spark, Tables.events(spark, Sf)
+        .filter(col("ts") >= lit(day) && col("ts") < date_add(lit(day), 1)), p)
+    finally spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+  }
 
   private lazy val store: String = {
     val p = tempDir("graft-store")
@@ -89,14 +131,12 @@ class TsdbStoreSpec extends SparkSpec {
 
   test("upsert: replayed rows win, base is SWAPPED live, cascades rebuilt") {
     import spark.implicits._
-    // private store: upsert now mutates the store in place (round 11),
-    // so the shared fixture must not be touched
     val p = tempDir("graft-store-upsert")
-    TsdbStore.ingest(spark, Tables.events(spark, Sf), p)
+    TsdbStore.ingest(spark, Tables.events(spark, Sf), p, Manifest)
     val replay = Seq((7L, "click", 424242L, // synthetic new event id
         java.sql.Timestamp.from(java.time.Instant.parse("2024-01-15T12:00:00Z")), 9.99))
       .toDF("user_id", "event_type", "event_id", "ts", "value")
-    val existing = spark.read.parquet(s"$p/base")
+    val existing = tbl(p, "base")
     val nBefore = existing.count()
     // replay an EXISTING row with a changed value + one new row
     val oneOld = existing.limit(1)
@@ -104,11 +144,14 @@ class TsdbStoreSpec extends SparkSpec {
         timestamp_micros(col("ts_us")).as("ts"), lit(123.45).as("value"))
       .cache()
     oneOld.count()
+    val ingested = live(p)
     TsdbStore.upsert(spark, replay.unionByName(oneOld), p)
-    // the merge is LIVE (no base_new left behind, no retired copy)
-    assert(!new java.io.File(s"$p/base_new").exists(), "staging dir left behind")
-    assert(!new java.io.File(s"$p/base_retired").exists(), "retired dir left behind")
-    val merged = spark.read.parquet(s"$p/base")
+    // the merge is LIVE as one commit: base and every cascade now read
+    // from one fresh segment, none from the ingest's
+    val segs = live(p).values.map(_.split("/")(1)).toSet
+    assert(segs.size == 1 && !ingested.values.exists(_.contains(segs.head)),
+      s"expected every table in one fresh segment: $segs")
+    val merged = tbl(p, "base")
     assert(merged.count() == nBefore + 1)
     val changed = merged.join(oneOld.select("event_id"), "event_id")
       .select("cents").head().getLong(0)
@@ -118,7 +161,7 @@ class TsdbStoreSpec extends SparkSpec {
     // and the new row's day must include its cents
     val rep = oneOld.select(col("user_id"), col("event_type"),
       expr("unix_micros(ts) div 86400000000 * 86400").as("slot_ts")).head()
-    val cell = spark.read.parquet(s"$p/agg_86400")
+    val cell = tbl(p, "agg_86400")
       .filter(col("user_id") === rep.getLong(0) &&
         col("event_type") === rep.getString(1) &&
         col("slot_ts") === rep.getLong(2))
@@ -133,60 +176,48 @@ class TsdbStoreSpec extends SparkSpec {
 
   test("compaction: same rows, fewer files, clustering restored") {
     // fragment one partition the way a streaming ingest would
-    val dt = new java.io.File(s"$store/base").listFiles()
-      .map(_.getName).filter(_.startsWith("dt=")).sorted.head.stripPrefix("dt=")
-    // cache+count materializes before the self-overwrite below
-    val before = spark.read.parquet(s"$store/base")
-      .filter(col("dt") === lit(dt)).drop("dt").cache()
-    before.count()
-    before.repartition(16).write.mode("overwrite").parquet(s"$store/base/dt=$dt")
-    val nFrag = new java.io.File(s"$store/base/dt=$dt").listFiles()
-      .count(_.getName.endsWith(".parquet"))
+    val p = tempDir("graft-store-compact")
+    TsdbStore.ingest(spark, Tables.events(spark, Sf), p, Manifest)
+    val dt = liveDts(p, "base").head
+    fragmentDay(p, dt, perFile = 2)
+    val nFrag = liveFiles(p, "base", dt)
     assert(nFrag >= 16, s"fragmentation setup failed: $nFrag files")
+    val before = tbl(p, "base").filter(col("dt") === lit(dt)).drop("dt").cache()
+    before.count()
 
-    TsdbStore.compactPartition(spark, store, dt, targetFiles = 1)
-    // the swap installs the compacted files into the LIVE partition —
-    // a reader of base sees the benefit, no duplicate copy remains
-    val liveDir = new java.io.File(s"$store/base/dt=$dt")
-    val nAfter = liveDir.listFiles().count(_.getName.endsWith(".parquet"))
+    TsdbStore.compactPartition(spark, p, dt, targetFiles = 1)
+    // the commit points the LIVE partition at the compacted files — a
+    // reader of base sees the benefit
+    val nAfter = liveFiles(p, "base", dt)
     assert(nAfter == 1, s"expected 1 compacted file in live partition, got $nAfter")
-    assert(!new java.io.File(s"$store/base_compacted").exists(),
-      "staging directory left behind after swap")
-    assert(!new java.io.File(s"$store/base_retired/dt=$dt").exists(),
-      "retired copy left behind after swap")
-    val after = spark.read.parquet(s"$store/base/dt=$dt")
+    val after = tbl(p, "base").filter(col("dt") === lit(dt)).drop("dt")
     assert(after.exceptAll(before).isEmpty && before.exceptAll(after).isEmpty,
       "compaction changed the row bag")
   }
 
   test("compaction covers every cascade family (agg / rate / quant)") {
-    // a fresh store so the shared fixture's base-compaction test can't
-    // interfere; repeated incremental upserts fragment the DERIVED
-    // tables the same way streaming fragments base (each touched
-    // partition rewritten by a multi-task job)
+    // repeated incremental upserts fragment the DERIVED tables the same
+    // way streaming fragments base (each touched partition rewritten
+    // by a multi-task job)
     val p = tempDir("graft-store-dcomp")
-    TsdbStore.ingest(spark, Tables.events(spark, Sf), p)
+    TsdbStore.ingest(spark, Tables.events(spark, Sf), p, Manifest)
+    // the day with the most valid counter deltas, so its sparse rate
+    // partition still splits into several one-row files
+    val dt = tbl(p, "rate_21600").groupBy(col("dt").cast("string")).count()
+      .orderBy(col("count").desc).head().getString(0)
+    fragmentDay(p, dt, perFile = 1)
     for (table <- Seq("agg_86400", "rate_21600", "quant_86400")) {
-      val dt = new java.io.File(s"$p/$table").listFiles()
-        .map(_.getName).filter(_.startsWith("dt=")).sorted.head.stripPrefix("dt=")
-      val before = spark.read.parquet(s"$p/$table")
-        .filter(col("dt") === lit(dt)).drop("dt").cache()
+      val before = tbl(p, table).filter(col("dt") === lit(dt)).drop("dt").cache()
       before.count()
-      before.repartition(8).write.mode("overwrite").parquet(s"$p/$table/dt=$dt")
       // AQE may coalesce sparse partitions — any multi-file layout
       // exercises the compaction
-      val nFrag = new java.io.File(s"$p/$table/dt=$dt").listFiles()
-        .count(_.getName.endsWith(".parquet"))
+      val nFrag = liveFiles(p, table, dt)
       assert(nFrag >= 2, s"$table fragmentation setup failed: $nFrag files")
 
       TsdbStore.compactPartition(spark, p, dt, targetFiles = 1, table = table)
-      val nAfter = new java.io.File(s"$p/$table/dt=$dt").listFiles()
-        .count(_.getName.endsWith(".parquet"))
+      val nAfter = liveFiles(p, table, dt)
       assert(nAfter == 1, s"$table: expected 1 compacted file, got $nAfter")
-      assert(!new java.io.File(s"$p/${table}_compacted").exists() &&
-        !new java.io.File(s"$p/${table}_retired").exists(),
-        s"$table: staging/retired directories left behind")
-      val after = spark.read.parquet(s"$p/$table/dt=$dt")
+      val after = tbl(p, table).filter(col("dt") === lit(dt)).drop("dt")
       assert(after.exceptAll(before).isEmpty && before.exceptAll(after).isEmpty,
         s"$table: compaction changed the row bag")
       before.unpersist()
@@ -203,24 +234,15 @@ class TsdbStoreSpec extends SparkSpec {
 
   test("incremental upsert rewrites only touched partitions, equals full recompute") {
     import spark.implicits._
-    // fresh store so the shared fixture's later mutations can't interfere
     val p = tempDir("graft-store-inc")
     val rawCols = Seq("user_id", "event_type", "event_id", "ts", "value")
     val raw = Tables.events(spark, Sf).selectExpr(rawCols: _*)
-    TsdbStore.ingest(spark, raw, p)
-
-    def files(): Map[String, Long] = {
-      val root = java.nio.file.Paths.get(p)
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(root).iterator().asScala
-        .filter(f => f.toString.endsWith(".parquet"))
-        .map(f => root.relativize(f).toString -> f.toFile.length()).toMap
-    }
-    val before = files()
+    TsdbStore.ingest(spark, raw, p, Manifest)
+    val before = live(p)
 
     // one replayed row (same day, changed value) + one genuinely-late
     // row on a brand-new day
-    val target = spark.read.parquet(s"$p/base")
+    val target = tbl(p, "base")
       .orderBy("dt", "user_id", "event_type", "event_id").limit(1)
       .select("user_id", "event_type", "event_id", "ts_us", "dt").head()
     val d1 = target.getDate(4).toString
@@ -239,38 +261,32 @@ class TsdbStoreSpec extends SparkSpec {
     val touched = TsdbStore.upsertIncremental(spark, replay, p)
     assert(touched == Seq(d1, d2).sorted, s"touched=$touched")
 
-    // blast radius: every file outside the touched partitions survives
-    // byte-identical (same name, same length) — except the RATE
+    // blast radius: every partition outside the touched ones still
+    // reads from the same write-once segment dir — except the RATE
     // cascade's successor partitions of touched days, whose first
     // delta depends on the touched day's last sample and which are
     // therefore legitimately recomputed
-    val after = files()
+    val after = live(p)
     val rateNext = Set(d1, d2).map(x =>
       java.time.LocalDate.parse(x).plusDays(1).toString)
-    val untouchedBefore = before.filter { case (f, _) =>
-      !f.contains(s"dt=$d1") && !f.contains(s"dt=$d2") &&
-        !(f.startsWith("rate_") && rateNext.exists(n => f.contains(s"dt=$n"))) }
-    untouchedBefore.foreach { case (f, len) =>
-      assert(after.get(f).contains(len), s"untouched partition file rewritten: $f") }
+    before.foreach { case (k @ (t, dt), rel) =>
+      if (dt != d1 && dt != d2 && !(t.startsWith("rate_") && rateNext(dt)))
+        assert(after.get(k).contains(rel), s"untouched partition rewritten: $k")
+    }
     val aggTables =
       Seq("base", s"agg_${TsdbStore.AggSteps.head}", s"agg_${TsdbStore.AggSteps.last}")
     val rateTables =
       Seq(s"rate_${TsdbStore.AggSteps.head}", s"rate_${TsdbStore.AggSteps.last}")
     aggTables.foreach { t =>
-      assert(before.keys.filter(_.startsWith(s"$t/dt=$d1")).toSet !=
-        after.keys.filter(_.startsWith(s"$t/dt=$d1")).toSet,
-        s"$t/dt=$d1 not rewritten")
-      assert(after.keys.exists(_.startsWith(s"$t/dt=$d2")),
-        s"$t/dt=$d2 not created for the late day")
+      assert(before.get((t, d1)) != after.get((t, d1)), s"$t/dt=$d1 not rewritten")
+      assert(after.contains((t, d2)), s"$t/dt=$d2 not created for the late day")
     }
     rateTables.foreach { t =>
-      assert(before.keys.filter(_.startsWith(s"$t/dt=$d1")).toSet !=
-        after.keys.filter(_.startsWith(s"$t/dt=$d1")).toSet,
-        s"$t/dt=$d1 not rewritten")
+      assert(before.get((t, d1)) != after.get((t, d1)), s"$t/dt=$d1 not rewritten")
       // the late day's only sample is two months past its predecessor —
       // past the heartbeat, so its rate partition must NOT exist (the
-      // empty-recompute path deletes rather than installing junk)
-      assert(!after.keys.exists(_.startsWith(s"$t/dt=$d2")),
+      // empty-recompute path drops rather than installing junk)
+      assert(!after.contains((t, d2)),
         s"$t/dt=$d2 created despite having no valid deltas")
     }
 
@@ -286,10 +302,7 @@ class TsdbStoreSpec extends SparkSpec {
       .unionByName(replay.filter(col("event_id") === 999999L))
     TsdbStore.ingest(spark, patched, p2)
     (aggTables ++ rateTables).foreach { t =>
-      val a = spark.read.parquet(s"$p/$t")
-      val b = spark.read.parquet(s"$p2/$t")
-      assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
-        s"incremental $t differs from full recompute")
+      assert(rowsOf(p, t) == rowsOf(p2, t), s"incremental $t differs from full recompute")
     }
   }
 
@@ -316,7 +329,8 @@ class TsdbStoreSpec extends SparkSpec {
   test("retention drops only pre-cutoff partitions at every level") {
     val p = tempDir("graft-store-ret")
     TsdbStore.ingest(spark,
-      Tables.events(spark, Sf).selectExpr("user_id", "event_type", "event_id", "ts", "value"), p)
+      Tables.events(spark, Sf).selectExpr("user_id", "event_type", "event_id", "ts", "value"),
+      p, Manifest)
     val cutoff = 1704844800L // 2024-01-10T00Z
     val keepFrom = java.time.LocalDate.parse("2024-01-10")
     val beforeKept = TsdbStore.fetch(spark, p, 7L, "click", cutoff, 1706659200L).collect()
@@ -326,8 +340,7 @@ class TsdbStoreSpec extends SparkSpec {
       .foreach { t =>
         assert(dropped(t).nonEmpty, s"$t: nothing dropped")
         assert(dropped(t).forall(java.time.LocalDate.parse(_).isBefore(keepFrom)))
-        val remaining = new java.io.File(s"$p/$t").listFiles()
-          .map(_.getName).filter(_.startsWith("dt=")).map(_.stripPrefix("dt="))
+        val remaining = liveDts(p, t)
         assert(remaining.nonEmpty &&
           remaining.forall(!java.time.LocalDate.parse(_).isBefore(keepFrom)),
           s"$t: pre-cutoff partition survived")
@@ -371,15 +384,12 @@ class TsdbStoreSpec extends SparkSpec {
   }
 
   test("configurable 3-level chain (300s→3600s→86400s): ingest, upsert, retention") {
-    import graft.sources.StoreLayout
-    val layout = StoreLayout(steps = Seq(300L, 3600L, 86400L))
+    val layout = StoreLayout(steps = Seq(300L, 3600L, 86400L), commit = "manifest")
     val p = tempDir("graft-store-3lvl")
     val raw = Tables.events(spark, Sf)
       .selectExpr("user_id", "event_type", "event_id", "ts", "value")
     TsdbStore.ingest(spark, raw, p, layout)
-    val dirs = new java.io.File(p).listFiles().filter(_.isDirectory)
-      .map(_.getName).toSet
-    assert(dirs == Set("base", "agg_300", "agg_3600", "agg_86400",
+    assert(live(p).keys.map(_._1).toSet == Set("base", "agg_300", "agg_3600", "agg_86400",
       "rate_300", "rate_3600", "rate_86400",
       "quant_300", "quant_3600", "quant_86400"))
 
@@ -405,12 +415,10 @@ class TsdbStoreSpec extends SparkSpec {
         timestamp_micros(col("ts_us_raw")).as("ts"), col("value"))
     TsdbStore.upsertIncremental(spark, replay, p)
     val p2 = tempDir("graft-store-3lvl-full")
-    TsdbStore.ingest(spark, raw.unionByName(replay), p2, layout)
+    TsdbStore.ingest(spark, raw.unionByName(replay), p2, layout.copy(commit = "rename"))
     ("base" +: layout.steps.flatMap(s => Seq(s"agg_$s", s"rate_$s")))
       .foreach { t =>
-        val a = spark.read.parquet(s"$p/$t")
-        val b = spark.read.parquet(s"$p2/$t")
-        assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
+        assert(rowsOf(p, t) == rowsOf(p2, t),
           s"incremental $t differs from full recompute at 3-level chain")
       }
 
@@ -430,13 +438,11 @@ class TsdbStoreSpec extends SparkSpec {
   }
 
   test("monthly chunk mapping: dt=YYYY-MM partitions, pruning, whole-month retention") {
-    import graft.sources.StoreLayout
     val p = tempDir("graft-store-month")
     TsdbStore.ingest(spark,
       Tables.events(spark, Sf).selectExpr("user_id", "event_type", "event_id", "ts", "value"),
-      p, StoreLayout(monthly = true))
-    val parts = new java.io.File(s"$p/base").listFiles()
-      .map(_.getName).filter(_.startsWith("dt=")).map(_.stripPrefix("dt=")).sorted
+      p, StoreLayout(monthly = true, commit = "manifest"))
+    val parts = liveDts(p, "base")
     assert(parts.nonEmpty && parts.forall(_.matches("\\d{4}-\\d{2}")),
       s"expected YYYY-MM partitions, got ${parts.toSeq}")
 
@@ -494,8 +500,9 @@ class TsdbStoreSpec extends SparkSpec {
     import spark.implicits._
     val p = tempDir("graft-store-move")
     TsdbStore.ingest(spark,
-      Tables.events(spark, Sf).selectExpr("user_id", "event_type", "event_id", "ts", "value"), p)
-    val victim = spark.read.parquet(s"$p/base")
+      Tables.events(spark, Sf).selectExpr("user_id", "event_type", "event_id", "ts", "value"),
+      p, Manifest)
+    val victim = tbl(p, "base")
       .orderBy("dt", "user_id", "event_type", "event_id").limit(1).head()
     // same key, timestamp moved to a different day — violates the
     // slot-addressing precondition
@@ -504,9 +511,10 @@ class TsdbStoreSpec extends SparkSpec {
       .toDF("user_id", "event_type", "event_id", "ts_us_raw", "value")
       .select(col("user_id"), col("event_type"), col("event_id"),
         timestamp_micros(col("ts_us_raw")).as("ts"), col("value"))
-    intercept[IllegalArgumentException] {
+    val e = intercept[IllegalArgumentException] {
       TsdbStore.upsertIncremental(spark, moved, p, verifyNoPartitionMoves = true)
     }
+    assert(e.getMessage.contains("partition-moving"), e.getMessage)
   }
 
   test("filled fetch gates the broadcast by grid size: identical rows, shuffle join past the gate") {
@@ -567,17 +575,17 @@ class TsdbStoreSpec extends SparkSpec {
   }
 
   test("bucketed store rejects plain-parquet upserts (bucket-file metadata)") {
-    import graft.sources.StoreLayout
     val p = tempDir("graft-store-bkt-guard")
     val feed = Tables.events(spark, Sf)
       .selectExpr("user_id", "event_type", "event_id", "ts", "value").limit(200)
-    TsdbStore.ingest(spark, feed, p, StoreLayout(buckets = 2))
-    // swapIn/base_new would install plain parquet files (no bucket-id
-    // file naming) into the bucketed table's partition dirs — both
-    // upsert paths must refuse, like compactPartition already does
+    TsdbStore.ingest(spark, feed, p, StoreLayout(buckets = 2, commit = "manifest"))
+    // the rewrite would install plain parquet files (no bucket-id file
+    // naming) under the bucketed table — both upsert paths must
+    // refuse, like compactPartition already does
     val one = feed.limit(1)
-    intercept[IllegalArgumentException] { TsdbStore.upsertIncremental(spark, one, p) }
-    intercept[IllegalArgumentException] { TsdbStore.upsert(spark, one, p) }
+    Seq(intercept[IllegalArgumentException] { TsdbStore.upsertIncremental(spark, one, p) },
+        intercept[IllegalArgumentException] { TsdbStore.upsert(spark, one, p) })
+      .foreach(e => assert(e.getMessage.contains("bucket"), e.getMessage))
   }
 
   test("pre-1970 samples partition into their own (earlier) UTC day") {
@@ -650,24 +658,18 @@ class TsdbStoreSpec extends SparkSpec {
   test("deleteSeries: the var vanishes at every level, equal to re-ingest of the filtered feed") {
     val p = tempDir("graft_del")
     val events = Tables.events(spark, Sf)
-    TsdbStore.ingest(spark, events, p)
+    TsdbStore.ingest(spark, events, p, Manifest)
     // a series with data but NOT in every partition, so some dts stay
     // untouched; fall back gracefully if the fixture fills every day
     val (uid, etype) = (7L, "click")
-    def fileListing(table: String): Map[String, Seq[String]] = {
-      val root = new java.io.File(s"$p/$table")
-      root.listFiles().filter(_.getName.startsWith("dt="))
-        .map(d => d.getName -> d.listFiles().map(f =>
-          s"${f.getName}:${f.length()}").sorted.toSeq).toMap
-    }
-    val before = fileListing("base")
+    val before = live(p)
     val touched = TsdbStore.deleteSeries(spark, p, uid, etype)
     assert(touched("base").nonEmpty, "fixture series should touch partitions")
-    // untouched base partitions' FILES are identical (names + sizes)
-    val after = fileListing("base")
-    val untouchedDts = before.keySet -- touched("base").map("dt=" + _).toSet
-    untouchedDts.foreach { dt =>
-      assert(after(dt) == before(dt), s"untouched partition $dt was rewritten")
+    // untouched base partitions still read from their ingest segment
+    val after = live(p)
+    liveDts(p, "base").filterNot(touched("base").contains).foreach { dt =>
+      assert(after(("base", dt)) == before(("base", dt)),
+        s"untouched partition $dt was rewritten")
     }
     // every table equals a full re-ingest of the filtered feed
     val full = tempDir("graft_del_full")
@@ -676,11 +678,8 @@ class TsdbStoreSpec extends SparkSpec {
     val tables = "base" +: TsdbStore.AggSteps.flatMap(s =>
       Seq(s"agg_$s", s"rate_$s", s"quant_$s"))
     tables.foreach { t =>
-      val a = spark.read.parquet(s"$p/$t")
-      val b = spark.read.parquet(s"$full/$t")
-      assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
-        s"deleteSeries $t differs from full recompute")
-      assert(a.filter(col("user_id") === uid && col("event_type") === etype).isEmpty,
+      assert(rowsOf(p, t) == rowsOf(full, t), s"deleteSeries $t differs from full recompute")
+      assert(tbl(p, t).filter(col("user_id") === uid && col("event_type") === etype).isEmpty,
         s"series survived in $t")
     }
   }
@@ -693,7 +692,7 @@ class TsdbStoreSpec extends SparkSpec {
     // LAST sample — so the successor partition's first delta must
     // change, proving the ±1-partition rate blast radius on the
     // monthly mapper
-    val layout = graft.sources.StoreLayout(monthly = true)
+    val layout = StoreLayout(monthly = true, commit = "manifest")
     val p = tempDir("graft-store-feb")
     def ev(id: Long, iso: String, v: Double) =
       (1L, "ctr", id, java.time.Instant.parse(iso).getEpochSecond * 1000000L, v)
@@ -709,7 +708,7 @@ class TsdbStoreSpec extends SparkSpec {
         timestamp_micros(col("ts_us_raw")).as("ts"), col("value"))
     TsdbStore.ingest(spark, initial, p, layout)
 
-    val marBefore = spark.read.parquet(s"$p/rate_21600").filter(col("dt") === "2024-03")
+    val marBefore = tbl(p, "rate_21600").filter(col("dt") === "2024-03")
       .select("slot_ts", "delta_cents", "dt_us").collect().toSet
 
     // the late row lands in Feb's LAST HOUR and becomes its new last
@@ -721,25 +720,51 @@ class TsdbStoreSpec extends SparkSpec {
     val touched = TsdbStore.upsertIncremental(spark, late, p)
     assert(touched == Seq("2024-02"), s"touched=$touched")
 
-    val marAfter = spark.read.parquet(s"$p/rate_21600").filter(col("dt") === "2024-03")
+    val marAfter = tbl(p, "rate_21600").filter(col("dt") === "2024-03")
       .select("slot_ts", "delta_cents", "dt_us").collect().toSet
     assert(marAfter != marBefore,
       "successor month's boundary delta not recomputed")
 
     // equals a full recompute of the patched feed at every level
     val p2 = tempDir("graft-store-feb-full")
-    TsdbStore.ingest(spark, initial.unionByName(late), p2, layout)
+    TsdbStore.ingest(spark, initial.unionByName(late), p2, layout.copy(commit = "rename"))
     Seq("base", "agg_21600", "agg_86400", "rate_21600", "rate_86400").foreach { t =>
-      val a = spark.read.parquet(s"$p/$t")
-      val b = spark.read.parquet(s"$p2/$t")
-      assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
+      assert(rowsOf(p, t) == rowsOf(p2, t),
         s"incremental $t differs from full recompute at the month boundary")
     }
     // and the heartbeat-spanning gap stayed invalid: no delta bridges
     // Feb 26 → Feb 28 (48 h ≫ 6 h heartbeat)
-    val feb = spark.read.parquet(s"$p/rate_21600").filter(col("dt") === "2024-02")
+    val feb = tbl(p, "rate_21600").filter(col("dt") === "2024-02")
     assert(feb.filter(col("dt_us") > 21600L * 1000000L).count() == 0,
       "a heartbeat-spanning gap produced a delta")
+  }
+
+  test("every mutator on a rename store refuses before writing a file") {
+    // the rename layout is written whole by ingest / ingestMetadata and
+    // is read-only otherwise: each mutator names itself and points to
+    // the manifest layout, and the store's files stay exactly as they
+    // were (paths, sizes, modification times)
+    def listing(): Seq[String] = {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.walk(java.nio.file.Paths.get(store)).iterator().asScala
+        .map(f => s"$f:${f.toFile.length()}:${f.toFile.lastModified()}").toSeq.sorted
+    }
+    val before = listing()
+    val one = Tables.events(spark, Sf).limit(1)
+    Seq[(String, () => Any)](
+      "upsert" -> (() => TsdbStore.upsert(spark, one, store)),
+      "upsertIncremental" -> (() => TsdbStore.upsertIncremental(spark, one, store)),
+      "compactPartition" -> (() => TsdbStore.compactPartition(spark, store, "2024-01-10")),
+      "deleteSeries" -> (() => TsdbStore.deleteSeries(spark, store, 7L, "click")),
+      "dropBefore" -> (() => TsdbStore.dropBefore(spark, store, 1704844800L)),
+      "streamIngestIncremental" -> (() => graft.streaming.StreamingOps
+        .streamIngestIncremental(spark.readStream.format("rate").load(), store))
+    ).foreach { case (op, run) =>
+      val e = intercept[IllegalArgumentException](run())
+      assert(e.getMessage.contains(s"$op needs the manifest layout") &&
+        e.getMessage.contains("StoreLayout(commit = \"manifest\")"), e.getMessage)
+    }
+    assert(listing() == before, "a refused mutation wrote to the store")
   }
 
   // ---- stamped store-metadata cache + gathered fetch sorts -----------
