@@ -165,6 +165,11 @@ object TsdbStore {
       col("dt") >= lit(java.sql.Date.valueOf(utcDay(beginSec))) &&
         col("dt") <= lit(java.sql.Date.valueOf(utcDay(endSec)))
 
+  /** dt partition values as typed filter literals (DATE for daily,
+    * STRING for monthly), for `col("dt").isin(...)`. */
+  private def dtLits(layout: StoreLayout, dts: Seq[String]): Seq[Any] =
+    if (layout.monthly) dts else dts.map(java.sql.Date.valueOf)
+
   // ---- layout persistence --------------------------------------------
 
   /** The layout is STORE metadata, not caller knowledge: ingest stamps
@@ -211,8 +216,6 @@ object TsdbStore {
     try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
   }
 
-  /** Read the stamped layout; a store predating `_LAYOUT` gets the
-    * defaults it was built with. */
   /** Create an EMPTY store: stamp the layout so every later entry
     * point (including a streaming sink's very first microbatch, which
     * bootstraps base via [[upsertIncremental]]) resolves the right
@@ -230,6 +233,8 @@ object TsdbStore {
     } else writeLayout(spark, path, layout)
   }
 
+  /** Read the stamped layout; a store predating `_LAYOUT` gets the
+    * defaults it was built with. */
   def readLayout(spark: SparkSession, path: String): StoreLayout = {
     val p = new org.apache.hadoop.fs.Path(s"$path/_LAYOUT")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -362,6 +367,13 @@ object TsdbStore {
     case _ => "slot_ts" // agg_<step> / rate_<step> / quant_<step>
   }
 
+  /** Every dt-partitioned data table a store of `layout` holds: base,
+    * then each step's value, rate and (unless opted out) quantile
+    * levels. The metadata sidecar is not one of them. */
+  private def storeTables(layout: StoreLayout): Seq[String] =
+    "base" +: layout.steps.flatMap(s => Seq(s"agg_$s", s"rate_$s") ++
+      (if (layout.quantiles) Seq(s"quant_$s") else Seq.empty))
+
   /** A fresh entry set's harvested statistics: per-partition
     * [[StoreManifest.EntryStats]] plus per-file
     * [[StoreManifest.FileStats]] (round 16 — the series-key skip
@@ -380,20 +392,18 @@ object TsdbStore {
       h.collect { case (k, (_, f)) if f.nonEmpty => k -> f })
   }
 
-  /** Declared data schemas for freshly written tables, read back from
-    * the written files themselves (one driver-side footer per table
-    * per mutation): the read-back inference is the ground truth the
-    * per-query inference used to produce, so stamping IT into the
-    * snapshot changes nothing about reads except that they no longer
-    * pay the inference. The partition dir is read directly, so the dt
-    * partition column is naturally excluded. */
-  /** Declared schemas for freshly-written segment tables: the column
-    * SET and order come from the files just written, but a field the
-    * previous snapshot already declared keeps its DECLARED StructField
-    * — that is where the evolution identity lives (field id +
-    * physical-name history metadata, [[renameColumn]]), which a raw
-    * footer harvest would silently strip, breaking every pre-rename
-    * segment's reads at the NEXT data commit. */
+  /** Declared data schemas for freshly written segment tables, read
+    * back from the written files themselves (one driver-side footer
+    * per table per mutation): the read-back is the ground truth a
+    * per-query inference would produce, so stamping it into the
+    * snapshot spares reads the inference and changes nothing else.
+    * The partition dir is read directly, so the dt partition column is
+    * naturally excluded. The column SET and order come from the files,
+    * but a field `prev` already declared keeps its DECLARED
+    * StructField — that is where the evolution identity lives (field
+    * id + physical-name history metadata, [[renameColumn]]), which a
+    * raw footer harvest would silently strip, breaking every
+    * pre-rename segment's reads at the NEXT data commit. */
   private def segSchemas(spark: SparkSession, path: String,
                          fresh: Map[(String, String), String],
                          prev: StoreManifest.Snapshot): Map[String, String] =
@@ -880,8 +890,6 @@ object TsdbStore {
                                 keptDts: Set[String]): DataFrame = {
     if (refDts.isEmpty) return df
     val fs = fsOf(spark, path)
-    def dtLits(dts: Seq[String]): Seq[Any] =
-      if (layout.monthly) dts else dts.map(java.sql.Date.valueOf)
     // ref → the kept partitions it attaches to, then per (key, scope)
     val byRef: Seq[(String, Seq[String])] = refDts.groupBy(_._1).view
       .mapValues(_.map(_._2).distinct.sorted).toSeq.sortBy(_._1)
@@ -896,7 +904,7 @@ object TsdbStore {
         val keyPred =
           col("user_id") === lit(uid) && col("event_type") === lit(et)
         if (dts.toSet == keptDts) keyPred // attached everywhere: no dt guard
-        else keyPred && col("dt").isin(dtLits(dts): _*)
+        else keyPred && col("dt").isin(dtLits(layout, dts): _*)
       }.reduce(_ || _)
       df.filter(!pred)
     } else {
@@ -1162,9 +1170,6 @@ object TsdbStore {
     "graft_base_" + digest.take(8).map(b => f"$b%02x").mkString
   }
 
-  /** Batch ingest: normalize an events-shaped feed into the base
-    * measurements table (partitioned by dt, optionally series-bucketed)
-    * + the value-aggregate and rate-aggregate cascades. */
   /** Cascade-maintenance jobs must never have their own base-table
     * reads substituted onto the very agg tables they are rewriting
     * ([[graft.plans.RollupSubstitution]]): force the rewrite flag off
@@ -1179,6 +1184,9 @@ object TsdbStore {
     }
   }
 
+  /** Batch ingest: normalize an events-shaped feed into the base
+    * measurements table (partitioned by dt, optionally series-bucketed)
+    * + the value, quantile and rate cascades ([[buildCascades]]). */
   def ingest(spark: SparkSession, events: DataFrame, path: String,
              layout: StoreLayout = StoreLayout()): Unit = withRollupRewriteOff(spark) {
     if (layout.commit == "manifest") {
@@ -1216,11 +1224,7 @@ object TsdbStore {
             .sortBy("user_id", "event_type", "ts_us")
             .saveAsTable(tmp)
           spark.sql(s"DROP TABLE $tmp")
-        } else
-          clusteredByDt(m, "ts_us")
-            .write.mode(SaveMode.Overwrite)
-            .option("compression", "zstd")
-            .partitionBy("dt").parquet(segBase)
+        } else writeTable(m, "base", segBase)
         buildCascades(spark, s"$path/_segs/$seg", layout)
         Some(rebuiltStore(spark, path, layout, prev, seg, "ingest"))
       }
@@ -1240,15 +1244,7 @@ object TsdbStore {
         .bucketBy(layout.buckets, "user_id", "event_type")
         .sortBy("user_id", "event_type", "ts_us")
         .saveAsTable(name)
-    } else {
-      // cluster rows by (series, ts) inside each date partition: parquet
-      // row-group min/max then prunes BOTH the series filter and the
-      // time range within a day — the offset-addressing story at file level
-      clusteredByDt(m, "ts_us")
-        .write.mode(SaveMode.Overwrite)
-        .option("compression", "zstd")
-        .partitionBy("dt").parquet(s"$path/base")
-    }
+    } else writeTable(m, "base", s"$path/base")
     writeLayout(spark, path, layout)
     buildCascades(spark, path, layout)
     touchDataStamp(spark, path)
@@ -1264,11 +1260,7 @@ object TsdbStore {
                            prev: StoreManifest.Snapshot, seg: String,
                            op: String): StoreManifest.Mutation = {
     val fs = fsOf(spark, path)
-    val tables = "base" +: layout.steps.flatMap(s =>
-      Seq(s"agg_$s", s"rate_$s") ++
-        (if (layout.quantiles) Seq(s"quant_$s") else Seq.empty))
-    val fresh = tables.flatMap(t =>
-      StoreManifest.segEntries(fs, path, seg, t)).toMap
+    val fresh = segFresh(fs, path, layout, seg)
     val h = segStats(fs, path, fresh)
     StoreManifest.Mutation(
       entries = prev.entries.filter(_._1._1 == "meta") ++ fresh,
@@ -1278,6 +1270,12 @@ object TsdbStore {
         segSchemas(spark, path, fresh, prev),
       op = op, dtAdjacency = adjacencyOf(layout))
   }
+
+  /** Every partition segment `seg` holds, over all of the store's data
+    * tables. */
+  private def segFresh(fs: org.apache.hadoop.fs.FileSystem, path: String,
+                       layout: StoreLayout, seg: String): Map[(String, String), String] =
+    storeTables(layout).flatMap(t => StoreManifest.segEntries(fs, path, seg, t)).toMap
 
   /** GLOBAL range clustering on (dt, series, time) for every
     * plain-parquet store-table write (round 16; ingest previously only
@@ -1296,68 +1294,64 @@ object TsdbStore {
     df.repartitionByRange(col("dt"), col("user_id"), col("event_type"), col(timeCol))
       .sortWithinPartitions("dt", "user_id", "event_type", timeCol)
 
-  /** (Re)build every derived table (value + quantile + rate cascades)
-    * from the CURRENT `$root/base` — ingest's second half, shared with
-    * [[upsert]]'s post-swap rebuild. `root` is the store path on the
-    * rename layout, or the not-yet-committed segment dir on the
-    * manifest layout (the whole build stays invisible until the
-    * caller's single manifest publish). */
-  private def buildCascades(spark: SparkSession, path: String,
+  /** The one write of a dt-partitioned store table into its directory
+    * `dir` (`<store>/<table>` on the rename layout, a segment's table
+    * dir on the manifest layout): [[clusteredByDt]] on the table's
+    * time column, overwrite, zstd — so a partition's file layout and
+    * codec never depend on which writer last touched it. */
+  private def writeTable(df: DataFrame, table: String, dir: String): Unit =
+    clusteredByDt(df, timeColOf(table))
+      .write.mode(SaveMode.Overwrite).option("compression", "zstd")
+      .partitionBy("dt").parquet(dir)
+
+  /** The one cascade walker: derives the value (`agg_`), quantile
+    * (`quant_`, unless the layout opts out) and rate (`rate_`) families
+    * at every step and hands each level, with its `dt` column, to
+    * `emit(table, frame)` — [[buildCascades]] emits whole-table writes,
+    * [[upsertIncremental]] touched-partition rewrites.
+    *
+    * The finest value and quantile levels come from `base`. The finest
+    * rate level comes from the wrap-corrected counter deltas of
+    * `window`, keeping only the deltas whose own partition `rateDts`
+    * names (None keeps all): a partial rewrite's window adds each
+    * partition's predecessor, whose last sample feeds the first delta.
+    * Each coarser level comes from its finer level's PERSISTED frame,
+    * never from a re-read of what `emit` wrote (which would pay a
+    * schema inference, and fail on a legitimately empty level). */
+  private def walkCascades(layout: StoreLayout, base: DataFrame, window: DataFrame,
+                           rateDts: Option[Seq[String]])(
+                           emit: (String, DataFrame) => Unit): Unit = {
+    def chain(family: String, finest: DataFrame,
+              coarser: (DataFrame, Long) => DataFrame): Unit =
+      layout.steps.foldLeft(Option.empty[DataFrame]) { (fine, step) =>
+        val level = fine.fold(finest)(coarser(_, step))
+        // computed once for its own write and the next level's derivation
+        if (step != layout.steps.last) level.persist()
+        emit(s"${family}_$step", level.withColumn("dt", dtFromSlot(layout)))
+        fine.foreach(_.unpersist())
+        Some(level)
+      }
+    chain("agg", TimeSeriesOps.downsampleWide(base, layout.steps.head), valueAggCoarser)
+    if (layout.quantiles)
+      chain("quant", quantAggFromBase(base, layout.steps.head), quantAggCoarser)
+    val deltas = validDeltas(window, layout.heartbeatSec)
+    chain("rate", rateAggFromDeltas(rateDts.fold(deltas)(dts =>
+        deltas.filter(col("dt").isin(dtLits(layout, dts): _*))), layout.steps.head),
+      rateAggCoarser)
+  }
+
+  /** (Re)build every derived table from the CURRENT `$root/base` —
+    * ingest's second half, shared with [[upsert]]'s full rebuild: the
+    * [[walkCascades]] walk over the whole base, each level written
+    * whole to `$root/<table>`. `root` is the store path on the rename
+    * layout, or the not-yet-committed segment dir on the manifest
+    * layout (the whole build stays invisible until the caller's single
+    * manifest publish). */
+  private def buildCascades(spark: SparkSession, root: String,
                             layout: StoreLayout): Unit = {
-    val base = spark.read.parquet(s"$path/base")
-
-    // value cascade: finest from base, each coarser from the finer
-    // (never re-scan raw); every level range-clustered on (dt, series,
-    // slot) so its files carry tight series-key stats ([[clusteredByDt]])
-    clusteredByDt(TimeSeriesOps.downsampleWide(base, layout.steps.head)
-        .withColumn("dt", dtFromSlot(layout)), "slot_ts")
-      .write.mode(SaveMode.Overwrite).partitionBy("dt")
-      .parquet(s"$path/agg_${layout.steps.head}")
-    layout.steps.sliding(2).foreach {
-      case Seq(fine, coarse) =>
-        clusteredByDt(valueAggCoarser(spark.read.parquet(s"$path/agg_$fine"), coarse)
-            .withColumn("dt", dtFromSlot(layout)), "slot_ts")
-          .write.mode(SaveMode.Overwrite).partitionBy("dt").parquet(s"$path/agg_$coarse")
-      case _ => ()
-    }
-
-    // quantile cascade: per-slot bottom-k sketches from base, coarser
-    // levels by semilattice merge of the finer (never re-scan raw)
-    if (layout.quantiles) {
-    clusteredByDt(quantAggFromBase(base, layout.steps.head)
-        .withColumn("dt", dtFromSlot(layout)), "slot_ts")
-      .write.mode(SaveMode.Overwrite).partitionBy("dt")
-      .parquet(s"$path/quant_${layout.steps.head}")
-    layout.steps.sliding(2).foreach {
-      case Seq(fine, coarse) =>
-        clusteredByDt(quantAggCoarser(spark.read.parquet(s"$path/quant_$fine"), coarse)
-            .withColumn("dt", dtFromSlot(layout)), "slot_ts")
-          .write.mode(SaveMode.Overwrite).partitionBy("dt").parquet(s"$path/quant_$coarse")
-      case _ => ()
-    }
-    }
-
-    // rate cascade: wrap-corrected deltas from base, then sum upward.
-    // Coarser levels chain off the persisted finer DataFrame (same
-    // rows as the just-written table) rather than re-reading it from
-    // disk — a store whose finest rate level is legitimately EMPTY
-    // (no valid deltas yet) would otherwise fail parquet schema
-    // inference on the re-read.
-    var fineRate = rateAggFromDeltas(
-      validDeltas(base, layout.heartbeatSec), layout.steps.head).persist()
-    clusteredByDt(fineRate.withColumn("dt", dtFromSlot(layout)), "slot_ts")
-      .write.mode(SaveMode.Overwrite).partitionBy("dt")
-      .parquet(s"$path/rate_${layout.steps.head}")
-    layout.steps.sliding(2).foreach {
-      case Seq(_, coarse) =>
-        val next = rateAggCoarser(fineRate, coarse).persist()
-        clusteredByDt(next.withColumn("dt", dtFromSlot(layout)), "slot_ts")
-          .write.mode(SaveMode.Overwrite).partitionBy("dt").parquet(s"$path/rate_$coarse")
-        fineRate.unpersist()
-        fineRate = next
-      case _ => ()
-    }
-    fineRate.unpersist()
+    val base = spark.read.parquet(s"$root/base")
+    walkCascades(layout, base, base, None)((table, df) =>
+      writeTable(df, table, s"$root/$table"))
   }
 
   /** Re-register (in a fresh session's catalog) and return the
@@ -1423,6 +1417,18 @@ object TsdbStore {
     }
   }
 
+  /** One row per (series, event_id) key — the one `by` ranks highest —
+    * with its `carry` columns. */
+  private def pickPerKey(df: DataFrame, carry: Seq[String], by: Column): DataFrame =
+    df.groupBy("user_id", "event_type", "event_id")
+      .agg(max_by(struct(carry.map(col): _*), by).as("r"))
+      .select(col("user_id") +: col("event_type") +: col("event_id") +:
+        carry.map(c => col(s"r.$c").as(c)): _*)
+
+  /** The columns a store row carries beside its (series, event_id) key. */
+  private def carried(df: DataFrame): Seq[String] =
+    df.columns.toSeq.filterNot(Set("user_id", "event_type", "event_id").contains)
+
   /** Deterministic within-batch dedup: two incoming rows with the same
     * (series, event_id) key resolve by lexicographic max over the full
     * carried tuple (ts_us, cents, dt, evolved extras…) — NOT by
@@ -1431,15 +1437,16 @@ object TsdbStore {
     * pick deterministic when evolved columns differ at equal
     * (ts_us, cents)). */
   private def dedupeBatch(incoming: DataFrame): DataFrame = {
-    val carry = incoming.columns.filterNot(
-      Set("user_id", "event_type", "event_id").contains)
-    incoming
-      .groupBy("user_id", "event_type", "event_id")
-      .agg(max_by(struct(carry.map(col): _*),
-        struct(carry.map(col): _*)).as("r"))
-      .select(col("user_id") +: col("event_type") +: col("event_id") +:
-        carry.map(c => col(s"r.$c").as(c)): _*)
+    val carry = carried(incoming)
+    pickPerKey(incoming, carry, struct(carry.map(col): _*))
   }
+
+  /** The upsert merge, shared by [[upsert]] and [[upsertIncremental]]:
+    * last write per (series, event_id) wins — a row of the deduped
+    * `incoming` batch replaces the `existing` row with its key. */
+  private def lastWriteWins(existing: DataFrame, incoming: DataFrame): DataFrame =
+    pickPerKey(existing.withColumn("gen", lit(0))
+      .unionByName(incoming.withColumn("gen", lit(1))), carried(incoming), col("gen"))
 
   /** Idempotent re-ingest of late/replayed rows: last write per
     * (series, event_id) wins — offset-addressing upsert semantics as a
@@ -1469,22 +1476,56 @@ object TsdbStore {
       val existing = manifestRead(spark, path, layout, prev, "base")
         .select(baseCols(extras).map(col): _*)
       val incoming = dedupeBatch(normalize(newEvents, layout, extras))
-      val carry = incoming.columns.filterNot(
-        Set("user_id", "event_type", "event_id").contains)
-      val merged = existing.withColumn("gen", lit(0))
-        .unionByName(incoming.withColumn("gen", lit(1)))
-        .groupBy("user_id", "event_type", "event_id")
-        .agg(max_by(struct(carry.map(col): _*), col("gen")).as("r"))
-        .select(col("user_id") +: col("event_type") +: col("event_id") +:
-          carry.map(c => col(s"r.$c").as(c)): _*)
       val seg = StoreManifest.newSegId()
-      clusteredByDt(merged, "ts_us")
-        .write.mode(SaveMode.Overwrite).option("compression", "zstd")
-        .partitionBy("dt").parquet(StoreManifest.segTableDir(path, seg, "base"))
+      writeTable(lastWriteWins(existing, incoming), "base",
+        StoreManifest.segTableDir(path, seg, "base"))
       buildCascades(spark, s"$path/_segs/$seg", layout)
       Some(rebuiltStore(spark, path, layout, prev, seg, "upsert"))
     }
     touchDataStamp(spark, path)
+  }
+
+  /** One mutation attempt's working snapshot — the partition draft of
+    * [[upsertIncremental]] and [[deleteSeries]]. It starts as the
+    * snapshot the attempt received; each [[rewrite]] writes a table's
+    * new partitions into the attempt's own segment and re-points
+    * exactly the partitions it names (dropping one the rewrite left
+    * empty). It drops those keys' delete refs too, as the publish
+    * carry rule will: the rewrite read through them, so it folded
+    * them. Reads through the draft therefore see what the commit will
+    * publish, while nothing live changes until [[commit]]'s mutation
+    * is published; an abandoned attempt's segment is vacuumable
+    * garbage. */
+  private final class Draft(spark: SparkSession, path: String, layout: StoreLayout,
+                            from: StoreManifest.Snapshot) {
+    val seg: String = StoreManifest.newSegId()
+    private val fs = fsOf(spark, path)
+    private var cur = from
+
+    def snap: StoreManifest.Snapshot = cur
+    def has(table: String): Boolean = cur.entries.keys.exists(_._1 == table)
+    def read(table: String): DataFrame = manifestRead(spark, path, layout, cur, table)
+
+    def rewrite(table: String, df: DataFrame, dts: Seq[String]): Unit = {
+      writeTable(df, table, StoreManifest.segTableDir(path, seg, table))
+      val fresh = StoreManifest.segEntries(fs, path, seg, table)
+      val h = segStats(fs, path, fresh)
+      val keys = dts.map((table, _))
+      def repoint[V](m: Map[(String, String), V], to: Map[(String, String), V]) =
+        m -- keys ++ keys.flatMap(k => to.get(k).map(k -> _))
+      cur = cur.copy(entries = repoint(cur.entries, fresh),
+        stats = repoint(cur.stats, h.stats), files = repoint(cur.files, h.files),
+        dels = cur.dels -- keys)
+    }
+
+    /** The attempt's mutation, or None when no partition changed (no
+      * junk identical snapshot). */
+    def commit(op: String, schemas: Map[String, String],
+               propSets: Map[String, String] = Map.empty): Option[StoreManifest.Mutation] =
+      if (cur.entries == from.entries) None
+      else Some(StoreManifest.Mutation(entries = cur.entries, stats = cur.stats,
+        files = cur.files, schemas = schemas, op = op, propSets = propSets,
+        dtAdjacency = adjacencyOf(layout)))
   }
 
   /** Incremental upsert — the cascade's UPDATE CONTRACT: merge
@@ -1546,18 +1587,14 @@ object TsdbStore {
       s"incremental rate recompute needs heartbeat (${layout.heartbeatSec}s) " +
         s"<= partition span (${partitionSpanSec}s); run a full ingest instead")
     val fs = fsOf(spark, path)
-    // dt partition values as typed filter literals (DATE or STRING)
-    def dtLits(dts: Seq[String]): Seq[Any] =
-      if (layout.monthly) dts else dts.map(java.sql.Date.valueOf)
+    def inDts(dts: Seq[String]): Column = col("dt").isin(dtLits(layout, dts): _*)
 
     var touchedOut: Seq[String] = Seq.empty
 
     /** The whole incremental recompute against ONE snapshot — the unit
       * [[StoreManifest.publishOptimistic]] re-runs on an overlapping
-      * conflict (each attempt writes a fresh segment; abandoned ones
-      * are vacuumable orphans). `work` accumulates the would-be
-      * snapshot and internal reads resolve through it, so the cascades
-      * read the new base before anything is published. */
+      * conflict. Every rewrite lands in the attempt's [[Draft]], so the
+      * cascades read the new base before anything is published. */
     def attempt(snap: StoreManifest.Snapshot): Option[StoreManifest.Mutation] = {
       // exactly-once replay guard: checked BEFORE any Spark job runs,
       // so a re-delivered batch costs one manifest read, not a
@@ -1585,19 +1622,11 @@ object TsdbStore {
       val touched = incoming.select(col("dt").cast("string")).distinct()
         .collect().map(_.getString(0)).sorted.toSeq
       touchedOut = touched
-      var work = snap.entries
-      var workStats = snap.stats
-      var workFiles = snap.files
-      var workSchemas = snap.schemas
-      val seg = StoreManifest.newSegId()
-      def readTbl(table: String): DataFrame =
-        manifestRead(spark, path, layout,
-          snap.copy(entries = work, schemas = workSchemas), table)
-      def tblExists(table: String): Boolean = work.keys.exists(_._1 == table)
+      val d = new Draft(spark, path, layout, snap)
 
-      if (verifyNoPartitionMoves && tblExists("base")) {
-        val moved = readTbl("base")
-          .filter(!col("dt").isin(dtLits(touched): _*))
+      if (verifyNoPartitionMoves && d.has("base")) {
+        val moved = d.read("base")
+          .filter(!inDts(touched))
           .join(incoming.select("user_id", "event_type", "event_id"),
             Seq("user_id", "event_type", "event_id"), "left_semi")
           .limit(1).collect()
@@ -1606,132 +1635,44 @@ object TsdbStore {
             "in an untouched partition (a partition-moving replay) — use upsert()")
       }
 
-      // write df (the given dts only) into this mutation's segment and
-      // point `work` at it — nothing live is touched; the publish below
-      // commits. A recompute that produces NO rows for a dt (e.g. every
-      // delta in it became invalid) legitimately drops the partition.
-      def swapIn(table: String, df: DataFrame, dts: Seq[String]): Unit = {
-        clusteredByDt(df, timeColOf(table))
-          .write.mode(SaveMode.Overwrite).option("compression", "zstd")
-          .partitionBy("dt")
-          .parquet(StoreManifest.segTableDir(path, seg, table))
-        val fresh = StoreManifest.segEntries(fs, path, seg, table)
-        val h = segStats(fs, path, fresh)
-        if (fresh.nonEmpty)
-          workSchemas = workSchemas ++ segSchemas(spark, path, fresh, snap)
-        dts.foreach { dt =>
-          fresh.get((table, dt)) match {
-            case Some(rel) =>
-              work += ((table, dt) -> rel)
-              workStats = workStats ++ h.stats.get((table, dt))
-                .map(((table, dt), _))
-              workFiles = workFiles ++ h.files.get((table, dt))
-                .map(((table, dt), _))
-            case None =>
-              work -= ((table, dt))
-              workStats -= ((table, dt))
-              workFiles -= ((table, dt))
-          }
-        }
-      }
-
       // base: last write wins within the touched partitions only
       // (bootstrap: no base yet ⇒ empty existing side — this makes the
-      // incremental path usable as the streaming ingest sink too)
+      // incremental path usable as the streaming ingest sink too). A
+      // recompute that produces NO rows for a dt (e.g. every delta in
+      // it became invalid) legitimately drops the partition.
       val existing =
-        if (tblExists("base"))
-          readTbl("base")
-            .filter(col("dt").isin(dtLits(touched): _*)) // partition pruning
+        if (d.has("base"))
+          d.read("base").filter(inDts(touched)) // partition pruning
             .select(baseCols(extras).map(col): _*)
         else incoming.filter(lit(false))
-      val carry = incoming.columns.filterNot(
-        Set("user_id", "event_type", "event_id").contains)
-      val merged = existing.withColumn("gen", lit(0))
-        .unionByName(incoming.withColumn("gen", lit(1)))
-        .groupBy("user_id", "event_type", "event_id")
-        .agg(max_by(struct(carry.map(col): _*), col("gen")).as("r"))
-        .select(col("user_id") +: col("event_type") +: col("event_id") +:
-          carry.map(c => col(s"r.$c").as(c)): _*)
-      swapIn("base", merged, touched)
+      d.rewrite("base", lastWriteWins(existing, incoming), touched)
 
-      // value cascade: coarse from fine, touched partitions only
-      val newBase = readTbl("base")
-        .filter(col("dt").isin(dtLits(touched): _*))
-      swapIn(s"agg_${layout.steps.head}",
-        TimeSeriesOps.downsampleWide(newBase, layout.steps.head)
-          .withColumn("dt", dtFromSlot(layout)), touched)
-      layout.steps.sliding(2).foreach {
-        case Seq(fine, coarse) =>
-          val f = readTbl(s"agg_$fine")
-            .filter(col("dt").isin(dtLits(touched): _*))
-          swapIn(s"agg_$coarse",
-            valueAggCoarser(f, coarse).withColumn("dt", dtFromSlot(layout)), touched)
-        case _ => ()
-      }
-
-      // quantile cascade: same touched-partition recompute — every step
-      // divides a day, so sketches never straddle a partition boundary.
-      // Bootstrap ordering matters like the value cascade's: the finest
-      // level is swapped in first, then read back for the coarser merge.
-      if (layout.quantiles) {
-      swapIn(s"quant_${layout.steps.head}",
-        quantAggFromBase(newBase, layout.steps.head)
-          .withColumn("dt", dtFromSlot(layout)), touched)
-      layout.steps.sliding(2).foreach {
-        case Seq(fine, coarse) =>
-          val f = readTbl(s"quant_$fine")
-            .filter(col("dt").isin(dtLits(touched): _*))
-          swapIn(s"quant_$coarse",
-            quantAggCoarser(f, coarse).withColumn("dt", dtFromSlot(layout)), touched)
-        case _ => ()
-      }
-      }
-
-      // rate cascade: the last sample of a touched partition feeds the
-      // FIRST delta of its successor, so successors are recomputed too;
-      // the window reads predecessors for the same reason. All pruned.
-      val baseDts = work.keys.collect { case ("base", dt) => dt }.toSet
+      // cascades: the touched partitions of the value and quantile
+      // families — every step divides a day, so no cell straddles a
+      // partition boundary — and, of the rate family, those PLUS each
+      // one's successor: the last sample of a touched partition feeds
+      // its successor's FIRST delta, so the delta window also reads each
+      // rewritten partition's predecessor. All pruned.
+      val baseDts = d.snap.entries.keys.collect { case ("base", dt) => dt }.toSet
       val rateTouched = (touched ++ touched.map(nextDt(layout, _)))
         .distinct.filter(baseDts.contains).sorted
       val readDts = (rateTouched ++ rateTouched.map(prevDt(layout, _)))
         .distinct.filter(baseDts.contains).sorted
-      val window = readTbl("base")
-        .filter(col("dt").isin(dtLits(readDts): _*))
-      val deltas = validDeltas(window, layout.heartbeatSec)
-        .filter(col("dt").isin(dtLits(rateTouched): _*)) // sample's own partition
-      // coarser levels chain off the persisted finer recompute (identical
-      // rows to the partitions just swapped in) — a disk re-read would
-      // fail on a store whose rate level is still legitimately empty
-      var fineRate = rateAggFromDeltas(deltas, layout.steps.head).persist()
-      swapIn(s"rate_${layout.steps.head}",
-        fineRate.withColumn("dt", dtFromSlot(layout)), rateTouched)
-      layout.steps.sliding(2).foreach {
-        case Seq(_, coarse) =>
-          val next = rateAggCoarser(fineRate, coarse).persist()
-          swapIn(s"rate_$coarse",
-            next.withColumn("dt", dtFromSlot(layout)), rateTouched)
-          fineRate.unpersist()
-          fineRate = next
-        case _ => ()
+      walkCascades(layout, d.read("base").filter(inDts(touched)),
+          d.read("base").filter(inDts(readDts)), Some(rateTouched)) { (table, df) =>
+        d.rewrite(table, df, if (table.startsWith("rate_")) rateTouched else touched)
       }
-      fineRate.unpersist()
       // the single commit point: every table's update above becomes
       // visible to readers at once, or (on a crash before the publish)
       // not at all — the segment is vacuumable garbage. An EMPTY batch
-      // leaves the entry set untouched — skip the publish rather than
-      // committing a junk identical snapshot (an empty STREAMING batch
-      // therefore advances no high-water mark, which is safe:
-      // replaying an empty batch is a no-op by itself)
-      if (work == snap.entries) None
-      else Some(StoreManifest.Mutation(
-        entries = work,
-        stats = workStats,
-        files = workFiles,
-        schemas = workSchemas,
-        op = streamCommit.map(_ => "streamIngest").getOrElse("upsertIncremental"),
+      // leaves the entry set untouched, so the draft commits nothing (an
+      // empty STREAMING batch therefore advances no high-water mark,
+      // which is safe: replaying an empty batch is a no-op by itself)
+      d.commit(streamCommit.map(_ => "streamIngest").getOrElse("upsertIncremental"),
+        schemas = snap.schemas ++
+          segSchemas(spark, path, segFresh(fs, path, layout, d.seg), snap),
         propSets = streamCommit
-          .map { case (ns, b) => s"streamhwm:$ns" -> b.toString }.toMap,
-        dtAdjacency = adjacencyOf(layout)))
+          .map { case (ns, b) => s"streamhwm:$ns" -> b.toString }.toMap)
     }
 
     StoreManifest.publishOptimistic(fs, path, tornGraceMs(spark),
@@ -1788,8 +1729,7 @@ object TsdbStore {
         s"compactPartition: no such partition dt=$dt under $path/$table")
       val rel = s"_segs/${StoreManifest.newSegId()}/$table/dt=$dt"
       manifestRead(spark, path, layout, snap, table)
-        .filter(col("dt") ===
-          (if (layout.monthly) lit(dt) else lit(java.sql.Date.valueOf(dt))))
+        .filter(col("dt").isin(dtLits(layout, Seq(dt)): _*))
         .drop("dt") // encoded by the target directory name (hive layout)
         // range-repartition so multi-file targets stay globally clustered
         // on (series, ts) — plain round-robin would only cluster within
@@ -1859,56 +1799,25 @@ object TsdbStore {
       "deleteSeries rewrites plain parquet partitions, which would destroy " +
         "bucket-file metadata; rewrite the bucketed table via ingest() instead")
     val fs = fsOf(spark, path)
-    def dtLits(dts: Seq[String]): Seq[Any] =
-      if (layout.monthly) dts else dts.map(java.sql.Date.valueOf)
-    val tables = "base" +: layout.steps.flatMap(s =>
-      Seq(s"agg_$s", s"rate_$s", s"quant_$s"))
     var rewritten = Map.empty[String, Seq[String]]
     // the full multi-table anti-filter rewrite against one snapshot —
-    // re-runnable on an optimistic conflict (fresh segment per attempt)
+    // re-runnable on an optimistic conflict (fresh draft per attempt)
     StoreManifest.publishOptimistic(fs, path, tornGraceMs(spark),
         maxCommitAttempts(spark)) { snap =>
-      var work = snap.entries
-      var workStats = snap.stats
-      var workFiles = snap.files
-      val seg = StoreManifest.newSegId()
-      rewritten = tables.filter(t => work.keys.exists(_._1 == t)).map { table =>
-        val t = manifestRead(spark, path, layout, snap.copy(entries = work), table)
-        val touched = t
-          .filter(col("user_id") === userId && col("event_type") === eventType)
+      val d = new Draft(spark, path, layout, snap)
+      val isSeries = col("user_id") === userId && col("event_type") === eventType
+      rewritten = storeTables(layout).filter(d.has).map { table =>
+        val t = d.read(table)
+        val touched = t.filter(isSeries)
           .select(col("dt").cast("string")).distinct()
           .collect().map(_.getString(0)).sorted.toSeq
-        if (touched.nonEmpty) {
-          clusteredByDt(
-            t.filter(col("dt").isin(dtLits(touched): _*))
-              .filter(!(col("user_id") === userId && col("event_type") === eventType)),
-            timeColOf(table))
-            .write.mode(SaveMode.Overwrite).option("compression", "zstd")
-            .partitionBy("dt").parquet(StoreManifest.segTableDir(path, seg, table))
-          val fresh = StoreManifest.segEntries(fs, path, seg, table)
-          val h = segStats(fs, path, fresh)
-          touched.foreach { dt =>
-            fresh.get((table, dt)) match {
-              case Some(rel) =>
-                work += ((table, dt) -> rel)
-                workStats = workStats ++ h.stats.get((table, dt))
-                  .map(((table, dt), _))
-                workFiles = workFiles ++ h.files.get((table, dt))
-                  .map(((table, dt), _))
-              case None => // series was the partition's only content
-                work -= ((table, dt))
-                workStats -= ((table, dt))
-                workFiles -= ((table, dt))
-            }
-          }
-        }
+        // a partition the series was the only content of is dropped
+        if (touched.nonEmpty)
+          d.rewrite(table, t.filter(col("dt").isin(dtLits(layout, touched): _*))
+            .filter(!isSeries), touched)
         table -> touched
       }.toMap
-      if (work == snap.entries) None
-      else Some(StoreManifest.Mutation(
-        entries = work, stats = workStats, files = workFiles,
-        schemas = snap.schemas, op = "deleteSeries",
-        dtAdjacency = adjacencyOf(layout)))
+      d.commit("deleteSeries", snap.schemas)
     }
     touchDataStamp(spark, path)
     rewritten
@@ -2106,13 +2015,10 @@ object TsdbStore {
           !YearMonth.parse(dt).atEndOfMonth().isAfter(cutoffDay.minusDays(1))
         else LocalDate.parse(dt).isBefore(cutoffDay)
       }.getOrElse(false) // skip non-date partitions (__HIVE_DEFAULT_PARTITION__)
-    val tables = "base" +: (layout.steps.map(s => s"agg_$s") ++
-      layout.steps.map(s => s"rate_$s") ++
-      layout.steps.map(s => s"quant_$s"))
     var droppedByTable = Map.empty[String, Seq[String]]
     StoreManifest.publishOptimistic(fsOf(spark, path), path, tornGraceMs(spark),
         maxCommitAttempts(spark)) { snap =>
-      droppedByTable = tables.map { t =>
+      droppedByTable = storeTables(layout).map { t =>
         t -> snap.entries.keys.collect {
           case (`t`, dt) if wholePartitionBefore(dt) => dt
         }.toSeq.sorted

@@ -928,6 +928,22 @@ class ManifestCommitSpec extends SparkSpec {
     try assert(visible().count() == readd.count(),
       "the anti-join path must scope per-partition too")
     finally spark.conf.unset("spark.graft.store.deleteInlineMax")
+    // every table — base AND each cascade level — equals a fresh ingest
+    // of the feed with the key deleted and the re-add applied: the
+    // cascades must derive from the new base rows, not from the
+    // pre-commit view that still carries the re-added partition's refs
+    val truth = freshIngest(events()
+      .filter(!(col("user_id") === 7 && col("event_type") === "click"))
+      .unionByName(readd))
+    def tableRows(p: String, t: String): Seq[String] = {
+      val df = TsdbStore.readTable(spark, p, t)
+      rows(df.select(df.columns.sorted.map(col).toIndexedSeq: _*))
+    }
+    Seq("base", "agg_21600", "agg_86400", "rate_21600", "rate_86400",
+        "quant_21600", "quant_86400").foreach { t =>
+      assert(tableRows(m, t) == tableRows(truth, t),
+        s"$t after delete-then-re-add differs from a fresh ingest")
+    }
   }
 
   test("merge-on-read deleteRows: broadcast anti-join path (inline cap 0) matches the " +

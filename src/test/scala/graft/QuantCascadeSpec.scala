@@ -208,6 +208,13 @@ class QuantCascadeSpec extends SparkSpec {
     TsdbStore.upsertIncremental(spark,
       Tables.events(spark, Sf).limit(5), dir)
     assert(!tables().exists(_.startsWith("quant_")))
+    // maintenance reports only the tables the store holds
+    val dropped = TsdbStore.dropBefore(spark, dir, 1704672000L) // 2024-01-08
+    val deleted = TsdbStore.deleteSeries(spark, dir, 7L, "click")
+    assert(dropped("base").nonEmpty && deleted("base").nonEmpty)
+    val reported = dropped.keySet ++ deleted.keySet
+    assert(!reported.exists(_.startsWith("quant_")), s"quant tables reported: $reported")
+    assert(!tables().exists(_.startsWith("quant_")))
   }
 
   test("fetchQuantile validates its arguments loudly") {

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import scala.util.Random
 
 import org.apache.spark.sql.DataFrame
@@ -22,7 +20,7 @@ import graft.sources.TsdbStore
 class StoreFuzzSpec extends SparkSpec {
 
   private lazy val store: String = {
-    val dir = Files.createTempDirectory("graft_store_fuzz").toString
+    val dir = tempDir("graft_store_fuzz")
     TsdbStore.ingest(spark, Tables.events(spark, Sf), dir)
     dir
   }
@@ -163,7 +161,7 @@ class StoreFuzzSpec extends SparkSpec {
     // the dt=YYYY-MM mapping changes partition pruning, not semantics:
     // the identical raw recomputation must hold for random params
     val monthly = {
-      val dir = Files.createTempDirectory("graft_store_fuzz_monthly").toString
+      val dir = tempDir("graft_store_fuzz_monthly")
       TsdbStore.ingest(spark, Tables.events(spark, Sf), dir,
         graft.sources.StoreLayout(monthly = true))
       dir

@@ -66,6 +66,15 @@ class TsdbStoreSpec extends SparkSpec {
     val parts = new java.io.File(s"$store/base").listFiles()
       .filter(_.getName.startsWith("dt=")).map(_.getName)
     assert(parts.length >= 29, s"expected ~30 daily partitions, got ${parts.length}")
+    // one codec: every data file of every table is zstd, whichever
+    // writer produced it
+    dirs.foreach { t =>
+      val files = org.apache.commons.io.FileUtils
+        .listFiles(new java.io.File(s"$store/$t"), Array("parquet"), true)
+        .toArray.map(_.asInstanceOf[java.io.File].getName)
+      assert(files.nonEmpty, s"$t has no data files")
+      files.foreach(f => assert(f.endsWith(".zstd.parquet"), s"$t/$f is not zstd"))
+    }
   }
 
   test("fetch prunes date partitions (chunk-file addressing for free)") {

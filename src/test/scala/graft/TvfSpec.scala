@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.sources.TsdbStore
@@ -11,7 +9,7 @@ import graft.sources.TsdbStore
 class TvfSpec extends SparkSpec {
 
   private lazy val store: String = {
-    val dir = Files.createTempDirectory("graft_tvf").toString
+    val dir = tempDir("graft_tvf")
     TsdbStore.ingest(spark, Tables.events(spark, Sf), dir)
     dir
   }
