@@ -35,32 +35,25 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // resolving to the SAME pruned logical plan the Scala API builds
     // (partition pruning, cascade reads, cf dispatch all intact).
     // Arguments must be literals: the plan is built at resolution time.
-    ext.injectTableFunction((
-      FunctionIdentifier("graft_fetch"),
-      new ExpressionInfo("graft.sources.TsdbStore", "graft_fetch"),
-      (args: Seq[Expression]) => GraftExtensions.fetchPlan(args)))
+    def tvf(name: String, plan: GraftExtensions.TvfArgs => LogicalPlan): Unit =
+      ext.injectTableFunction((
+        FunctionIdentifier(name),
+        new ExpressionInfo("graft.sources.TsdbStore", name),
+        (args: Seq[Expression]) => plan(new GraftExtensions.TvfArgs(name, args))))
+    tvf("graft_fetch", GraftExtensions.fetchPlan)
     // entry point 3 (POST /bulk) for SQL-only consumers: many series in
     // one pruned scan —
     //   SELECT * FROM graft_fetch_bulk('<store>', begin, end, agg_step,
     //                                  cf, uid1, 'type1'[, uid2, 'type2' …])
-    ext.injectTableFunction((
-      FunctionIdentifier("graft_fetch_bulk"),
-      new ExpressionInfo("graft.sources.TsdbStore", "graft_fetch_bulk"),
-      (args: Seq[Expression]) => GraftExtensions.fetchBulkPlan(args)))
+    tvf("graft_fetch_bulk", GraftExtensions.fetchBulkPlan)
     // the REST-parity dense grid for SQL-only consumers —
     //   SELECT * FROM graft_fetch_filled('<store>', user, 'type', begin,
     //                                    end, agg_step[, cf[, fill]])
-    ext.injectTableFunction((
-      FunctionIdentifier("graft_fetch_filled"),
-      new ExpressionInfo("graft.sources.TsdbStore", "graft_fetch_filled"),
-      (args: Seq[Expression]) => GraftExtensions.fetchFilledPlan(args)))
+    tvf("graft_fetch_filled", GraftExtensions.fetchFilledPlan)
     // bulk dense grids — the last Scala-only read surface:
     //   SELECT * FROM graft_fetch_bulk_filled('<store>', begin, end,
     //     agg_step, cf, uid1, 'type1'[, uid2, 'type2' …])
-    ext.injectTableFunction((
-      FunctionIdentifier("graft_fetch_bulk_filled"),
-      new ExpressionInfo("graft.sources.TsdbStore", "graft_fetch_bulk_filled"),
-      (args: Seq[Expression]) => GraftExtensions.fetchBulkFilledPlan(args)))
+    tvf("graft_fetch_bulk_filled", GraftExtensions.fetchBulkFilledPlan)
     // percentile dashboards from the quantile column family in SQL —
     //   SELECT * FROM graft_fetch_quantile('<store>', user, 'type',
     //                                      begin, end, agg_step, q[, 'disc'|'cont'])
@@ -76,173 +69,147 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // unique dim join and serves the read from quant_<step> exactly
     // like the fixed-arity TVFs do for their shapes. TvfSpec pins the
     // parity; a fixed-arity TVF could only ever cover one grouping.
-    ext.injectTableFunction((
-      FunctionIdentifier("graft_fetch_quantile"),
-      new ExpressionInfo("graft.sources.TsdbStore", "graft_fetch_quantile"),
-      (args: Seq[Expression]) => GraftExtensions.fetchQuantilePlan(args)))
+    tvf("graft_fetch_quantile", GraftExtensions.fetchQuantilePlan)
     // bulk percentiles — the alternating series tail, like graft_fetch_bulk:
     //   SELECT * FROM graft_fetch_bulk_quantile('<store>', begin, end,
     //     agg_step, q, uid1, 'type1'[, uid2, 'type2' …])
-    ext.injectTableFunction((
-      FunctionIdentifier("graft_fetch_bulk_quantile"),
-      new ExpressionInfo("graft.sources.TsdbStore", "graft_fetch_bulk_quantile"),
-      (args: Seq[Expression]) => GraftExtensions.fetchBulkQuantilePlan(args)))
+    tvf("graft_fetch_bulk_quantile", GraftExtensions.fetchBulkQuantilePlan)
     // fleet-wide percentiles —
     //   SELECT * FROM graft_fetch_fleet_quantile('<store>', 'type',
     //                                            begin, end, agg_step, q)
-    ext.injectTableFunction((
-      FunctionIdentifier("graft_fetch_fleet_quantile"),
-      new ExpressionInfo("graft.sources.TsdbStore", "graft_fetch_fleet_quantile"),
-      (args: Seq[Expression]) => GraftExtensions.fetchFleetQuantilePlan(args)))
+    tvf("graft_fetch_fleet_quantile", GraftExtensions.fetchFleetQuantilePlan)
   }
 }
 
 object GraftExtensions {
-  private def strArg(e: Expression): String =
-    String.valueOf(e.eval(org.apache.spark.sql.catalyst.InternalRow.empty))
-  /** 'disc' (nearest-rank, the default) vs 'cont' (interpolated). */
-  private def modeArg(fn: String, e: Expression): Boolean =
-    strArg(e) match {
+  /** One table-function call's arguments, read in the name of the
+    * function `fn` that was called, so every error names that call. */
+  private[graft] final class TvfArgs(fn: String, args: Seq[Expression]) {
+    def length: Int = args.length
+
+    /** The call's shape check: `ok`, and every argument a literal (the
+      * plan is built at resolution time). */
+    def check(ok: Boolean, shape: String): Unit =
+      require(ok && args.forall(_.foldable), s"usage: $fn($shape) with literal arguments")
+
+    private def eval(i: Int): Any =
+      args(i).eval(org.apache.spark.sql.catalyst.InternalRow.empty)
+
+    def str(i: Int): String = String.valueOf(eval(i))
+
+    def long(i: Int): Long = eval(i) match {
+      case l: java.lang.Long => l
+      case n: java.lang.Integer => n.toLong
+      case other => throw new IllegalArgumentException(
+        s"$fn: expected an integer literal, got $other")
+    }
+
+    def double(i: Int): Double = eval(i) match {
+      case d: java.lang.Double => d
+      case f: java.lang.Float => f.toDouble
+      case dec: org.apache.spark.sql.types.Decimal => dec.toDouble
+      case l: java.lang.Long => l.toDouble
+      case n: java.lang.Integer => n.toDouble
+      case other => throw new IllegalArgumentException(
+        s"$fn: expected a numeric literal, got $other")
+    }
+
+    /** 'disc' (nearest-rank, the default) vs 'cont' (interpolated). */
+    def mode(i: Int): Boolean = str(i) match {
       case "cont" => true
       case "disc" => false
       case other => throw new IllegalArgumentException(
         s"$fn: mode must be 'disc' or 'cont', got '$other'")
     }
-  private def longArg(e: Expression): Long =
-    e.eval(org.apache.spark.sql.catalyst.InternalRow.empty) match {
-      case l: java.lang.Long => l
-      case i: java.lang.Integer => i.toLong
-      case other => throw new IllegalArgumentException(
-        s"graft_fetch: expected an integer literal, got $other")
-    }
 
-  private def doubleArg(e: Expression): Double =
-    e.eval(org.apache.spark.sql.catalyst.InternalRow.empty) match {
-      case d: java.lang.Double => d
-      case f: java.lang.Float => f.toDouble
-      case dec: org.apache.spark.sql.types.Decimal => dec.toDouble
-      case l: java.lang.Long => l.toDouble
-      case i: java.lang.Integer => i.toDouble
-      case other => throw new IllegalArgumentException(
-        s"graft_fetch_quantile: expected a numeric literal, got $other")
-    }
+    /** The bulk functions' flat alternating (user_id, event_type) tail
+      * in arguments [from, until) — SQL has no tuple-array literal worth
+      * forcing on callers, and a bulk request list is request-sized by
+      * contract. */
+    def series(from: Int, until: Int): Seq[(Long, String)] =
+      (from until until by 2).map(i => (long(i), str(i + 1)))
+  }
 
   /** Resolve graft_fetch_quantile(...) — the quantile column family's
     * read path for SQL-only consumers (same plan as the Scala API). */
-  private[graft] def fetchQuantilePlan(args: Seq[Expression]): LogicalPlan = {
-    require((args.length == 7 || args.length == 8) && args.forall(_.foldable),
-      "usage: graft_fetch_quantile(path, user_id, event_type, begin_sec, " +
-        "end_sec, agg_step, q[, 'disc'|'cont']) with literal arguments")
-    val interp = args.length == 8 && modeArg("graft_fetch_quantile", args(7))
-    val spark = SparkSession.active
-    graft.sources.TsdbStore.fetchQuantile(spark,
-        strArg(args(0)), longArg(args(1)), strArg(args(2)),
-        longArg(args(3)), longArg(args(4)), longArg(args(5)),
-        doubleArg(args(6)), interp)
+  private[graft] def fetchQuantilePlan(a: TvfArgs): LogicalPlan = {
+    a.check(a.length == 7 || a.length == 8,
+      "path, user_id, event_type, begin_sec, end_sec, agg_step, q[, 'disc'|'cont']")
+    val interp = a.length == 8 && a.mode(7)
+    graft.sources.TsdbStore.fetchQuantile(SparkSession.active,
+        a.str(0), a.long(1), a.str(2), a.long(3), a.long(4), a.long(5), a.double(6), interp)
       .queryExecution.analyzed
   }
 
   /** Resolve graft_fetch_bulk_quantile(...) — bulk percentiles with the
     * flat alternating (user_id, event_type) tail graft_fetch_bulk uses. */
-  private[graft] def fetchBulkQuantilePlan(args: Seq[Expression]): LogicalPlan = {
+  private[graft] def fetchBulkQuantilePlan(a: TvfArgs): LogicalPlan = {
+    a.check(a.length >= 7, "path, begin_sec, end_sec, agg_step, q, user_id, " +
+      "event_type[, user_id, event_type ...][, 'disc'|'cont']")
     // an ODD tail means the last argument is the 'disc'|'cont' mode —
     // it cannot be confused with the alternating (user_id, event_type)
     // pairs, which always come in twos
-    val usage =
-      "usage: graft_fetch_bulk_quantile(path, begin_sec, end_sec, agg_step, " +
-        "q, user_id, event_type[, user_id, event_type ...][, 'disc'|'cont']) " +
-        "with literal arguments"
-    require(args.length >= 7 && args.forall(_.foldable), usage)
-    val (pairArgs, interp) =
-      if ((args.length - 5) % 2 == 1)
-        (args.drop(5).dropRight(1),
-          modeArg("graft_fetch_bulk_quantile", args.last))
-      else (args.drop(5), false)
-    require(pairArgs.nonEmpty && pairArgs.length % 2 == 0, usage)
-    val series = pairArgs.grouped(2).map {
-      case Seq(u, e) => (longArg(u), strArg(e))
-    }.toSeq
-    val spark = SparkSession.active
-    graft.sources.TsdbStore.fetchBulkQuantile(spark,
-        strArg(args(0)), series, longArg(args(1)), longArg(args(2)),
-        longArg(args(3)), doubleArg(args(4)), interp)
+    val moded = (a.length - 5) % 2 == 1
+    graft.sources.TsdbStore.fetchBulkQuantile(SparkSession.active,
+        a.str(0), a.series(5, if (moded) a.length - 1 else a.length),
+        a.long(1), a.long(2), a.long(3), a.double(4), moded && a.mode(a.length - 1))
       .queryExecution.analyzed
   }
 
   /** Resolve graft_fetch_fleet_quantile(...) — fleet percentiles in SQL. */
-  private[graft] def fetchFleetQuantilePlan(args: Seq[Expression]): LogicalPlan = {
-    require((args.length == 6 || args.length == 7) && args.forall(_.foldable),
-      "usage: graft_fetch_fleet_quantile(path, event_type, begin_sec, " +
-        "end_sec, agg_step, q[, 'disc'|'cont']) with literal arguments")
-    val spark = SparkSession.active
-    graft.sources.TsdbStore.fetchFleetQuantile(spark,
-        strArg(args(0)), strArg(args(1)), longArg(args(2)), longArg(args(3)),
-        longArg(args(4)), doubleArg(args(5)),
-        args.length == 7 && modeArg("graft_fetch_fleet_quantile", args(6)))
+  private[graft] def fetchFleetQuantilePlan(a: TvfArgs): LogicalPlan = {
+    a.check(a.length == 6 || a.length == 7,
+      "path, event_type, begin_sec, end_sec, agg_step, q[, 'disc'|'cont']")
+    graft.sources.TsdbStore.fetchFleetQuantile(SparkSession.active,
+        a.str(0), a.str(1), a.long(2), a.long(3), a.long(4), a.double(5),
+        a.length == 7 && a.mode(6))
       .queryExecution.analyzed
   }
 
   /** Resolve graft_fetch(...) literal arguments to the fetch plan. */
-  private[graft] def fetchPlan(args: Seq[Expression]): LogicalPlan = {
-    require(args.length >= 5 && args.length <= 7 && args.forall(_.foldable),
-      "usage: graft_fetch(path, user_id, event_type, begin_sec, end_sec" +
-        "[, agg_step[, cf]]) with literal arguments")
-    val spark = SparkSession.active
-    graft.sources.TsdbStore.fetch(spark,
-        strArg(args(0)), longArg(args(1)), strArg(args(2)),
-        longArg(args(3)), longArg(args(4)),
-        aggStep = if (args.length >= 6) longArg(args(5)) else 0L,
-        cf = if (args.length >= 7) strArg(args(6)) else "average")
+  private[graft] def fetchPlan(a: TvfArgs): LogicalPlan = {
+    a.check(a.length >= 5 && a.length <= 7,
+      "path, user_id, event_type, begin_sec, end_sec[, agg_step[, cf]]")
+    graft.sources.TsdbStore.fetch(SparkSession.active,
+        a.str(0), a.long(1), a.str(2), a.long(3), a.long(4),
+        aggStep = if (a.length >= 6) a.long(5) else 0L,
+        cf = if (a.length >= 7) a.str(6) else "average")
       .queryExecution.analyzed
   }
 
   /** Resolve graft_fetch_bulk(...) literal arguments to the bulk fetch
-    * plan: fixed head (path, begin, end, agg_step, cf) + a flat
-    * alternating (user_id, event_type) tail — SQL has no tuple-array
-    * literal worth forcing on callers, and a bulk request list is
-    * request-sized by contract. */
-  private[graft] def fetchBulkPlan(args: Seq[Expression]): LogicalPlan = {
-    require(args.length >= 7 && (args.length - 5) % 2 == 0 &&
-        args.forall(_.foldable),
-      "usage: graft_fetch_bulk(path, begin_sec, end_sec, agg_step, cf, " +
-        "user_id, event_type[, user_id, event_type ...]) with literal arguments")
-    val series = args.drop(5).grouped(2).map {
-      case Seq(u, e) => (longArg(u), strArg(e))
-    }.toSeq
+    * plan: fixed head (path, begin, end, agg_step, cf) + the flat
+    * alternating series tail ([[TvfArgs.series]]). */
+  private[graft] def fetchBulkPlan(a: TvfArgs): LogicalPlan = {
+    a.check(a.length >= 7 && (a.length - 5) % 2 == 0, "path, begin_sec, end_sec, " +
+      "agg_step, cf, user_id, event_type[, user_id, event_type ...]")
     graft.sources.TsdbStore.fetchBulk(SparkSession.active,
-        strArg(args(0)), series, longArg(args(1)), longArg(args(2)),
-        aggStep = longArg(args(3)), cf = strArg(args(4)))
+        a.str(0), a.series(5, a.length), a.long(1), a.long(2),
+        aggStep = a.long(3), cf = a.str(4))
       .queryExecution.analyzed
   }
 
   /** Resolve graft_fetch_bulk_filled(...) — [[fetchBulkPlan]]'s flat
     * alternating series tail over the dense-grid bulk fetch. */
-  private[graft] def fetchBulkFilledPlan(args: Seq[Expression]): LogicalPlan = {
-    require(args.length >= 7 && (args.length - 5) % 2 == 0 &&
-        args.forall(_.foldable),
-      "usage: graft_fetch_bulk_filled(path, begin_sec, end_sec, agg_step, " +
-        "cf, user_id, event_type[, user_id, event_type ...]) with literal arguments")
-    val series = args.drop(5).grouped(2).map {
-      case Seq(u, e) => (longArg(u), strArg(e))
-    }.toSeq
+  private[graft] def fetchBulkFilledPlan(a: TvfArgs): LogicalPlan = {
+    a.check(a.length >= 7 && (a.length - 5) % 2 == 0, "path, begin_sec, end_sec, " +
+      "agg_step, cf, user_id, event_type[, user_id, event_type ...]")
     graft.sources.TsdbStore.fetchBulkFilled(SparkSession.active,
-        strArg(args(0)), series, longArg(args(1)), longArg(args(2)),
-        aggStep = longArg(args(3)), cf = strArg(args(4)))
+        a.str(0), a.series(5, a.length), a.long(1), a.long(2),
+        aggStep = a.long(3), cf = a.str(4))
       .queryExecution.analyzed
   }
 
   /** Resolve graft_fetch_filled(...) literal arguments to the dense-grid
     * fetch plan (one row per step slot, absent slots NULL or
     * interpolated). */
-  private[graft] def fetchFilledPlan(args: Seq[Expression]): LogicalPlan = {
-    require(args.length >= 6 && args.length <= 8 && args.forall(_.foldable),
-      "usage: graft_fetch_filled(path, user_id, event_type, begin_sec, " +
-        "end_sec, agg_step[, cf[, fill]]) with literal arguments")
+  private[graft] def fetchFilledPlan(a: TvfArgs): LogicalPlan = {
+    a.check(a.length >= 6 && a.length <= 8,
+      "path, user_id, event_type, begin_sec, end_sec, agg_step[, cf[, fill]]")
     graft.sources.TsdbStore.fetchFilled(SparkSession.active,
-        strArg(args(0)), longArg(args(1)), strArg(args(2)),
-        longArg(args(3)), longArg(args(4)), aggStep = longArg(args(5)),
-        cf = if (args.length >= 7) strArg(args(6)) else "average",
-        fill = if (args.length >= 8) strArg(args(7)) else "null")
+        a.str(0), a.long(1), a.str(2), a.long(3), a.long(4), aggStep = a.long(5),
+        cf = if (a.length >= 7) a.str(6) else "average",
+        fill = if (a.length >= 8) a.str(7) else "null")
       .queryExecution.analyzed
   }
 }

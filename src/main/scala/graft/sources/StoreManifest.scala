@@ -301,6 +301,14 @@ object StoreManifest {
     * guards not-yet-referenced table-manifest files from [[vacuum]]. */
   val DefaultTornGraceMs = 60000L
 
+  /** Bounded optimistic-commit attempts per mutation
+    * ([[publishOptimistic]]); exhausting them fails loudly. */
+  val MaxCommitAttempts = 5
+
+  /** How long a vacuum's lease ([[acquireVacuumLease]]) stays live: a
+    * crashed vacuum's lease expires on its own after it. */
+  val VacuumLeaseMs = 600000L
+
   private val HeaderV1 = "graft-manifest v1"
   private val HeaderV2 = "graft-manifest v2"
   private val HeaderV3 = "graft-manifest v3"
@@ -933,7 +941,7 @@ object StoreManifest {
     * either order, that being what disjointness means. */
   def publishOptimistic(fs: FileSystem, path: String,
                         tornGraceMs: Long = DefaultTornGraceMs,
-                        maxAttempts: Int = 5)
+                        maxAttempts: Int = MaxCommitAttempts)
                        (run: Snapshot => Option[Mutation]): Option[Long] = {
     require(maxAttempts >= 1, "maxAttempts must be >= 1")
     // fail fast before the mutation's (possibly expensive) Spark work:

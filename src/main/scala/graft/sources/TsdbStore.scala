@@ -154,9 +154,9 @@ object TsdbStore {
     else LocalDate.parse(dt).plusDays(1).toString
 
   /** Directory-level prune on the dt partition key for a half-open
-    * [beginSec, endSec) range — shared by every read path. Daily dt is
-    * DATE; monthly dt is a 'YYYY-MM' string (lexicographic order ==
-    * chronological order by construction). */
+    * [beginSec, endSec) range — [[rangedRead]]'s, under every fetch.
+    * Daily dt is DATE; monthly dt is a 'YYYY-MM' string (lexicographic
+    * order == chronological order by construction). */
   private def dtPrune(layout: StoreLayout, beginSec: Long, endSec: Long): Column =
     if (layout.monthly)
       col("dt") >= lit(dtOfDay(layout, utcDay(beginSec))) &&
@@ -418,10 +418,6 @@ object TsdbStore {
       }).json
     }.toMap
 
-  /** Bounded optimistic-commit retries ([[StoreManifest.publishOptimistic]]). */
-  private def maxCommitAttempts(spark: SparkSession): Int =
-    spark.conf.get("spark.graft.manifest.maxCommitAttempts", "5").toInt
-
   /** The store's partition-successor mapping, for the optimistic
     * rebase classifier's rate-adjacency closure
     * ([[StoreManifest.Mutation.dtAdjacency]], ADVICE r16 #1). Passed
@@ -459,8 +455,7 @@ object TsdbStore {
       "'dt' is the store's partition column — a data column by that " +
         "name would be ambiguous in every read")
     val fs = fsOf(spark, path)
-    StoreManifest.publishOptimistic(fs, path, tornGraceMs(spark),
-        maxCommitAttempts(spark)) { snap =>
+    StoreManifest.publishOptimistic(fs, path, tornGraceMs(spark)) { snap =>
       require(snap.entries.keys.exists(_._1 == table),
         s"no live table '$table' at $path")
       val cur = snap.schemas.get(table)
@@ -588,8 +583,7 @@ object TsdbStore {
       s"rename/drop apply to the base table's evolved columns; cascade " +
         s"and sidecar shapes are the layout's contract, not a schema patch")
     val fs = fsOf(spark, path)
-    StoreManifest.publishOptimistic(fs, path, tornGraceMs(spark),
-        maxCommitAttempts(spark)) { snap =>
+    StoreManifest.publishOptimistic(fs, path, tornGraceMs(spark)) { snap =>
       require(snap.entries.keys.exists(_._1 == table),
         s"no live table '$table' at $path")
       val cur = snap.schemas.get(table)
@@ -1199,8 +1193,7 @@ object TsdbStore {
       // data table, so it can never rebase past another data mutation)
       val fs = fsOf(spark, path)
       writeLayout(spark, path, layout)
-      StoreManifest.publishOptimistic(fs, path, tornGraceMs(spark),
-          maxCommitAttempts(spark)) { prev =>
+      StoreManifest.publishOptimistic(fs, path, tornGraceMs(spark)) { prev =>
         // a RE-ingest of an evolved store keeps the declared evolved
         // columns (ADVICE r16 #3: normalizing without them silently
         // reverted addColumn — the column vanished from both schema
@@ -1470,8 +1463,7 @@ object TsdbStore {
       "upsert writes plain parquet, which would not honor the bucketed " +
         "table's file layout — rewrite the bucketed table via ingest() instead")
     val fs = fsOf(spark, path)
-    StoreManifest.publishOptimistic(fs, path, tornGraceMs(spark),
-        maxCommitAttempts(spark)) { prev =>
+    StoreManifest.publishOptimistic(fs, path, tornGraceMs(spark)) { prev =>
       val extras = declaredExtras(prev, "base")
       val existing = manifestRead(spark, path, layout, prev, "base")
         .select(baseCols(extras).map(col): _*)
@@ -1622,6 +1614,10 @@ object TsdbStore {
       val touched = incoming.select(col("dt").cast("string")).distinct()
         .collect().map(_.getString(0)).sorted.toSeq
       touchedOut = touched
+      // an EMPTY batch touches no partition: nothing to rewrite, and
+      // nothing to commit (an empty STREAMING batch therefore advances
+      // no high-water mark, which is safe: replaying it is a no-op)
+      if (touched.isEmpty) return None
       val d = new Draft(spark, path, layout, snap)
 
       if (verifyNoPartitionMoves && d.has("base")) {
@@ -1664,10 +1660,7 @@ object TsdbStore {
       }
       // the single commit point: every table's update above becomes
       // visible to readers at once, or (on a crash before the publish)
-      // not at all — the segment is vacuumable garbage. An EMPTY batch
-      // leaves the entry set untouched, so the draft commits nothing (an
-      // empty STREAMING batch therefore advances no high-water mark,
-      // which is safe: replaying an empty batch is a no-op by itself)
+      // not at all — the segment is vacuumable garbage
       d.commit(streamCommit.map(_ => "streamIngest").getOrElse("upsertIncremental"),
         schemas = snap.schemas ++
           segSchemas(spark, path, segFresh(fs, path, layout, d.seg), snap),
@@ -1675,9 +1668,9 @@ object TsdbStore {
           .map { case (ns, b) => s"streamhwm:$ns" -> b.toString }.toMap)
     }
 
-    StoreManifest.publishOptimistic(fs, path, tornGraceMs(spark),
-      maxCommitAttempts(spark))(attempt)
-    touchDataStamp(spark, path)
+    // only a published version changed what readers see
+    if (StoreManifest.publishOptimistic(fs, path, tornGraceMs(spark))(attempt).isDefined)
+      touchDataStamp(spark, path)
     touchedOut
   }
 
@@ -1721,8 +1714,7 @@ object TsdbStore {
             "(expected base | agg_<step> | rate_<step> | quant_<step>)")
     }
     val fs = fsOf(spark, path)
-    StoreManifest.publishOptimistic(fs, path, tornGraceMs(spark),
-        maxCommitAttempts(spark)) { snap =>
+    StoreManifest.publishOptimistic(fs, path, tornGraceMs(spark)) { snap =>
       // fail fast on a typo'd / already-dropped partition — compacting
       // an empty read would otherwise install an empty junk partition
       require(snap.entries.contains((table, dt)),
@@ -1802,8 +1794,7 @@ object TsdbStore {
     var rewritten = Map.empty[String, Seq[String]]
     // the full multi-table anti-filter rewrite against one snapshot —
     // re-runnable on an optimistic conflict (fresh draft per attempt)
-    StoreManifest.publishOptimistic(fs, path, tornGraceMs(spark),
-        maxCommitAttempts(spark)) { snap =>
+    StoreManifest.publishOptimistic(fs, path, tornGraceMs(spark)) { snap =>
       val d = new Draft(spark, path, layout, snap)
       val isSeries = col("user_id") === userId && col("event_type") === eventType
       rewritten = storeTables(layout).filter(d.has).map { table =>
@@ -1874,8 +1865,7 @@ object TsdbStore {
     // as age-gated vacuumable garbage)
     val rel = StoreManifest.writeDeleteFile(fs, path, keys)
     var attached = Map.empty[String, Seq[String]]
-    StoreManifest.publishOptimistic(fs, path, tornGraceMs(spark),
-        maxCommitAttempts(spark)) { snap =>
+    StoreManifest.publishOptimistic(fs, path, tornGraceMs(spark)) { snap =>
       attached = Map.empty
       var dels = snap.dels
       snap.entries.keys.map(_._1).filter(_ != "meta").toSeq.distinct.sorted
@@ -1931,8 +1921,7 @@ object TsdbStore {
       // caller's feed alone), so a conflicting concurrent commit only
       // needs a REBASE unless it also replaced the sidecar — the
       // already-written segment re-points in both orders
-      StoreManifest.publishOptimistic(fs, path, tornGraceMs(spark),
-          maxCommitAttempts(spark)) { prev =>
+      StoreManifest.publishOptimistic(fs, path, tornGraceMs(spark)) { prev =>
         val seg = StoreManifest.newSegId()
         derived.write.mode(SaveMode.Overwrite).option("compression", "zstd")
           .parquet(StoreManifest.segTableDir(path, seg, "meta"))
@@ -1975,19 +1964,13 @@ object TsdbStore {
 
   /** Range fetch with point-in-time metadata attached — the reference's
     * "samples with the IfRef that was valid when they were taken" read:
-    * pruned base scan over [beginSec, endSec) for one event_type (all
-    * series), as-of joined to the sidecar through [[metaAsof]]. */
+    * the ranged base read over [beginSec, endSec) for one event_type
+    * (all series), as-of joined to the sidecar through [[metaAsof]]. */
   def fetchMetaAsof(spark: SparkSession, path: String, eventType: String,
-                    beginSec: Long, endSec: Long): DataFrame = {
-    val meta = storeMeta(spark, path)
-    val layout = meta.layout
-    val samples = readTable(spark, path, meta, "base")
-      .filter(dtPrune(layout, beginSec, endSec)) // partition prune
-      .filter(col("event_type") === eventType)
-      .filter(col("ts_us") >= beginSec * 1000000L && col("ts_us") < endSec * 1000000L)
-      .select("user_id", "event_type", "event_id", "ts_us", "cents")
-    metaAsof(spark, path, samples)
-  }
+                    beginSec: Long, endSec: Long): DataFrame =
+    metaAsof(spark, path, rangedRead(spark, path, storeMeta(spark, path), "base",
+        Seq((None, Some(eventType))), beginSec, endSec)
+      .select("user_id", "event_type", "event_id", "ts_us", "cents"))
 
   /** Retention: drop every base + cascade partition strictly older
     * than `cutoffSec` — the reference's chunk-file deletion policy
@@ -2016,8 +1999,7 @@ object TsdbStore {
         else LocalDate.parse(dt).isBefore(cutoffDay)
       }.getOrElse(false) // skip non-date partitions (__HIVE_DEFAULT_PARTITION__)
     var droppedByTable = Map.empty[String, Seq[String]]
-    StoreManifest.publishOptimistic(fsOf(spark, path), path, tornGraceMs(spark),
-        maxCommitAttempts(spark)) { snap =>
+    StoreManifest.publishOptimistic(fsOf(spark, path), path, tornGraceMs(spark)) { snap =>
       droppedByTable = storeTables(layout).map { t =>
         t -> snap.entries.keys.collect {
           case (`t`, dt) if wholePartitionBefore(dt) => dt
@@ -2063,11 +2045,9 @@ object TsdbStore {
     // then PROVES no commit slipped through — if one somehow did, the
     // error names the possibly-affected commit instead of losing data
     // silently.
-    val leaseMs = spark.conf
-      .get("spark.graft.store.vacuumLeaseMs", "600000").toLong
     val graceMs = spark.conf
       .get("spark.graft.store.vacuumGraceMs", "2000").toLong
-    StoreManifest.acquireVacuumLease(fs, path, leaseMs)
+    StoreManifest.acquireVacuumLease(fs, path, StoreManifest.VacuumLeaseMs)
     try {
       if (graceMs > 0) Thread.sleep(graceMs)
       val v0 = StoreManifest.load(fs, path).version
@@ -2105,6 +2085,46 @@ object TsdbStore {
               schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.read.option("header", "true").schema(schema).csv(path)
 
+  /** The one ranged series read under the whole fetch surface: `table`
+    * restricted to `series` × [beginSec, endSec), UNPROJECTED and
+    * UNORDERED. Each requested series is an optional (user_id,
+    * event_type) equality pair: one keyed pair filters `user_id = u AND
+    * event_type = e`, an event-type-only request `event_type = e`, and
+    * several (always keyed) pairs a struct IN-list. The range becomes
+    * the manifest bounds in [[timeColOf]]'s unit, the dt partition
+    * prune and the row filter; the series request is both the manifest
+    * file-skip hint and the row predicate, so the hint is never
+    * narrower than the filter. `atVersion` reads a retained snapshot
+    * (manifest layout only). */
+  private def rangedRead(spark: SparkSession, path: String, meta: StoreMeta,
+                         table: String, series: Seq[(Option[Long], Option[String])],
+                         beginSec: Long, endSec: Long,
+                         atVersion: Option[Long] = None): DataFrame = {
+    val time = timeColOf(table)
+    val unit = if (time == "slot_ts") 1L else 1000000L
+    val (lo, hi) = (beginSec * unit, endSec * unit)
+    val seriesPred = series match {
+      case Seq((u, e)) =>
+        (u.map(col("user_id") === _) ++ e.map(col("event_type") === _)).reduce(_ && _)
+      case keys => struct(col("user_id"), col("event_type")).isin(keys.map {
+        case (u, e) => struct(lit(u.get), lit(e.get))
+      }: _*)
+    }
+    readTableRange(spark, path, meta, table, Some((lo, hi)), atVersion, Some(series))
+      .filter(dtPrune(meta.layout, beginSec, endSec)) // partition prune
+      .filter(seriesPred)
+      .filter(col(time) >= lo && col(time) < hi)
+  }
+
+  /** A fetch's leading output columns: a bulk frame carries each row's
+    * series key, a single-series or fleet frame does not. */
+  private def keyCols(keyed: Boolean): Seq[String] =
+    if (keyed) Seq("user_id", "event_type") else Nil
+
+  /** A bulk request as [[rangedRead]]'s series request. */
+  private def keyedSeries(series: Seq[(Long, String)]): Seq[(Option[Long], Option[String])] =
+    series.map { case (u, e) => (Some(u), Some(e)) }
+
   /** The flagship read path — GET /snmp/<path>?begin=&end=&agg=&cf=
     * [pub: esxsnmp/newdb.py — unverified]: series filter + half-open
     * time range + consolidation function over the right resolution.
@@ -2117,30 +2137,34 @@ object TsdbStore {
             userId: Long, eventType: String,
             beginSec: Long, endSec: Long,
             aggStep: Long = 0L, cf: String = "average"): DataFrame =
-    fetchOn(spark, path, storeMeta(spark, path), userId, eventType,
-      beginSec, endSec, aggStep, cf)
+    fetchOn(spark, path, storeMeta(spark, path), Seq((userId, eventType)),
+      keyed = false, beginSec, endSec, aggStep, cf, None)
 
-  /** [[fetch]] under already-resolved store metadata. */
+  /** [[fetch]], [[fetchBulk]] and both auto fetches under
+    * already-resolved store metadata: [[seriesRead]] under the fetch
+    * surface's final sort. */
   private def fetchOn(spark: SparkSession, path: String, meta: StoreMeta,
-                      userId: Long, eventType: String,
-                      beginSec: Long, endSec: Long,
-                      aggStep: Long, cf: String): DataFrame = {
-    val layout = meta.layout
-    require(aggStep == 0L || layout.steps.contains(aggStep), s"no such aggregate: $aggStep")
-    if (aggStep == 0L) {
-      gatherSorted(readTableRange(spark, path, meta, "base",
-          Some((beginSec * 1000000L, endSec * 1000000L)),
-          series = Some(Seq((Some(userId), Some(eventType)))))
-        .filter(dtPrune(layout, beginSec, endSec)) // partition prune
-        .filter(col("user_id") === userId && col("event_type") === eventType)
-        .filter(col("ts_us") >= beginSec * 1000000L && col("ts_us") < endSec * 1000000L)
-        .select(col("ts_us"), (col("cents").cast("double") / 100.0).as("value")),
-        "ts_us")
-    } else {
-      gatherSorted(
-        slotRead(spark, path, meta, userId, eventType, beginSec, endSec, aggStep, cf),
-        "slot_ts")
-    }
+                      series: Seq[(Long, String)], keyed: Boolean,
+                      beginSec: Long, endSec: Long, aggStep: Long,
+                      cf: String, atVersion: Option[Long]): DataFrame =
+    gatherSorted(
+      seriesRead(spark, path, meta, series, keyed, beginSec, endSec, aggStep, cf, atVersion),
+      keyCols(keyed) :+ (if (aggStep == 0L) "ts_us" else "slot_ts"): _*)
+
+  /** One raw (`aggStep = 0`: base samples) or consolidated (the cf's
+    * cascade) read of `series`: the ranged read projected to (series
+    * key when `keyed`, time, value), UNORDERED (callers order or join as
+    * they need). */
+  private def seriesRead(spark: SparkSession, path: String, meta: StoreMeta,
+                         series: Seq[(Long, String)], keyed: Boolean,
+                         beginSec: Long, endSec: Long, aggStep: Long,
+                         cf: String, atVersion: Option[Long]): DataFrame = {
+    require(aggStep == 0L || meta.layout.steps.contains(aggStep), s"no such aggregate: $aggStep")
+    val (table, value) =
+      if (aggStep == 0L) ("base", col("cents").cast("double") / 100.0)
+      else { val (family, v) = cfColumn(cf); (s"${family}_$aggStep", v) }
+    rangedRead(spark, path, meta, table, keyedSeries(series), beginSec, endSec, atVersion)
+      .select(keyCols(keyed).map(col) :+ col(timeColOf(table)) :+ value.as("value"): _*)
   }
 
   /** The fetch surface's final ORDER BY: gather the result onto ONE
@@ -2182,22 +2206,9 @@ object TsdbStore {
                     userId: Long, eventType: String,
                     beginSec: Long, endSec: Long,
                     aggStep: Long, q: Double,
-                    interp: Boolean = false): DataFrame = {
-    val meta = storeMeta(spark, path)
-    val layout = meta.layout
-    val t = quantLevelOf(layout, aggStep, q, interp)
-    val ms = udaf(new graft.functions.BottomKMergeState)
-    gatherSorted(readTableRange(spark, path, meta, s"quant_$t", Some((beginSec, endSec)),
-        series = Some(Seq((Some(userId), Some(eventType)))))
-      .filter(dtPrune(layout, beginSec, endSec))
-      .filter(col("user_id") === userId && col("event_type") === eventType)
-      .filter(col("slot_ts") >= beginSec && col("slot_ts") < endSec)
-      .groupBy((expr(s"slot_ts div $aggStep") * aggStep).as("slot_ts"))
-      .agg(ms(col("pri"), col("value")).as("sk"))
-      .select(col("slot_ts"),
-        (if (interp) quantContRead(q) else quantRankRead(q)).as("value")),
-      "slot_ts")
-  }
+                    interp: Boolean = false): DataFrame =
+    quantileOn(spark, path, Seq((Some(userId), Some(eventType))), keyed = false,
+      beginSec, endSec, aggStep, q, interp)
 
   /** Fleet-wide percentile: merge the quant sketches across EVERY
     * series of an event_type (and across slots up to the requested
@@ -2210,31 +2221,52 @@ object TsdbStore {
                          eventType: String,
                          beginSec: Long, endSec: Long,
                          aggStep: Long, q: Double,
-                         interp: Boolean = false): DataFrame = {
-    val meta = storeMeta(spark, path)
-    val layout = meta.layout
-    val t = quantLevelOf(layout, aggStep, q, interp)
-    val ms = udaf(new graft.functions.BottomKMergeState)
-    gatherSorted(readTableRange(spark, path, meta, s"quant_$t", Some((beginSec, endSec)),
-        series = Some(Seq((None, Some(eventType)))))
-      .filter(dtPrune(layout, beginSec, endSec))
-      .filter(col("event_type") === eventType)
-      .filter(col("slot_ts") >= beginSec && col("slot_ts") < endSec)
-      .groupBy((expr(s"slot_ts div $aggStep") * aggStep).as("slot_ts"))
-      .agg(ms(col("pri"), col("value")).as("sk"))
-      .select(col("slot_ts"),
-        (if (interp) quantContRead(q) else quantRankRead(q)).as("value"),
-        size(col("sk.value")).as("n_sample")),
-      "slot_ts")
+                         interp: Boolean = false): DataFrame =
+    quantileOn(spark, path, Seq((None, Some(eventType))), keyed = false,
+      beginSec, endSec, aggStep, q, interp, size(col("sk.value")).as("n_sample"))
+
+  /** [[fetchQuantile]] for MANY series in one pruned scan — the bulk
+    * percentile twin of [[fetchBulk]]: a struct IN-list of series keys
+    * over the same `quant_<t>` scan, per-(series, slot) semilattice
+    * merge, one nearest-rank read each. Returns (user_id, event_type,
+    * slot_ts, value). */
+  def fetchBulkQuantile(spark: SparkSession, path: String,
+                        series: Seq[(Long, String)],
+                        beginSec: Long, endSec: Long,
+                        aggStep: Long, q: Double,
+                        interp: Boolean = false): DataFrame = {
+    require(series.nonEmpty, "empty series request")
+    quantileOn(spark, path, keyedSeries(series), keyed = true,
+      beginSec, endSec, aggStep, q, interp)
   }
 
-  /** Shared by [[fetchQuantile]]/[[fetchBulkQuantile]]: validate the
-    * request and pick the coarsest materialized level dividing the
-    * requested slot. Unlike [[fetch]], there is no aggStep = 0 raw
-    * path — a quantile over raw samples IS the sketch read (sub-K
-    * exact), so a zero/negative step is a caller error, not a mode. */
+  /** Every percentile read's plan: the ranged `quant_<t>` read, its
+    * stored sketches merged per (series key when `keyed`, requested
+    * slot), the quantile read off each merged sample, then any `extra`
+    * columns off the same sample. */
+  private def quantileOn(spark: SparkSession, path: String,
+                         series: Seq[(Option[Long], Option[String])], keyed: Boolean,
+                         beginSec: Long, endSec: Long, aggStep: Long, q: Double,
+                         interp: Boolean, extra: Column*): DataFrame = {
+    val meta = storeMeta(spark, path)
+    val t = quantLevelOf(meta.layout, aggStep, q, interp)
+    val ms = udaf(new graft.functions.BottomKMergeState)
+    val keys = keyCols(keyed).map(col)
+    gatherSorted(rangedRead(spark, path, meta, s"quant_$t", series, beginSec, endSec)
+      .groupBy(keys :+ (expr(s"slot_ts div $aggStep") * aggStep).as("slot_ts"): _*)
+      .agg(ms(col("pri"), col("value")).as("sk"))
+      .select(keys ++ Seq(col("slot_ts"),
+        (if (interp) quantContRead(q) else quantRankRead(q)).as("value")) ++ extra: _*),
+      keyCols(keyed) :+ "slot_ts": _*)
+  }
+
+  /** Shared by every percentile read: validate the request and pick
+    * the coarsest materialized level dividing the requested slot.
+    * Unlike [[fetch]], there is no aggStep = 0 raw path — a quantile
+    * over raw samples IS the sketch read (sub-K exact), so a
+    * zero/negative step is a caller error, not a mode. */
   private def quantLevelOf(layout: StoreLayout, aggStep: Long, q: Double,
-                           interp: Boolean = false): Long = {
+                           interp: Boolean): Long = {
     require(layout.quantiles,
       "this store was built with quantiles = false (no quant_<step> " +
         "column family); re-ingest with quantiles on to serve percentile reads")
@@ -2282,44 +2314,12 @@ object TsdbStore {
         + (pos - lower.cast("double")) * vHi) / 100.0
   }
 
-  /** [[fetchQuantile]] for MANY series in one pruned scan — the bulk
-    * percentile twin of [[fetchBulk]]: a struct IN-list of series keys
-    * over the same `quant_<t>` scan, per-(series, slot) semilattice
-    * merge, one nearest-rank read each. Returns (user_id, event_type,
-    * slot_ts, value). */
-  def fetchBulkQuantile(spark: SparkSession, path: String,
-                        series: Seq[(Long, String)],
-                        beginSec: Long, endSec: Long,
-                        aggStep: Long, q: Double,
-                        interp: Boolean = false): DataFrame = {
-    val meta = storeMeta(spark, path)
-    val layout = meta.layout
-    require(series.nonEmpty, "empty series request")
-    val t = quantLevelOf(layout, aggStep, q, interp)
-    val keys = series.map { case (u, e) => struct(lit(u), lit(e)) }
-    val ms = udaf(new graft.functions.BottomKMergeState)
-    // readTableRange, NOT a direct $path/quant_$t read: the direct
-    // read bypassed manifest resolution entirely — on a manifest store
-    // this path failed on the missing live directory (round-15 find)
-    gatherSorted(readTableRange(spark, path, meta, s"quant_$t", Some((beginSec, endSec)),
-        series = Some(series.map { case (u, e) => (Some(u), Some(e)) }))
-      .filter(dtPrune(layout, beginSec, endSec))
-      .filter(struct(col("user_id"), col("event_type")).isin(keys: _*))
-      .filter(col("slot_ts") >= beginSec && col("slot_ts") < endSec)
-      .groupBy(col("user_id"), col("event_type"),
-        (expr(s"slot_ts div $aggStep") * aggStep).as("slot_ts"))
-      .agg(ms(col("pri"), col("value")).as("sk"))
-      .select(col("user_id"), col("event_type"), col("slot_ts"),
-        (if (interp) quantContRead(q) else quantRankRead(q)).as("value")),
-      "user_id", "event_type", "slot_ts")
-  }
-
   /** cf → (cascade family, value expression), shared by every
-    * consolidated read path ([[fetch]], [[fetchBulk]], [[fetchFilled]]).
-    * Value cfs {average, min, max, sum, raw} read `agg_<step>`; the
-    * endpoint cfs {first, last} (round 10 — RRD's LAST consolidation
-    * and its mirror) read the stored per-cell argmin/argmax structs of
-    * the same table; counter cfs {delta, rate} read `rate_<step>`. */
+    * consolidated read ([[seriesRead]]). Value cfs {average, min, max,
+    * sum, raw} read `agg_<step>`; the endpoint cfs {first, last} (round
+    * 10 — RRD's LAST consolidation and its mirror) read the stored
+    * per-cell argmin/argmax structs of the same table; counter cfs
+    * {delta, rate} read `rate_<step>`. */
   private def cfColumn(cf: String): (String, Column) = cf match {
     case "average" => ("agg", col("sum_cents").cast("double") / 100.0 / col("n").cast("double"))
     case "min"     => ("agg", col("min_cents").cast("double") / 100.0)
@@ -2335,23 +2335,6 @@ object TsdbStore {
     case other     => throw new IllegalArgumentException(s"unknown cf: $other")
   }
 
-  /** One-series consolidated read: pruned cascade scan → (slot_ts,
-    * value), UNORDERED (callers order or join as they need). */
-  private def slotRead(spark: SparkSession, path: String, meta: StoreMeta,
-                       userId: Long, eventType: String,
-                       beginSec: Long, endSec: Long,
-                       aggStep: Long, cf: String): DataFrame = {
-    val layout = meta.layout
-    val (table, cfCol) = cfColumn(cf)
-    readTableRange(spark, path, meta, s"${table}_$aggStep",
-        Some((beginSec, endSec)),
-        series = Some(Seq((Some(userId), Some(eventType)))))
-      .filter(dtPrune(layout, beginSec, endSec))
-      .filter(col("user_id") === userId && col("event_type") === eventType)
-      .filter(col("slot_ts") >= beginSec && col("slot_ts") < endSec)
-      .select(col("slot_ts"), cfCol.as("value"))
-  }
-
   /** Dense-slot fetch — the REST-parity read shape [pub: esxsnmp
     * newdb.py JSON `data:[[ts,v],…]` — unverified, SURVEY.md §0]: one
     * row per step slot over the requested range, present slots carrying
@@ -2359,36 +2342,18 @@ object TsdbStore {
     * linearly interpolated between their nearest valid neighbours
     * (`fill = "interp"`; leading/trailing gaps stay NULL — no
     * extrapolation). The grid covers every step slot overlapping
-    * [beginSec, endSec): the first slot is beginSec floor-aligned.
-    *
-    * Scale shape: the grid is a `spark.range` generator (nothing
-    * driver-sized, no cross join); the store side is the same pruned
-    * cascade read as [[fetch]] (PartitionFilters intact —
-    * PlanAuditSpec), and re-attaches to the grid by a broadcast hash
-    * join on slot_ts — the fetched side carries ≤ one row per grid
-    * slot by construction, so it is the small side; past the
-    * [[fillBroadcastCells]] gate (a multi-year raw-step request) the
-    * re-attach falls back to a shuffle join instead of pushing the
-    * broadcast ceiling. The interp
-    * pass is two RUNNING window frames over the grid — O(slots), the
-    * same trees as q_ts_gap_interp (§7.4: UNROUNDED; identical IEEE
-    * expression trees are bit-equal cross-engine). */
+    * [beginSec, endSec): the first slot is beginSec floor-aligned
+    * ([[filledOn]] builds it). The interp pass is two RUNNING window
+    * frames over the grid — O(slots), the same trees as
+    * q_ts_gap_interp (§7.4: UNROUNDED; identical IEEE expression trees
+    * are bit-equal cross-engine). */
   def fetchFilled(spark: SparkSession, path: String,
                   userId: Long, eventType: String,
                   beginSec: Long, endSec: Long,
                   aggStep: Long, cf: String = "average",
                   fill: String = "null"): DataFrame = {
-    val meta = storeMeta(spark, path)
-    val layout = meta.layout
-    require(layout.steps.contains(aggStep),
-      s"fetchFilled needs a materialized slot resolution, got $aggStep (steps: ${layout.steps})")
-    require(endSec > beginSec, s"empty range: [$beginSec, $endSec)")
-    val firstSlot = Math.floorDiv(beginSec, aggStep) * aggStep
-    val grid = spark.range(firstSlot, endSec, aggStep).select(col("id").as("slot_ts"))
-    val present =
-      slotRead(spark, path, meta, userId, eventType, firstSlot, endSec, aggStep, cf)
-    val cells = Math.floorDiv(endSec - firstSlot + aggStep - 1, aggStep)
-    val filled = gridAttach(spark, grid, present, Seq("slot_ts"), cells)
+    val (cells, filled) =
+      filledOn(spark, path, Seq((userId, eventType)), keyed = false, beginSec, endSec, aggStep, cf)
     fill match {
       case "null" => gatherSorted(filled, "slot_ts")
       case "interp" =>
@@ -2440,14 +2405,43 @@ object TsdbStore {
   private def fillBroadcastCells(spark: SparkSession): Long =
     spark.conf.get("spark.graft.fill.broadcastCells", "2000000").toLong
 
-  /** LEFT-join the dense grid to the fetched side: broadcast while the
-    * grid is request-sized, shuffle join past the gate. */
-  private def gridAttach(spark: SparkSession, grid: DataFrame,
-                         present: DataFrame, keys: Seq[String],
-                         cells: Long): DataFrame =
-    if (cells <= fillBroadcastCells(spark))
-      grid.join(broadcast(present), keys, "left")
-    else grid.join(present, keys, "left")
+  /** The filled fetches' dense grid, UNORDERED, with its cell count:
+    * one row per (requested series, step slot) over [begin, end), the
+    * first slot beginSec floor-aligned, absent slots NULL. Scale shape:
+    * the grid is a `spark.range` generator (a bulk request's literal
+    * series list is exploded onto it — request-sized, never
+    * corpus-sized; nothing driver-sized, no cross join); the store side
+    * is [[seriesRead]]'s pruned cascade read (PartitionFilters intact —
+    * PlanAuditSpec), re-attached by a broadcast LEFT join on the grid
+    * keys — it carries ≤ one row per grid cell by construction, so it is
+    * the small side — or, past the [[fillBroadcastCells]] gate (a
+    * multi-year raw-step request), by a shuffle join instead of pushing
+    * the broadcast ceiling. */
+  private def filledOn(spark: SparkSession, path: String,
+                       series: Seq[(Long, String)], keyed: Boolean,
+                       beginSec: Long, endSec: Long, aggStep: Long,
+                       cf: String): (Long, DataFrame) = {
+    val meta = storeMeta(spark, path)
+    val layout = meta.layout
+    require(layout.steps.contains(aggStep),
+      s"${if (keyed) "fetchBulkFilled" else "fetchFilled"} needs a materialized " +
+        s"slot resolution, got $aggStep (steps: ${layout.steps})")
+    require(endSec > beginSec, s"empty range: [$beginSec, $endSec)")
+    val firstSlot = Math.floorDiv(beginSec, aggStep) * aggStep
+    val slots = spark.range(firstSlot, endSec, aggStep)
+    val grid =
+      if (!keyed) slots.select(col("id").as("slot_ts"))
+      else slots.select(explode(array(series.map { case (u, e) =>
+          struct(lit(u).as("user_id"), lit(e).as("event_type")) }: _*)).as("k"),
+          col("id").as("slot_ts"))
+        .select(col("k.user_id"), col("k.event_type"), col("slot_ts"))
+    val present = seriesRead(spark, path, meta, series, keyed, firstSlot, endSec, aggStep, cf, None)
+    val cells = Math.floorDiv(endSec - firstSlot + aggStep - 1, aggStep) * series.length
+    val keys = keyCols(keyed) :+ "slot_ts"
+    (cells,
+      if (cells <= fillBroadcastCells(spark)) grid.join(broadcast(present), keys, "left")
+      else grid.join(present, keys, "left"))
+  }
 
   /** Best-aggregate selection — the reference picked, for a requested
     * output resolution, the COARSEST materialized aggregate that still
@@ -2460,20 +2454,23 @@ object TsdbStore {
   def fetchAuto(spark: SparkSession, path: String,
                 userId: Long, eventType: String,
                 beginSec: Long, endSec: Long,
-                resolutionSec: Long, cf: String = "average"): (Long, DataFrame) = {
-    val meta = storeMeta(spark, path)
-    val step = bestStep(meta.layout, resolutionSec)
-    (step, fetchOn(spark, path, meta, userId, eventType, beginSec, endSec, step, cf))
-  }
+                resolutionSec: Long, cf: String = "average"): (Long, DataFrame) =
+    autoOn(spark, path, Seq((userId, eventType)), keyed = false,
+      beginSec, endSec, resolutionSec, cf)
 
-  /** The coarsest materialized step that still divides the requested
-    * output resolution evenly; 0 (raw samples) when none does. */
-  private def bestStep(layout: StoreLayout, resolutionSec: Long): Long = {
+  /** [[fetchAuto]]'s step choice — the coarsest materialized step that
+    * still divides the requested output resolution evenly; 0 (raw
+    * samples) when none does — over [[fetchOn]]. */
+  private def autoOn(spark: SparkSession, path: String,
+                     series: Seq[(Long, String)], keyed: Boolean,
+                     beginSec: Long, endSec: Long,
+                     resolutionSec: Long, cf: String): (Long, DataFrame) = {
     require(resolutionSec > 0, s"resolutionSec must be positive: $resolutionSec")
-    layout.steps.filter(s => s <= resolutionSec && resolutionSec % s == 0)
+    val meta = storeMeta(spark, path)
+    val step = meta.layout.steps.filter(s => s <= resolutionSec && resolutionSec % s == 0)
       .maxOption.getOrElse(0L)
+    (step, fetchOn(spark, path, meta, series, keyed, beginSec, endSec, step, cf, None))
   }
-
 
   /** Bulk fetch (POST /bulk): many series in one plan — a single
     * pruned scan with an IN-list of series keys, not a per-series
@@ -2491,87 +2488,26 @@ object TsdbStore {
                 beginSec: Long, endSec: Long, aggStep: Long,
                 cf: String = "average",
                 atVersion: Option[Long] = None): DataFrame =
-    fetchBulkOn(spark, path, storeMeta(spark, path), series, beginSec, endSec,
-      aggStep, cf, atVersion)
+    fetchOn(spark, path, storeMeta(spark, path), series, keyed = true,
+      beginSec, endSec, aggStep, cf, atVersion)
 
-  /** [[fetchBulk]] under already-resolved store metadata. */
-  private def fetchBulkOn(spark: SparkSession, path: String, meta: StoreMeta,
-                          series: Seq[(Long, String)],
-                          beginSec: Long, endSec: Long, aggStep: Long,
-                          cf: String, atVersion: Option[Long]): DataFrame =
-    gatherSorted(bulkRead(spark, path, meta, series, beginSec, endSec, aggStep, cf, atVersion),
-      "user_id", "event_type", if (aggStep == 0L) "ts_us" else "slot_ts")
-
-  /** [[fetchBulk]]'s single pruned scan, UNORDERED (callers order or
-    * join as they need). */
-  private def bulkRead(spark: SparkSession, path: String, meta: StoreMeta,
-                       series: Seq[(Long, String)],
-                       beginSec: Long, endSec: Long, aggStep: Long,
-                       cf: String, atVersion: Option[Long]): DataFrame = {
-    val layout = meta.layout
-    require(aggStep == 0L || layout.steps.contains(aggStep), s"no such aggregate: $aggStep")
-    val keys = series.map { case (u, e) => struct(lit(u), lit(e)) }
-    val seriesHint = Some(series.map { case (u, e) => (Some(u), Some(e)) })
-    if (aggStep == 0L)
-      readTableRange(spark, path, meta, "base",
-          Some((beginSec * 1000000L, endSec * 1000000L)), atVersion, seriesHint)
-        .filter(dtPrune(layout, beginSec, endSec)) // partition prune
-        .filter(struct(col("user_id"), col("event_type")).isin(keys: _*))
-        .filter(col("ts_us") >= beginSec * 1000000L && col("ts_us") < endSec * 1000000L)
-        .select(col("user_id"), col("event_type"), col("ts_us"),
-          (col("cents").cast("double") / 100.0).as("value"))
-    else {
-      val (table, cfCol) = cfColumn(cf)
-      readTableRange(spark, path, meta, s"${table}_$aggStep",
-          Some((beginSec, endSec)), atVersion, seriesHint)
-        .filter(dtPrune(layout, beginSec, endSec)) // partition prune
-        .filter(struct(col("user_id"), col("event_type")).isin(keys: _*))
-        .filter(col("slot_ts") >= beginSec && col("slot_ts") < endSec)
-        .select(col("user_id"), col("event_type"), col("slot_ts"),
-          cfCol.as("value"))
-    }
-  }
-
-  /** Bulk DENSE-slot fetch — [[fetchFilled]]'s REST-parity grid for
-    * MANY series in one pruned scan: one row per (requested series,
-    * step slot) over [begin, end), absent slots NULL. The grid is a
-    * range generator exploded onto the literal request list (a bulk
-    * request names tens of series — request-sized, never corpus-sized);
-    * the store side is [[fetchBulk]]'s single-scan plan, re-attached by
-    * a broadcast join (≤ one row per grid cell by construction, so the
-    * fetched side is the small side) — or a shuffle join past the
-    * [[fillBroadcastCells]] gate. */
+  /** Bulk DENSE-slot fetch — [[fetchFilled]]'s REST-parity grid
+    * ([[filledOn]]) for MANY series in one pruned scan: one row per
+    * (requested series, step slot) over [begin, end), absent slots
+    * NULL. */
   def fetchBulkFilled(spark: SparkSession, path: String,
                       series: Seq[(Long, String)],
                       beginSec: Long, endSec: Long, aggStep: Long,
-                      cf: String = "average"): DataFrame = {
-    val meta = storeMeta(spark, path)
-    val layout = meta.layout
-    require(layout.steps.contains(aggStep),
-      s"fetchBulkFilled needs a materialized slot resolution, got $aggStep (steps: ${layout.steps})")
-    require(endSec > beginSec, s"empty range: [$beginSec, $endSec)")
-    val firstSlot = Math.floorDiv(beginSec, aggStep) * aggStep
-    val keys = series.map { case (u, e) =>
-      struct(lit(u).as("user_id"), lit(e).as("event_type")) }
-    val grid = spark.range(firstSlot, endSec, aggStep)
-      .select(explode(array(keys: _*)).as("k"), col("id").as("slot_ts"))
-      .select(col("k.user_id"), col("k.event_type"), col("slot_ts"))
-    val present = bulkRead(spark, path, meta, series, firstSlot, endSec, aggStep, cf, None)
-    val cells =
-      Math.floorDiv(endSec - firstSlot + aggStep - 1, aggStep) * series.length
+                      cf: String = "average"): DataFrame =
     gatherSorted(
-      gridAttach(spark, grid, present, Seq("user_id", "event_type", "slot_ts"), cells),
+      filledOn(spark, path, series, keyed = true, beginSec, endSec, aggStep, cf)._2,
       "user_id", "event_type", "slot_ts")
-  }
 
   /** Bulk best-aggregate selection — [[fetchAuto]]'s step choice over
     * [[fetchBulk]]'s many-series single-scan plan. */
   def fetchBulkAuto(spark: SparkSession, path: String,
                     series: Seq[(Long, String)],
                     beginSec: Long, endSec: Long,
-                    resolutionSec: Long, cf: String = "average"): (Long, DataFrame) = {
-    val meta = storeMeta(spark, path)
-    val step = bestStep(meta.layout, resolutionSec)
-    (step, fetchBulkOn(spark, path, meta, series, beginSec, endSec, step, cf, None))
-  }
+                    resolutionSec: Long, cf: String = "average"): (Long, DataFrame) =
+    autoOn(spark, path, series, keyed = true, beginSec, endSec, resolutionSec, cf)
 }

@@ -165,10 +165,17 @@ class ManifestCommitSpec extends SparkSpec {
       rows(TsdbStore.fetch(spark, r, 7L, "click", B, E, 86400L, "delta")))
     assert(rows(TsdbStore.fetchQuantile(spark, m, 7L, "click", B, E, 86400L, 0.5)) ==
       rows(TsdbStore.fetchQuantile(spark, r, 7L, "click", B, E, 86400L, 0.5)))
-    // an EMPTY batch must not commit a junk identical snapshot
+    // an EMPTY batch must not commit a junk identical snapshot, write a
+    // segment, or retire the store's cached metadata
     val count = manifestCount(m)
+    val fs = new org.apache.hadoop.fs.Path(m)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def segCount(): Int = fs.listStatus(new org.apache.hadoop.fs.Path(s"$m/_segs")).length
+    val (segs, stamp) = (segCount(), TsdbStore.readDataStamp(spark, m))
     TsdbStore.upsertIncremental(spark, replay().filter(lit(false)), m)
     assert(manifestCount(m) == count, "empty upsert published a snapshot")
+    assert(segCount() == segs, "empty upsert wrote a segment")
+    assert(TsdbStore.readDataStamp(spark, m) == stamp, "empty upsert bumped the data stamp")
   }
 
   test("compaction: same rows, fewer live files, old files wait for vacuum") {

@@ -1,10 +1,6 @@
 import java.nio.file.{Files, Paths}
 object PlanDump extends App {
-  val spark = org.apache.spark.sql.SparkSession.builder().master("local[4]")
-    .withExtensions(new graft.GraftExtensions)
-    .config("spark.sql.session.timeZone","UTC").config("spark.ui.enabled","false")
-    .config("spark.sql.parquet.inferTimestampNTZ.enabled","false")
-    .config("spark.sql.shuffle.partitions","4").getOrCreate()
+  val spark = graft.TestSpark.spark
   spark.sparkContext.setLogLevel("ERROR")
   val d = "/root/testdata/sf0.001"
   val picks = Seq(

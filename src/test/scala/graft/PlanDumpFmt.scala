@@ -5,19 +5,16 @@ import java.nio.file.{Files, Paths}
   * plans/r18). Args:
   *   arg0 = suffix ("before" / "after"), default "before"
   *   arg1 = comma-separated query ids, default ALL declared ids
-  * Uses the BENCH session shape (local[4] is plan-equivalent; the
-  * partition count only changes Exchange arity, not shape).
+  * Uses the test suites' session ([[graft.TestSpark]]; local[4] is
+  * plan-equivalent to the bench session — the partition count only
+  * changes Exchange arity, not shape).
   */
 object PlanDumpFmt extends App {
   val suffix = if (args.nonEmpty) args(0) else "before"
   val only: Option[Set[String]] =
     if (args.length > 1) Some(args(1).split(",").map(_.trim).filter(_.nonEmpty).toSet)
     else None
-  val spark = org.apache.spark.sql.SparkSession.builder().master("local[4]")
-    .withExtensions(new graft.GraftExtensions)
-    .config("spark.sql.session.timeZone", "UTC").config("spark.ui.enabled", "false")
-    .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    .config("spark.sql.shuffle.partitions", "4").getOrCreate()
+  val spark = graft.TestSpark.spark
   spark.sparkContext.setLogLevel("ERROR")
   val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
   val dir = sys.env.getOrElse("PLAN_DIR", "plans/r18")

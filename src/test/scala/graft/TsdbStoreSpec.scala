@@ -129,13 +129,46 @@ class TsdbStoreSpec extends SparkSpec {
 
   test("bulk fetch at aggStep=0 serves raw samples (per-series == fetch)") {
     val b = 1704844800L; val e = 1705708800L
-    val out = TsdbStore.fetchBulk(spark, store,
-      Seq((7L, "click"), (3L, "view")), b, e, 0L)
-    val one = out.filter(col("user_id") === 7L && col("event_type") === "click")
-      .select("ts_us", "value")
-    val single = TsdbStore.fetch(spark, store, 7L, "click", b, e)
-    assert(one.exceptAll(single).isEmpty && single.exceptAll(one).isEmpty)
+    val series = Seq((7L, "click"), (3L, "view"))
+    val out = TsdbStore.fetchBulk(spark, store, series, b, e, 0L)
     assert(out.select("user_id", "event_type").distinct().count() == 2)
+    // every bulk read equals its single-series twin, series by series
+    // and row for row (order included), on both commit layouts
+    val manifest = tempDir("graft-store-bulk-parity")
+    TsdbStore.ingest(spark, Tables.events(spark, Sf), manifest, Manifest)
+    def same(what: String, bulk: DataFrame)(single: ((Long, String)) => DataFrame): Unit = {
+      val rows = bulk.collect().toSeq
+      assert(rows.nonEmpty, s"$what: empty bulk frame")
+      series.foreach { case k @ (u, et) =>
+        val got = rows.filter(r => r.getLong(0) == u && r.getString(1) == et)
+          .map(r => org.apache.spark.sql.Row.fromSeq(r.toSeq.drop(2)))
+        assert(got == single(k).collect().toSeq, s"$what $k")
+      }
+    }
+    val cfs = Seq("average", "min", "max", "sum", "raw", "first", "last", "delta", "rate")
+    for (p <- Seq(store, manifest)) {
+      val steps = TsdbStore.readLayout(spark, p).steps
+      same(s"$p raw", TsdbStore.fetchBulk(spark, p, series, b, e, 0L)) { case (u, et) =>
+        TsdbStore.fetch(spark, p, u, et, b, e) }
+      for (step <- steps; cf <- cfs)
+        same(s"$p $step $cf", TsdbStore.fetchBulk(spark, p, series, b, e, step, cf)) {
+          case (u, et) => TsdbStore.fetch(spark, p, u, et, b, e, step, cf) }
+      for (step <- steps)
+        same(s"$p filled $step", TsdbStore.fetchBulkFilled(spark, p, series, b, e, step)) {
+          case (u, et) => TsdbStore.fetchFilled(spark, p, u, et, b, e, step, fill = "null") }
+      for (step <- steps; interp <- Seq(false, true))
+        same(s"$p quantile $step $interp",
+            TsdbStore.fetchBulkQuantile(spark, p, series, b, e, step, 0.9, interp)) {
+          case (u, et) => TsdbStore.fetchQuantile(spark, p, u, et, b, e, step, 0.9, interp) }
+      for (res <- Seq(3600L, 43200L, 86400L)) {
+        val (bulkStep, bulk) = TsdbStore.fetchBulkAuto(spark, p, series, b, e, res, "max")
+        same(s"$p auto $res", bulk) { case (u, et) =>
+          val (step, df) = TsdbStore.fetchAuto(spark, p, u, et, b, e, res, "max")
+          assert(step == bulkStep, s"auto $res picked $step single, $bulkStep bulk")
+          df
+        }
+      }
+    }
   }
 
   test("upsert: replayed rows win, base is SWAPPED live, cascades rebuilt") {

@@ -296,6 +296,12 @@ class TvfSpec extends SparkSpec {
         .collect()
     }
     assert(noSeries.getMessage.contains("usage: graft_fetch_bulk"), noSeries.getMessage)
+    val badUser = intercept[Exception] {
+      spark.sql(s"SELECT * FROM graft_fetch_bulk('$store', $B, $E, 21600, 'sum', " +
+        "'seven', 'click')").collect()
+    }
+    assert(badUser.getMessage.contains("graft_fetch_bulk: expected an integer literal"),
+      badUser.getMessage)
     val rawFill = intercept[Exception] {
       spark.sql(s"SELECT * FROM graft_fetch_filled('$store', 7, 'click', $B, $E)")
         .collect()
